@@ -894,24 +894,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def q_profile_quantile_sketch(spark, sf):
-        """Mergeable t-digest quantile state (round 4): per-partition
-        sketches merged into table quartiles, checked against the DATA
-        rather than against a SQL twin (a t-digest has no tractable
-        SQL re-derivation).  Output rows carry the MEASURED exact rank
-        of each merged estimate, bucketed to the nearest 0.25 — equal
-        to the target quantile only when the sketch meets its rank
-        error contract (<1%, vs the 12.5% bucket half-width).  Two
-        drift rows pin digest_drift at its analytic extremes: KS of a
-        distribution against itself (0) and against a
-        disjoint-support shift (1).
+        """Mergeable KLL quantile state: per-partition sketches merged
+        into table quartiles, checked against the DATA rather than
+        against a SQL twin (a KLL sketch has no tractable SQL
+        re-derivation).  Output rows carry the MEASURED exact rank of
+        each merged estimate, bucketed to the nearest 0.25 — equal to
+        the target quantile only when the sketch meets its rank error
+        contract.  Two drift rows pin digest_drift at its analytic
+        extremes: KS of a distribution against itself (0) and against
+        a disjoint-support shift (1).
 
-        Round-5 hardening: structural rows pin each merged digest as a
-        GENUINE compressed sketch — centroid count inside the k1-scale
-        contract band [delta/4, 1.5*delta] (a degenerate one-centroid
-        digest, which could land the right rank bucket by luck on a
-        skewed column, fails the floor; an uncompressed value dump
-        fails the ceiling) and the serialized payload exactly
-        31 + 16*centroids bytes (the TD1 wire format)."""
+        Structural rows pin each merged sketch as a GENUINE summary of
+        every filled value: ``n`` is the merged sketch's item count
+        (the oracle pins it to the exact filled count), and ``rank_ok``
+        is 1.0 only when every quartile's measured rank lies within
+        KLL's single-sided normalized rank error for k = 100
+        (DataSketches getNormalizedRankError(k, false) = 2.296 /
+        k^0.9723 ~= 2.6%).  A sketch that drops values fails ``n``; one
+        that misses its rank contract fails ``rank_ok``."""
         from datapatterns_spark.operators.incremental import (
             digest_drift,
             merge_states,
@@ -936,7 +936,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ).collect()
         }  # 3 tiny rows — driver-bounded by len(attrs)
         # exact rank of each estimate in ONE aggregation over orders
-        # (fill rule matches the state pass: non-null, non-zero)
+        # (fill rule matches the state pass: non-null, non-zero); the
+        # strict count bounds the rank from below where values repeat
         aggs = []
         qcols = {
             0.25: "numeric_lower_quartile",
@@ -953,6 +954,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 aggs.append(
                     (F.count(F.when(v <= e, 1)) / F.count(v)).alias(
                         f"{a}::{q}"
+                    )
+                )
+                aggs.append(
+                    (F.count(F.when(v < e, 1)) / F.count(v)).alias(
+                        f"{a}::{q}::lt"
                     )
                 )
         ranks = orders.agg(*aggs).collect()[0]
@@ -980,26 +986,28 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         far_ks = digest_drift(mk(even), mk(shifted)).collect()[0]["ks"]
         rows.append(("drift_same", "o_totalprice", 0.0, round(same_ks * 4) / 4))
         rows.append(("drift_far", "o_totalprice", 1.0, round(far_ks * 4) / 4))
-        # structural pins: per-attribute merged digest shape (the state
-        # frame is (n_partitions x n_attrs) slim rows — driver-bounded)
-        from datapatterns_spark.functions.tdigest import TDigest
-
-        by_attr: dict[str, list] = {}
-        for r in st.select("attribute", "q_sketch").collect():
-            by_attr.setdefault(r["attribute"], []).append(
-                TDigest.from_bytes(bytes(r["q_sketch"]))
+        # structural pins: per-attribute merged sketch size and rank
+        # contract (the state frame is (n_partitions x n_attrs) slim
+        # rows, small enough to collect)
+        eps = 2.296 / delta**0.9723
+        ns = {
+            r["attribute"]: r["n"]
+            for r in st.groupBy("attribute")
+            .agg(
+                F.kll_sketch_get_n_double(
+                    F.kll_merge_agg_double("q_sketch")
+                ).alias("n")
             )
+            .collect()
+        }
         for a in attrs:
-            d = TDigest.merge_all(by_attr[a])
-            c = int(d.means.size)
-            rows.append(
-                ("centroids", a, 1.0,
-                 1.0 if delta / 4 <= c <= 1.5 * delta else 0.0)
+            rows.append(("n", a, 1.0, float(ns[a])))
+            ok = all(
+                ranks[f"{a}::{q}"] >= q - eps
+                and ranks[f"{a}::{q}::lt"] <= q + eps
+                for q in qcols
             )
-            rows.append(
-                ("sketch_bytes", a, 1.0,
-                 1.0 if len(d.to_bytes()) == 31 + 16 * c else 0.0)
-            )
+            rows.append(("rank_ok", a, 1.0, 1.0 if ok else 0.0))
         from datapatterns_spark.plans.local import lit_df
 
         return lit_df(
@@ -2796,7 +2804,7 @@ FROM src GROUP BY attribute
 """
 
     # ---- profile_quantile_sketch ----
-    # The t-digest itself has no tractable SQL re-derivation, so the
+    # The KLL sketch itself has no tractable SQL re-derivation, so the
     # Spark side outputs MEASURED verdicts (exact rank of each merged
     # estimate against the data, bucketed to the nearest 0.25; KS at
     # its analytic extremes) and the oracle pins the expected verdict
@@ -2813,11 +2821,15 @@ FROM src GROUP BY attribute
         "SELECT 'drift_far', 'o_totalprice', CAST(1.0 AS DOUBLE),"
         " CAST(1.0 AS DOUBLE)",
     ] + [
-        # structural pins (round 5): every merged digest must report
-        # in-band centroid count and exact wire-format size
-        f"SELECT '{part}', '{a}', CAST(1.0 AS DOUBLE), CAST(1.0 AS DOUBLE)"
+        # structural pins: every merged sketch counts exactly the
+        # filled values and meets KLL's rank-error bound at k = 100
+        f"SELECT 'n', '{a}', CAST(1.0 AS DOUBLE),"
+        f" CAST(COUNT(CASE WHEN {a} IS NOT NULL AND {a} <> 0 THEN 1 END)"
+        f" AS DOUBLE) FROM orders"
         for a in ["o_orderkey", "o_custkey", "o_totalprice"]
-        for part in ["centroids", "sketch_bytes"]
+    ] + [
+        f"SELECT 'rank_ok', '{a}', CAST(1.0 AS DOUBLE), CAST(1.0 AS DOUBLE)"
+        for a in ["o_orderkey", "o_custkey", "o_totalprice"]
     ]
     profile_quantile_sketch_sql = " UNION ALL ".join(pqs_rows)
 

@@ -35,16 +35,20 @@ has_unicode                           ``max``
 num_n / num_sum / num_sumsq /         ``sum`` x3 / ``min`` / ``max``
 num_min / num_max                     -> exact mean + POPULATION
                                       std-dev (Profile.ecl:1083-1086)
-q_sketch (t-digest, opt-in via       centroid-merge
-``quantile_delta``)                   (functions/tdigest.py)
+q_sketch (DataSketches KLL, opt-in    ``kll_merge_agg_double`` ->
+via ``quantile_delta`` = KLL ``k``)   ``kll_sketch_get_quantile_double``
 ====================================  =================================
 
-Exactness: every merged statistic except ``cardinality`` is EXACT and
-identical to a whole-table pass (grouping-independence is what the
-merge-operator table above buys); ``cardinality`` is a DataSketches
-HLL estimate (lgConfigK 14, typical error <1%) — the same documented
-deviation as the approx profile mode, but unlike approx mode the
-sketch itself is stored, so later partitions union in WITHOUT rescans.
+Exactness: every merged statistic except ``cardinality`` and the
+quartiles is EXACT and identical to a whole-table pass
+(grouping-independence is what the merge-operator table above buys);
+``cardinality`` is a DataSketches HLL estimate (lgConfigK 14, typical
+error <1%) — the same documented deviation as the approx profile mode,
+but unlike approx mode the sketch itself is stored, so later
+partitions union in WITHOUT rescans.  The quartiles carry KLL's rank
+error at ``k = quantile_delta`` (single-sided normalized rank error
+~2.6% at 99% confidence for k = 100, DataSketches
+``getNormalizedRankError(k, false)``).
 """
 
 from __future__ import annotations
@@ -78,6 +82,19 @@ from .profile import (
 # error — comfortably inside the 2% tolerance the sketch tests pin.
 _LG_CONFIG_K = 14
 
+_QUARTILES = (
+    ("numeric_lower_quartile", 0.25),
+    ("numeric_median", 0.5),
+    ("numeric_upper_quartile", 0.75),
+)
+# digest_drift reads each side's CDF off its quantiles at ranks j/G
+_KS_GRID = 200
+
+# DataSketches KLL k range (kll_sketch_agg_double rejects anything else)
+_KLL_K_MIN, _KLL_K_MAX = 8, 65535
+# serialized-sketch magic of the t-digest the KLL sketch replaced
+_TDIGEST_MAGIC = b"TD1"
+
 STATE_COLUMNS = [
     "partition",
     "attribute",
@@ -99,6 +116,18 @@ STATE_COLUMNS = [
     "num_min",
     "num_max",
 ]
+
+
+def _kll_k(quantile_delta: float) -> int:
+    """``quantile_delta`` as the KLL ``k``: an integral value in
+    DataSketches' range, never silently truncated."""
+    k = float(quantile_delta)
+    if not (k.is_integer() and _KLL_K_MIN <= k <= _KLL_K_MAX):
+        raise ValueError(
+            "quantile_delta is the KLL sketch k and must be an integer in "
+            f"[{_KLL_K_MIN}, {_KLL_K_MAX}], got {quantile_delta!r}"
+        )
+    return int(k)
 
 
 def _state_melt(
@@ -207,103 +236,6 @@ def _state_melt(
     return base.select("_part", F.inline(F.array(*structs)))
 
 
-_DIGEST_SCHEMA = "partition string, attribute string, q_sketch binary"
-
-
-def _quantile_value_cols(
-    attrs: list[AttrInfo], allow_zero: bool
-) -> list[tuple[str, Column]]:
-    """Per-attribute numeric-reading columns for the t-digest pass —
-    the same ``v`` definition as :func:`_state_melt` (native doubles
-    for given-numeric attributes with the allow-zero fill rule; gated
-    ``try_cast`` of the canonical string otherwise — binary included,
-    gated on BYTE length like the melt, so a binary column whose bytes
-    decode to numeric strings gets quartiles wherever it gets
-    num_n/mean/std).  Attributes with no numeric reading (boolean /
-    array) are skipped entirely, so the digest scan never reads their
-    columns."""
-    cols: list[tuple[str, Column]] = []
-    for a in attrs:
-        c = F.col(a.name)
-        if a.kind == KIND_NUMERIC:
-            filled = (
-                c.isNotNull()
-                if allow_zero
-                else (c.isNotNull() & (c.cast("double") != 0))
-            )
-            cols.append((a.name, F.when(filled, c.cast("double"))))
-        elif a.kind in (KIND_BOOLEAN, KIND_ARRAY):
-            continue
-        else:
-            v = _value_expr(a)
-            # binary gates on byte length, everything else on the
-            # string form's length — exactly _state_melt's lncol
-            ln = _len_expr(a) if a.kind == KIND_BINARY else F.length(v)
-            gate = (ln > 0) & (ln <= 40) & v.rlike("^[0-9+\\-.]")
-            cols.append((a.name, F.when(gate, v.try_cast("double"))))
-    return cols
-
-
-def _attr_digests(
-    df: DataFrame,
-    attrs: list[AttrInfo],
-    allow_zero: bool,
-    part: Column,
-    delta: float,
-) -> DataFrame:
-    """(partition, attribute) -> serialized t-digest, built without
-    ever materializing a group: ``mapInPandas`` emits one sub-digest
-    per (partition, attribute) per Arrow batch (memory bounded by the
-    batch size — a hot partition yields more slim sub-digest rows, not
-    a bigger task), then an ordinary shuffle of those few-KB rows
-    merges centroids per group.  Both steps are the sanctioned
-    Arrow-vectorized shapes; the value math inside is numpy."""
-    value_cols = _quantile_value_cols(attrs, allow_zero)
-    if not value_cols:
-        return df.sparkSession.createDataFrame([], _DIGEST_SCHEMA)
-    names = [n for n, _ in value_cols]
-
-    def _subs(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ..functions.tdigest import TDigest
-
-        for pdf in batches:
-            rows = []
-            for p, grp in pdf.groupby("_part", sort=False, dropna=False):
-                for n in names:
-                    d = TDigest.from_values(
-                        grp[n].to_numpy(dtype=np.float64, copy=False), delta
-                    )
-                    if d.means.size:
-                        rows.append((p, n, d.to_bytes()))
-            yield pd.DataFrame(
-                rows, columns=["partition", "attribute", "q_sketch"]
-            )
-
-    def _merge(key, pdf):
-        import pandas as pd
-
-        from ..functions.tdigest import TDigest
-
-        d = TDigest.merge_all(
-            [TDigest.from_bytes(bytes(b)) for b in pdf["q_sketch"]]
-        )
-        return pd.DataFrame(
-            [(key[0], key[1], d.to_bytes())],
-            columns=["partition", "attribute", "q_sketch"],
-        )
-
-    slim = df.select(
-        part.alias("_part"), *[v.alias(n) for n, v in value_cols]
-    )
-    subs = slim.mapInPandas(_subs, _DIGEST_SCHEMA)
-    return subs.groupBy("partition", "attribute").applyInPandas(
-        _merge, _DIGEST_SCHEMA
-    )
-
-
 def profile_state(
     df: DataFrame,
     partition_col: str | Column | None = None,
@@ -317,18 +249,20 @@ def profile_state(
     unit of work of :func:`profile_incremental`.  ``partition_col``
     defaults to a whole-input constant.
 
-    ``quantile_delta`` opts into a mergeable t-digest quantile sketch
-    per state row (column ``q_sketch``, functions/tdigest.py) built in
-    a second column-pruned pass over only the numeric-readable
-    attributes.  Like the HLL cardinality sketch this is the documented
-    approx-mode deviation: the one-shot profile's exact positional
-    quartiles cannot merge, the digest can."""
+    ``quantile_delta`` opts into a mergeable DataSketches KLL quantile
+    sketch of the numeric reading ``v`` per state row (column
+    ``q_sketch``, KLL ``k = quantile_delta``), one more column of the
+    same aggregation.  Like the HLL cardinality sketch this is the
+    documented approx-mode deviation: the one-shot profile's exact
+    positional quartiles cannot merge, the sketch can.  Rows with no
+    numeric reading (KLL skips NULL and NaN) carry a NULL sketch."""
     attrs, _children = walk_schema(df.schema, field_list=field_list)
     pname = partition_col if isinstance(partition_col, str) else None
     if pname is not None:
         attrs = [a for a in attrs if a.name != pname]
     if not attrs:
         raise ValueError("no profilable attributes")
+    k = None if quantile_delta is None else _kll_k(quantile_delta)
     part = (
         F.lit("__all__")
         if partition_col is None
@@ -355,6 +289,15 @@ def profile_state(
         .when(F.col("fpat").isNull(), F.lit(0))
         .otherwise(besttype.type_flag(F.col("fpat"), treat_as_is=False))
     )
+    sketch_cols = []
+    if k is not None:
+        sk = F.kll_sketch_agg_double("v", k)
+        # an empty sketch (8 bytes) is not a valid quantile input, and
+        # count("v") counts NaN while KLL skips it — gate on the
+        # sketch's own n
+        sketch_cols.append(
+            F.when(F.kll_sketch_get_n_double(sk) > 0, sk).alias("q_sketch")
+        )
     state = melted.groupBy(F.col("_part").alias("partition"), "attribute").agg(
         F.count(F.lit(1)).alias("rec_count"),
         F.coalesce(F.sum("fil"), F.lit(0)).cast("long").alias("fill_count"),
@@ -374,28 +317,15 @@ def profile_state(
         F.sum(F.col("v") * F.col("v")).alias("num_sumsq"),
         F.min("v").alias("num_min"),
         F.max("v").alias("num_max"),
+        *sketch_cols,
     )
     meta = lit_df(
         df.sparkSession,
         [(a.name, a.kind, a.given_type, a.ordinal) for a in attrs],
         "attribute string, kind string, given_attribute_type string, ordinal int",
     )
-    out = state.join(F.broadcast(meta), "attribute").select(*STATE_COLUMNS)
-    if quantile_delta is not None:
-        digests = _attr_digests(
-            df, attrs, allow_zero, part, quantile_delta
-        ).withColumnsRenamed({"partition": "_dp", "attribute": "_da"})
-        # null-SAFE on partition: a null partition key is a legal state
-        # row (both passes keep it), and a plain equi-join would
-        # silently drop its sketch — quantiles would then exclude
-        # values that every other statistic includes
-        out = out.join(
-            digests,
-            out["partition"].eqNullSafe(digests["_dp"])
-            & (out["attribute"] == digests["_da"]),
-            "left",
-        ).drop("_dp", "_da")
-    return out
+    cols = STATE_COLUMNS + (["q_sketch"] if k is not None else [])
+    return state.join(F.broadcast(meta), "attribute").select(*cols)
 
 
 def merge_states(states: DataFrame) -> DataFrame:
@@ -405,11 +335,14 @@ def merge_states(states: DataFrame) -> DataFrame:
     Pure second-level aggregation over (n_partitions x n_attributes)
     tiny rows — no data rescans.  All output statistics are exact
     except ``cardinality`` (HLL union estimate) and — when the states
-    carry a ``q_sketch`` column — the t-digest quartiles
+    carry a ``q_sketch`` column — the KLL quartiles
     (``numeric_lower_quartile`` / ``numeric_median`` /
     ``numeric_upper_quartile``, same naming as the one-shot approx
-    profile)."""
+    profile), within KLL's rank error at ``k = quantile_delta``."""
     has_q = "q_sketch" in states.columns
+    sketch_cols = (
+        [F.kll_merge_agg_double("q_sketch").alias("q_sketch")] if has_q else []
+    )
     merged = states.groupBy("attribute").agg(
         F.first("kind").alias("kind"),
         F.first("given_attribute_type").alias("given_attribute_type"),
@@ -430,6 +363,7 @@ def merge_states(states: DataFrame) -> DataFrame:
         F.sum("num_sumsq").alias("num_sumsq"),
         F.min("num_min").alias("num_min"),
         F.max("num_max").alias("num_max"),
+        *sketch_cols,
     )
     # best-type lattice from the merged folds (same inputs as the main
     # profile's _attach_best_type); the per-attribute kind/given-type
@@ -457,49 +391,18 @@ def merge_states(states: DataFrame) -> DataFrame:
     mean = F.col("num_sum") / n
     quartile_cols: list = []
     if has_q:
-
-        def _qmerge(key, pdf):
-            import pandas as pd
-
-            from ..functions.tdigest import TDigest
-
-            d = TDigest.merge_all(
-                [TDigest.from_bytes(bytes(b)) for b in pdf["q_sketch"]]
-            )
-            if d.means.size == 0:
-                row = (key[0], None, None, None)
-            else:
-                row = (
-                    key[0],
-                    round(d.quantile(0.25), 4),
-                    round(d.quantile(0.50), 4),
-                    round(d.quantile(0.75), 4),
-                )
-            return pd.DataFrame(
-                [row],
-                columns=[
-                    "attribute",
-                    "numeric_lower_quartile",
-                    "numeric_median",
-                    "numeric_upper_quartile",
-                ],
-            )
-
-        qdf = (
-            states.where(F.col("q_sketch").isNotNull())
-            .select("attribute", "q_sketch")
-            .groupBy("attribute")
-            .applyInPandas(
-                _qmerge,
-                "attribute string, numeric_lower_quartile double,"
-                " numeric_median double, numeric_upper_quartile double",
-            )
+        merged = merged.withColumn(
+            "_qs",
+            F.when(
+                F.kll_sketch_get_n_double("q_sketch") > 0,
+                F.kll_sketch_get_quantile_double(
+                    "q_sketch", F.array(*[F.lit(q) for _, q in _QUARTILES])
+                ),
+            ),
         )
-        merged = merged.join(qdf, "attribute", "left")
         quartile_cols = [
-            "numeric_lower_quartile",
-            "numeric_median",
-            "numeric_upper_quartile",
+            F.round(F.col("_qs")[i], 4).alias(name)
+            for i, (name, _) in enumerate(_QUARTILES)
         ]
     return (
         merged.withColumn("best_attribute_type", best)
@@ -551,53 +454,62 @@ def merge_states(states: DataFrame) -> DataFrame:
 
 
 def digest_drift(base_states: DataFrame, cur_states: DataFrame) -> DataFrame:
-    """Per-attribute KS distance between two state stores' merged
-    t-digests: distribution drift computed from stored profile states
+    """Per-attribute KS distance between two state stores' merged KLL
+    sketches: distribution drift computed from stored profile states
     ALONE — no rescan of either dataset, unlike the value-histogram
     drift in operators/constraints.py (PSI/KS/JS), which needs a pass
-    over the current data.  Error is bounded by the digests' rank
-    error (functions/tdigest.py), so this is the 10^12-row drift
-    screen: run it per ingest from the checkpointed states, rescan
-    only attributes it flags."""
-    for name, s in (("base_states", base_states), ("cur_states", cur_states)):
+    over the current data.  The sup is taken over both sides' quantiles
+    at a fixed 1/200 rank grid, so the result is within a few grid
+    steps plus both sketches' rank error of the exact KS — the
+    10^12-row drift screen: run it per ingest from the checkpointed
+    states, rescan only attributes it flags.  ``ks`` is NULL for an
+    attribute with no numeric values on either side."""
+    sides = {"base_states": base_states, "cur_states": cur_states}
+    merged = []
+    for name, s in sides.items():
         if "q_sketch" not in s.columns:
             raise ValueError(
                 f"{name} has no q_sketch column; build states with "
                 "profile_state(..., quantile_delta=...)"
             )
-    tagged = (
-        base_states.select("attribute", "q_sketch")
-        .withColumn("side", F.lit("base"))
-        .unionByName(
-            cur_states.select("attribute", "q_sketch").withColumn(
-                "side", F.lit("cur")
+        merged.append(
+            s.where(F.col("q_sketch").isNotNull())
+            .groupBy("attribute")
+            .agg(F.kll_merge_agg_double("q_sketch").alias(name))
+        )
+    # kll_sketch_get_rank_double only takes literal probe points, so
+    # each side's CDF is read off its own quantile grid q_j = Q(j/G),
+    # j = 0..G: linear between grid points (the sketch's weighted items
+    # are steps of up to 2^levels/n; interpolating keeps two sketches
+    # of the same data from reading those steps as drift), 0 below the
+    # minimum and 1 from the maximum on
+    grid = F.array(*[F.lit(j / _KS_GRID) for j in range(_KS_GRID + 1)])
+    quants = [F.kll_sketch_get_quantile_double(name, grid) for name in sides]
+
+    def cdf(q: Column, p: Column) -> Column:
+        c = F.size(F.filter(q, lambda y: y <= p))
+        lo, hi = F.try_element_at(q, c), F.try_element_at(q, c + 1)
+        return (
+            F.when(c == 0, F.lit(0.0))
+            .when(c > _KS_GRID, F.lit(1.0))
+            # NaN only from infinite grid points: read as the lower one
+            .otherwise(
+                (c - 1 + F.nanvl((p - lo) / (hi - lo), F.lit(0.0))) / _KS_GRID
             )
         )
-        .where(F.col("q_sketch").isNotNull())
+
+    ks = F.array_max(
+        F.transform(
+            F.concat(*quants),
+            lambda p: F.abs(cdf(quants[0], p) - cdf(quants[1], p)),
+        )
     )
-
-    def _ks(key, pdf):
-        import math
-
-        import pandas as pd
-
-        from ..functions.tdigest import TDigest, ks_distance
-
-        sides = {
-            side: TDigest.merge_all(
-                [TDigest.from_bytes(bytes(b)) for b in grp["q_sketch"]]
-            )
-            for side, grp in pdf.groupby("side")
-        }
-        a, b = sides.get("base"), sides.get("cur")
-        ks = None
-        if a is not None and b is not None and a.means.size and b.means.size:
-            v = ks_distance(a, b)
-            ks = None if math.isnan(v) else v
-        return pd.DataFrame([(key[0], ks)], columns=["attribute", "ks"])
-
-    return tagged.groupBy("attribute").applyInPandas(
-        _ks, "attribute string, ks double"
+    both = F.kll_sketch_get_n_double("base_states") > 0
+    both &= F.kll_sketch_get_n_double("cur_states") > 0
+    return (
+        merged[0]
+        .join(merged[1], "attribute", "full")
+        .select("attribute", F.when(both, ks).alias("ks"))
     )
 
 
@@ -624,7 +536,9 @@ def profile_incremental(
     and without ``q_sketch`` would silently drop quantile coverage for
     the sketchless partitions, so a mismatch against existing states
     fails fast (the same param-pinning contract as the curation job's
-    run-params guard)."""
+    run-params guard).  A store written by the retired t-digest sketch
+    (``q_sketch`` starting ``TD1``) is refused, never merged."""
+    k = None if quantile_delta is None else _kll_k(quantile_delta)
     spark = df.sparkSession
     done = completed_partitions(spark, state_path)
     if done:
@@ -638,25 +552,30 @@ def profile_incremental(
                 "state_path"
             )
         if quantile_delta is not None:
-            # pin the VALUE too: digests at different compressions merge
-            # without error but mix rank-error contracts silently.  The
-            # delta rides every serialized TD1 header, so one stored
-            # sketch answers for the whole store (profile_state writes a
-            # single delta per run, and this guard holds inductively).
+            # pin the VALUE too: sketches at different k merge without
+            # error but mix rank-error contracts silently.  k rides
+            # every serialized KLL header, so one stored sketch answers
+            # for the whole store (profile_state writes a single k per
+            # run, and this guard holds inductively).
             row = (
                 stored_df.where(F.col("q_sketch").isNotNull())
                 .select("q_sketch")
                 .first()
             )
             if row is not None:
-                from ..functions.tdigest import TDigest
-
-                stored_delta = TDigest.from_bytes(bytes(row[0])).delta
-                if stored_delta != float(quantile_delta):
+                stored = bytes(row[0])
+                if stored.startswith(_TDIGEST_MAGIC):
+                    raise ValueError(
+                        f"q_sketch under {state_path!r} is a t-digest "
+                        "store; rebuild with a fresh state_path"
+                    )
+                # KLL preamble: k is the little-endian uint16 at bytes 4-5
+                stored_k = int.from_bytes(stored[4:6], "little")
+                if stored_k != k:
                     raise ValueError(
                         "quantile_delta mismatch with existing states "
                         f"under {state_path!r}: stored sketches use "
-                        f"delta={stored_delta}, run requested "
+                        f"delta={float(stored_k)}, run requested "
                         f"{float(quantile_delta)}; rerun with the "
                         "original setting or a fresh state_path"
                     )

@@ -72,9 +72,10 @@ def profile_state_sink(
     over everything seen so far except cardinality (HLL union — and
     HLL register-max union is grouping-independent, so the estimate
     equals the single-pass sketch's).  ``quantile_delta`` adds the
-    mergeable t-digest quantile sketch per state row, so the rolling
-    profile also carries quartiles (approximate, rank-error-bounded —
-    same contract as the batch incremental profile).  Batch writes go
+    mergeable KLL quantile sketch (``k = quantile_delta``) per state
+    row, so the rolling profile also carries quartiles (approximate,
+    within KLL's rank error at that k — same contract as the batch
+    incremental profile).  Batch writes go
     to per-batch subdirectories with overwrite so foreachBatch's
     replay-on-failure semantics stay exactly-once."""
     from ..operators.incremental import profile_state

@@ -7,12 +7,12 @@ Usage: python scripts/state_bench.py <cpus> <sf_dir>
 
 Measures, at <sf_dir> scale:
 
-* ``state_build`` — profile_state over orders (HLL + t-digest rows,
-  quantile_delta=100) written to a parquet store, per partition of
-  o_orderpriority: the mapInPandas digest pass whose memory is claimed
-  Arrow-batch-bounded;
+* ``state_build`` — profile_state over orders (HLL + KLL rows,
+  quantile_delta=100 as the KLL k) written to a parquet store, per
+  partition of o_orderpriority: one scan and one JVM aggregation, the
+  quantile sketch being one more column of it;
 * ``state_merge`` — merge_states over the stored rows read back (the
-  no-rescan fold, incl. the applyInPandas centroid merge);
+  no-rescan fold, incl. the kll_merge_agg_double quartiles);
 * ``digest_drift`` — KS between two stores built from the orderkey
   parity halves (stored-state-only drift, no data rescan);
 * ``spans_exact`` / ``spans_winnow8`` — duplicate_token_spans over

@@ -1,5 +1,7 @@
 """Incremental / mergeable profile: merge-equals-whole exactness,
-checkpoint/resume, and best-type parity with the main profile."""
+checkpoint/resume, best-type parity with the main profile, and
+all-NaN partitions in the KLL quantile state (the rest of the
+quantile-state tests are in test_tdigest.py)."""
 
 from __future__ import annotations
 
@@ -144,9 +146,8 @@ def test_profile_incremental_resume(fixture_df, tmp_path):
 
 def test_binary_numeric_reading_includes_quartiles(spark):
     """A binary column whose bytes decode to numeric strings gets the
-    melt's numeric reading (num_n/mean) AND t-digest quartiles — the
-    two passes must agree on which attributes are numeric-readable
-    (ADVICE r4: _quantile_value_cols used to skip KIND_BINARY)."""
+    melt's numeric reading (num_n/mean) AND KLL quartiles — quartiles
+    are present wherever the numeric statistics are."""
     rows = [
         ("p0", bytearray(b"10"), bytearray(b"zz")),
         ("p0", bytearray(b"20"), bytearray(b"yy")),
@@ -193,3 +194,33 @@ def test_state_kinds_array_bool_temporal(spark):
     assert ts["fill_count"] == 2
     assert (ts["min_length"], ts["max_length"]) == (19, 19)
     assert ts["cardinality"] == 2
+
+
+# ---------------------------------------------------------------------------
+# mergeable quantile state (KLL): all-NaN partitions
+# ---------------------------------------------------------------------------
+def test_all_nan_partition_merges(spark):
+    """KLL skips NaN while count() does not: an all-NaN partition must
+    carry a NULL sketch (an empty sketch would fail the quantile read),
+    leave the other partition's quartiles intact, and an attribute
+    that is NaN everywhere gets NULL quartiles."""
+    nan = float("nan")
+    rows = [("p0", nan, nan) for _ in range(5)] + [
+        ("p1", float(i), nan) for i in range(1, 101)
+    ]
+    df = spark.createDataFrame(rows, "part string, x double, y double")
+    states = profile_state(df, "part", quantile_delta=100.0)
+    sk = {
+        (r["partition"], r["attribute"]): r["q_sketch"]
+        for r in states.collect()
+    }
+    assert sk[("p0", "x")] is None and sk[("p1", "x")] is not None
+    out = _by_attr(merge_states(states))
+    x, y = out["x"], out["y"]
+    assert (
+        x["numeric_lower_quartile"],
+        x["numeric_median"],
+        x["numeric_upper_quartile"],
+    ) == (25.0, 50.0, 75.0)
+    assert y["numeric_lower_quartile"] is None
+    assert y["numeric_median"] is None and y["numeric_upper_quartile"] is None

@@ -193,37 +193,46 @@ def test_incremental_state_prunes_and_stays_jvm(spark):
 
 
 def test_digest_pass_slim_shuffle(spark):
-    """The t-digest quantile pass must (a) build sub-digests map-side
-    via MapInPandas (never materializing a (partition, attribute)
-    group), (b) shuffle ONLY the slim serialized-digest rows — the
-    exchange above the MapInPandas carries exactly (partition,
-    attribute, q_sketch), no data columns — and (c) skip columns with
-    no numeric reading at its scan."""
-    from datapatterns_spark.operators.incremental import profile_state
+    """The KLL quantile state is one more column of the state
+    aggregation: profile_state(quantile_delta=...) scans its input
+    exactly once, builds sub-sketches map-side so its one shuffle
+    moves sketches rather than values, and neither it, merge_states
+    nor digest_drift ever leaves the JVM (no Arrow/pickled Python
+    operator of any shape)."""
+    from datapatterns_spark.operators.incremental import (
+        digest_drift,
+        merge_states,
+        profile_state,
+    )
 
     df = spark.read.parquet(f"{SF_DIR}/orders.parquet")
     st = profile_state(
         df,
         "o_orderpriority",
-        field_list=["o_custkey", "o_totalprice"],
+        field_list=["o_custkey", "o_totalprice", "o_orderstatus"],
         quantile_delta=100.0,
     )
     plan = _plan(st)
-    assert "MapInPandas" in plan
-    assert "FlatMapGroupsInPandas" in plan  # the centroid merge
-    # the merge's exchange hash-partitions on (partition, attribute)
-    # and sits ABOVE the MapInPandas: the rows it moves are the few-KB
-    # sub-digests, not data
+    assert len([ln for ln in plan.splitlines() if "ReadSchema" in ln]) == 1
+    assert "kll_sketch_agg_double" in plan
+    # one shuffle, hash-partitioned on (partition, attribute), with the
+    # partial sketch aggregate below it (plan prints consumers first)
     lines = plan.splitlines()
-    mip = next(i for i, ln in enumerate(lines) if "MapInPandas" in ln)
-    exch = [
-        i
-        for i, ln in enumerate(lines)
-        if "Exchange hashpartitioning" in ln and "attribute" in ln
-    ]
-    assert any(i < mip for i in exch)  # plan prints consumers first
-    # row-at-a-time Python never appears
-    assert "BatchEvalPython" not in plan
+    exch = [i for i, ln in enumerate(lines) if "Exchange hashpartitioning" in ln]
+    assert len(exch) == 1
+    partial = next(
+        i for i, ln in enumerate(lines) if "partial_kll_sketch_agg_double" in ln
+    )
+    assert exch[0] < partial
+    python_ops = (
+        "MapInPandas",
+        "FlatMapGroupsInPandas",
+        "ArrowEvalPython",
+        "BatchEvalPython",
+    )
+    for p in (plan, _plan(merge_states(st)), _plan(digest_drift(st, st))):
+        for op in python_ops:
+            assert op not in p, op
 
 
 def test_stratified_sample_skew_safe_shape(spark):

@@ -78,7 +78,7 @@ def test_stream_profile_equals_batch(spark, tmp_path, multi_file_input):
 
 def test_stream_profile_quantile_state(spark, tmp_path, multi_file_input):
     """quantile_delta threads through the sink: the rolling profile
-    carries t-digest quartiles, and the micro-batch-merged estimate
+    carries KLL quartiles, and the micro-batch-merged estimate
     stays inside the sketch's rank-error contract vs the batch data."""
     in_path, batch_df = multi_file_input
     out = str(tmp_path / "prof_q_out")

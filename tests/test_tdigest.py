@@ -1,20 +1,13 @@
-"""t-digest quantile sketch: pure-numpy accuracy/merge/serialization
-properties, the Spark mergeable-quantile state integration, and the
-sketch-based drift screen."""
+"""Mergeable quantile state of the incremental profile: the KLL
+sketch column of profile_state, its merge into quartiles, the
+quantile_delta (KLL k) pin on resume, the guard against stores written
+in the older t-digest format, and the sketch-based drift screen."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from datapatterns_spark.functions.tdigest import (
-    DEFAULT_COMPRESSION,
-    TDigest,
-    ks_distance,
-)
 from datapatterns_spark.operators.incremental import (
     digest_drift,
     merge_states,
@@ -23,142 +16,6 @@ from datapatterns_spark.operators.incremental import (
 )
 
 
-# ---------------------------------------------------------------------------
-# pure sketch properties
-# ---------------------------------------------------------------------------
-def _rank_err(values: np.ndarray, est: float, q: float) -> float:
-    return abs(float((values <= est).mean()) - q)
-
-
-def test_quantile_accuracy_skewed():
-    rng = np.random.RandomState(7)
-    v = rng.lognormal(0.0, 1.0, 100_000)
-    d = TDigest.from_values(v)
-    for q in (0.01, 0.25, 0.5, 0.75, 0.99):
-        assert _rank_err(v, d.quantile(q), q) < 0.01
-
-
-def test_merge_grouping_independence():
-    rng = np.random.RandomState(11)
-    v = rng.normal(0.0, 1.0, 60_000)
-    whole = TDigest.from_values(v)
-    for n_parts in (3, 17, 64):
-        merged = TDigest.merge_all(
-            [TDigest.from_values(p) for p in np.array_split(v, n_parts)]
-        )
-        assert merged.count == pytest.approx(whole.count)
-        assert merged.vmin == whole.vmin and merged.vmax == whole.vmax
-        for q in (0.1, 0.25, 0.5, 0.75, 0.9):
-            assert _rank_err(v, merged.quantile(q), q) < 0.01
-
-
-def test_serialization_round_trip():
-    d = TDigest.from_values(np.arange(1000.0))
-    d2 = TDigest.from_bytes(d.to_bytes())
-    assert np.array_equal(d2.means, d.means)
-    assert np.array_equal(d2.weights, d.weights)
-    assert (d2.vmin, d2.vmax, d2.delta) == (d.vmin, d.vmax, d.delta)
-    with pytest.raises(ValueError):
-        TDigest.from_bytes(b"not a digest")
-
-
-def test_empty_and_degenerate():
-    e = TDigest.from_values([])
-    assert e.means.size == 0 and np.isnan(e.quantile(0.5))
-    assert TDigest.merge_all([e, e]).means.size == 0
-    one = TDigest.from_values([3.25])
-    assert one.quantile(0.0) == one.quantile(1.0) == 3.25
-    const = TDigest.from_values([5.0] * 1000)
-    assert const.quantile(0.5) == 5.0
-    # NaNs are dropped, not folded in
-    assert TDigest.from_values([1.0, np.nan, 3.0]).count == 2.0
-
-
-def test_cdf_boundary_conventions():
-    # constant column: the degenerate vmin == vmax digest must report
-    # P(V <= v) = 1 at its own value, not 0 (vmax check wins over vmin)
-    const = TDigest.from_values([5.0] * 1000)
-    assert const.cdf(5.0) == 1.0
-    assert const.cdf(4.999) == 0.0 and const.cdf(5.001) == 1.0
-    # observed minimum carries half of one sample's mass (Dunning's
-    # reference convention), never hard 0
-    d = TDigest.from_values(np.arange(100, dtype=np.float64))
-    assert d.cdf(0.0) == pytest.approx(0.5 / 100)
-    assert d.cdf(-0.001) == 0.0
-    # zero-inflated: mass concentrated AT the minimum must show in
-    # cdf(vmin) — side='right' interpolation lands past every zero-mean
-    # centroid, reporting the point mass minus half the last zero
-    # centroid (>= half the total at worst, ~0.27 of the true 0.30
-    # here); a hard 0 or bare 0.5/count would understate it 60-600x
-    # and make self-drift at the min look like real drift
-    zi = TDigest.from_values(
-        np.concatenate([np.zeros(3000), np.linspace(1, 10, 7000)])
-    )
-    assert 0.15 <= zi.cdf(0.0) <= 0.301
-
-
-def test_merge_all_rejects_mixed_delta():
-    a = TDigest.from_values([1.0, 2.0], delta=100.0)
-    b = TDigest.from_values([3.0, 4.0], delta=200.0)
-    with pytest.raises(ValueError, match="differing delta"):
-        TDigest.merge_all([a, b])
-    # same delta still merges
-    assert TDigest.merge_all(
-        [a, TDigest.from_values([9.0], delta=100.0)]
-    ).count == 3.0
-
-
-def test_cdf_quantile_consistency():
-    rng = np.random.RandomState(3)
-    v = rng.gamma(2.0, 2.0, 50_000)
-    d = TDigest.from_values(v)
-    for q in (0.1, 0.5, 0.9):
-        assert d.cdf(d.quantile(q)) == pytest.approx(q, abs=0.01)
-    assert d.cdf(d.vmin - 1) == 0.0 and d.cdf(d.vmax + 1) == 1.0
-
-
-def test_ks_distance_matches_analytic():
-    rng = np.random.RandomState(5)
-    a = TDigest.from_values(rng.normal(0, 1, 100_000))
-    b = TDigest.from_values(rng.normal(0.3, 1, 100_000))
-    same = TDigest.from_values(rng.normal(0, 1, 100_000))
-    # analytic KS(N(0,1), N(0.3,1)) = 2*Phi(0.15) - 1 ~= 0.1192
-    assert ks_distance(a, b) == pytest.approx(0.1192, abs=0.02)
-    assert ks_distance(a, same) < 0.02
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.lists(
-        st.floats(
-            min_value=-1e12, max_value=1e12, allow_nan=False
-        ),
-        min_size=1,
-        max_size=500,
-    )
-)
-def test_digest_properties(values):
-    v = np.asarray(values)
-    d = TDigest.from_values(v)
-    assert d.count == pytest.approx(float(v.size))
-    assert d.vmin == v.min() and d.vmax == v.max()
-    # weight is conserved exactly through a merge-with-self
-    m = TDigest.merge_all([d, TDigest.from_bytes(d.to_bytes())])
-    assert m.count == pytest.approx(2.0 * v.size)
-    # estimates stay inside the observed range
-    for q in (0.0, 0.25, 0.5, 0.75, 1.0):
-        assert v.min() <= d.quantile(q) <= v.max()
-    # rank error bound (generous: ~3/delta) on the median — two-sided
-    # so duplicate values (CDF jumps) don't misread as rank error
-    est = d.quantile(0.5)
-    eps = max(3.0 / DEFAULT_COMPRESSION, 1.5 / v.size)
-    assert float((v < est).mean()) <= 0.5 + eps
-    assert float((v <= est).mean()) >= 0.5 - eps
-
-
-# ---------------------------------------------------------------------------
-# Spark integration: mergeable quantile state
-# ---------------------------------------------------------------------------
 @pytest.fixture(scope="module")
 def skew_df(spark):
     # 3 partitions with very different sizes and ranges; f has nulls,
@@ -213,6 +70,35 @@ def test_incremental_quantile_pinning(spark, skew_df, tmp_path):
     # error but mix rank-error contracts silently)
     with pytest.raises(ValueError, match="delta=100.0"):
         profile_incremental(skew_df, "part", p, quantile_delta=50.0)
+
+
+def test_quantile_delta_must_be_kll_k(skew_df, tmp_path):
+    """quantile_delta is the KLL k: integral and inside [8, 65535],
+    rejected before any work rather than truncated."""
+    for bad in (100.5, 7, 65536, float("nan")):
+        with pytest.raises(ValueError, match="KLL sketch k"):
+            profile_state(skew_df, "part", quantile_delta=bad)
+        with pytest.raises(ValueError, match="KLL sketch k"):
+            profile_incremental(
+                skew_df, "part", str(tmp_path / "s"), quantile_delta=bad
+            )
+    # an integral float is the same k as the int
+    assert "q_sketch" in profile_state(skew_df, "part", quantile_delta=8.0).columns
+
+
+def test_tdigest_store_refused_on_resume(spark, skew_df, tmp_path):
+    """A store whose q_sketch rows are t-digest payloads (magic TD1)
+    must never be merged with KLL sketches."""
+    src, td = str(tmp_path / "kll"), str(tmp_path / "td")
+    profile_incremental(skew_df, "part", src, quantile_delta=100.0)
+    td1 = bytearray(b"TD1" + bytes(28))
+    spark.read.parquet(f"{src}/states").withColumn(
+        "q_sketch",
+        F.when(F.col("q_sketch").isNotNull(), F.lit(td1)),
+    ).write.parquet(f"{td}/states")
+    spark.read.parquet(f"{src}/manifest").write.parquet(f"{td}/manifest")
+    with pytest.raises(ValueError, match="t-digest store"):
+        profile_incremental(skew_df, "part", td, quantile_delta=100.0)
 
 
 def test_null_partition_keeps_sketch(spark):
