@@ -41,6 +41,10 @@ from ..materialize import materialize
 from .validation import expand_helpers
 
 SAMPLE_VIOLATIONS = 5
+VERDICT_SCHEMA = (
+    "partition string, check_name string, passed boolean, "
+    "violation_count long, metric double, sample_violations array<string>"
+)
 
 # auto-segmentation probe (run_checks segment_size="auto"): sample
 # ~1/PROBE_MOD of each group's rows by a deterministic (group, order)
@@ -241,14 +245,7 @@ def schema_drift_verdicts(
         (partition, "schema_type_changes", not changed,
          len(changed), float(len(changed)), changed[:5]),
     ]
-    from ..plans.local import lit_df
-
-    return lit_df(
-        df.sparkSession,
-        rows,
-        "partition string, check_name string, passed boolean, "
-        "violation_count long, metric double, sample_violations array<string>",
-    )
+    return lit_df(df.sparkSession, rows, VERDICT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -405,6 +402,54 @@ def run_checks(
     like the unsegmented NULLS FIRST sort).  Non-integral order keys
     keep the unsegmented window.
     """
+    rows, viol = _run_checks(
+        df, checks, partition_col, key_cols, partitions, segment_size
+    )
+    return lit_df(df.sparkSession, rows, VERDICT_SCHEMA), viol
+
+
+def _resolve_segment_size(
+    df: DataFrame, checks: list[Check], segment_size: int | str | None
+) -> int | None:
+    """Validate ``segment_size`` and resolve ``"auto"`` to an int or
+    None with one :func:`_auto_segment_size` probe over the monotonic
+    checks' integral-order windows (none: no probe).  Verdicts do not
+    depend on the result, so a caller running ``run_checks`` over
+    subsets of ``df`` may resolve once and pass the value to each."""
+    if isinstance(segment_size, str) and segment_size != "auto":
+        # env-var pass-through without int() is the likely caller error
+        raise ValueError(
+            "segment_size must be an int, None, or 'auto' — got "
+            f"{segment_size!r}"
+        )
+    if segment_size == "auto":
+        dtypes = dict(df.dtypes)
+        windows = list(
+            dict.fromkeys(
+                (c.params["group"], c.params["order"])
+                for c in checks
+                if c.kind == "group"
+                and c.params["op"] == "monotonic"
+                and dtypes.get(c.params["order"]) in INTEGRAL_TYPES
+            )
+        )
+        return _auto_segment_size(df, windows) if windows else None
+    if segment_size is not None and segment_size < 1:
+        raise ValueError("segment_size must be >= 1")
+    return segment_size
+
+
+def _run_checks(
+    df: DataFrame,
+    checks: list[Check],
+    partition_col: str | Column | None = None,
+    key_cols: list[str] | None = None,
+    partitions: list[str] | None = None,
+    segment_size: int | str | None = "auto",
+) -> tuple[list[tuple], DataFrame]:
+    """:func:`run_checks` with the verdicts as the sorted driver-side
+    rows (``VERDICT_SCHEMA`` order) they are assembled from, for
+    callers that also need them in Python."""
     spark = df.sparkSession
     part = (
         F.lit("__all__")
@@ -555,27 +600,10 @@ def run_checks(
     # joins the window's partition key (see docstring).  Only integral
     # order keys segment — floor(o / S) must be exact and NULL-safe.
     seg_windows: dict[tuple[str, str], Column] = {}
-    integral = {"tinyint", "smallint", "int", "bigint"}
-    if isinstance(segment_size, str) and segment_size != "auto":
-        # env-var pass-through without int() is the likely caller error
-        raise ValueError(
-            "segment_size must be an int, None, or 'auto' — got "
-            f"{segment_size!r}"
-        )
-    if segment_size == "auto":
-        integral_windows = [
-            g_o for g_o in mono_windows if dtypes.get(g_o[1]) in integral
-        ]
-        segment_size = (
-            _auto_segment_size(df, integral_windows)
-            if integral_windows
-            else None
-        )
+    segment_size = _resolve_segment_size(df, checks, segment_size)
     if segment_size is not None:
-        if segment_size < 1:
-            raise ValueError("segment_size must be >= 1")
         for g_o in mono_windows:
-            if dtypes.get(g_o[1]) in integral:
+            if dtypes.get(g_o[1]) in INTEGRAL_TYPES:
                 # NULL order keys keep a NULL segment: window hash
                 # partitioning groups NULLs together and NULL sorts
                 # first in the boundary branch's sort_array — exactly
@@ -881,13 +909,7 @@ def run_checks(
     if not verdict_rows and not (all_check_names or stat_checks):
         raise ValueError("no checks supplied")
     verdict_rows.sort(key=lambda t: (t[0], t[1]))
-    verdicts = lit_df(
-        spark,
-        verdict_rows,
-        "partition string, check_name string, passed boolean, "
-        "violation_count long, metric double, sample_violations array<string>",
-    )
-    return verdicts, viol
+    return verdict_rows, viol
 
 
 def _segment_boundary_viol(

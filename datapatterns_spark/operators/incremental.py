@@ -69,7 +69,7 @@ from ..plans.schema_walk import (
     AttrInfo,
     walk_schema,
 )
-from .manifest import MANIFEST_SCHEMA, completed_partitions
+from .manifest import MANIFEST_SCHEMA, completed_partitions, list_partitions
 from ..functions.patterns import map_pattern
 from .profile import (
     _INT_MAX_DIGITS,
@@ -579,14 +579,7 @@ def profile_incremental(
                         f"{float(quantile_delta)}; rerun with the "
                         "original setting or a fresh state_path"
                     )
-    parts = [
-        r["p"]
-        for r in df.select(F.col(partition_col).cast("string").alias("p"))
-        .distinct()
-        .orderBy("p")
-        .collect()
-    ]
-    todo = [p for p in parts if p not in done]
+    todo = [p for p in list_partitions(df, partition_col) if p not in done]
     n_attrs = len(
         [
             a

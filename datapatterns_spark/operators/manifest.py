@@ -10,13 +10,17 @@ one Thor workunit); this is batch resumability per SURVEY.md §2.10 /
 
 Protocol:
 
-1. list the distinct partition values (cheap column scan / Iceberg
-   partition listing through the pluggable source adapter);
+1. list the distinct partition values ONCE per run
+   (:func:`list_partitions`: one distinct scan, sorted on the driver);
 2. drop partitions already COMPLETE in the manifest;
-3. run the check suite on the remaining partitions **in bounded
+3. resolve ``segment_size="auto"`` ONCE per run, with one skew probe
+   over the remaining partitions, and pass the result to every batch;
+4. run the check suite on the remaining partitions **in bounded
    batches**, appending verdicts/violations + a manifest row per
-   finished partition (the manifest append is THE commit point);
-4. a crash between batches loses at most one batch of work.
+   finished partition (the manifest append is THE commit point).  Each
+   manifest row's ``n_violations`` comes from the batch's verdict rows,
+   already on the driver — no job reads the verdicts back;
+5. a crash between batches loses at most one batch of work.
 
 Crash consistency (SURVEY.md §5's kill-mid-run claim): verdicts and
 violations are written hive-partitioned by ``partition``, and every
@@ -37,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.local import lit_df
-from .constraints import Check, run_checks
+from .constraints import VERDICT_SCHEMA, Check, _resolve_segment_size, _run_checks
 
 MANIFEST_SCHEMA = (
     "partition string, status string, started_at double, finished_at double, "
@@ -58,6 +62,30 @@ def completed_partitions(spark: SparkSession, path: str) -> set[str]:
         r["partition"]
         for r in m.filter(F.col("status") == "COMPLETE").select("partition").collect()
     }
+
+
+def list_partitions(df: DataFrame, partition_col: str) -> list[str | None]:
+    """The distinct values of ``partition_col`` as strings, NULL first
+    then ascending (Spark's ascending order), sorted on the driver so
+    the listing is one distinct job with no range-partition sampling.
+
+    NULL and ``''`` would both be written to the one
+    ``__HIVE_DEFAULT_PARTITION__`` directory, so a crash between their
+    commits could keep the other's uncommitted rows; a table holding
+    both is refused."""
+    parts = [
+        r["p"]
+        for r in df.select(F.col(partition_col).cast("string").alias("p"))
+        .distinct()
+        .collect()
+    ]
+    if None in parts and "" in parts:
+        raise ValueError(
+            f"partition_col {partition_col!r} holds both NULL and '': both "
+            "map to the __HIVE_DEFAULT_PARTITION__ directory; map one of "
+            "them to another value first"
+        )
+    return sorted(parts, key=lambda p: (p is not None, p or ""))
 
 
 def _sweep_orphans(spark: SparkSession, path: str, done: set[str]) -> int:
@@ -131,51 +159,43 @@ def run_with_manifest(
     spark = df.sparkSession
     done = completed_partitions(spark, output_path)
     _sweep_orphans(spark, output_path, done)
-    parts = [
-        r["p"]
-        for r in df.select(F.col(partition_col).cast("string").alias("p"))
-        .distinct()
-        .orderBy("p")
-        .collect()
-    ]
-    todo = [p for p in parts if p not in done]
+    todo = [p for p in list_partitions(df, partition_col) if p not in done]
+    in_todo = F.col(partition_col).cast("string").isin
+    if todo:
+        segment_size = _resolve_segment_size(
+            df.filter(in_todo(todo)), checks, segment_size
+        )
 
     for i in range(0, len(todo), batch_size):
         batch = todo[i : i + batch_size]
         started = time.time()
-        sub = df.filter(F.col(partition_col).cast("string").isin(batch))
-        verdicts, violations = run_checks(
-            sub,
+        rows, violations = _run_checks(
+            df.filter(in_todo(batch)),
             checks,
             partition_col=partition_col,
             key_cols=key_cols,
             partitions=batch,  # known -> no distinct scan per batch
             segment_size=segment_size,
         )
-        verdicts = verdicts.cache()
         # hive-partitioned by `partition` so an uncommitted batch is a
         # set of whole directories the next run's orphan sweep removes
-        verdicts.write.mode("append").partitionBy("partition").parquet(
-            f"{output_path}/verdicts"
-        )
+        lit_df(spark, rows, VERDICT_SCHEMA).write.mode("append").partitionBy(
+            "partition"
+        ).parquet(f"{output_path}/verdicts")
         violations.write.mode("append").partitionBy("partition").parquet(
             f"{output_path}/violations"
         )
-        counts = {
-            r["partition"]: r["n"]
-            for r in verdicts.groupBy("partition")
-            .agg(F.sum("violation_count").alias("n"))
-            .collect()
-        }
+        counts: dict[str | None, int] = {}
+        for r in rows:
+            counts[r[0]] = counts.get(r[0], 0) + r[3]
         finished = time.time()
         manifest_rows = [
-            (p, "COMPLETE", started, finished, len(checks), int(counts.get(p, 0)), snapshot_id)
+            (p, "COMPLETE", started, finished, len(checks), counts.get(p, 0), snapshot_id)
             for p in batch
         ]
         lit_df(spark, manifest_rows, MANIFEST_SCHEMA).write.mode(
             "append"
         ).parquet(f"{output_path}/manifest")
-        verdicts.unpersist()
 
     # normalize the hive-partitioned read back to the run_checks verdict
     # contract: `partition` a STRING in its original first position.

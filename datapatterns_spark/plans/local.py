@@ -4,20 +4,37 @@
 pickled-Python-RDD-backed plan (``Scan ExistingRDD``): every action on
 it — and on anything joined with it — must launch Python worker
 processes.  In this engine tiny driver-side tables (attribute
-metadata, verdict grids, Benford expected rows, drift baselines) sit
-inside nearly every plan, so that overhead lands on every query;
-measured on the bench host, a 16x6-row crossJoin of two such frames
-costs ~20s while the JVM-literal equivalent runs in ~0.4s.
+metadata, verdict grids, manifest rows, the profile's pass-1 summary,
+Benford expected rows) sit inside nearly every plan, so that overhead
+would land on every query; measured on the bench host, a 16x6-row
+crossJoin of two such frames costs ~20s while the JVM-literal
+equivalent runs in ~0.4s.
 
-:func:`lit_df` builds the same table as a pure-JVM plan instead:
-``range(1) -> inline(array(struct(...)))`` over foldable literals —
-Catalyst collapses it to a LocalRelation, joins against it broadcast,
-and no Python worker is ever involved.  Use it for any frame whose
-rows are already in driver memory and small (it embeds the values in
-the plan; keep it under a few thousand rows).
+:func:`lit_df` builds the same table as a pure-JVM plan instead.  The
+rows are serialized on the driver into ONE JSON string and the frame
+is ``range(1).select(inline(from_json(lit(payload), array<schema>)))``.
+Catalyst constant-folds ``from_json`` over a literal, so the optimized
+plan is ``Generate inline(<literal array>)`` over a one-row range —
+joined broadcast, and no Python worker is ever involved.
+
+Cost: a call crosses py4j a fixed number of times, whatever the row
+count — 23 commands for a 6-column verdict grid of 10 or of 1,000
+rows.  Building one ``F.lit(v).cast(t)`` Column per cell instead costs
+dozens of round trips per row: 2,042 and 202,022 commands for the
+same two grids.  Keep frames under a few thousand rows: the payload is
+embedded in the plan.
+
+Cells are written per field type (a Decimal as its exact string,
+NaN/±Infinity as the non-numeric tokens Spark's JSON reader accepts),
+and the parse runs in FAILFAST mode: a cell whose JSON type does not
+match its field — ``3.0`` in an ``int`` field, say — raises when the
+frame is evaluated.  The default PERMISSIVE mode would read it as a
+silent NULL where a cast gives ``3``.
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,6 +45,17 @@ def _schema(schema: str | T.StructType) -> T.StructType:
     if isinstance(schema, T.StructType):
         return schema
     return T.StructType.fromDDL(schema)
+
+
+def _cell(v, t: T.DataType):
+    if v is None:
+        return None
+    if isinstance(t, T.DecimalType):
+        # Decimal is not a JSON type; the reader parses the exact string
+        return str(v)
+    if isinstance(t, T.ArrayType):
+        return [_cell(x, t.elementType) for x in v]
+    return v
 
 
 def lit_df(
@@ -41,14 +69,12 @@ def lit_df(
         return spark.range(0).select(
             *[F.lit(None).cast(f.dataType).alias(f.name) for f in st.fields]
         )
-    def cell(v, f: T.StructField):
-        # F.lit([]) cannot infer an element type; emit a typed empty
-        # array literal instead
-        if isinstance(v, (list, tuple)) and len(v) == 0:
-            return F.array().cast(f.dataType).alias(f.name)
-        return F.lit(v).cast(f.dataType).alias(f.name)
-
-    structs = [
-        F.struct(*[cell(v, f) for f, v in zip(st.fields, row)]) for row in rows
-    ]
-    return spark.range(1).select(F.inline(F.array(*structs)))
+    payload = json.dumps(
+        [
+            {f.name: _cell(v, f.dataType) for f, v in zip(st.fields, row, strict=True)}
+            for row in rows
+        ]
+    )
+    return spark.range(1).select(
+        F.inline(F.from_json(F.lit(payload), T.ArrayType(st), {"mode": "FAILFAST"}))
+    )
