@@ -4,9 +4,11 @@ At 10^12 rows a whole-table re-profile per ingest batch is not viable:
 the daily ingest touches a handful of Iceberg partitions while the
 profile must describe the WHOLE table.  This module profiles each
 partition ONCE into a compact, MERGEABLE per-(partition, attribute)
-state row, checkpoints the states behind the same manifest protocol as
-the validation layer (operators/manifest.py), and folds any subset of
-states into a table-level profile without touching the data again.
+state row, checkpoints the states through the one checkpoint protocol
+it shares with the validation layer (operators/manifest.py:
+hive-partitioned ``states/``, orphan sweep on resume, crash-consistent
+under SIGKILL), and folds any subset of states into a table-level
+profile without touching the data again.
 Re-profiling after an ingest costs one pass over the NEW partitions
 plus a merge over (n_partitions x n_attributes) tiny state rows.
 
@@ -53,10 +55,9 @@ error at ``k = quantile_delta`` (single-sided normalized rank error
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions import besttype
 from ..plans.local import lit_df
@@ -69,7 +70,7 @@ from ..plans.schema_walk import (
     AttrInfo,
     walk_schema,
 )
-from .manifest import MANIFEST_SCHEMA, completed_partitions, list_partitions
+from .manifest import WriteBatch, _read_results, _run_checkpointed
 from ..functions.patterns import map_pattern
 from .profile import (
     _INT_MAX_DIGITS,
@@ -95,27 +96,20 @@ _KLL_K_MIN, _KLL_K_MAX = 8, 65535
 # serialized-sketch magic of the t-digest the KLL sketch replaced
 _TDIGEST_MAGIC = b"TD1"
 
-STATE_COLUMNS = [
-    "partition",
-    "attribute",
-    "kind",
-    "given_attribute_type",
-    "ordinal",
-    "rec_count",
-    "fill_count",
-    "min_length",
-    "max_length",
-    "len_sum",
-    "min_len_nonzero",
-    "has_unicode",
-    "type_flags",
-    "card_sketch",
-    "num_n",
-    "num_sum",
-    "num_sumsq",
-    "num_min",
-    "num_max",
-]
+# one state row per (partition, attribute); profile_state appends
+# ``q_sketch binary`` when a quantile sketch is requested
+STATE_SCHEMA = (
+    "partition string, attribute string, kind string, "
+    "given_attribute_type string, ordinal int, rec_count long, "
+    "fill_count long, min_length int, max_length int, len_sum long, "
+    "min_len_nonzero int, has_unicode int, type_flags int, "
+    "card_sketch binary, num_n long, num_sum double, num_sumsq double, "
+    "num_min double, num_max double"
+)
+
+
+def _state_schema(k: int | None) -> str:
+    return STATE_SCHEMA + ("" if k is None else ", q_sketch binary")
 
 
 def _kll_k(quantile_delta: float) -> int:
@@ -324,7 +318,7 @@ def profile_state(
         [(a.name, a.kind, a.given_type, a.ordinal) for a in attrs],
         "attribute string, kind string, given_attribute_type string, ordinal int",
     )
-    cols = STATE_COLUMNS + (["q_sketch"] if k is not None else [])
+    cols = StructType.fromDDL(_state_schema(k)).names
     return state.join(F.broadcast(meta), "attribute").select(*cols)
 
 
@@ -513,6 +507,48 @@ def digest_drift(base_states: DataFrame, cur_states: DataFrame) -> DataFrame:
     )
 
 
+def _check_store(spark: SparkSession, state_path: str, k: int | None) -> None:
+    """Refuse to resume a state store written with other sketch settings:
+    ``q_sketch`` presence, the KLL ``k``, and the retired t-digest
+    format."""
+    # inferred schema on purpose: the guard needs the stored columns
+    stored_df = spark.read.parquet(f"{state_path}/states")
+    if ("q_sketch" in stored_df.columns) != (k is not None):
+        raise ValueError(
+            "quantile_delta mismatch with existing states under "
+            f"{state_path!r}: stored rows "
+            f"{'have' if 'q_sketch' in stored_df.columns else 'lack'} "
+            "q_sketch; rerun with the original setting or a fresh "
+            "state_path"
+        )
+    if k is None:
+        return
+    # pin the VALUE too: sketches at different k merge without error
+    # but mix rank-error contracts silently.  k rides every serialized
+    # KLL header, so one stored sketch answers for the whole store
+    # (profile_state writes a single k per run, and this guard holds
+    # inductively).
+    row = stored_df.where(F.col("q_sketch").isNotNull()).select("q_sketch").first()
+    if row is None:
+        return
+    stored = bytes(row[0])
+    if stored.startswith(_TDIGEST_MAGIC):
+        raise ValueError(
+            f"q_sketch under {state_path!r} is a t-digest store; rebuild "
+            "with a fresh state_path"
+        )
+    # KLL preamble: k is the little-endian uint16 at bytes 4-5
+    stored_k = int.from_bytes(stored[4:6], "little")
+    if stored_k != k:
+        raise ValueError(
+            "quantile_delta mismatch with existing states "
+            f"under {state_path!r}: stored sketches use "
+            f"delta={float(stored_k)}, run requested "
+            f"{float(k)}; rerun with the "
+            "original setting or a fresh state_path"
+        )
+
+
 def profile_incremental(
     df: DataFrame,
     partition_col: str,
@@ -526,11 +562,15 @@ def profile_incremental(
     """Checkpointed incremental profile over a partitioned table.
 
     Profiles only partitions without a COMPLETE manifest entry under
-    ``state_path`` (the validation manifest protocol,
-    operators/manifest.py), appending their state rows, then returns
-    the merge of ALL states — so a run over a grown table costs one
-    pass over the NEW partitions plus a tiny merge, and a crashed run
-    loses at most one batch.
+    ``state_path``, appending their state rows to ``states/``
+    hive-partitioned by ``partition``, then returns the merge of ALL
+    states — so a run over a grown table costs one pass over the NEW
+    partitions plus a tiny merge.  Checkpointing is the protocol of
+    operators/manifest.py, shared with ``run_with_manifest``: a crashed
+    run loses at most one batch, and the resume deletes the state dirs
+    of partitions the crash left uncommitted, so every partition's
+    state is merged exactly once.  A store in the older flat layout is
+    refused (after the sketch-setting checks below).
 
     ``quantile_delta`` must match the store: mixing state rows with
     and without ``q_sketch`` would silently drop quantile coverage for
@@ -540,46 +580,23 @@ def profile_incremental(
     (``q_sketch`` starting ``TD1``) is refused, never merged."""
     k = None if quantile_delta is None else _kll_k(quantile_delta)
     spark = df.sparkSession
-    done = completed_partitions(spark, state_path)
-    if done:
-        stored_df = spark.read.parquet(f"{state_path}/states")
-        if ("q_sketch" in stored_df.columns) != (quantile_delta is not None):
-            raise ValueError(
-                "quantile_delta mismatch with existing states under "
-                f"{state_path!r}: stored rows "
-                f"{'have' if 'q_sketch' in stored_df.columns else 'lack'} "
-                "q_sketch; rerun with the original setting or a fresh "
-                "state_path"
-            )
-        if quantile_delta is not None:
-            # pin the VALUE too: sketches at different k merge without
-            # error but mix rank-error contracts silently.  k rides
-            # every serialized KLL header, so one stored sketch answers
-            # for the whole store (profile_state writes a single k per
-            # run, and this guard holds inductively).
-            row = (
-                stored_df.where(F.col("q_sketch").isNotNull())
-                .select("q_sketch")
-                .first()
-            )
-            if row is not None:
-                stored = bytes(row[0])
-                if stored.startswith(_TDIGEST_MAGIC):
-                    raise ValueError(
-                        f"q_sketch under {state_path!r} is a t-digest "
-                        "store; rebuild with a fresh state_path"
-                    )
-                # KLL preamble: k is the little-endian uint16 at bytes 4-5
-                stored_k = int.from_bytes(stored[4:6], "little")
-                if stored_k != k:
-                    raise ValueError(
-                        "quantile_delta mismatch with existing states "
-                        f"under {state_path!r}: stored sketches use "
-                        f"delta={float(stored_k)}, run requested "
-                        f"{float(quantile_delta)}; rerun with the "
-                        "original setting or a fresh state_path"
-                    )
-    todo = [p for p in list_partitions(df, partition_col) if p not in done]
+    states = f"{state_path}/states"
+
+    def write_batch(batch_df: DataFrame, batch: list) -> dict:
+        profile_state(
+            batch_df,
+            partition_col,
+            field_list=field_list,
+            allow_zero=allow_zero,
+            quantile_delta=quantile_delta,
+        ).write.mode("append").partitionBy("partition").parquet(states)
+        return {}
+
+    def start(done: set, todo: list) -> WriteBatch:
+        if done:
+            _check_store(spark, state_path, k)
+        return write_batch
+
     n_attrs = len(
         [
             a
@@ -587,24 +604,7 @@ def profile_incremental(
             if a.name != partition_col
         ]
     )
-    for i in range(0, len(todo), batch_size):
-        batch = todo[i : i + batch_size]
-        started = time.time()
-        sub = df.filter(F.col(partition_col).cast("string").isin(batch))
-        profile_state(
-            sub,
-            partition_col,
-            field_list=field_list,
-            allow_zero=allow_zero,
-            quantile_delta=quantile_delta,
-        ).write.mode("append").parquet(f"{state_path}/states")
-        finished = time.time()
-        lit_df(
-            spark,
-            [
-                (p, "COMPLETE", started, finished, n_attrs, 0, snapshot_id)
-                for p in batch
-            ],
-            MANIFEST_SCHEMA,
-        ).write.mode("append").parquet(f"{state_path}/manifest")
-    return merge_states(spark.read.parquet(f"{state_path}/states"))
+    _run_checkpointed(
+        df, partition_col, state_path, batch_size, snapshot_id, n_attrs, start
+    )
+    return merge_states(_read_results(spark, states, _state_schema(k)))

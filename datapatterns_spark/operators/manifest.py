@@ -1,44 +1,70 @@
-"""Checkpointed per-partition lineage + metrics manifest.
+"""Checkpointed per-partition batches behind a parquet manifest: the one
+checkpoint protocol of both checkpointed writers.
 
-The north_rule requires validation runs over 10^12-turn tables to be
-*resumable*: a restarted job must skip partitions whose verdicts are
-already complete.  The reference has no analogue (its unit of work is
-one Thor workunit); this is batch resumability per SURVEY.md §2.10 /
-§4.3 — a parquet manifest keyed
+The north_rule requires runs over 10^12-turn tables to be *resumable*:
+a restarted job must skip partitions whose results are already
+complete.  The reference has no analogue (its unit of work is one Thor
+workunit); this is batch resumability per SURVEY.md §2.10 / §4.3 — a
+parquet manifest keyed
 ``(partition, status, started_at, finished_at, n_checks, snapshot_id)``
 — NOT Structured Streaming state.
 
+Two writers share the protocol, each through a per-batch write
+function handed to :func:`_run_checkpointed`:
+
+* :func:`run_with_manifest` (validation) writes ``verdicts/`` and
+  ``violations/``;
+* ``incremental.profile_incremental`` (mergeable profile states)
+  writes ``states/``.
+
+Those are the result dirs the protocol owns (:data:`RESULT_DIRS`);
+any other sibling under the output path (``scripts/run_job.py`` writes
+``profile/`` there concurrently) is never touched.
+
 Protocol:
 
-1. list the distinct partition values ONCE per run
-   (:func:`list_partitions`: one distinct scan, sorted on the driver);
-2. drop partitions already COMPLETE in the manifest;
-3. resolve ``segment_size="auto"`` ONCE per run, with one skew probe
-   over the remaining partitions, and pass the result to every batch;
-4. run the check suite on the remaining partitions **in bounded
-   batches**, appending verdicts/violations + a manifest row per
-   finished partition (the manifest append is THE commit point).  Each
-   manifest row's ``n_violations`` comes from the batch's verdict rows,
+1. read the COMPLETE set from the manifest;
+2. list the distinct partition values ONCE per run
+   (:func:`list_partitions`: one distinct scan, sorted on the driver)
+   and drop the COMPLETE ones;
+3. writer setup, once per run (validation resolves
+   ``segment_size="auto"`` with one skew probe; the incremental
+   profile checks the stored states match the run's sketch settings);
+4. refuse a result dir in the old flat layout and sweep orphans (below);
+5. run the remaining partitions **in bounded batches**: the writer
+   appends its results hive-partitioned by ``partition``, then a
+   manifest row per partition is appended (THE commit point).
+   Validation's ``n_violations`` comes from the batch's verdict rows,
    already on the driver — no job reads the verdicts back;
-5. a crash between batches loses at most one batch of work.
+6. a crash between batches loses at most one batch of work.
 
-Crash consistency (SURVEY.md §5's kill-mid-run claim): verdicts and
-violations are written hive-partitioned by ``partition``, and every
-run first deletes any ``partition=`` directory NOT marked COMPLETE in
-the manifest.  A process killed BETWEEN the result append and the
-manifest append (the one window where results exist uncommitted)
-therefore leaves orphan directories that the resume removes before
-re-running those partitions — without the sweep, the re-run would
-APPEND a second copy of every orphaned row.  Tested against a real
-SIGKILL in tests/test_run_job.py.
+Crash consistency (SURVEY.md §5's kill-mid-run claim): every run first
+deletes any ``partition=`` directory NOT marked COMPLETE in the
+manifest.  A process killed BETWEEN the result append and the manifest
+append (the one window where results exist uncommitted) therefore
+leaves orphan directories that the resume removes before re-running
+those partitions — without the sweep, the re-run would APPEND a second
+copy of every orphaned row (for profile states: a double-counted
+``rec_count``).  Tested against a real SIGKILL for both writers
+(tests/test_run_job.py, tests/test_checkpoint.py).
+
+Reads: every output is read back with an explicit schema
+(:func:`_read_results`).  Partition values are strings, and an explicit
+schema keeps them verbatim (``"01"`` and ``"1"`` stay distinct, the
+NULL partition reads back NULL) without touching the session-global
+``partitionColumnTypeInference`` conf — two writers run concurrently
+in one session, so a save/set/restore of that conf could interleave.
+It also skips the parquet schema-inference job.
 """
 
 from __future__ import annotations
 
 import time
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..plans.local import lit_df
 from .constraints import VERDICT_SCHEMA, Check, _resolve_segment_size, _run_checks
@@ -48,12 +74,40 @@ MANIFEST_SCHEMA = (
     "n_checks int, n_violations long, snapshot_id string"
 )
 
+# result dirs under an output path, each hive-partitioned by
+# `partition`: run_with_manifest writes the first two,
+# profile_incremental the third
+RESULT_DIRS = ("verdicts", "violations", "states")
+
+# (batch rows, batch partitions) -> {partition: n_violations}
+WriteBatch = Callable[[DataFrame, list], dict]
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the Hadoop API, so the
+    protocol works on HDFS/object stores, not just the local disk."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _read_results(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """Read a parquet output with the explicit DDL ``schema``, columns in
+    the schema's order (a hive partition column would otherwise come
+    last).  Partition values are cast to the schema's type verbatim,
+    with no type inference and no schema-inference job."""
+    return spark.read.schema(schema).parquet(path).select(
+        *StructType.fromDDL(schema).names
+    )
+
 
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
-    try:
-        return spark.read.parquet(f"{path}/manifest")
-    except Exception:
+    """The manifest under ``path``; empty only when no manifest dir
+    exists.  Any other read error raises: a corrupt manifest read as
+    empty would make the orphan sweep delete every committed result."""
+    fs, p = _hadoop_path(spark, f"{path}/manifest")
+    if not fs.exists(p):
         return lit_df(spark, [], MANIFEST_SCHEMA)
+    return _read_results(spark, f"{path}/manifest", MANIFEST_SCHEMA)
 
 
 def completed_partitions(spark: SparkSession, path: str) -> set[str]:
@@ -89,7 +143,7 @@ def list_partitions(df: DataFrame, partition_col: str) -> list[str | None]:
 
 
 def _sweep_orphans(spark: SparkSession, path: str, done: set[str]) -> int:
-    """Delete, under verdicts/violations: (a) hive ``partition=``
+    """Delete, under the :data:`RESULT_DIRS`: (a) hive ``partition=``
     directories whose partition is not COMPLETE in the manifest — the
     leftovers of a run killed between the result append and the
     manifest commit — and (b) any ``_temporary`` job-attempt directory
@@ -97,9 +151,11 @@ def _sweep_orphans(spark: SparkSession, path: str, done: set[str]) -> int:
     the next append job's commitJob would otherwise merge into the
     output (FileOutputCommitter shares the ``_temporary/0`` attempt
     path across jobs), duplicating rows despite the partition sweep.
-    Safe because the manifest protocol is single-writer.  Hadoop
-    FileSystem API, so the same sweep works on HDFS/object stores, not
-    just the local sandbox.
+    Safe because the manifest protocol is single-writer per output dir.
+
+    A result dir holding loose data files (the flat layout written
+    before results were hive-partitioned) is refused before anything
+    is deleted: the sweep cannot tell its committed rows from orphans.
 
     NULL and empty-string partition values both land in the
     ``__HIVE_DEFAULT_PARTITION__`` directory; that directory is
@@ -108,16 +164,27 @@ def _sweep_orphans(spark: SparkSession, path: str, done: set[str]) -> int:
     every resume."""
     from urllib.parse import unquote
 
-    default_committed = (None in done) or ("" in done)
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    removed = 0
-    for sub in ("verdicts", "violations"):
-        p = jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}")
-        fs = p.getFileSystem(conf)
+    listings = []
+    for sub in RESULT_DIRS:
+        fs, p = _hadoop_path(spark, f"{path}/{sub}")
         if not fs.exists(p):
             continue
-        for st in fs.listStatus(p):
+        statuses = fs.listStatus(p)
+        if any(
+            st.isFile() and not st.getPath().getName().startswith(("_", "."))
+            for st in statuses
+        ):
+            raise ValueError(
+                f"{path}/{sub} holds data files outside partition= "
+                "directories (the flat layout of an older version); "
+                "rebuild into a fresh output path"
+            )
+        listings.append((fs, statuses))
+
+    default_committed = (None in done) or ("" in done)
+    removed = 0
+    for fs, statuses in listings:
+        for st in statuses:
             name = st.getPath().getName()
             if name == "_temporary":
                 fs.delete(st.getPath(), True)
@@ -138,6 +205,42 @@ def _sweep_orphans(spark: SparkSession, path: str, done: set[str]) -> int:
     return removed
 
 
+def _run_checkpointed(
+    df: DataFrame,
+    partition_col: str,
+    path: str,
+    batch_size: int,
+    snapshot_id: str,
+    n_checks: int,
+    start: Callable[[set, list], WriteBatch],
+) -> None:
+    """The checkpoint protocol (module docstring), once for every writer.
+
+    ``start(done, todo)`` runs once, after the listing and before the
+    sweep, and returns the per-batch write function.  That function
+    appends one batch's results under ``path`` hive-partitioned by
+    ``partition`` and returns its per-partition violation counts; the
+    batch's manifest rows are committed after it returns."""
+    spark = df.sparkSession
+    done = completed_partitions(spark, path)
+    todo = [p for p in list_partitions(df, partition_col) if p not in done]
+    write_batch = start(done, todo)
+    _sweep_orphans(spark, path, done)
+    in_batch = F.col(partition_col).cast("string").isin
+    for i in range(0, len(todo), batch_size):
+        batch = todo[i : i + batch_size]
+        started = time.time()
+        counts = write_batch(df.filter(in_batch(batch)), batch)
+        finished = time.time()
+        manifest_rows = [
+            (p, "COMPLETE", started, finished, n_checks, counts.get(p, 0), snapshot_id)
+            for p in batch
+        ]
+        lit_df(spark, manifest_rows, MANIFEST_SCHEMA).write.mode(
+            "append"
+        ).parquet(f"{path}/manifest")
+
+
 def run_with_manifest(
     df: DataFrame,
     checks: list[Check],
@@ -150,66 +253,46 @@ def run_with_manifest(
 ) -> DataFrame:
     """Run ``checks`` per partition with checkpoint/resume.
 
-    Returns the full verdict DataFrame (read back from the output so a
-    resumed run sees prior batches too).  Partition batches bound the
-    work lost on a crash; each batch appends verdicts, violations and
-    manifest rows (parquet append is atomic per task-commit, and a
-    partition appears in the manifest only after its results landed).
+    Returns the full verdict DataFrame in the ``run_checks`` verdict
+    contract (read back from the output so a resumed run sees prior
+    batches too).  Partition batches bound the work lost on a crash;
+    each batch appends verdicts, violations and manifest rows, and a
+    partition appears in the manifest only after its results landed.
     """
     spark = df.sparkSession
-    done = completed_partitions(spark, output_path)
-    _sweep_orphans(spark, output_path, done)
-    todo = [p for p in list_partitions(df, partition_col) if p not in done]
-    in_todo = F.col(partition_col).cast("string").isin
-    if todo:
-        segment_size = _resolve_segment_size(
-            df.filter(in_todo(todo)), checks, segment_size
-        )
 
-    for i in range(0, len(todo), batch_size):
-        batch = todo[i : i + batch_size]
-        started = time.time()
-        rows, violations = _run_checks(
-            df.filter(in_todo(batch)),
-            checks,
-            partition_col=partition_col,
-            key_cols=key_cols,
-            partitions=batch,  # known -> no distinct scan per batch
-            segment_size=segment_size,
-        )
-        # hive-partitioned by `partition` so an uncommitted batch is a
-        # set of whole directories the next run's orphan sweep removes
-        lit_df(spark, rows, VERDICT_SCHEMA).write.mode("append").partitionBy(
-            "partition"
-        ).parquet(f"{output_path}/verdicts")
-        violations.write.mode("append").partitionBy("partition").parquet(
-            f"{output_path}/violations"
-        )
-        counts: dict[str | None, int] = {}
-        for r in rows:
-            counts[r[0]] = counts.get(r[0], 0) + r[3]
-        finished = time.time()
-        manifest_rows = [
-            (p, "COMPLETE", started, finished, len(checks), counts.get(p, 0), snapshot_id)
-            for p in batch
-        ]
-        lit_df(spark, manifest_rows, MANIFEST_SCHEMA).write.mode(
-            "append"
-        ).parquet(f"{output_path}/manifest")
+    def start(done: set, todo: list) -> WriteBatch:
+        seg = segment_size
+        if todo:
+            seg = _resolve_segment_size(
+                df.filter(F.col(partition_col).cast("string").isin(todo)),
+                checks,
+                segment_size,
+            )
 
-    # normalize the hive-partitioned read back to the run_checks verdict
-    # contract: `partition` a STRING in its original first position.
-    # Type inference must be OFF for this read — inferring "01" and
-    # "1" as ints would collapse distinct string partitions and drop
-    # leading zeros; with it off the hive values round-trip verbatim.
-    infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    old = spark.conf.get(infer_key, "true")
-    spark.conf.set(infer_key, "false")
-    try:
-        out = spark.read.parquet(f"{output_path}/verdicts")
-    finally:
-        spark.conf.set(infer_key, old)
-    return out.select(
-        F.col("partition").cast("string").alias("partition"),
-        *[c for c in out.columns if c != "partition"],
+        def write_batch(batch_df: DataFrame, batch: list) -> dict:
+            rows, violations = _run_checks(
+                batch_df,
+                checks,
+                partition_col=partition_col,
+                key_cols=key_cols,
+                partitions=batch,  # known -> no distinct scan per batch
+                segment_size=seg,
+            )
+            lit_df(spark, rows, VERDICT_SCHEMA).write.mode(
+                "append"
+            ).partitionBy("partition").parquet(f"{output_path}/verdicts")
+            violations.write.mode("append").partitionBy("partition").parquet(
+                f"{output_path}/violations"
+            )
+            counts: dict[str | None, int] = {}
+            for r in rows:
+                counts[r[0]] = counts.get(r[0], 0) + r[3]
+            return counts
+
+        return write_batch
+
+    _run_checkpointed(
+        df, partition_col, output_path, batch_size, snapshot_id, len(checks), start
     )
+    return _read_results(spark, f"{output_path}/verdicts", VERDICT_SCHEMA)

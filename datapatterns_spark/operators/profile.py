@@ -1098,22 +1098,6 @@ def _pattern_pieces(
     ]
 
 
-def _profile_flat_approx(
-    df: DataFrame,
-    attrs: list[AttrInfo],
-    params: ProfileParams,
-    name_prefix: str,
-    sort_prefix: str,
-) -> DataFrame:
-    """Sketch-path profile for the 10^12-row tier.
-
-    Default is the v2 plan below; ``DP_APPROX_PLAN=v1`` selects the
-    previous three-pass plan (kept for A/B comparison)."""
-    if os.environ.get("DP_APPROX_PLAN", "v2") == "v1":
-        return _profile_flat_approx_v1(df, attrs, params, name_prefix, sort_prefix)
-    return _profile_flat_approx_v2(df, attrs, params, name_prefix, sort_prefix)
-
-
 def _lowcard_value_hist(
     df: DataFrame, attrs: list[AttrInfo], allow_zero: bool
 ) -> DataFrame:
@@ -1769,15 +1753,15 @@ def _approx_driver_tail(
     return out
 
 
-def _profile_flat_approx_v2(
+def _profile_flat_approx(
     df: DataFrame,
     attrs: list[AttrInfo],
     params: ProfileParams,
     name_prefix: str,
     sort_prefix: str,
 ) -> DataFrame:
-    """Sketch-path profile v2: ONE full-width pass over the input, then
-    only bounded or column-pruned follow-ups.
+    """Sketch-path profile for the 10^12-row tier: ONE full-width pass
+    over the input, then only bounded or column-pruned follow-ups.
 
     1. **pass 1 (full width, no raw-value shuffle, slim melt)**: the
        :func:`melt_slim` melt carries at most 48 value chars per row —
@@ -1787,7 +1771,7 @@ def _profile_flat_approx_v2(
        aggregates straight to attribute grain — fill/lengths, HLL++
        cardinality, numeric sketch stats (min/max/mean/pop-stddev +
        ``percentile_approx``), AND the per-attribute type/unicode
-       folds, which v1 paid a second full pass for.  The per-row
+       folds, so no second full pass is needed for them.  The per-row
        type-flag ladder is gated so it is near-free on real data:
        values longer than 40 chars cannot match any numeric rule
        (19/20-digit, 15.15-float, exp — Profile.ecl:908-935) and get
@@ -1806,7 +1790,7 @@ def _profile_flat_approx_v2(
        the partition-local candidate path
        (:func:`_heavy_pattern_candidates`) with NO pattern shuffle.
     3. low-card value histogram for modes/breakdown (bounded pass) and
-       correlations (one agg of all ``corr`` pairs), as v1.
+       correlations (one agg of all ``corr`` pairs).
 
     Deviations from the always-exact reference (documented): HLL
     cardinality (rsd 1.5%), sketch quantiles, modes/breakdown only
@@ -2250,304 +2234,6 @@ def _profile_flat_approx_v2(
     out = _shape_output(out, params)
     _phase_mark("assembly_plan")
     return out
-
-
-def _profile_flat_approx_v1(
-    df: DataFrame,
-    attrs: list[AttrInfo],
-    params: ProfileParams,
-    name_prefix: str,
-    sort_prefix: str,
-) -> DataFrame:
-    """Sketch-path profile for the 10^12-row tier: exactly THREE passes
-    over the input, no raw-value shuffle.
-
-    1. ``groupBy(attribute)`` over the melt: fill/lengths, HLL++
-       cardinality (``approx_count_distinct``, rsd 1.5%) and the
-       numeric sketch stats (min/max/mean/pop-stddev +
-       ``percentile_approx`` t-digest-like quantiles) — every
-       aggregate is mergeable, so Spark's partial (map-side) agg
-       collapses each task to one row per attribute before the
-       shuffle (the treeAggregate-style hierarchical merge of the
-       north_star).
-    2. filled-only ``groupBy(attribute, value_lc, data_pattern)``:
-       value_lc keeps the raw value ONLY for attributes whose HLL
-       cardinality is low (bounded group count); everything else
-       groups on the bounded-cardinality pattern string.  This one
-       intermediate feeds the type-flag AND-fold, popular/rare
-       patterns, modes and the cardinality breakdown.
-    3. correlations (one ``agg`` of all ``corr`` pairs on the source).
-
-    Deviations from the always-exact reference (documented): HLL
-    cardinality (~1.5% rel. error), sketch quantiles, and modes /
-    breakdown only for attributes under ``approx_mode_card_limit``.
-    """
-    plen = params.pattern_len
-    _phase_mark("approx:start")
-    meta = _attr_meta_df(df, attrs, sort_prefix, name_prefix)
-    string_attrs = [a.name for a in attrs if a.kind == KIND_STRING]
-    as_is_attrs = [
-        a.name for a in attrs if a.kind in (KIND_NUMERIC, KIND_BOOLEAN, KIND_ARRAY)
-    ]
-    melted = melt(df, attrs)
-    filled_expr = _filled_expr(attrs, params.allow_zero)
-    filled = F.col("filled")
-
-    # ---- pass 1: per-attribute summary (no pattern derivation) ----
-    # NOTE: a "one wide aggregate over the unmelted frame" variant
-    # (one expression set per column, no melt) was A/B-tested and is
-    # 11-14x SLOWER: mixing many imperative aggregates (HLL +
-    # percentile sketches) in one Aggregate drops the whole operator
-    # out of whole-stage codegen into interpreted evaluation of every
-    # per-column expression.  The melt keeps the row-shaping in
-    # codegen and the ObjectHashAggregate narrow.
-    m1 = melted.withColumn("filled", filled_expr)
-    if params.need_numeric:
-        # len guard: no numeric-flaggable value exceeds ~33 chars (the
-        # 19/20-digit and 15.15 float rules, Profile.ecl:908-935), so
-        # long text never pays a parse attempt
-        m1 = m1.withColumn(
-            "v",
-            F.when(
-                filled
-                & (F.col("len") <= 40)
-                & F.col("value").rlike("^[0-9+\\-.]"),
-                F.expr("try_cast(value AS double)"),
-            ),
-        )
-    agg_exprs = [
-        F.count(F.lit(1)).alias("rec_count"),
-        F.coalesce(F.sum(F.when(filled, 1)), F.lit(0)).alias("fill_count"),
-    ]
-    if params.need_lengths:
-        agg_exprs += [
-            F.coalesce(F.min(F.when(filled, F.col("len"))), F.lit(0)).alias("min_length"),
-            F.coalesce(F.max(F.when(filled, F.col("len"))), F.lit(0)).alias("max_length"),
-            F.coalesce(
-                F.floor(
-                    F.sum(F.when(filled, F.col("len"))) / F.sum(F.when(filled, 1))
-                ),
-                F.lit(0),
-            ).alias("ave_length"),
-            F.coalesce(
-                F.min(F.when(filled & (F.col("len") > 0), F.col("len"))), F.lit(0)
-            ).alias("min_len_nonzero"),
-        ]
-    # HLL++ sketch, rsd=0.015 (documented deviation: reference is exact)
-    agg_exprs.append(
-        F.approx_count_distinct(F.when(filled, F.col("value")), 0.015).alias(
-            "cardinality"
-        )
-    )
-    if params.need_numeric:
-        agg_exprs += [
-            F.round(F.min("v"), 4).alias("numeric_min"),
-            F.round(F.max("v"), 4).alias("numeric_max"),
-            F.round(F.avg("v"), 4).alias("numeric_mean"),
-            F.round(
-                F.sqrt(F.avg(F.col("v") * F.col("v")) - F.avg("v") * F.avg("v")), 4
-            ).alias("numeric_std_dev"),
-            F.percentile_approx("v", [0.25, 0.5, 0.75], 10_000).alias("_q"),
-        ]
-    summary = m1.groupBy("attribute").agg(*agg_exprs)
-    if params.need_numeric:
-        summary = summary.withColumns(
-            {
-                "numeric_lower_quartile": F.round(F.col("_q")[0], 4),
-                "numeric_median": F.round(F.col("_q")[1], 4),
-                "numeric_upper_quartile": F.round(F.col("_q")[2], 4),
-            }
-        ).drop("_q")
-    # tiny (one row per attribute) but costs a full input pass; the
-    # low-card listing and the final assembly both reuse it.
-    summary = _materialize(summary, len(attrs), params.materialize)
-
-    need_pat_feature = params.has("patterns") and params.max_patterns > 0
-    need_vh = params.has("modes") or (
-        params.has("cardinality_breakdown") and params.lcb_limit > 0
-    )
-    need_pass2 = params.need_flags or need_pat_feature
-
-    low_card: list[str] = []
-    if need_vh:
-        low_card = [
-            r["attribute"]
-            for r in summary.filter(
-                F.col("cardinality") <= params.approx_mode_card_limit
-            )
-            .select("attribute")
-            .collect()
-        ]
-    _phase_mark("pass1_summary")
-
-    # ---- pass 2: filled-only (attribute, value_lc, pattern) histogram ----
-    typefold = None
-    hist2 = None
-    if need_pass2:
-        att = F.col("attribute")
-        # group at the FINAL (attribute, data_pattern) grain in one
-        # aggregation: top/rare patterns read it with no re-agg, and
-        # the type/unicode folds ride along as numeric aggregates
-        # (AND/OR are associative, so folding per pattern group then
-        # across groups equals the reference's per-value fold,
-        # Profile.ecl:967-992)
-        # group directly at the FINAL (attribute, finished-pattern)
-        # grain in ONE aggregation level.  The 0->9 finish
-        # (Profile.ecl:1306) destroys exactly one fact the best-type
-        # classifier needs from the raw pattern — "did the value have
-        # a leading literal zero over an otherwise all-digit body"
-        # (_LEADING_ZERO, Profile.ecl:908) — so that predicate rides
-        # along as a per-row flag: a raw pattern matches
-        # ^0[09]{1,18}$ iff its value matches ^0[0-9]{1,18}$, every
-        # other flag regex uses the [09] class and therefore matches
-        # the raw pattern iff it matches the finished one.  The fold
-        # "AND over raw-pattern groups" is then exactly
-        # when(any(lz), AS_IS).otherwise(type_flag(finished)).
-        # (Differentially tested against the two-level formulation.)
-        d2 = (
-            melted.withColumn("filled", filled_expr)
-            .filter(filled)
-            .withColumn("pattern", finish_pattern(_pattern_expr(attrs, plen)))
-        )
-        flag_aggs = []
-        if params.need_flags:
-            # only cheap codegen'd per-row tests here (byte-vs-char
-            # length, anchored leading-zero probe that fails at char 1
-            # for text); the best-type regexes run on the DISTINCT
-            # finished patterns — a frame thousands of times smaller
-            d2 = d2.withColumn(
-                "is_uni",
-                (
-                    (att.isin(string_attrs) if string_attrs else F.lit(False))
-                    & is_non_ascii(F.col("value"))
-                ).cast("int"),
-            ).withColumn(
-                "lz", F.col("value").rlike("^0[0-9]{1,18}$").cast("int")
-            )
-            flag_aggs = [
-                F.max("is_uni").alias("is_uni"),
-                F.max("lz").alias("lz"),
-            ]
-        hist2 = d2.groupBy(
-            "attribute", F.col("pattern").alias("data_pattern")
-        ).agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.min(F.substring(F.col("value"), 1, plen)).alias("example"),
-            *flag_aggs,
-        )
-        if params.need_flags:
-            hist2 = hist2.withColumn(
-                "type_flag",
-                F.when(
-                    att.isin(as_is_attrs) if as_is_attrs else F.lit(False),
-                    F.lit(besttype.AS_IS),
-                )
-                .when(F.col("lz") == 1, F.lit(besttype.AS_IS))
-                .otherwise(
-                    besttype.type_flag(F.col("data_pattern"), treat_as_is=False)
-                ),
-            )
-        # materialize the shared pass once for its consumers (type
-        # fold, pattern top-k, final assembly); wide melts also cut
-        # lineage — the per-consumer Catalyst re-optimization of the
-        # melt subtree was the measured serial bottleneck at high
-        # parallelism (see _materialize)
-        hist2 = _materialize(hist2, len(attrs), params.materialize)
-        _phase_mark("pass2_hist")
-        if params.need_flags:
-            typefold = hist2.groupBy("attribute").agg(
-                F.coalesce(F.bit_and("type_flag"), F.lit(0)).alias("type_flags"),
-                F.coalesce(F.max("is_uni"), F.lit(0)).alias("_uni"),
-            )
-
-    # ---- assembly ----
-    base = meta.join(
-        summary.withColumnRenamed("attribute", "_local_name"), "_local_name", "left"
-    )
-    if typefold is not None:
-        base = base.join(
-            F.broadcast(typefold.withColumnRenamed("attribute", "_local_name")),
-            "_local_name",
-            "left",
-        )
-    fill_defaults = {
-        "rec_count": 0,
-        "fill_count": 0,
-        "min_length": 0,
-        "max_length": 0,
-        "ave_length": 0,
-        "type_flags": 0,
-        "min_len_nonzero": 0,
-        "_uni": 0,
-        "cardinality": 0,
-    }
-    base = base.na.fill({k: v for k, v in fill_defaults.items() if k in base.columns})
-    base = _attach_best_type(base, attrs, params, name_prefix)
-    if params.need_numeric:
-        # numeric sketch stats were computed for every castable value;
-        # only attributes judged numeric by the type fold report them
-        # (matches the exact path, which computes them post-fold)
-        for c in (
-            "numeric_min",
-            "numeric_max",
-            "numeric_mean",
-            "numeric_std_dev",
-            "numeric_lower_quartile",
-            "numeric_median",
-            "numeric_upper_quartile",
-        ):
-            base = base.withColumn(c, F.when(F.col("is_numeric"), F.col(c)))
-
-    pieces = [base]
-    if need_vh and low_card:
-        # value histogram from a dedicated melt of ONLY the low-card
-        # attributes: scans the cached input without computing any
-        # pattern/flag expression for the high-card columns.
-        # NOTE: fusing this into pass 2 (value_lc riding the pattern
-        # aggregate's grouping key) was A/B-tested and LOSES at both
-        # local[4] (+2.1s) and local[16] (+1.0s): this dedicated melt
-        # reads only the low-card columns (parquet column pruning — a
-        # few % of the input bytes), while the fusion widens the
-        # full-width pass-2 hash key per row and adds two serial
-        # checkpoint jobs for the derived frames.
-        lc_attrs = [a for a in attrs if a.name in set(low_card)]
-        vh = (
-            melt(df, lc_attrs)
-            .withColumn("filled", _filled_expr(lc_attrs, params.allow_zero))
-            .filter(F.col("filled"))
-            .groupBy("attribute", "value")
-            .agg(F.count(F.lit(1)).alias("rec_count"))
-            # tiny (bounded by approx_mode_card_limit per attribute);
-            # materialized once for its three consumers (modes
-            # max-join x2, breakdown)
-        )
-        vh = _materialize(vh, len(attrs), params.materialize)
-        _phase_mark("pass3_lowcard_vh")
-        if params.has("modes"):
-            pieces.append(_modes_piece(vh, name_prefix))
-        if params.has("cardinality_breakdown") and params.lcb_limit > 0:
-            low_attrs = base.filter(
-                (F.col("cardinality") > 0) & (F.col("cardinality") <= params.lcb_limit)
-            ).select(F.col("_local_name").alias("attribute"))
-            pieces.append(_lcb_piece(vh, low_attrs, name_prefix))
-    if need_pat_feature and hist2 is not None:
-        # hist2 already sits at (attribute, data_pattern) grain
-        pat = hist2.select(
-            "attribute", "data_pattern", F.col("cnt").alias("rec_count"), "example"
-        )
-        pieces.extend(_pattern_pieces(pat, params, name_prefix))
-
-    # ---- pass 3: correlations ----
-    if params.has("correlations"):
-        num_given = [a.name for a in attrs if a.kind == KIND_NUMERIC]
-        corr_df = _correlations(df, num_given, name_prefix)
-        if corr_df is not None:
-            pieces.append(corr_df)
-
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.join(p, "attribute", "left")
-    return _shape_output(out, params)
 
 
 def _exact_numeric_stats(hnum: DataFrame) -> DataFrame:

@@ -84,7 +84,10 @@ def main() -> None:
         incremental_exact_dedup,
         incremental_minhash_dedup,
     )
-    from datapatterns_spark.operators.manifest import completed_partitions
+    from datapatterns_spark.operators.manifest import (
+        MANIFEST_SCHEMA,
+        completed_partitions,
+    )
     from datapatterns_spark.plans.local import lit_df
     from datapatterns_spark.session import get_spark
     from datapatterns_spark.sources.tables import read_table
@@ -277,9 +280,7 @@ def main() -> None:
                 )
                 for p in batch
             ],
-            "partition string, status string, started_at double, "
-            "finished_at double, n_checks int, n_violations long, "
-            "snapshot_id string",
+            MANIFEST_SCHEMA,
         ).write.mode("append").parquet(f"{out}/manifest")
         curated.unpersist()
         decisions.unpersist()
