@@ -64,6 +64,12 @@ AUTO_SEGMENT_SIZE = 1_000_000
 MAX_VERDICT_PARTITIONS = 100_000
 
 
+def partition_order(p: str | None) -> tuple:
+    """Sort key for partition values: NULL first, then ascending
+    (Spark's ascending order)."""
+    return (p is not None, p or "")
+
+
 # ---------------------------------------------------------------------------
 # check definitions
 # ---------------------------------------------------------------------------
@@ -869,7 +875,7 @@ def _run_checks(
     all_check_names = [c.name for c in row_checks + group_checks]
     verdict_rows: list[tuple] = []
     if partitions is not None:
-        part_values = [str(p) for p in partitions]
+        part_values = [None if p is None else str(p) for p in partitions]
     else:
         # cardinality guard: limit(N+1) bounds what can ever reach the
         # driver, so a mistaken partition_col fails with a clear error
@@ -908,7 +914,7 @@ def _run_checks(
 
     if not verdict_rows and not (all_check_names or stat_checks):
         raise ValueError("no checks supplied")
-    verdict_rows.sort(key=lambda t: (t[0], t[1]))
+    verdict_rows.sort(key=lambda t: (partition_order(t[0]), t[1]))
     return verdict_rows, viol
 
 

@@ -44,13 +44,13 @@ via ``quantile_delta`` = KLL ``k``)   ``kll_sketch_get_quantile_double``
 Exactness: every merged statistic except ``cardinality`` and the
 quartiles is EXACT and identical to a whole-table pass
 (grouping-independence is what the merge-operator table above buys);
-``cardinality`` is a DataSketches HLL estimate (lgConfigK 14, typical
-error <1%) — the same documented deviation as the approx profile mode,
-but unlike approx mode the sketch itself is stored, so later
-partitions union in WITHOUT rescans.  The quartiles carry KLL's rank
-error at ``k = quantile_delta`` (single-sided normalized rank error
-~2.6% at 99% confidence for k = 100, DataSketches
-``getNormalizedRankError(k, false)``).
+``cardinality`` is a DataSketches HLL estimate (lgConfigK 14, ~0.8%
+RSE) — the same sketch and documented deviation as the approx profile
+mode (``functions/sketches.py``), but unlike approx mode the sketch
+itself is stored, so later partitions union in WITHOUT rescans.  The
+quartiles carry KLL's rank error at ``k = quantile_delta``
+(single-sided normalized rank error ~2.6% at 99% confidence for
+k = 100, DataSketches ``getNormalizedRankError(k, false)``).
 """
 
 from __future__ import annotations
@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..functions import besttype
+from ..functions.sketches import LG_CONFIG_K
 from ..plans.local import lit_df
 from ..plans.schema_walk import (
     KIND_ARRAY,
@@ -78,10 +79,6 @@ from .profile import (
     _len_expr,
     _value_expr,
 )
-
-# DataSketches HLL precision: 2^14 registers ~= 0.8% relative standard
-# error — comfortably inside the 2% tolerance the sketch tests pin.
-_LG_CONFIG_K = 14
 
 _QUARTILES = (
     ("numeric_lower_quartile", 0.25),
@@ -303,7 +300,7 @@ def profile_state(
         ),
         F.max(F.when(fil, F.col("uni"))).alias("has_unicode"),
         F.bit_and(flag).alias("type_flags"),
-        F.hll_sketch_agg(F.when(fil, F.col("vhash")), _LG_CONFIG_K).alias(
+        F.hll_sketch_agg(F.when(fil, F.col("vhash")), LG_CONFIG_K).alias(
             "card_sketch"
         ),
         F.count("v").alias("num_n"),

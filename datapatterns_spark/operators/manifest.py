@@ -62,12 +62,18 @@ from __future__ import annotations
 import time
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..plans.local import lit_df
-from .constraints import VERDICT_SCHEMA, Check, _resolve_segment_size, _run_checks
+from .constraints import (
+    VERDICT_SCHEMA,
+    Check,
+    _resolve_segment_size,
+    _run_checks,
+    partition_order,
+)
 
 MANIFEST_SCHEMA = (
     "partition string, status string, started_at double, finished_at double, "
@@ -139,7 +145,16 @@ def list_partitions(df: DataFrame, partition_col: str) -> list[str | None]:
             "map to the __HIVE_DEFAULT_PARTITION__ directory; map one of "
             "them to another value first"
         )
-    return sorted(parts, key=lambda p: (p is not None, p or ""))
+    return sorted(parts, key=partition_order)
+
+
+def _in_partitions(partition_col: str, values: list) -> Column:
+    """Rows whose ``partition_col`` (as a string) is one of ``values``;
+    ``None`` in ``values`` matches the NULL partition, which ``isin``
+    alone never does."""
+    part = F.col(partition_col).cast("string")
+    cond = part.isin([v for v in values if v is not None])
+    return cond | part.isNull() if None in values else cond
 
 
 def _sweep_orphans(spark: SparkSession, path: str, done: set[str]) -> int:
@@ -226,11 +241,10 @@ def _run_checkpointed(
     todo = [p for p in list_partitions(df, partition_col) if p not in done]
     write_batch = start(done, todo)
     _sweep_orphans(spark, path, done)
-    in_batch = F.col(partition_col).cast("string").isin
     for i in range(0, len(todo), batch_size):
         batch = todo[i : i + batch_size]
         started = time.time()
-        counts = write_batch(df.filter(in_batch(batch)), batch)
+        counts = write_batch(df.filter(_in_partitions(partition_col, batch)), batch)
         finished = time.time()
         manifest_rows = [
             (p, "COMPLETE", started, finished, n_checks, counts.get(p, 0), snapshot_id)
@@ -265,7 +279,7 @@ def run_with_manifest(
         seg = segment_size
         if todo:
             seg = _resolve_segment_size(
-                df.filter(F.col(partition_col).cast("string").isin(todo)),
+                df.filter(_in_partitions(partition_col, todo)),
                 checks,
                 segment_size,
             )

@@ -28,8 +28,8 @@ Scale design notes:
   a salted two-phase ``row_number`` (bucket-local top-k, then final
   top-k over <= buckets*k rows);
 * ``mode="approx"`` is the 10^12-row path: NO raw-value shuffle at
-  all — fill/lengths/type-folds/HLL cardinality
-  (``approx_count_distinct``) aggregate the melt directly,
+  all — fill/lengths/type-folds/cardinality (DataSketches HLL,
+  lgK 14, ~0.8% RSE) aggregate the melt directly,
   quantiles use ``percentile_approx`` sketches, patterns group on the
   (bounded-cardinality) pattern string, and modes/breakdowns are
   computed exactly but only for attributes whose estimated
@@ -45,8 +45,6 @@ from __future__ import annotations
 import datetime as _dt
 import json
 import os
-import sys
-import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
@@ -55,6 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import besttype
+from ..functions.sketches import LG_CONFIG_K
 from ..functions.patterns import (
     finish_pattern,
     is_non_ascii,
@@ -96,23 +95,6 @@ _PATTERN_STRUCT = "struct<data_pattern:string,rec_count:bigint,example:string>"
 _CORR_STRUCT = "struct<attribute:string,corr:double>"
 
 NUMERIC_FEATURES = ("min_max", "mean", "std_dev", "quartiles")
-
-_PHASE_DEBUG = bool(os.environ.get("DP_PHASE_DEBUG"))
-_phase_t0 = [0.0]
-
-
-def _phase_mark(name: str) -> None:
-    """Env-gated sub-phase wall-clock markers (DP_PHASE_DEBUG=1)."""
-    if _PHASE_DEBUG:
-        now = time.time()
-        if _phase_t0[0]:
-            print(
-                f"[profile-phase] {name}: {now - _phase_t0[0]:.2f}s",
-                file=sys.stderr,
-                flush=True,
-            )
-        _phase_t0[0] = now
-
 
 @dataclass
 class ProfileParams:
@@ -334,7 +316,7 @@ def melt_slim(
 
     * **strings**: trim once, hash + length + 48-char value cap —
       distinctness rides ``xxhash64`` of the full value (identical HLL
-      estimate: ``approx_count_distinct`` hashes its input anyway) and
+      estimate: ``hll_sketch_agg`` hashes its input anyway) and
       the non-ASCII probe is a precomputed bit, so free-text bytes
       never enter the explode/aggregate path;
     * **numeric**: native hash (the decimal rendering is injective, so
@@ -1603,22 +1585,6 @@ def _approx_driver_tail(
                 for i, (x, y) in enumerate(corr_pairs)
             ]
         ).collect()[0]
-    if _PHASE_DEBUG:
-        def _timed(name, fn):
-            def run():
-                t0 = time.time()
-                out = fn()
-                print(
-                    f"[profile-phase]   followup job {name}: "
-                    f"{time.time() - t0:.2f}s",
-                    file=sys.stderr,
-                    flush=True,
-                )
-                return out
-
-            return run
-
-        jobs = {name: _timed(name, fn) for name, fn in jobs.items()}
     res: dict[str, object] = {}
     if len(jobs) > 1:
         with ThreadPoolExecutor(len(jobs)) as ex:
@@ -1626,7 +1592,6 @@ def _approx_driver_tail(
             res = {name: f.result() for name, f in futs.items()}
     else:
         res = {name: fn() for name, fn in jobs.items()}
-    _phase_mark("followup_hists")
 
     # ---- popular / rare patterns (A8 + anti-join J3) ----
     popular: dict[str, list] = {}
@@ -1749,7 +1714,6 @@ def _approx_driver_tail(
         ]
     )
     out = _shape_output(_embed_rows_json(spark, recs, full_struct), params)
-    _phase_mark("assembly_plan")
     return out
 
 
@@ -1768,11 +1732,12 @@ def _profile_flat_approx(
        distinctness rides a precomputed 64-bit value hash and the
        non-ASCII probe a precomputed bit, so free-text bytes never
        enter the explode/aggregate path.  The melt
-       aggregates straight to attribute grain — fill/lengths, HLL++
-       cardinality, numeric sketch stats (min/max/mean/pop-stddev +
-       ``percentile_approx``), AND the per-attribute type/unicode
-       folds, so no second full pass is needed for them.  The per-row
-       type-flag ladder is gated so it is near-free on real data:
+       aggregates straight to attribute grain — fill/lengths,
+       DataSketches HLL cardinality (lgK 14), numeric sketch stats
+       (min/max/mean/pop-stddev + ``percentile_approx``), AND the
+       per-attribute type/unicode folds, so no second full pass is
+       needed for them.  The per-row type-flag ladder is gated so it
+       is near-free on real data:
        values longer than 40 chars cannot match any numeric rule
        (19/20-digit, 15.15-float, exp — Profile.ecl:908-935) and get
        flag 0 from a length test alone; a one-regex first-char probe
@@ -1792,14 +1757,13 @@ def _profile_flat_approx(
     3. low-card value histogram for modes/breakdown (bounded pass) and
        correlations (one agg of all ``corr`` pairs).
 
-    Deviations from the always-exact reference (documented): HLL
-    cardinality (rsd 1.5%), sketch quantiles, modes/breakdown only
-    under ``approx_mode_card_limit``, and top/rare patterns for
-    near-unique pattern spaces are candidate-merged (see
-    :func:`_heavy_pattern_candidates`).
+    Deviations from the always-exact reference (documented):
+    DataSketches HLL cardinality (lgK 14, ~0.8% RSE), sketch
+    quantiles, modes/breakdown only under ``approx_mode_card_limit``,
+    and top/rare patterns for near-unique pattern spaces are
+    candidate-merged (see :func:`_heavy_pattern_candidates`).
     """
     plen = params.pattern_len
-    _phase_mark("approx:start")
     meta = _attr_meta_df(df, attrs, sort_prefix, name_prefix)
     as_is_attrs = [
         a.name for a in attrs if a.kind in (KIND_NUMERIC, KIND_BOOLEAN, KIND_ARRAY)
@@ -1894,13 +1858,14 @@ def _profile_flat_approx(
             ).alias("min_len_nonzero"),
         ]
     if params.need_cardinality:
-        # HLL++ sketch, rsd=0.015 (documented deviation: reference is
-        # exact); fed the 64-bit value hash, not the value — identical
-        # estimate (see melt_slim)
+        # DataSketches HLL, lgK 14, ~0.8% RSE (documented deviation:
+        # reference is exact) — the sketch profile_state stores; fed
+        # the 64-bit value hash, not the value — identical estimate
+        # (see melt_slim)
         agg_exprs.append(
-            F.approx_count_distinct(F.when(filled, F.col("vhash")), 0.015).alias(
-                "cardinality"
-            )
+            F.hll_sketch_estimate(
+                F.hll_sketch_agg(F.when(filled, F.col("vhash")), LG_CONFIG_K)
+            ).alias("cardinality")
         )
     if params.need_flags:
         # per-row AND/OR folds (Profile.ecl:967-992), gated as per the
@@ -1922,7 +1887,9 @@ def _profile_flat_approx(
         ]
     if need_pat_feature:
         agg_exprs += [
-            F.approx_count_distinct(F.col("_pat_s"), 0.05).alias("_pat_card_short"),
+            F.hll_sketch_estimate(
+                F.hll_sketch_agg(F.col("_pat_s"), LG_CONFIG_K)
+            ).alias("_pat_card_short"),
             F.coalesce(F.sum(F.when(filled & ~short, 1)), F.lit(0)).alias("_n_long"),
         ]
     if params.need_numeric:
@@ -2077,7 +2044,6 @@ def _profile_flat_approx(
         base_rows = base.collect()
         base_tuples = [tuple(r) for r in base_rows]
     base = lit_df(df.sparkSession, base_tuples, base_schema)
-    _phase_mark("pass1_summary")
 
     need_vh = params.has("modes") or (
         params.has("cardinality_breakdown") and params.lcb_limit > 0
@@ -2208,7 +2174,6 @@ def _profile_flat_approx(
         pat = pat_frames[0]
         for p in pat_frames[1:]:
             pat = pat.unionByName(p)
-    _phase_mark("followup_hists")
 
     if pat is not None:
         pieces.extend(_pattern_pieces(pat, params, name_prefix))
@@ -2232,7 +2197,6 @@ def _profile_flat_approx(
     for p in pieces[1:]:
         out = out.join(p, "attribute", "left")
     out = _shape_output(out, params)
-    _phase_mark("assembly_plan")
     return out
 
 

@@ -1,8 +1,9 @@
 """The checkpoint protocol both checkpointed writers share
 (operators/manifest.py): crash windows of profile_incremental (a
 deterministic uncommitted batch and a real SIGKILL), a corrupt manifest
-that must not read as empty, the refused flat layout, and read-back
-that never touches the session's partition type-inference conf."""
+that must not read as empty, the refused flat layout, read-back that
+never touches the session's partition type-inference conf, and NULL
+partition values, which both writers must check and commit."""
 
 from __future__ import annotations
 
@@ -213,3 +214,56 @@ def test_run_with_manifest_leaves_inference_conf(spark, tmp_path):
     assert dict(verdicts.dtypes)["partition"] == "string"
     assert verdicts.columns[0] == "partition"
     assert sorted({r["partition"] for r in verdicts.collect()}) == ["0", "01", "1"]
+
+
+def _null_parts_df(spark):
+    """Four rows; both violations of ``v_positive`` sit in the NULL
+    partition."""
+    rows = [(None, -1), (None, -2), ("a", 1), ("b", 2)]
+    return spark.createDataFrame(rows, "part string, v int")
+
+
+def _v_positive():
+    return [C.row_rule("v_positive", "v > 0")]
+
+
+def test_run_checks_null_partition(spark):
+    """A NULL partition value gets its own verdict, sorted first like
+    list_partitions sorts it, with its violations counted."""
+    verdicts, violations = C.run_checks(
+        _null_parts_df(spark), _v_positive(), partition_col="part"
+    )
+    got = [(r["partition"], r["violation_count"]) for r in verdicts.collect()]
+    assert got == [(None, 2), ("a", 0), ("b", 0)]
+    assert violations.filter("partition IS NULL").count() == 2
+
+
+def test_run_with_manifest_null_partition(spark, tmp_path):
+    """The NULL partition is checked, reported as NULL (never the string
+    'None'), and committed with its violation count; a resume re-runs
+    nothing."""
+    df = _null_parts_df(spark)
+    out = str(tmp_path / "nullpart")
+    verdicts = run_with_manifest(df, _v_positive(), "part", out, batch_size=1)
+    got = {r["partition"]: r["violation_count"] for r in verdicts.collect()}
+    assert got == {None: 2, "a": 0, "b": 0}
+    manifest = {
+        r["partition"]: r["n_violations"]
+        for r in spark.read.parquet(f"{out}/manifest").collect()
+    }
+    assert manifest == {None: 2, "a": 0, "b": 0}
+    assert (
+        spark.read.parquet(f"{out}/violations").filter("partition IS NULL").count()
+        == 2
+    )
+    resumed = run_with_manifest(df, _v_positive(), "part", out, batch_size=1)
+    assert _rows(resumed) == _rows(verdicts)
+    assert spark.read.parquet(f"{out}/manifest").count() == 3
+
+
+def test_profile_incremental_null_partition(spark, tmp_path):
+    """The NULL partition's rows are profiled into the merged state."""
+    merged = profile_incremental(
+        _null_parts_df(spark), "part", str(tmp_path / "nullstates"), batch_size=1
+    )
+    assert {r["attribute"]: r["rec_count"] for r in merged.collect()} == {"v": 4}

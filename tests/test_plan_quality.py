@@ -7,6 +7,7 @@ Python, and the small side of similarity joins must broadcast.
 """
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -25,6 +26,26 @@ def _plan(df) -> str:
 
 def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _executed_plans(spark, action) -> list[str]:
+    """The formatted physical plans of every SQL execution ``action``
+    runs, read from Spark's SQL status store (final AQE plans)."""
+    sc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+    sc.listenerBus().waitUntilEmpty()
+    before = store.executionsList()
+    last = max(
+        (before.apply(i).executionId() for i in range(before.size())), default=-1
+    )
+    action()
+    sc.listenerBus().waitUntilEmpty()
+    after = store.executionsList()
+    return [
+        e.physicalPlanDescription()
+        for e in (after.apply(i) for i in range(after.size()))
+        if e.executionId() > last
+    ]
 
 
 def test_profile_prunes_scan_columns(spark):
@@ -162,6 +183,31 @@ def test_profile_assembly_never_rescans_source(spark):
         assert "ExistingRDD" in plan or "InMemoryTableScan" in plan
     finally:
         del os.environ["DP_APPROX_TAIL"]
+
+
+def test_approx_profile_pass1_buffer_stays_narrow(spark):
+    """Pass 1 of the approx profile counts distinct values with
+    DataSketches HLL, whose state is one binary buffer column.  Spark's
+    HLL++ keeps each register as its own long column (889 partial
+    aggregate outputs on this table), which bloats the projections
+    Spark generates for the aggregate; neither it nor any other wide
+    register buffer may come back."""
+    df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    plans = _executed_plans(spark, lambda: profile(df, mode="approx").collect())
+    assert plans
+    widths = []
+    for plan in plans:
+        assert "HyperLogLogPlusPlus" not in plan
+        assert "approx_count_distinct" not in plan
+        # formatted explain: one blank-line-separated section per node
+        for node in plan.split("\n\n"):
+            if (
+                re.search(r"^Input \[\d+\]: \[.*\bvhash#", node, re.M)
+                and re.search(r"^Functions \[\d+\]: \[partial_", node, re.M)
+            ):
+                widths.append(int(re.search(r"^Results \[(\d+)\]", node, re.M)[1]))
+    assert widths, "pass-1 partial aggregate not found in the executed plans"
+    assert max(widths) < 64, widths
 
 
 def test_incremental_state_prunes_and_stays_jvm(spark):
