@@ -776,95 +776,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "numeric_min", "numeric_max", "numeric_mean", "numeric_std_dev",
         )
 
-    def q_multimodal_transform(spark, sf):
-        """Feature extraction, resize AND frame sampling through the
-        Arrow mapInPandas plumbing with the fake deterministic decoder
-        (the round-3/4 entry consolidations; formerly
-        multimodal_features + multimodal_resize + multimodal_frames,
-        unchanged semantics).  Rows with part='transform' carry the
-        features+resize join over a 200-row media table; rows with
-        part='frames' carry per-video sampled-frame counts over a
-        120-row table (n_frames; other columns null)."""
-        from datapatterns_spark.operators import multimodal as MM
-
-        media = MM.make_fake_media_table(spark, n=200)
-        feats = MM.extract_features(media, fake=True)
-        # f0 rescaled back to its integral 16-bit source so the DuckDB
-        # oracle compares exactly (float32 round-trip error ~4e-3 << 0.5)
-        f = feats.select(
-            "media_id",
-            "n_bytes",
-            F.round(F.element_at("features", 1) * 65535)
-            .cast("long")
-            .alias("f0_scaled"),
-        )
-        resized = MM.resize_media(media, width=64, height=48, fake=True)
-        # payload is ASCII hex by convention -> compare as text
-        r = resized.select(
-            "media_id",
-            F.col("media").cast("string").alias("media"),
-            "width",
-            "height",
-        )
-        transform = f.join(r, "media_id").select(
-            F.lit("transform").alias("part"),
-            "media_id", "n_bytes", "f0_scaled", "media", "width", "height",
-            F.lit(None).cast("long").alias("n_frames"),
-        )
-        media2 = MM.make_fake_media_table(spark, n=120)
-        frames = (
-            MM.sample_frames(media2, every_ms=1000, fake=True)
-            .groupBy("media_id")
-            .agg(F.count(F.lit(1)).alias("n_frames"))
-            .select(
-                F.lit("frames").alias("part"),
-                "media_id",
-                F.lit(None).cast("long").alias("n_bytes"),
-                F.lit(None).cast("long").alias("f0_scaled"),
-                F.lit(None).cast("string").alias("media"),
-                F.lit(None).cast("int").alias("width"),
-                F.lit(None).cast("int").alias("height"),
-                "n_frames",
-            )
-        )
-        return transform.unionByName(frames)
-
-    def q_multimodal_real(spark, sf):
-        """The REAL decode paths (no fake=True anywhere): stdlib
-        PNG/JPEG/GIF/AVI/WAV codecs inside the Arrow mapInPandas
-        workers.  part='features' rows carry (k=payload bytes,
-        v=features[0] scaled to a long); part='frames' rows carry
-        (k=frame timestamp ms, v=PNG-re-encoded frame byte length) for
-        every video sampled at 250 ms.  Pixel decoding is not
-        SQL-expressible, so the DuckDB oracle SELECTs a checked-in
-        expected-output fixture derived from the pure-Python codecs
-        (scripts/make_multimodal_fixture.py; Spark-vs-pure codec
-        parity is itself pinned by tests/test_codecs.py) — the round-4
-        consolidation of the formerly rows-only
-        multimodal_real_features + multimodal_real_frames entries."""
-        from datapatterns_spark.operators import multimodal as MM
-
-        media = MM.make_real_media_table(spark, n=24)
-        feats = MM.extract_features(media)  # fake defaults to False
-        fpart = feats.select(
-            F.lit("features").alias("part"),
-            "media_id",
-            F.col("n_bytes").alias("k"),
-            F.round(F.element_at("features", 1).cast("double") * 65535)
-            .cast("long")
-            .alias("v"),
-        )
-        frames = MM.sample_frames(
-            media.filter("meta.media_type = 'video'"), every_ms=250
-        )
-        rpart = frames.select(
-            F.lit("frames").alias("part"),
-            "media_id",
-            F.col("frame_ms").alias("k"),
-            F.octet_length("frame").cast("long").alias("v"),
-        )
-        return fpart.unionByName(rpart)
-
     def q_profile_incremental(spark, sf):
         """Mergeable per-partition profile states folded into a table
         profile: merge of per-o_orderpriority states must equal a
@@ -1150,8 +1061,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_simhash": q_simhash,
         "transcript_suite": q_transcript_suite,
         "profile_approx": q_profile_approx,
-        "multimodal_transform": q_multimodal_transform,
-        "multimodal_real": q_multimodal_real,
         "ann_ivf_topk": q_ann_ivf,
         "best_record_structure": q_best_record,
         "apply_best_types": q_apply_best_types,
@@ -1407,29 +1316,6 @@ UNION ALL SELECT '    ' || best_attribute_type || ' props;' FROM best WHERE attr
 UNION ALL SELECT 'END;'
 """
 
-    # ---- multimodal (deterministic fake-decode stubs) ----
-    # make_fake_media_table: payload = ascii(sha256_hex('42:' || id)) x 8;
-    # every third id (0,3,...) is a 5000ms video, others are images with
-    # duration 0.  sample_frames(every_ms=1000) -> 5 frames per video.
-    multimodal_frames_sql = (
-        "SELECT CAST(3 * i AS BIGINT) AS media_id, CAST(5 AS BIGINT) AS n_frames "
-        "FROM range(40) t(i)"
-    )
-    # extract_features: n_bytes = len(payload) = 512; features[0] =
-    # first 2 bytes of sha256(payload) / 65535 (float32) — compared via
-    # its integral 16-bit source.
-    multimodal_features_sql = """
-WITH ids AS (SELECT CAST(i AS BIGINT) AS media_id FROM range(200) t(i)),
-pl AS (SELECT media_id, repeat(sha256('42:' || media_id), 8) AS payload FROM ids),
-h AS (SELECT media_id, CAST(length(payload) AS BIGINT) AS n_bytes, sha256(payload) AS hx FROM pl)
-SELECT media_id, n_bytes,
-  CAST((strpos('0123456789abcdef', substr(hx, 1, 1)) - 1) * 4096
-     + (strpos('0123456789abcdef', substr(hx, 2, 1)) - 1) * 256
-     + (strpos('0123456789abcdef', substr(hx, 3, 1)) - 1) * 16
-     + (strpos('0123456789abcdef', substr(hx, 4, 1)) - 1) AS BIGINT) AS f0_scaled
-FROM h
-"""
-
     # ---- verdicts_per_partition (per-partition verdict grain) ----
     verdicts_per_partition_sql = """
 WITH parts AS (SELECT DISTINCT o_orderpriority AS partition FROM orders),
@@ -1479,38 +1365,6 @@ UNION ALL SELECT partition, 'price_positive', vc = 0, vc::BIGINT FROM pr
         ks_baseline=_TURN_KS_BASELINE,
         benford_expected=EXPECTED[1],
         benford_critical=CRITICAL_1,
-    )
-
-    # ---- multimodal_resize (fake resize: sha256(payload + "WxH")) ----
-    multimodal_resize_sql = """
-WITH ids AS (SELECT CAST(i AS BIGINT) AS media_id FROM range(200) t(i)),
-pl AS (SELECT media_id, repeat(sha256('42:' || media_id), 8) AS payload FROM ids)
-SELECT media_id, sha256(payload || '64x48') AS media,
-       64 AS width, 48 AS height
-FROM pl
-"""
-
-    # ---- multimodal_transform (round-3/4 consolidations: features +
-    # resize joined over one fake media table, unioned with per-video
-    # sampled-frame counts over another) ----
-    multimodal_transform_sql = f"""
-WITH mf AS MATERIALIZED ({multimodal_features_sql}),
-mr AS MATERIALIZED ({multimodal_resize_sql})
-SELECT 'transform' AS part, mf.media_id, mf.n_bytes, mf.f0_scaled,
-       mr.media, mr.width, mr.height, CAST(NULL AS BIGINT) AS n_frames
-FROM mf JOIN mr ON mr.media_id = mf.media_id
-UNION ALL
-SELECT 'frames', f.media_id, NULL, NULL, NULL, NULL, NULL, f.n_frames
-FROM ({multimodal_frames_sql}) f
-"""
-
-    # ---- multimodal_real: checked-in expected-output fixture derived
-    # from the pure-Python codecs (scripts/make_multimodal_fixture.py;
-    # pixel decode itself is not SQL-expressible, codec parity pinned
-    # by tests/test_codecs.py) ----
-    multimodal_real_sql = (
-        "SELECT part, media_id, k, v FROM "
-        "'/root/repo/tests/fixtures/multimodal_real_expected.parquet'"
     )
 
     # ---- text_winnow (winnowing fingerprints, k=5 w=4) ----
@@ -2939,8 +2793,6 @@ SELECT 'dedup', 'decisions', 'n_docs',
         "dedup_incremental": dedup_incremental_sql,
         "dedup_incremental_minhash": dedup_incremental_minhash_sql,
         "winnow": winnow_sql,
-        "multimodal_transform": multimodal_transform_sql,
-        "multimodal_real": multimodal_real_sql,
         "text_redact": text_redact_sql,
         "text_repetition": text_repetition_sql,
         "text_lm_score": text_lm_score_sql,
