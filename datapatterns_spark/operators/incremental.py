@@ -572,8 +572,7 @@ def profile_incremental(
     ``quantile_delta`` must match the store: mixing state rows with
     and without ``q_sketch`` would silently drop quantile coverage for
     the sketchless partitions, so a mismatch against existing states
-    fails fast (the same param-pinning contract as the curation job's
-    run-params guard).  A store written by the retired t-digest sketch
+    fails fast.  A store written by the retired t-digest sketch
     (``q_sketch`` starting ``TD1``) is refused, never merged."""
     k = None if quantile_delta is None else _kll_k(quantile_delta)
     spark = df.sparkSession
