@@ -3,11 +3,11 @@ deployment-level switch.
 
 Several operators materialize a shared intermediate once so multiple
 consumers (the profile's follow-up passes, the check suite's verdict
-aggregation and violation rows) don't recompute it.  The library default is ``DataFrame.localCheckpoint``:
-materialized in one job, freed by the ContextCleaner when the frame is
-unreferenced (no CacheManager leak — the round-3 fix), and the cut
-lineage also removes per-consumer Catalyst re-optimization of large
-expression trees.
+aggregation and violation rows) don't recompute it.  The library
+default is ``DataFrame.localCheckpoint``: materialized in one job,
+freed by the ContextCleaner when the frame is unreferenced (no
+CacheManager leak — the round-3 fix), and the cut lineage also removes
+per-consumer Catalyst re-optimization of large expression trees.
 
 The documented trade (Spark's own caveat for ``localCheckpoint``): the
 checkpointed partitions live UNREPLICATED in executor storage with the

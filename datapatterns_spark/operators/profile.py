@@ -44,7 +44,6 @@ from __future__ import annotations
 
 import datetime as _dt
 import json
-import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
@@ -1300,81 +1299,9 @@ def _heavy_pattern_candidates(
     caveat as before.  64-bit hash collisions are negligible at this
     key count (~1e-5 at 20M patterns).
     """
-    if os.environ.get("DP_PATTERN_COUNTS", "resolve") == "estimate":
-        return _estimate_pattern_candidates(df, heavy_attrs, params, plen, total_rows)
     winners = _pattern_sample_winners(df, heavy_attrs, params, plen, total_rows)
     return _resolve_pattern_candidates(
         df, heavy_attrs, winners, plen, params.allow_zero
-    )
-
-
-def _estimate_pattern_candidates(
-    df: DataFrame,
-    cand_attrs: list[AttrInfo],
-    params: ProfileParams,
-    plen: int,
-    total_rows: int,
-) -> DataFrame:
-    """``DP_PATTERN_COUNTS=estimate``: one-stage heavy-pattern path —
-    pattern strings, examples and SCALED counts all come from the same
-    bounded 1/S sample, skipping the resolution re-scan entirely.
-
-    At deployment scale the resolution is one of the heavy-path's two
-    full text decodes (measured 11-16s of the 17.6s heavy job at 19.2M
-    turns, bandwidth-bound per-row string work); this trades it for a
-    documented accuracy step-down: ``rec_count`` becomes ``sampled_cnt
-    * S`` (relative error ~1/sqrt(sampled_cnt) — <1% for any pattern
-    with >=10^4 sampled hits), examples are drawn from sampled rows
-    only, and rare-k selection is sample-order noisy (rare counts are
-    tiny multiples of S).  Top-k MEMBERSHIP keeps the same
-    sample-coverage guarantee as the default resolve path — candidate
-    selection was already sample-based; only the reported counts
-    change.  Default stays "resolve" (exact counts for candidates)."""
-    m = max(4 * int(params.max_patterns), 400)
-    budget = 4_000_000
-    s_mod = max(16, int(total_rows) // budget + 1)
-    cand = (
-        _melt_filled(
-            df.filter(F.rand(42) < 1.0 / s_mod), cand_attrs, params.allow_zero
-        )
-        .select(
-            "attribute",
-            _pattern_expr_finished(cand_attrs, plen).alias("data_pattern"),
-            "value",
-        )
-        .groupBy("attribute", "data_pattern")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.min(F.substring(F.col("value"), 1, plen)).alias("example"),
-        )
-    )
-    # same salted dual top/bottom-2m ranking as the sample stage: one
-    # Exchange on (attribute, salt) shared by both Sort+Window pairs
-    buckets = 64
-    salt = F.pmod(F.xxhash64("data_pattern"), F.lit(buckets))
-    w1d = Window.partitionBy("attribute", salt).orderBy(
-        F.desc("cnt"), F.asc("data_pattern")
-    )
-    w1a = Window.partitionBy("attribute", salt).orderBy(
-        F.asc("cnt"), F.asc("data_pattern")
-    )
-    survivors = (
-        cand.withColumn("_rd", F.row_number().over(w1d))
-        .withColumn("_ra", F.row_number().over(w1a))
-        .filter((F.col("_rd") <= 2 * m) | (F.col("_ra") <= 2 * m))
-    )
-    w2d = Window.partitionBy("attribute").orderBy(F.desc("cnt"), F.asc("data_pattern"))
-    w2a = Window.partitionBy("attribute").orderBy(F.asc("cnt"), F.asc("data_pattern"))
-    return (
-        survivors.withColumn("_fd", F.row_number().over(w2d))
-        .withColumn("_fa", F.row_number().over(w2a))
-        .filter((F.col("_fd") <= 2 * m) | (F.col("_fa") <= 2 * m))
-        .select(
-            "attribute",
-            "data_pattern",
-            (F.col("cnt") * s_mod).cast("long").alias("rec_count"),
-            "example",
-        )
     )
 
 
@@ -2114,12 +2041,8 @@ def _profile_flat_approx(
     # collect them and run the top-k/mode/breakdown/assembly math in
     # Python — deletes ~10 sequential tiny cluster stages of pure
     # scheduler latency (see _approx_driver_tail).  The cluster tail
-    # below remains for oversized low-card histograms and for A/B
-    # (DP_APPROX_TAIL=cluster).
-    if (
-        os.environ.get("DP_APPROX_TAIL", "driver") != "cluster"
-        and est_vh_rows <= _DRIVER_TAIL_VH_LIMIT
-    ):
+    # below remains for oversized low-card histograms.
+    if est_vh_rows <= _DRIVER_TAIL_VH_LIMIT:
         return _approx_driver_tail(
             df,
             attrs,

@@ -172,67 +172,21 @@ def test_nth_digit_fractional_fast_path_matches_generic(spark):
         assert mismatch == [], (pos, mismatch[:5])
 
 
-def test_driver_tail_matches_cluster_tail(spark, lineitem):
+def test_driver_tail_matches_cluster_tail(spark, lineitem, monkeypatch):
     """The driver-side approx finishing (collect bounded follow-ups,
     finish top-k/modes/breakdown/correlations in Python, emit one
     literal frame) must be value-identical to the cluster-side
     assembly it replaces — full feature set, mixed kinds, ties,
-    correlations included."""
-    import os
+    correlations included.  A negative histogram limit forces the
+    cluster tail."""
+    from datapatterns_spark.operators import profile as profile_mod
 
     rows_driver = profile(lineitem, mode="approx").collect()
-    os.environ["DP_APPROX_TAIL"] = "cluster"
-    try:
-        rows_cluster = profile(lineitem, mode="approx").collect()
-    finally:
-        del os.environ["DP_APPROX_TAIL"]
+    monkeypatch.setattr(profile_mod, "_DRIVER_TAIL_VH_LIMIT", -1)
+    rows_cluster = profile(lineitem, mode="approx").collect()
     a = [r.asDict(recursive=True) for r in rows_driver]
     b = [r.asDict(recursive=True) for r in rows_cluster]
     assert a == b
-
-
-def test_heavy_pattern_estimate_mode(spark, monkeypatch):
-    """DP_PATTERN_COUNTS=estimate: one-stage heavy path — no resolution
-    re-scan; dominant patterns still surface, counts are scaled sample
-    counts (multiples of the sample modulus) within sampling error."""
-    from pyspark.sql import functions as F
-
-    from datapatterns_spark.operators.profile import (
-        ProfileParams,
-        _profile_flat,
-    )
-    from datapatterns_spark.plans.schema_walk import walk_schema
-
-    df = spark.range(2200).select(
-        F.when(F.col("id") < 800, F.lit("AB12"))
-        .when((F.col("id") >= 800) & (F.col("id") < 1200), F.lit("zz zz"))
-        .otherwise(
-            F.concat(
-                F.repeat(F.lit("X"), (F.col("id") % 23 + 1).cast("int")),
-                F.repeat(F.lit("7"), (F.col("id") % 13 + 1).cast("int")),
-            )
-        )
-        .alias("t")
-    )
-    attrs, _ = walk_schema(df.schema, None)
-    params = ProfileParams(
-        features=("patterns", "fill_rate"),
-        mode="approx",
-        approx_pattern_limit=10,
-        max_patterns=10,
-    )
-    monkeypatch.setenv("DP_PATTERN_COUNTS", "estimate")
-    out = _profile_flat(df, attrs, params, "", "").collect()[0].asDict(recursive=True)
-    pats = {p["data_pattern"]: p["rec_count"] for p in out["popular_patterns"]}
-    assert "AA99" in pats and "aa aa" in pats
-    # seeded 1/16 Bernoulli -> scaled counts within sampling error
-    assert abs(pats["AA99"] - 803) <= 0.35 * 803
-    assert abs(pats["aa aa"] - 400) <= 0.35 * 400
-    # counts are pure scale-ups of sampled counts
-    assert all(c % 16 == 0 for c in pats.values())
-    rare = {p["data_pattern"] for p in out["rare_patterns"]}
-    assert rare.isdisjoint(set(pats))
-    assert len(rare) > 0
 
 
 def test_sketch_cardinality_zero_for_unfilled_columns(spark):
