@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` smoke-runs the flagship profile; ``queries()`` maps
-every implemented operator family (SURVEY.md §2 + the constraint
-layer) to a callable on the driver-generated parquet tables;
+every implemented operator family (SURVEY.md §2 + the training-data
+pipeline ops) to a callable on the driver-generated parquet tables;
 ``oracle_sql()`` provides DuckDB-equivalent SQL for each
 SQL-expressible query.  Column names/aliases match pairwise so the
 driver's order-insensitive value-hash comparison lines up.
@@ -77,11 +77,22 @@ _PATTERN0_SQL = (
     " '123456789', '999999999')"
 )
 
+# NOTE: DuckDB's RE2 does not understand Java's \p{Punct}; POSIX
+# [[:punct:]] is the same ASCII set Spark's \p{Punct} matches.
+_NORM_SQL = (
+    "trim(regexp_replace(regexp_replace(lower(coalesce({v}, '')),"
+    " '[[:punct:]]', ' ', 'g'), '\\s+', ' ', 'g'))"
+)
+
+
 # ---------------------------------------------------------------------------
 # queries
 # ---------------------------------------------------------------------------
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from datapatterns_spark.operators import constraints as C
+    from datapatterns_spark.operators import dedup as D
+    from datapatterns_spark.operators import similarity as S
+    from datapatterns_spark.operators import textanalysis as TA
     from datapatterns_spark.operators.benford import benford
     from datapatterns_spark.operators.cardinality import cardinality
     from datapatterns_spark.operators.profile import profile
@@ -340,6 +351,41 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return f1.unionByName(f2)
 
+    def q_similarity_topk(spark, sf):
+        emb = _t(spark, sf, "embeddings")
+        qs = emb.filter(F.col("vec_id").isin([1, 2, 3]))
+        r = S.brute_force_topk(emb, qs, k=5)
+        # 4-decimal rounding: float32 sum order differs between engines
+        # at the 6th decimal
+        return r.select(
+            "query_id", "neighbor_id", F.round("cos", 4).alias("cos"), "rank"
+        )
+
+    def q_exact_dedup(spark, sf):
+        return D.dedup_exact(_t(spark, sf, "documents"), "text", "doc_id").select("doc_id")
+
+    def q_ngram_jaccard(spark, sf):
+        return D.ngram_jaccard_pairs(
+            _t(spark, sf, "documents"), "text", "doc_id", n=3, threshold=0.7
+        )
+
+    def q_text_annotate(spark, sf):
+        """Per-document text analysis in ONE map-only select: token
+        counts (whitespace + BPE-ish), language id, quality score and
+        the normalized-text fingerprint (the round-3 entry
+        consolidation; formerly text_tokens + text_langid +
+        text_quality + text_fingerprint, unchanged per-column
+        semantics).  One scan, zero shuffles, zero Python."""
+        d = _t(spark, sf, "documents")
+        return d.select(
+            "doc_id",
+            TA.whitespace_token_count(F.col("text")).alias("ws_tokens"),
+            TA.bpe_token_count(F.col("text")).alias("bpe_tokens"),
+            TA.lang_id(F.col("text")).alias("lang_guess"),
+            TA.quality_score(F.col("text")).alias("quality"),
+            TA.fingerprint(F.col("text")).alias("fp"),
+        )
+
     def q_profile_correlations(spark, sf):
         p = profile(
             _t(spark, sf, "lineitem"),
@@ -365,6 +411,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("b.value").alias("value"),
             F.col("b.rec_count").alias("rec_count"),
         )
+
+    def q_dedup_embedding(spark, sf):
+        return D.embedding_cosine_pairs(
+            _t(spark, sf, "embeddings"),
+            "embedding",
+            "vec_id",
+            threshold=0.45,
+            method="brute",
+        ).select("id_a", "id_b")  # cos dropped: a 0.45555 re-round tie
+        # flips between engines; pair membership has >5e-4 margin
 
     def q_profile_normalize_compare(spark, sf):
         """NormalizeProfileResults + profile-vs-profile diff in one
@@ -422,6 +478,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return a.unionByName(b)
 
+    # --- (ann_ivf gained an exact literal-centroid oracle later) ---
+    def q_ann_ivf(spark, sf):
+        emb = _t(spark, sf, "embeddings")
+        qs = emb.filter(F.col("vec_id").isin([1, 2, 3]))
+        # refine_sweeps=0 pins the raw seeded centroids so the DuckDB
+        # oracle can replay them as literals; the library default is
+        # one Lloyd sweep (recall/balance measured in BASELINE.md)
+        return S.ivf_topk(
+            emb, qs, k=5, n_cells=16, n_probe=8, dim=64, refine_sweeps=0
+        )
+
     def q_best_record(spark, sf):
         from datapatterns_spark.operators.best_record import best_record_structure
 
@@ -441,6 +508,187 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "o_orderdate",
         )
         return apply_best_types(src)
+
+    def q_text_lm_score(spark, sf):
+        """Char-bigram LM quality scores (the CCNet-style perplexity
+        gate): model self-trained on the corpus, every doc scored by
+        mean add-alpha conditional log-prob.  Exact oracle: each ln()
+        term is quantized to integer 1e-9 units with the cross-engine
+        floor(x+0.5) rule and summed as longs."""
+        return TA.lm_quality_score(_t(spark, sf, "documents"))
+
+    def q_text_contamination(spark, sf):
+        """Benchmark decontamination: 8-gram overlap of the corpus
+        against a planted eval set (every 40th document re-labeled).
+        Broadcast eval grams; the corpus never shuffles."""
+        docs = _t(spark, sf, "documents").select("doc_id", "text")
+        ev = docs.filter("doc_id % 40 = 0").select(
+            F.col("doc_id").alias("eval_id"), "text"
+        )
+        return TA.contamination_check(docs, ev, n=8)
+
+    def q_text_repetition(spark, sf):
+        """Gopher repetition measures over documents — dup-line
+        fraction, dup-line char fraction, top-2-gram char coverage.
+        Spark computes them map-only via sorted-run folds; the oracle
+        recomputes with an independent unnest+groupBy algorithm."""
+        return TA.repetition_stats(_t(spark, sf, "documents"))
+
+    def q_text_redact(spark, sf):
+        """PII detect + redact over documents with deterministically
+        planted emails/phones (every 5th doc) — counts on the pre-
+        redaction text, sequential pattern substitution.  Map-only
+        plan: no shuffle, no Python."""
+        docs = _t(spark, sf, "documents")
+        planted = docs.select(
+            "doc_id",
+            F.when(
+                F.col("doc_id") % 5 == 0,
+                F.concat(
+                    F.coalesce(F.col("text"), F.lit("")),
+                    F.lit(" contact user"),
+                    F.col("doc_id").cast("string"),
+                    F.lit("@example.com or 555-123-4567"),
+                ),
+            ).otherwise(F.col("text")).alias("text"),
+        )
+        out = TA.redact_pii(planted)
+        return out.select(
+            "doc_id", "n_email", "n_ssn", "n_phone", "n_ipv4",
+            "pii_total", "redacted",
+        )
+
+    def q_winnow(spark, sf):
+        """Winnowing (MOSS) fingerprints AND the near-dup pairs built
+        from them in one entry (the round-3 entry consolidation;
+        formerly text_winnow + dedup_winnow, unchanged semantics).
+        kind='fp' rows are (doc_id, fingerprint) from the k-gram
+        rolling hash + w-window minima (expression-only); kind='pair'
+        rows are the shared-fingerprint near-dup pairs (df-capped
+        inverted-index self-join).  Integral columns only."""
+        docs = _t(spark, sf, "documents")
+        fps = TA.winnow_table(docs, "text", "doc_id").select(
+            F.lit("fp").alias("kind"),
+            F.col("doc_id").cast("long").alias("a"),
+            F.col("fp").cast("long").alias("b"),
+            F.lit(None).cast("long").alias("c"),
+            F.lit(None).cast("long").alias("d"),
+        )
+        pairs = TA.winnow_near_dups(
+            docs, "text", "doc_id", min_shared_frac=0.5, max_fp_df=100,
+        ).select(
+            F.lit("pair").alias("kind"),
+            F.col("id_a").cast("long").alias("a"),
+            F.col("id_b").cast("long").alias("b"),
+            F.col("shared").cast("long").alias("c"),
+            F.col("n_min").cast("long").alias("d"),
+        )
+        return fps.unionByName(pairs)
+
+    def q_minhash_lsh(spark, sf):
+        return D.minhash_lsh_pairs(
+            _t(spark, sf, "documents"), "text", "doc_id", threshold=0.7
+        )
+
+    def q_simhash(spark, sf):
+        return D.simhash_pairs(_t(spark, sf, "documents"), "text", "doc_id", max_hamming=3)
+
+    def q_dedup_conversations(spark, sf):
+        """Whole-conversation exact dedup over pseudo-conversations
+        built from the documents table (conv = doc_id div 20, turn =
+        doc_id mod 20) with planted clones (every 7th conversation
+        re-labeled +100000).  Fingerprint folds are commutative
+        groupBy aggregates — map-side combinable, hot-conversation
+        safe."""
+        docs = _t(spark, sf, "documents")
+        base = docs.select(
+            F.expr("doc_id div 20").alias("conv_id"),
+            F.expr("doc_id % 20").alias("turn_idx"),
+            "text",
+        )
+        clones = base.filter("conv_id % 7 = 0").withColumn(
+            "conv_id", F.col("conv_id") + 100000
+        )
+        return D.conversation_dedup(base.unionByName(clones))
+
+    def q_dedup_incremental(spark, sf):
+        """Two-batch incremental exact dedup: batch 1 (doc_id < 250)
+        seeds the fingerprint store; batch 2 (the rest, plus every
+        50th batch-1 text re-labeled +10000) classifies against it."""
+        from datapatterns_spark.operators.dedup import incremental_exact_dedup
+
+        docs = _t(spark, sf, "documents").select("doc_id", "text")
+        b1 = docs.filter("doc_id < 250")
+        store = (
+            incremental_exact_dedup(b1, None)
+            .filter("status = 'unique'")
+            .select("fp")
+        )
+        b2 = docs.filter("doc_id >= 250").unionByName(
+            b1.filter("doc_id % 50 = 0").select(
+                (F.col("doc_id") + 10000).alias("doc_id"), "text"
+            )
+        )
+        return incremental_exact_dedup(b2, store)
+
+    def q_dedup_incremental_minhash(spark, sf):
+        """Near-dup incremental dedup vs a MinHash SIGNATURE store:
+        batch 1 (doc_id < 250) signatures are the store; batch 2 (the
+        rest + every 50th batch-1 text re-labeled +10000) classifies
+        by signature-estimated Jaccard over shared LSH band buckets —
+        no rescan of prior text.  Exact oracle: the estimator is pure
+        integer minhash arithmetic."""
+        from datapatterns_spark.operators.dedup import (
+            incremental_minhash_dedup,
+            minhash_signatures,
+        )
+
+        docs = _t(spark, sf, "documents").select("doc_id", "text")
+        b1 = docs.filter("doc_id < 250")
+        store = minhash_signatures(b1, "text", "doc_id")
+        b2 = docs.filter("doc_id >= 250").unionByName(
+            b1.filter("doc_id % 50 = 0").select(
+                (F.col("doc_id") + 10000).alias("doc_id"), "text"
+            )
+        )
+        decisions, _ = incremental_minhash_dedup(b2, store, threshold=0.7)
+        return decisions
+
+    def q_dedup_spans(spark, sf):
+        """Exact-substring duplicate SPANS (Lee et al. 2022 suffix-
+        array dedup, n-gram formulation): maximal token spans covered
+        by 8-grams occurring >= 2 times corpus-wide, merged per doc.
+        Output is pure integer positions, so the oracle replays the
+        pipeline on gram STRINGS (the Spark side joins on xxhash64 of
+        the gram — a collision would only over-merge, ~1e-11 at this
+        scale)."""
+        return D.duplicate_token_spans(
+            _t(spark, sf, "documents"), "text", "doc_id", n=8, min_count=2
+        )
+
+    def q_dedup_spans_winnow(spark, sf):
+        """Round 5: the winnowing volume lever under full oracle
+        audit.  Same span semantics as dedup_spans but with
+        ``winnow_w=4`` — gram positions selected by rightmost-window-
+        minimum over the Spark ``xxhash64`` gram hashes, islands
+        merged with slack w.  The oracle replays the ENTIRE selection
+        in DuckDB: the pure-SQL xxhash64 twin (functions/xxh64_sql.py)
+        reproduces the exact hash values, a composite-key window
+        ``arg_min`` reproduces the rightmost-min rule, and the span
+        assembly runs over selected positions only — so the lever's
+        math (not just its planted-test behavior) is pinned."""
+        return D.duplicate_token_spans(
+            _t(spark, sf, "documents"), "text", "doc_id",
+            n=8, min_count=2, winnow_w=4,
+        )
+
+    def q_dedup_components(spark, sf):
+        """Near-dup pairs -> dedup clusters + canonical keep-list via
+        large-star/small-star connected components."""
+        pairs = D.minhash_lsh_pairs(
+            _t(spark, sf, "documents"), "text", "doc_id", threshold=0.7
+        )
+        return D.dedup_components(pairs.select("id_a", "id_b"))
 
     def q_transcript_suite(spark, sf):
         df = generate_transcripts(spark, n_conversations=2000, seed=42, violation_rate=0.003)
@@ -617,11 +865,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         bounded multi-micro-batch Structured Streaming run (the
         documents table re-laid as a 4-file directory, read with
         maxFilesPerTrigger=1 under trigger(availableNow) -> 4 real
-        micro-batches through a checkpointed foreachBatch) drives the
-        profile sink; the emitted ``profile`` rows are the rolling
-        merged profile from profile_state_sink + stream_profile, and
-        every decomposable statistic must equal a whole-table batch
-        pass exactly (micro-batch boundaries must not show).
+        micro-batches through a checkpointed foreachBatch) drives BOTH
+        streaming sinks; the emitted rows are the batch twins:
+
+        * ``profile``: the rolling merged profile from
+          profile_state_sink + stream_profile — every decomposable
+          statistic must equal a whole-table batch pass exactly
+          (micro-batch boundaries must not show);
+        * ``dedup``: dedup_sink's persistent fingerprint store — its
+          row count and distinct-fp count equal the corpus's distinct
+          normalized-text count (each fp appended exactly once across
+          batches), and total decisions equal the corpus size.
 
         Every emitted number is ORDER-INDEPENDENT of micro-batch
         boundaries by construction, so the SQL oracle needs no
@@ -632,6 +886,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         from datapatterns_spark.plans.local import lit_df
         from datapatterns_spark.streaming import (
+            dedup_sink,
             profile_state_sink,
             stream_profile,
         )
@@ -662,6 +917,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 ),
                 "prof",
             )
+            run(dedup_sink(f"{base}/store", f"{base}/ded"), "ded")
 
             stats = [
                 "rec_count", "fill_count", "fill_rate", "min_length",
@@ -690,6 +946,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                         ("profile", d["attribute"], s,
                          None if v is None else float(v))
                     )
+            store = spark.read.parquet(f"{base}/store")
+            rows.append(("dedup", "store", "store_rows", float(store.count())))
+            rows.append(
+                ("dedup", "store", "n_unique_fp",
+                 float(store.select("fp").distinct().count()))
+            )
+            rows.append(
+                ("dedup", "decisions", "n_docs",
+                 float(spark.read.parquet(f"{base}/ded/decisions").count()))
+            )
             return lit_df(
                 spark, rows,
                 "part string, attribute string, stat string, val double",
@@ -697,9 +963,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         finally:
             shutil.rmtree(base, ignore_errors=True)
 
-    # The correctness gate records at most 50 entries, so same-grain
-    # entries are consolidated; the mapping is documented in
-    # COVERAGE.md §"entry consolidation".
+    # Round-3 note: the driver's correctness gate records at most 50
+    # entries (CORRECTNESS_r02 covered exactly the first 50 of 60), so
+    # same-grain entries are consolidated — every operator keeps
+    # coverage, the mapping is documented in COVERAGE.md §"entry
+    # consolidation".
     return {
         "profile_fill_lengths": q_profile_fill_lengths,
         "profile_numeric_stats": q_profile_numeric,
@@ -716,13 +984,32 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "drift_metrics": q_drift_metrics,
         "constraint_alternation": q_constraint_alternation,
         "validate_fixes": q_validate_fixes,
+        "similarity_topk": q_similarity_topk,
+        "dedup_exact": q_exact_dedup,
+        "dedup_ngram_jaccard": q_ngram_jaccard,
+        "text_annotate": q_text_annotate,
         "profile_correlations": q_profile_correlations,
         "profile_cardinality_breakdown": q_profile_breakdown,
+        "dedup_embedding_cosine": q_dedup_embedding,
         "profile_normalize_compare": q_profile_normalize_compare,
+        "dedup_minhash_lsh": q_minhash_lsh,
+        "dedup_simhash": q_simhash,
         "transcript_suite": q_transcript_suite,
         "profile_approx": q_profile_approx,
+        "ann_ivf_topk": q_ann_ivf,
         "best_record_structure": q_best_record,
         "apply_best_types": q_apply_best_types,
+        "dedup_spans": q_dedup_spans,
+        "dedup_spans_winnow": q_dedup_spans_winnow,
+        "dedup_components": q_dedup_components,
+        "dedup_conversations": q_dedup_conversations,
+        "dedup_incremental": q_dedup_incremental,
+        "dedup_incremental_minhash": q_dedup_incremental_minhash,
+        "text_redact": q_text_redact,
+        "text_repetition": q_text_repetition,
+        "text_lm_score": q_text_lm_score,
+        "text_contamination": q_text_contamination,
+        "winnow": q_winnow,
         "profile_incremental": q_profile_incremental,
         "profile_quantile_sketch": q_profile_quantile_sketch,
         "streaming_state": q_streaming_state,
@@ -1011,6 +1298,497 @@ UNION ALL SELECT partition, 'price_positive', vc = 0, vc::BIGINT FROM pr
         benford_critical=CRITICAL_1,
     )
 
+    # ---- text_winnow (winnowing fingerprints, k=5 w=4) ----
+    # identical modular fold as the Spark expression: mod applied after
+    # every (acc*257 + codepoint) step, all arithmetic in BIGINT.
+    _wn_norm = _NORM_SQL.format(v="text")
+    text_winnow_sql = f"""
+WITH d AS (SELECT doc_id, {_wn_norm} AS s FROM documents),
+p AS (SELECT doc_id, s, length(s) - 4 AS nk FROM d WHERE length(s) >= 5),
+pos AS (
+  SELECT doc_id, nk, s, unnest(generate_series(1, nk)) AS i FROM p
+),
+kh AS (
+  SELECT doc_id, nk, i,
+    ((((((((CAST(ord(substr(s, CAST(i AS INT), 1)) AS BIGINT) % 2147483647) * 257
+      + ord(substr(s, CAST(i AS INT) + 1, 1))) % 2147483647) * 257
+      + ord(substr(s, CAST(i AS INT) + 2, 1))) % 2147483647) * 257
+      + ord(substr(s, CAST(i AS INT) + 3, 1))) % 2147483647) * 257
+      + ord(substr(s, CAST(i AS INT) + 4, 1))) % 2147483647 AS h
+  FROM pos
+),
+win AS (
+  SELECT doc_id, nk, i,
+    min(h) OVER (PARTITION BY doc_id ORDER BY i
+                 ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mh
+  FROM kh
+)
+SELECT DISTINCT doc_id, mh AS fp FROM win WHERE nk >= 4 AND i <= nk - 3
+UNION
+SELECT doc_id, MIN(h) AS fp FROM kh WHERE nk < 4 GROUP BY doc_id
+"""
+
+    # ---- winnow (round-3 consolidation: fingerprints + near-dup
+    # pairs over the SAME shared fps CTE; formerly text_winnow +
+    # dedup_winnow) ----
+    winnow_sql = f"""
+WITH wfp AS MATERIALIZED ({text_winnow_sql}),
+sizes AS (SELECT doc_id, COUNT(*) AS n_fp FROM wfp GROUP BY doc_id),
+hot AS (SELECT fp FROM wfp GROUP BY fp HAVING COUNT(*) > 100),
+pruned AS (SELECT * FROM wfp WHERE fp NOT IN (SELECT fp FROM hot)),
+sh AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS shared
+       FROM pruned a JOIN pruned b USING (fp) WHERE a.doc_id < b.doc_id
+       GROUP BY 1, 2),
+wpairs AS (
+  SELECT id_a, id_b, shared, least(sa.n_fp, sb.n_fp) AS n_min
+  FROM sh
+  JOIN sizes sa ON sa.doc_id = sh.id_a
+  JOIN sizes sb ON sb.doc_id = sh.id_b
+  WHERE shared * 1000000 >= 500000 * least(sa.n_fp, sb.n_fp))
+SELECT 'fp' AS kind, CAST(doc_id AS BIGINT) AS a, CAST(fp AS BIGINT) AS b,
+       CAST(NULL AS BIGINT) AS c, CAST(NULL AS BIGINT) AS d
+FROM wfp
+UNION ALL
+SELECT 'pair', CAST(id_a AS BIGINT), CAST(id_b AS BIGINT),
+       CAST(shared AS BIGINT), CAST(n_min AS BIGINT)
+FROM wpairs
+"""
+
+    # ---- xxhash64-exact oracles (text_fingerprint / simhash / minhash) ----
+    # DuckDB has no xxhash; functions/xxh64_sql.py GENERATES a single-
+    # statement SQL pipeline reproducing Spark's XxHash64 bit-for-bit
+    # (HUGEINT mod-2^64 arithmetic, lane folds via list_reduce) — so the
+    # hash-valued operators get exact oracles instead of rows-only.
+    from datapatterns_spark.functions.xxh64_sql import (
+        hash_int_steps,
+        xxh64_str_sql,
+    )
+    from datapatterns_spark.operators.dedup import MINHASH_P, minhash_coeffs
+
+    norm_text = _NORM_SQL.format(v="text")
+    text_fp_sql = xxh64_str_sql(
+        "documents", ["doc_id"], norm_text, out="fp", cte_prefix="fp"
+    )
+
+    # ---- text_lm_score (char-bigram LM, self-trained, add-alpha) ----
+    _lm_norm = _NORM_SQL.format(v="text")
+    text_lm_score_sql = f"""
+WITH lmnt AS MATERIALIZED (SELECT doc_id, {_lm_norm} AS s FROM documents),
+lmbg AS MATERIALIZED (
+  SELECT doc_id,
+         UNNEST(list_transform(range(1, length(s)),
+                               i -> substr(s, CAST(i AS INT), 2))) AS bg
+  FROM lmnt WHERE length(s) >= 2),
+lmmodel AS MATERIALIZED (SELECT bg, COUNT(*) AS cnt FROM lmbg GROUP BY bg),
+lmuni AS MATERIALIZED (
+  SELECT substr(bg, 1, 1) AS a, SUM(cnt) AS fcnt FROM lmmodel GROUP BY 1),
+lmv AS (SELECT COUNT(DISTINCT substr(bg, 2, 1)) + 1 AS v FROM lmmodel),
+lmlp AS (
+  SELECT b.doc_id,
+         CAST(FLOOR(LN((COALESCE(m.cnt, 0) + 0.5)
+                       / (COALESCE(u.fcnt, 0) + 0.5 * (SELECT v FROM lmv)))
+                    * 1000000000 + 0.5) AS BIGINT) AS lp9
+  FROM lmbg b
+  LEFT JOIN lmmodel m USING (bg)
+  LEFT JOIN lmuni u ON substr(b.bg, 1, 1) = u.a),
+lmagg AS (SELECT doc_id, COUNT(*) AS n_bigrams, SUM(lp9) AS s
+          FROM lmlp GROUP BY doc_id)
+SELECT lmnt.doc_id AS id,
+       CAST(COALESCE(lmagg.n_bigrams, 0) AS BIGINT) AS n_bigrams,
+       COALESCE(ROUND(lmagg.s / (lmagg.n_bigrams * 1000000000.0), 6), 0.0)
+         AS lm_score
+FROM lmnt LEFT JOIN lmagg USING (doc_id)
+"""
+
+    # ---- text_contamination (8-gram eval overlap) ----
+    _ct_norm = _NORM_SQL.format(v="text")
+    _ct_gram8 = (
+        "list_transform(range(1, len(tk) - 6),"
+        " i -> concat_ws(' ', tk[i], tk[i + 1], tk[i + 2], tk[i + 3],"
+        " tk[i + 4], tk[i + 5], tk[i + 6], tk[i + 7]))"
+    )
+    text_contamination_sql = f"""
+WITH cg AS MATERIALIZED (
+  SELECT doc_id, UNNEST(g) AS g FROM (
+    SELECT doc_id,
+           CASE WHEN len(tk) >= 8 THEN list_distinct({_ct_gram8})
+                ELSE [array_to_string(tk, ' ')] END AS g
+    FROM (SELECT doc_id, string_split({_ct_norm}, ' ') AS tk
+          FROM documents))),
+eg AS MATERIALIZED (
+  SELECT DISTINCT doc_id AS eval_id, g FROM cg WHERE doc_id % 40 = 0)
+SELECT c.doc_id, e.eval_id, CAST(COUNT(*) AS BIGINT) AS shared_grams
+FROM cg c JOIN eg e ON c.g = e.g
+GROUP BY 1, 2
+"""
+
+    # ---- text_repetition (independent unnest+groupBy algorithm) ----
+    _rp_norm = _NORM_SQL.format(v="t")
+    text_repetition_sql = f"""
+WITH d AS MATERIALIZED (SELECT doc_id, COALESCE(text, '') AS t FROM documents),
+l AS (SELECT doc_id,
+             UNNEST(list_filter(string_split(t, chr(10)), x -> trim(x) <> '')) AS line
+      FROM d),
+lc AS (SELECT doc_id, line, COUNT(*) AS c, length(line) AS len
+       FROM l GROUP BY doc_id, line),
+lstats AS (SELECT doc_id, SUM(c) AS n_lines, COUNT(*) AS n_distinct,
+                  SUM(c * len) AS total_chars,
+                  SUM(CASE WHEN c = 1 THEN len ELSE 0 END) AS single_chars
+           FROM lc GROUP BY doc_id),
+nt AS MATERIALIZED (SELECT doc_id, {_rp_norm} AS ntext FROM d),
+tk AS (SELECT doc_id, string_split(ntext, ' ') AS toks FROM nt),
+g AS (SELECT doc_id,
+             UNNEST(list_transform(range(1, len(toks)),
+                                   i -> toks[i] || ' ' || toks[i + 1])) AS gram
+      FROM tk WHERE len(toks) >= 2),
+gc AS (SELECT doc_id, gram, COUNT(*) AS c FROM g GROUP BY doc_id, gram),
+gtop AS (SELECT doc_id, c, gram FROM (
+           SELECT doc_id, c, gram,
+                  row_number() OVER (PARTITION BY doc_id
+                                     ORDER BY c DESC, gram DESC) AS rn
+           FROM gc) WHERE rn = 1)
+SELECT d.doc_id,
+  ROUND(CASE WHEN COALESCE(n_lines, 0) > 0
+        THEN (n_lines - n_distinct) * 1.0 / n_lines ELSE 0 END, 6)
+    AS dup_line_frac,
+  ROUND(CASE WHEN COALESCE(total_chars, 0) > 0
+        THEN (total_chars - single_chars) * 1.0 / total_chars ELSE 0 END, 6)
+    AS dup_line_char_frac,
+  ROUND(CASE WHEN length(nt.ntext) > 0 AND gtop.c IS NOT NULL
+        THEN gtop.c * length(gtop.gram) * 1.0 / length(nt.ntext)
+        ELSE 0 END, 6) AS top_ngram_char_frac
+FROM d
+LEFT JOIN lstats ON lstats.doc_id = d.doc_id
+LEFT JOIN gtop ON gtop.doc_id = d.doc_id
+JOIN nt ON nt.doc_id = d.doc_id
+"""
+
+    # ---- text_redact (PII patterns are Java-regex/RE2-portable:
+    # no lookaround, explicit classes; DuckDB needs the 'g' flag) ----
+    from datapatterns_spark.operators.textanalysis import PII_PATTERNS
+
+    _pii_order = ["email", "ssn", "phone", "ipv4"]
+    _red_expr = "t"
+    for _k in _pii_order:
+        _red_expr = (
+            f"regexp_replace({_red_expr}, '{PII_PATTERNS[_k]}',"
+            f" '[{_k.upper()}]', 'g')"
+        )
+    _pii_counts = ",\n  ".join(
+        f"CAST(length(regexp_extract_all(t, '{PII_PATTERNS[k]}')) AS INT)"
+        f" AS n_{k}"
+        for k in _pii_order
+    )
+    text_redact_sql = f"""
+WITH planted AS MATERIALIZED (
+  SELECT doc_id,
+         COALESCE(CASE WHEN doc_id % 5 = 0
+              THEN COALESCE(text, '') || ' contact user' || doc_id::VARCHAR
+                   || '@example.com or 555-123-4567'
+              ELSE text END, '') AS t
+  FROM documents)
+SELECT doc_id,
+  {_pii_counts},
+  CAST({' + '.join(f"length(regexp_extract_all(t, '{PII_PATTERNS[k]}'))" for k in _pii_order)} AS INT) AS pii_total,
+  {_red_expr} AS redacted
+FROM planted
+"""
+
+    # ---- dedup_simhash: votes over token hashes -> hex -> banded pairs ----
+    # Spark: h = xxhash64(tok, lit(0)) = hashInt(0, hashBytes(tok, 42));
+    # vote per bit b = 2*((h >> b) & 1) - 1, summed over the token STREAM
+    # (occurrences, not distinct); hex digits uppercase (F.conv parity).
+    tok_rel = (
+        f"(SELECT id, UNNEST(string_split(t, ' ')) AS tok FROM "
+        f"(SELECT doc_id AS id, {norm_text} AS t FROM documents))"
+    )
+    sim_hash_pipe = xxh64_str_sql(
+        tok_rel, ["id"], "tok", signed=False,
+        extra_steps=hash_int_steps(0), cte_prefix="sh", out="h",
+    )
+    sim_votes = ", ".join(
+        f"SUM(CASE WHEN (h // {1 << b}) % 2 = 1 THEN 1 ELSE -1 END) AS v{b}"
+        for b in range(64)
+    )
+    sim_value = " + ".join(
+        f"CASE WHEN v{b} > 0 THEN {1 << b}::HUGEINT ELSE 0::HUGEINT END"
+        for b in range(64)
+    )
+
+    def _hex4(c: str) -> str:
+        # 4 uppercase hex chars -> int (no hex-literal cast in DuckDB 1.0)
+        return (
+            "("
+            + " + ".join(
+                f"(strpos('0123456789abcdef', substr(lower({c}), {i + 1}, 1)) - 1)"
+                f" * {16 ** (3 - i)}"
+                for i in range(4)
+            )
+            + ")"
+        )
+
+    sim_hamming = " + ".join(
+        f"bit_count(xor({_hex4(f'substr(ha, {i * 4 + 1}, 4)')},"
+        f" {_hex4(f'substr(hb, {i * 4 + 1}, 4)')}))"
+        for i in range(4)
+    )
+    simhash_sql = f"""
+WITH hv AS MATERIALIZED (SELECT id, {sim_votes} FROM ({sim_hash_pipe}) GROUP BY id),
+hx AS MATERIALIZED (SELECT id, lpad(to_hex(({sim_value})::UBIGINT), 16, '0') AS h FROM hv),
+chunks AS MATERIALIZED (
+  SELECT id, h, band, substr(h, band*4 + 1, 4) AS chunk
+  FROM hx CROSS JOIN (SELECT UNNEST([0, 1, 2, 3]) AS band)),
+cand AS MATERIALIZED (
+  SELECT DISTINCT a.id AS id_a, b.id AS id_b, a.h AS ha, b.h AS hb
+  FROM chunks a JOIN chunks b
+    ON a.band = b.band AND a.chunk = b.chunk AND a.id < b.id)
+SELECT id_a, id_b, CAST({sim_hamming} AS INT) AS hamming
+FROM cand WHERE {sim_hamming} <= 3
+"""
+
+    # ---- dedup_minhash_lsh: signatures -> band keys -> verified pairs ----
+    # Signature path uses NON-distinct shingles (duplicates don't change
+    # a min); verification recomputes DISTINCT shingle sets (Spark
+    # array_intersect/array_union semantics).
+    mh_p = MINHASH_P
+    mh_ab = minhash_coeffs(64)
+    gram_win = (
+        "list_transform(range(1, len(tk) - 1),"
+        " i -> concat_ws(' ', tk[i], tk[i + 1], tk[i + 2]))"
+    )
+    gram_rel = (
+        f"(SELECT id, UNNEST(g) AS gram FROM (SELECT id,"
+        f" CASE WHEN len(tk) >= 3 THEN {gram_win}"
+        f" ELSE [array_to_string(tk, ' ')] END AS g"
+        f" FROM (SELECT doc_id AS id, string_split({norm_text}, ' ') AS tk"
+        f" FROM documents)))"
+    )
+    mh_hash_pipe = xxh64_str_sql(gram_rel, ["id"], "gram", cte_prefix="mh", out="h")
+    mh_mins = ", ".join(
+        f"MIN((x * {a} + {b}) % {mh_p}) AS m{i}" for i, (a, b) in enumerate(mh_ab)
+    )
+    mh_band_structs = ", ".join(
+        f"{{'band': {bnd}, 'key':"
+        f" [m{bnd * 4}, m{bnd * 4 + 1}, m{bnd * 4 + 2}, m{bnd * 4 + 3}]}}"
+        for bnd in range(16)
+    )
+    minhash_sql = f"""
+WITH xs AS MATERIALIZED (SELECT id, ((h % {mh_p}) + {mh_p}) % {mh_p} AS x FROM ({mh_hash_pipe})),
+sig AS MATERIALIZED (SELECT id, {mh_mins} FROM xs GROUP BY id),
+buckets AS MATERIALIZED (
+  SELECT id, bk.band AS band, bk.key AS key
+  FROM (SELECT id, UNNEST([{mh_band_structs}]) AS bk FROM sig)),
+cand AS MATERIALIZED (
+  SELECT DISTINCT a.id AS id_a, b.id AS id_b
+  FROM buckets a JOIN buckets b
+    ON a.band = b.band AND a.key = b.key AND a.id < b.id),
+shc AS MATERIALIZED (
+  SELECT id, CASE WHEN len(tk) >= 3 THEN list_distinct({gram_win})
+         ELSE [array_to_string(tk, ' ')] END AS sh
+  FROM (SELECT doc_id AS id, string_split({norm_text}, ' ') AS tk FROM documents)
+  WHERE id IN (SELECT id_a FROM cand UNION SELECT id_b FROM cand)),
+scored AS (
+  SELECT c.id_a, c.id_b,
+         ROUND(len(list_intersect(a.sh, b.sh)) * 1.0 /
+               (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS jaccard
+  FROM cand c JOIN shc a ON a.id = c.id_a JOIN shc b ON b.id = c.id_b)
+SELECT id_a, id_b, jaccard FROM scored WHERE jaccard >= 0.7
+"""
+
+    # ---- dedup_incremental_minhash (signature-store near-dups) ----
+    _mi_cols = ", ".join(f"m{i}" for i in range(64))
+    _mi_est = " + ".join(
+        f"CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END" for i in range(64)
+    )
+    dedup_incremental_minhash_sql = f"""
+WITH mxs AS MATERIALIZED (SELECT id, ((h % {mh_p}) + {mh_p}) % {mh_p} AS x FROM ({mh_hash_pipe})),
+msig AS MATERIALIZED (SELECT id, {mh_mins} FROM mxs GROUP BY id),
+s2 AS MATERIALIZED (
+  SELECT id, {_mi_cols} FROM msig WHERE id >= 250
+  UNION ALL
+  SELECT id + 10000, {_mi_cols} FROM msig WHERE id < 250 AND id % 50 = 0),
+s1 AS MATERIALIZED (SELECT id, {_mi_cols} FROM msig WHERE id < 250),
+nb AS MATERIALIZED (
+  SELECT id, bk.band AS band, bk.key AS key
+  FROM (SELECT id, UNNEST([{mh_band_structs}]) AS bk FROM s2)),
+sb AS MATERIALIZED (
+  SELECT id, bk.band AS band, bk.key AS key
+  FROM (SELECT id, UNNEST([{mh_band_structs}]) AS bk FROM s1)),
+cs AS (SELECT DISTINCT n.id AS id_a, s.id AS id_b
+       FROM nb n JOIN sb s ON n.band = s.band AND n.key = s.key),
+cb AS (SELECT DISTINCT l.id AS id_a, r.id AS id_b
+       FROM nb l JOIN nb r ON l.band = r.band AND l.key = r.key AND l.id < r.id),
+ds AS (SELECT DISTINCT c.id_a AS id
+       FROM cs c JOIN s2 a ON a.id = c.id_a JOIN s1 b ON b.id = c.id_b
+       WHERE ({_mi_est}) / 64.0 >= 0.7),
+db AS (SELECT DISTINCT c.id_b AS id
+       FROM cb c JOIN s2 a ON a.id = c.id_a JOIN s2 b ON b.id = c.id_b
+       WHERE ({_mi_est}) / 64.0 >= 0.7)
+SELECT i.id,
+       CASE WHEN i.id IN (SELECT id FROM ds) THEN 'dup_of_store'
+            WHEN i.id IN (SELECT id FROM db) THEN 'dup_in_batch'
+            ELSE 'unique' END AS status
+FROM (SELECT DISTINCT id FROM s2) i
+"""
+
+    # ---- dedup_incremental: two-batch store classification ----
+    _di_hash = xxh64_str_sql(
+        "documents", ["doc_id"], _NORM_SQL.format(v="text"),
+        out="fp", cte_prefix="di",
+    )
+    dedup_incremental_sql = f"""
+WITH allfp AS MATERIALIZED ({_di_hash}),
+dstore AS (SELECT DISTINCT fp FROM allfp WHERE doc_id < 250),
+b2 AS (
+  SELECT doc_id AS id, fp FROM allfp WHERE doc_id >= 250
+  UNION ALL
+  SELECT doc_id + 10000, fp FROM allfp
+  WHERE doc_id < 250 AND doc_id % 50 = 0),
+dc AS (SELECT fp, MIN(id) AS canon FROM b2 GROUP BY fp)
+SELECT b2.id, b2.fp,
+       CASE WHEN b2.fp IN (SELECT fp FROM dstore) THEN 'dup_of_store'
+            WHEN b2.id <> dc.canon THEN 'dup_in_batch'
+            ELSE 'unique' END AS status
+FROM b2 JOIN dc ON b2.fp = dc.fp
+"""
+
+    # ---- dedup_conversations: whole-conversation fingerprint dedup ----
+    # Pseudo-conversations from documents (conv = doc_id div 20, turn =
+    # doc_id % 20) + planted clones; per-turn hash replayed via the
+    # pure-SQL XXH64 string pipeline, folds as bit_xor / HUGEINT sum.
+    conv_src = (
+        "(SELECT doc_id // 20 AS conv_id, doc_id % 20 AS turn_idx, text"
+        " FROM documents"
+        " UNION ALL"
+        " SELECT doc_id // 20 + 100000, doc_id % 20, text FROM documents"
+        " WHERE (doc_id // 20) % 7 = 0)"
+    )
+    conv_hash = xxh64_str_sql(
+        conv_src,
+        ["conv_id"],
+        "turn_idx::VARCHAR || ':' || COALESCE(text, '')",
+        cte_prefix="cvd",
+        out="h",
+    )
+    dedup_conversations_sql = f"""
+WITH hashed AS MATERIALIZED ({conv_hash}),
+fps AS MATERIALIZED (
+  SELECT conv_id AS conv, COUNT(*) AS n_turns,
+         bit_xor(h) AS fp_xor, SUM(h::HUGEINT) AS fp_sum
+  FROM hashed GROUP BY conv_id),
+grp AS (
+  SELECT n_turns, fp_xor, fp_sum, MIN(conv) AS canonical
+  FROM fps GROUP BY 1, 2, 3 HAVING COUNT(*) > 1)
+SELECT f.conv, g.canonical, (f.conv = g.canonical) AS keep
+FROM fps f JOIN grp g USING (n_turns, fp_xor, fp_sum)
+"""
+
+
+    # ---- dedup_spans (exact-substring duplicate spans, n=8) ----
+    _ds_norm = _NORM_SQL.format(v="text")
+    dedup_spans_sql = f"""
+WITH dsn AS MATERIALIZED (SELECT doc_id, {_ds_norm} AS s FROM documents),
+dst AS (SELECT doc_id, string_split(s, ' ') AS tk FROM dsn),
+dpos AS MATERIALIZED (
+  SELECT doc_id, CAST(UNNEST(range(1, len(tk) - 6)) AS INT) AS i, tk
+  FROM dst WHERE len(tk) >= 8),
+dgr AS (SELECT doc_id, i, tk[i + 0] || ' ' || tk[i + 1] || ' ' || tk[i + 2] || ' ' || tk[i + 3] || ' ' || tk[i + 4] || ' ' || tk[i + 5] || ' ' || tk[i + 6] || ' ' || tk[i + 7] AS g FROM dpos),
+dhot AS (SELECT g FROM dgr GROUP BY g HAVING COUNT(*) >= 2),
+ddup AS (SELECT doc_id, i, i + 7 AS e FROM dgr WHERE g IN (SELECT g FROM dhot)),
+dmrk AS (
+  SELECT doc_id, i, e,
+         CASE WHEN i > COALESCE(MAX(e) OVER (PARTITION BY doc_id ORDER BY i
+              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) + 1
+              THEN 1 ELSE 0 END AS nw
+  FROM ddup),
+disl AS (
+  SELECT doc_id, i, e,
+         SUM(nw) OVER (PARTITION BY doc_id ORDER BY i
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl
+  FROM dmrk)
+SELECT doc_id AS id, CAST(MIN(i) AS BIGINT) AS span_start,
+       CAST(MAX(e) AS BIGINT) AS span_end,
+       CAST(MAX(e) - MIN(i) + 1 AS BIGINT) AS span_tokens
+FROM disl GROUP BY doc_id, isl
+"""
+
+    # ---- dedup_spans_winnow: the winnowing lever under full replay ----
+    # Selection depends on the ACTUAL Spark xxhash64 gram hash values
+    # (rightmost minimum per 4-window), so the oracle computes them
+    # with the pure-SQL twin and reproduces the argmin with a
+    # composite-key window arg_min: (h, -i) packed as
+    # h*2^32 - i in HUGEINT — lexicographic because |i| < 2^32 — so
+    # equal hashes pick the RIGHTMOST position, Spark's tie rule.
+    _dw_g = " || ' ' || ".join(f"tk[i + {j}]" for j in range(8))
+    _dw_gram_rel = (
+        f"(SELECT doc_id, i, {_dw_g} AS g"
+        f" FROM (SELECT doc_id, CAST(UNNEST(range(1, len(tk) - 6)) AS INT)"
+        f" AS i, tk FROM (SELECT doc_id, string_split({_ds_norm}, ' ')"
+        f" AS tk FROM documents) WHERE len(tk) >= 8))"
+    )
+    _dw_pipe = xxh64_str_sql(
+        _dw_gram_rel, ["doc_id", "i", "g"], "g", cte_prefix="dw", out="h"
+    )
+    _dw_key = "(h::HUGEINT * 4294967296) - i::HUGEINT"
+    dedup_spans_winnow_sql = f"""
+WITH dwh AS MATERIALIZED (SELECT doc_id, i, g, h FROM ({_dw_pipe})),
+dwm AS (SELECT doc_id, MAX(i) AS m FROM dwh GROUP BY doc_id),
+dwwin AS (
+  SELECT doc_id, i AS p,
+         arg_min(i, {_dw_key}) OVER (PARTITION BY doc_id ORDER BY i
+           ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel
+  FROM dwh),
+dwselpos AS (
+  SELECT DISTINCT w.doc_id, w.sel AS i
+  FROM dwwin w JOIN dwm m ON w.doc_id = m.doc_id
+  WHERE w.p <= m.m - 3
+  UNION
+  SELECT doc_id, arg_min(i, {_dw_key}) AS i
+  FROM dwh WHERE doc_id IN (SELECT doc_id FROM dwm WHERE m < 4)
+  GROUP BY doc_id),
+dwsel AS (
+  SELECT h.doc_id, h.i, h.g
+  FROM dwh h JOIN dwselpos s ON h.doc_id = s.doc_id AND h.i = s.i),
+dwhot AS (SELECT g FROM dwsel GROUP BY g HAVING COUNT(*) >= 2),
+dwdup AS (SELECT doc_id, i, i + 7 AS e FROM dwsel
+          WHERE g IN (SELECT g FROM dwhot)),
+dwmrk AS (
+  SELECT doc_id, i, e,
+         CASE WHEN i > COALESCE(MAX(e) OVER (PARTITION BY doc_id ORDER BY i
+              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) + 4
+              THEN 1 ELSE 0 END AS nw
+  FROM dwdup),
+dwisl AS (
+  SELECT doc_id, i, e,
+         SUM(nw) OVER (PARTITION BY doc_id ORDER BY i
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl
+  FROM dwmrk)
+SELECT doc_id AS id, CAST(MIN(i) AS BIGINT) AS span_start,
+       CAST(MAX(e) AS BIGINT) AS span_end,
+       CAST(MAX(e) - MIN(i) + 1 AS BIGINT) AS span_tokens
+FROM dwisl GROUP BY doc_id, isl
+"""
+
+    # ---- dedup_components: CC over the minhash pairs ----
+    # Independent algorithm as the oracle: a recursive label-
+    # propagation closure (min reachable id per node) vs Spark's
+    # large-star/small-star — same labels iff both are correct.
+    dedup_components_sql = f"""
+WITH RECURSIVE
+edges0 AS (SELECT id_a, id_b FROM (
+{minhash_sql}
+) mh),
+edges AS (SELECT id_a AS a, id_b AS b FROM edges0
+          UNION SELECT id_b, id_a FROM edges0),
+walk(node, lab) AS (
+  SELECT a, a FROM edges
+  UNION
+  SELECT e.a, w.lab FROM edges e JOIN walk w ON w.node = e.b
+)
+SELECT node, MIN(lab) AS component, (node = MIN(lab)) AS keep
+FROM walk GROUP BY node
+"""
+
     # ---- cardinality_histogram (raw values, no trim/filter) ----
     cardinality_histogram = (
         "SELECT 'event_type' AS attribute, coalesce(CAST(event_type AS VARCHAR), '') AS value,"
@@ -1251,6 +2029,83 @@ SELECT CASE WHEN (p_size <= 25) IS DISTINCT FROM TRUE THEN p_type ELSE p_brand E
 FROM part GROUP BY 1
 """
 
+    # ---- similarity top-k ----
+    similarity_sql = """
+WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id IN (1, 2, 3)),
+scored AS (
+  SELECT q.qid AS query_id, e.vec_id AS neighbor_id,
+         list_cosine_similarity(q.qv, e.embedding) AS cos
+  FROM embeddings e, q WHERE e.vec_id <> q.qid),
+r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn FROM scored)
+SELECT query_id, neighbor_id, ROUND(cos, 4) AS cos, CAST(rn AS INT) AS rank FROM r WHERE rn <= 5
+"""
+
+    # ---- ann_ivf_topk (exact oracle: centroids are deterministic
+    # seeded literals; every double fold replicated in Spark's exact
+    # left-to-right order so cell assignment and cosine agree
+    # bit-for-bit) ----
+    from datapatterns_spark.operators.similarity import _random_centroids
+
+    ivf_cents = _random_centroids(64, 16, 42)
+
+    def _dot_lit(vec_col: str, weights: list[float]) -> str:
+        # Spark: F.aggregate(zip_with(vec, lits, x*w), 0.0, s+x) — a
+        # left fold; SQL + is left-associative, so the text below adds
+        # in the identical order.  Literals go through a VARCHAR cast
+        # (bare decimals parse as DECIMAL in DuckDB, not DOUBLE).
+        terms = " + ".join(
+            f"{vec_col}[{i + 1}]::DOUBLE * ('{w!r}'::DOUBLE)"
+            for i, w in enumerate(weights)
+        )
+        return f"(0.0::DOUBLE + {terms})"
+
+    def _cell_structs(vec_col: str) -> str:
+        return ", ".join(
+            f"{{'d': -({_dot_lit(vec_col, c)}), 'c': {i}}}"
+            for i, c in enumerate(ivf_cents)
+        )
+
+    def _fold_cos(qv: str, cv: str) -> str:
+        # ordered folds for dot and both norms (dedup.cosine parity)
+        dot = (
+            f"list_reduce(list_prepend(0.0::DOUBLE,"
+            f" list_transform(generate_series(1, 64),"
+            f" i -> {qv}[i]::DOUBLE * {cv}[i]::DOUBLE)), (s, x) -> s + x)"
+        )
+        na = (
+            f"sqrt(list_reduce(list_prepend(0.0::DOUBLE,"
+            f" list_transform(generate_series(1, 64),"
+            f" i -> {qv}[i]::DOUBLE * {qv}[i]::DOUBLE)), (s, x) -> s + x))"
+        )
+        nb = (
+            f"sqrt(list_reduce(list_prepend(0.0::DOUBLE,"
+            f" list_transform(generate_series(1, 64),"
+            f" i -> {cv}[i]::DOUBLE * {cv}[i]::DOUBLE)), (s, x) -> s + x))"
+        )
+        return f"({dot}) / (({na}) * ({nb}))"
+
+    ann_ivf_sql = f"""
+WITH cor AS MATERIALIZED (
+  SELECT vec_id AS neighbor_id,
+         list_sort([{_cell_structs("embedding")}])[1].c AS cell
+  FROM embeddings),
+qc AS MATERIALIZED (
+  SELECT vec_id AS query_id,
+         UNNEST(list_transform(list_sort([{_cell_structs("embedding")}])[1:8], s -> s.c)) AS cell
+  FROM embeddings WHERE vec_id IN (1, 2, 3)),
+pairs AS MATERIALIZED (
+  SELECT DISTINCT q.query_id, c.neighbor_id
+  FROM cor c JOIN qc q USING (cell) WHERE q.query_id <> c.neighbor_id),
+scored AS (
+  SELECT p.query_id, p.neighbor_id,
+         ROUND({_fold_cos("qe.embedding", "ce.embedding")}, 6) AS cos
+  FROM pairs p
+  JOIN embeddings qe ON qe.vec_id = p.query_id
+  JOIN embeddings ce ON ce.vec_id = p.neighbor_id),
+r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn FROM scored)
+SELECT query_id, neighbor_id, cos, CAST(rn AS INT) AS rank FROM r WHERE rn <= 5
+"""
+
     # ---- profile_approx (deterministic columns of the approx path:
     # counts, rendered-string lengths, DECIMAL32_4 numeric moments) ----
     pa_parts = []
@@ -1292,6 +2147,67 @@ FROM part GROUP BY 1
         " AS numeric_std_dev"
         " FROM (" + " UNION ALL ".join(pa_parts) + ") GROUP BY attribute"
     )
+
+    # ---- exact dedup ----
+    norm = _NORM_SQL.format(v="text")
+    dedup_exact_sql = f"""
+SELECT CAST(MIN(doc_id) AS BIGINT) AS doc_id FROM documents GROUP BY {norm}
+"""
+
+    # ---- n-gram jaccard pairs ----
+    ngram_sql = f"""
+WITH norm AS (SELECT doc_id AS id, {norm} AS t FROM documents),
+toks AS (SELECT id, string_split(t, ' ') AS tk FROM norm),
+grams AS (
+  SELECT id,
+         CASE WHEN len(tk) >= 3
+              THEN list_distinct(list_transform(range(1, len(tk) - 1),
+                   i -> concat_ws(' ', tk[i], tk[i + 1], tk[i + 2])))
+              ELSE [array_to_string(tk, ' ')] END AS g
+  FROM toks),
+sizes AS (SELECT id, len(g) AS sz FROM grams),
+inv AS (SELECT id, UNNEST(g) AS gram FROM grams),
+common AS (
+  SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS common
+  FROM inv a JOIN inv b ON a.gram = b.gram AND a.id < b.id
+  GROUP BY 1, 2)
+SELECT c.id_a, c.id_b,
+       ROUND(c.common * 1.0 / (sa.sz + sb.sz - c.common), 6) AS jaccard
+FROM common c JOIN sizes sa ON c.id_a = sa.id JOIN sizes sb ON c.id_b = sb.id
+WHERE c.common * 1.0 / (sa.sz + sb.sz - c.common) >= 0.7
+"""
+
+    # ---- token counts ----
+    text_tokens_sql = """
+SELECT doc_id,
+       CAST(CASE WHEN trim(coalesce(text, '')) = '' THEN 0
+            ELSE len(string_split_regex(trim(coalesce(text, '')), '\\s+')) END AS INT) AS ws_tokens,
+       CAST(len(regexp_extract_all(coalesce(text, ''), '[A-Za-z]+|[0-9]+|[^\\sA-Za-z0-9]')) AS INT) AS bpe_tokens
+FROM documents
+"""
+
+    # ---- language id ----
+    markers = {
+        "en": ["the", "and", "of", "to", "in", "is", "that", "it", "for", "was"],
+        "de": ["der", "die", "und", "das", "ist", "nicht", "ein", "mit", "sich", "auf"],
+        "fr": ["le", "la", "les", "et", "est", "des", "une", "dans", "que", "pour"],
+        "es": ["el", "la", "los", "de", "que", "y", "en", "un", "por", "con"],
+        "it": ["il", "la", "di", "che", "e", "un", "per", "con", "del", "una"],
+    }
+    entries = ", ".join(
+        "{neg: -len(list_filter(tk, x -> list_contains(["
+        + ", ".join(f"'{w}'" for w in ws)
+        + f"], x))), lang: '{lang}'}}"
+        for lang, ws in markers.items()
+    )
+    langid_sql = f"""
+WITH norm AS (SELECT doc_id, {norm} AS t FROM documents),
+toks AS (SELECT doc_id, string_split(t, ' ') AS tk FROM norm),
+scored AS (SELECT doc_id, list_sort([{entries}]) AS s FROM toks)
+SELECT doc_id,
+       CASE WHEN s[1].neg < 0 THEN s[1].lang ELSE 'und' END AS lang_guess
+FROM scored
+"""
 
     # ---- profile_correlations (all numeric pairs, both directions) ----
     pairs = [
@@ -1387,6 +2303,58 @@ FROM (
 SELECT *, 1 AS digit FROM ({benford_sql})
 UNION ALL
 SELECT *, 2 AS digit FROM ({benford2_sql})
+"""
+
+    # ---- text_quality (mirror quality_score arithmetic exactly) ----
+    stoplist = ", ".join(
+        f"'{w}'"
+        for w in markers["en"] + ["a", "an", "as", "at", "be", "by", "on", "or"]
+    )
+    text_quality_sql = f"""
+WITH base AS (
+  SELECT doc_id, coalesce(text, '') AS t, {norm} AS nt FROM documents),
+m AS (
+  SELECT doc_id,
+         length(t) AS n,
+         length(regexp_replace(t, '[^A-Za-z]', '', 'g')) AS alpha,
+         length(regexp_replace(t, '[^[:punct:]]', '', 'g')) AS punct,
+         CASE WHEN trim(t) = '' THEN 0
+              ELSE len(string_split_regex(trim(t), '\\s+')) END AS words,
+         len(list_filter(string_split(nt, ' '), x -> list_contains([{stoplist}], x))) AS stop
+  FROM base)
+SELECT doc_id,
+  ROUND(
+    0.3 * (CASE WHEN n >= 20 AND n <= 8000 THEN 1.0 WHEN n > 0 THEN 0.4 ELSE 0.0 END)
+    + 0.25 * (CASE WHEN n > 0 THEN alpha * 1.0 / n ELSE 0.0 END)
+    + 0.15 * (CASE WHEN n > 0 THEN 1.0 - LEAST(punct * 1.0 / n * 4, 1.0) ELSE 0.0 END)
+    + 0.15 * (CASE WHEN words > 0 THEN LEAST(stop * 1.0 / words * 5, 1.0) ELSE 0.0 END)
+    + 0.15 * (CASE WHEN words > 0 AND n * 1.0 / words >= 3 AND n * 1.0 / words <= 12
+              THEN 1.0 ELSE 0.3 END),
+  4) AS quality
+FROM m
+"""
+
+    # ---- text_annotate (round-3 consolidation: tokens + langid +
+    # quality + fingerprint, joined per doc) ----
+    text_annotate_sql = f"""
+WITH tt AS MATERIALIZED ({text_tokens_sql}),
+tl AS MATERIALIZED ({langid_sql}),
+tq AS MATERIALIZED ({text_quality_sql}),
+tf AS MATERIALIZED ({text_fp_sql})
+SELECT tt.doc_id, tt.ws_tokens, tt.bpe_tokens, tl.lang_guess, tq.quality, tf.fp
+FROM tt
+JOIN tl ON tl.doc_id = tt.doc_id
+JOIN tq ON tq.doc_id = tt.doc_id
+JOIN tf ON tf.doc_id = tt.doc_id
+"""
+
+    # ---- embedding cosine near-dup pairs (brute baseline) ----
+    dedup_embedding_sql = """
+WITH p AS (
+  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+         ROUND(list_cosine_similarity(a.embedding, b.embedding), 6) AS cos6
+  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
+SELECT id_a, id_b FROM p WHERE cos6 >= 0.45
 """
 
     # ---- normalize_profile (integer-stat keys only; exact strings) ----
@@ -1522,11 +2490,13 @@ FROM src GROUP BY attribute
     profile_quantile_sketch_sql = " UNION ALL ".join(pqs_rows)
 
     # ---- streaming_state ----
-    # Batch twin of the streaming profile sink: the rolling merged
+    # Batch twins of the two streaming sinks: the rolling merged
     # profile equals a whole-table pass (same melt as
-    # profile_incremental, over documents).  Every pinned number is
-    # micro-batch-order independent, so the oracle needs no knowledge
-    # of the stream's file split.
+    # profile_incremental, over documents), and the dedup store's
+    # fingerprint counts equal the corpus's distinct normalized-text
+    # count.  Every pinned number is micro-batch-order independent, so
+    # the oracle needs no knowledge of the stream's file split.
+    _ss_norm = _NORM_SQL.format(v="text")
     ss_src = " UNION ALL ".join(
         [
             f"SELECT '{c}' AS attribute,"
@@ -1576,6 +2546,17 @@ FROM src GROUP BY attribute
     streaming_state_sql = f"""
 WITH ss_rows AS ({ss_src})
 SELECT * FROM ({ss_melt})
+UNION ALL
+SELECT 'dedup', 'store', 'store_rows',
+       CAST((SELECT COUNT(*) FROM (SELECT DISTINCT {_ss_norm}
+             FROM documents)) AS DOUBLE)
+UNION ALL
+SELECT 'dedup', 'store', 'n_unique_fp',
+       CAST((SELECT COUNT(*) FROM (SELECT DISTINCT {_ss_norm}
+             FROM documents)) AS DOUBLE)
+UNION ALL
+SELECT 'dedup', 'decisions', 'n_docs',
+       CAST((SELECT COUNT(*) FROM documents) AS DOUBLE)
 """
 
     return {
@@ -1593,14 +2574,33 @@ SELECT * FROM ({ss_melt})
         "drift_metrics": drift_metrics_sql,
         "constraint_alternation": constraint_alternation_sql,
         "validate_fixes": validate_fixes_sql,
+        "similarity_topk": similarity_sql,
+        "dedup_exact": dedup_exact_sql,
+        "dedup_ngram_jaccard": ngram_sql,
+        "text_annotate": text_annotate_sql,
         "profile_correlations": correlations_sql,
         "profile_cardinality_breakdown": breakdown_sql,
+        "dedup_embedding_cosine": dedup_embedding_sql,
         "profile_normalize_compare": profile_normalize_compare_sql,
         "profile_incremental": profile_incremental_sql,
         "profile_quantile_sketch": profile_quantile_sketch_sql,
         "streaming_state": streaming_state_sql,
         "best_record_structure": best_record_sql,
         "apply_best_types": apply_best_types_sql,
+        "dedup_spans": dedup_spans_sql,
+        "dedup_spans_winnow": dedup_spans_winnow_sql,
+        "dedup_components": dedup_components_sql,
+        "dedup_conversations": dedup_conversations_sql,
+        "dedup_incremental": dedup_incremental_sql,
+        "dedup_incremental_minhash": dedup_incremental_minhash_sql,
+        "winnow": winnow_sql,
+        "text_redact": text_redact_sql,
+        "text_repetition": text_repetition_sql,
+        "text_lm_score": text_lm_score_sql,
+        "text_contamination": text_contamination_sql,
+        "dedup_simhash": simhash_sql,
+        "dedup_minhash_lsh": minhash_sql,
+        "ann_ivf_topk": ann_ivf_sql,
         "profile_approx": profile_approx_sql,
         "transcript_suite": transcript_suite_oracle,
         "verdicts_per_partition": verdicts_per_partition_sql,

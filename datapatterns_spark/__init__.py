@@ -1,7 +1,7 @@
 """datapatterns_spark — a from-scratch PySpark-native data profiling +
 validation engine with the capabilities of hpcc-systems/DataPatterns,
-extended with a large-scale constraint layer, checkpointed resume and
-mergeable profile states.
+extended with a large-scale constraint layer and training-data
+pipeline operators.
 
 Public API (reference analogues cited in each module):
 
@@ -14,9 +14,14 @@ Public API (reference analogues cited in each module):
 * ``operators.constraints``      — uniqueness / referential / monotonic
   / drift (KS, PSI) / Benford-as-check with per-partition verdicts
 * ``operators.manifest``         — checkpointed per-partition resume
+* ``operators.dedup``            — exact / n-gram Jaccard / MinHash-LSH
+  / SimHash / embedding-cosine deduplication
+* ``operators.similarity``       — brute-force + IVF cosine top-k
+* ``operators.textanalysis``     — token counts, language id, quality,
+  fingerprint
 * ``operators.incremental``      — mergeable per-partition profile states
-* ``streaming``                  — ``foreachBatch`` validation and
-  profile-state sinks
+* ``streaming``                  — ``foreachBatch`` validation, profile-
+  state and dedup sinks
 * ``sources.transcripts``        — deterministic transcript generator
 * ``sources.tables``             — Iceberg/parquet source adapter
 """

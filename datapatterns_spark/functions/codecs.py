@@ -1,9 +1,8 @@
-"""Stdlib-only media codecs for the multimodal operators.
+"""Stdlib-only media codecs.
 
-The container ships no image/audio libraries, so the REAL decode path
-for :mod:`datapatterns_spark.operators.multimodal` is implemented here
-from the public format specs with nothing but ``zlib``/``struct``/
-``wave``:
+No image/audio library is assumed, so the decoders are implemented
+here from the public format specs with nothing but ``zlib``/
+``struct``/``wave``:
 
 * **PNG** — decode (8-bit greyscale / grey+alpha / RGB / RGBA, all
   five scanline filters incl. Paeth, per the PNG spec, RFC 2083) and
@@ -23,10 +22,7 @@ image resampler with PNG re-encode.  Everything is a pure function of
 the payload bytes, so results are reproducible across workers and
 runs.
 
-These run inside Arrow-batched ``mapInPandas`` workers (the payload
-bytes never cross the JVM/Python boundary row-at-a-time); the worker
-processes import this module from the shipped package
-(``spark-submit --py-files``, or the local filesystem in local mode).
+No operator in the package imports this module; only its tests do.
 """
 
 from __future__ import annotations
@@ -67,7 +63,7 @@ def png_decode(data: bytes) -> tuple[int, int, int, bytearray]:
         if pos + 12 + length > len(data):
             # a short read here would otherwise surface as a confusing
             # struct/zlib error (or walk past the buffer) deep in the
-            # mapInPandas worker — fail with the decode-error contract
+            # decoder — fail with the decode-error contract
             raise ValueError("truncated PNG payload (chunk past end of data)")
         chunk = data[pos + 8 : pos + 8 + length]
         pos += 12 + length  # length + type + data + crc
@@ -534,9 +530,8 @@ def audio_features(data: bytes, bins: int = 16) -> list[float]:
 
 # ---------------------------------------------------------------------------
 # JPEG (baseline sequential DCT / Huffman) — stdlib-only, from the
-# public ITU-T T.81 spec (Annex K tables).  Round-3 addition closing
-# the largest real-media gap: the mapInPandas real-decode path now
-# covers PNG, GIF, WAV AND baseline JPEG; MP4/H.264 remains the one
+# public ITU-T T.81 spec (Annex K tables).  With it the decoders
+# cover PNG, GIF, WAV and baseline JPEG; MP4/H.264 remains the one
 # documented format-out (no stdlib-implementable decoder exists).
 # Encoder: 4:4:4, one Huffman/quant table pair per luma/chroma class.
 # Decoder: baseline SOF0, arbitrary sampling factors (nearest-neighbor

@@ -2,12 +2,12 @@
 deployment-level switch.
 
 Several operators materialize a shared intermediate once so multiple
-consumers (the profile's follow-up passes, the check suite's verdict
-aggregation and violation rows) don't recompute it.  The library
-default is ``DataFrame.localCheckpoint``: materialized in one job,
-freed by the ContextCleaner when the frame is unreferenced (no
-CacheManager leak — the round-3 fix), and the cut lineage also removes
-per-consumer Catalyst re-optimization of large expression trees.
+consumers (band fan-outs, verdict aggregations, iterative loops) don't
+recompute it.  The library default is ``DataFrame.localCheckpoint``:
+materialized in one job, freed by the ContextCleaner when the frame is
+unreferenced (no CacheManager leak — the round-3 fix), and the cut
+lineage also removes per-consumer Catalyst re-optimization of large
+expression trees.
 
 The documented trade (Spark's own caveat for ``localCheckpoint``): the
 checkpointed partitions live UNREPLICATED in executor storage with the
@@ -68,14 +68,27 @@ def set_materialize_mode(mode: str | None) -> None:
     _mode = mode
 
 
-def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+def materialize(
+    df: DataFrame, eager: bool = True, cut_lineage: bool = False
+) -> DataFrame:
     """Materialize a reused intermediate under the active mode.
 
     ``eager=False`` defers the materializing job to the first consumer
-    — for sites where the next aggregation is the natural
+    — for iterative loops where the next aggregation is the natural
     materializer.  Eager ``persist`` runs a ``count()`` to populate the
-    cache before parallel consumers race past it."""
+    cache before parallel consumers race past it.
+
+    ``cut_lineage=True`` marks sites where truncating the logical plan
+    is REQUIRED for correctness, not just speed — iterative loops whose
+    plan would otherwise double per round until Catalyst chokes.  Under
+    ``persist`` mode (which keeps lineage by design) such sites fall
+    back to a reliable ``checkpoint`` when a checkpoint dir is set,
+    else to ``localCheckpoint`` — trading the executor-loss guarantee
+    for a loop that terminates, which is the only usable choice."""
     mode = materialize_mode()
+    if mode == "persist" and cut_lineage:
+        sc = df.sparkSession.sparkContext
+        mode = "checkpoint" if sc.getCheckpointDir() is not None else "localCheckpoint"
     if mode == "persist":
         out = df.persist()
         _persisted.append(out)

@@ -1,7 +1,6 @@
-"""Stdlib codec layer (functions/codecs.py) + the REAL (non-fake)
-multimodal decode path: PNG round-trips, all five PNG scanline
-filters, WAV decode, feature extractors, and the Arrow mapInPandas
-operators running on real encoded payloads."""
+"""Stdlib codec layer (functions/codecs.py): PNG round-trips, all
+five PNG scanline filters, WAV decode, feature extractors, GIF, JPEG
+and MJPEG AVI round-trips and their error contracts."""
 
 from __future__ import annotations
 
@@ -194,172 +193,6 @@ def test_gif_lzw_long_stream():
 def test_gif_rejects_garbage():
     with pytest.raises(ValueError):
         cd.gif_decode(b"definitely not a gif")
-
-
-def test_extract_features_real_path(spark):
-    """The non-fake mapInPandas path decodes real PNG, JPEG, GIF, and
-    WAV payloads and matches the pure-Python codec output exactly."""
-    from datapatterns_spark.operators.multimodal import (
-        extract_features,
-        make_real_media_table,
-    )
-
-    media = make_real_media_table(spark, n=12)
-    out = {r["media_id"]: r for r in extract_features(media).collect()}
-    assert len(out) == 12
-    local = {r["media_id"]: bytes(r["media"]) for r in media.collect()}
-    kinds = set()
-    for mid, payload in local.items():
-        if payload.startswith(cd.PNG_SIG):
-            want = cd.image_features(payload)
-            kinds.add("png")
-        elif payload.startswith(cd.JPEG_SIG):
-            want = cd.jpeg_features(payload)
-            kinds.add("jpeg")
-        elif payload[:6] in cd.GIF_SIGS:
-            want = cd.gif_features(payload)
-            kinds.add("gif")
-        elif payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-            want = cd.avi_features(payload)
-            kinds.add("avi")
-        else:
-            want = cd.audio_features(payload)
-            kinds.add("wav")
-        got = out[mid]["features"]
-        assert len(got) == 16
-        assert all(abs(a - b) < 1e-6 for a, b in zip(got, want))
-        assert out[mid]["n_bytes"] == len(payload)
-    # all five real decode paths ran
-    assert kinds == {"png", "jpeg", "gif", "avi", "wav"}
-
-
-def test_sample_frames_real_path(spark):
-    """Non-fake frame sampling decodes BOTH video containers (animated
-    GIF and MJPEG AVI) and emits the frame active at each sampled
-    instant, PNG-encoded."""
-    from datapatterns_spark.operators.multimodal import (
-        make_real_media_table,
-        sample_frames,
-    )
-
-    media = make_real_media_table(spark, n=12).filter(
-        "meta.media_type = 'video'"
-    )
-    out = sample_frames(media, every_ms=300).collect()
-    by_media = {}
-    for r in out:
-        by_media.setdefault(r["media_id"], []).append(r)
-    src = {r["media_id"]: bytes(r["media"]) for r in media.collect()}
-    assert set(by_media) == set(src)
-    containers = set()
-    for mid, rows in by_media.items():
-        rows.sort(key=lambda r: r["frame_ms"])
-        # 4 frames x 250ms = 1000ms timeline, sampled at 0/300/600/900
-        assert [r["frame_ms"] for r in rows] == [0, 300, 600, 900]
-        payload = src[mid]
-        if payload[:6] in cd.GIF_SIGS:
-            containers.add("gif")
-            w, h, frames = cd.gif_decode(payload)
-            want = [bytes(frames[fi][1]) for fi in (0, 1, 2, 3)]
-        else:
-            containers.add("avi")
-            w, h, frame_ms, jpegs = cd.avi_mjpeg_decode(payload)
-            assert frame_ms == 250
-            want = []
-            for ts in (0, 300, 600, 900):
-                fi = min(ts // frame_ms, len(jpegs) - 1)
-                _, _, _, px = cd.jpeg_decode(jpegs[fi])
-                want.append(bytes(px))
-        for r, w_px in zip(rows, want):
-            fw, fh, fc, px = cd.png_decode(bytes(r["frame"]))
-            assert (fw, fh, fc) == (w, h, 3)
-            assert bytes(px) == w_px
-    assert containers == {"gif", "avi"}  # both video containers ran
-
-
-def test_resize_media_real_path(spark):
-    """Non-fake resize really decodes, box-resamples, and re-encodes
-    in the SOURCE container (PNG->PNG, JPEG->JPEG): output payloads
-    are byte-identical to a local codec replay."""
-    from datapatterns_spark.operators.multimodal import (
-        make_real_media_table,
-        resize_media,
-    )
-
-    media = make_real_media_table(spark, n=12).filter(
-        "meta.media_type = 'image'"
-    )
-    out = resize_media(media, width=6, height=4).collect()
-    assert len(out) == media.count()
-    src = {r["media_id"]: bytes(r["media"]) for r in media.collect()}
-    formats = set()
-    for r in out:
-        assert (r["width"], r["height"]) == (6, 4)
-        payload = src[r["media_id"]]
-        if payload.startswith(cd.PNG_SIG):
-            formats.add("png")
-            sw, sh, sc, spx = cd.png_decode(payload)
-            want = cd.png_encode(cd.resize_box(spx, sw, sh, sc, 6, 4), 6, 4, sc)
-        else:
-            formats.add("jpeg")
-            sw, sh, sc, spx = cd.jpeg_decode(payload)
-            want = cd.jpeg_encode(
-                bytes(cd.resize_box(spx, sw, sh, sc, 6, 4)), 6, 4, sc
-            )
-        assert bytes(r["media"]) == want
-    assert formats == {"png", "jpeg"}  # both containers exercised
-
-
-def test_sample_frames_real_wav_slices(spark):
-    """Non-fake frame sampling over WAV payloads emits standalone WAV
-    windows that concatenate back to the original sample stream."""
-    from pyspark.sql import types as T
-
-    from datapatterns_spark.operators.multimodal import sample_frames
-
-    data = _wav_bytes(freq=330.0, rate=8000, nsamp=2000)  # 250ms
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("media", T.BinaryType()),
-        ]
-    )
-    df = spark.createDataFrame([(7, data)], schema)
-    rows = sorted(
-        sample_frames(df, every_ms=100).collect(),
-        key=lambda r: r["frame_ms"],
-    )
-    assert [r["frame_ms"] for r in rows] == [0, 100, 200]
-    # slices decode and re-concatenate to the original samples
-    _, _, orig = cd.wav_decode(data)
-    joined = []
-    for r in rows:
-        _, rate, s = cd.wav_decode(bytes(r["frame"]))
-        assert rate == 8000
-        joined.extend(s)
-    assert joined == orig
-
-
-def test_extract_features_real_path_rejects_unknown_format(spark):
-    from pyspark.sql import types as T
-    from pyspark.errors import PythonException
-
-    from datapatterns_spark.operators.multimodal import extract_features
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("media", T.BinaryType()),
-        ]
-    )
-    # an MP4-shaped payload: the one format the real path documents out
-    # (JPEG is decoded for real since round 3, so it no longer triggers
-    # the unsupported-format error)
-    df = spark.createDataFrame(
-        [(1, b"\x00\x00\x00\x18ftypmp42 not a real box")], schema
-    )
-    with pytest.raises(PythonException, match="NotImplementedError"):
-        extract_features(df).collect()
 
 
 # ---------------------------------------------------------------------------
@@ -556,27 +389,3 @@ def test_avi_error_contracts():
     hacked[p + 4 : p + 8] = b"H264"
     with pytest.raises(NotImplementedError):
         cd.avi_mjpeg_decode(bytes(hacked))
-
-
-def test_multimodal_fixture_up_to_date():
-    """The checked-in expected-output parquet for the multimodal_real
-    oracle must match a fresh derivation from the pure-Python codecs —
-    a codec change without `python3 scripts/make_multimodal_fixture.py`
-    fails here instead of at the correctness gate."""
-    import importlib.util
-
-    import pyarrow.parquet as pq
-
-    spec = importlib.util.spec_from_file_location(
-        "make_multimodal_fixture",
-        "/root/repo/scripts/make_multimodal_fixture.py",
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    fresh = mod.expected_rows()
-    stored = pq.read_table(
-        "/root/repo/tests/fixtures/multimodal_real_expected.parquet"
-    ).to_pylist()
-    assert [
-        (r["part"], r["media_id"], r["k"], r["v"]) for r in stored
-    ] == fresh

@@ -1,13 +1,12 @@
 """The DP_MATERIALIZE deployment switch: operators must produce
-identical results under every mode, and persist mode must retain
-lineage (executor-loss recompute) and be releasable at job
-boundaries."""
+identical results under every mode, persist mode must retain lineage
+(executor-loss recompute) and be releasable at job boundaries, and
+iterative loops must still converge when the mode keeps lineage."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from datapatterns_spark import materialize as M
-from datapatterns_spark.operators import constraints as C
+from datapatterns_spark.operators import dedup as D
 
 
 def _jvm_cache_empty(spark):
@@ -38,39 +37,22 @@ def test_env_mode_validated(monkeypatch):
 
 
 def test_persist_mode_equals_default_and_releases(spark, corpus):
-    """run_checks with a row check and a group check (two materialize
-    sites: the row-check and the group-check violation frames) yields
-    identical verdicts and violations under persist mode; the
-    persisted frames are visible in the CacheManager until
-    release_all(), after which the session is clean — the documented
-    job-boundary contract.  Each check fails on fewer rows than its
-    sample size, so every verdict's sample list is complete and the
-    comparison is order-independent."""
-    df = corpus.unionByName(corpus.filter("doc_id IN (1, 2)")).withColumn(
-        "text", F.when(F.col("doc_id").isin(7, 14), None).otherwise(F.col("text"))
+    """minhash_lsh_pairs (three materialize sites) yields identical
+    pairs under persist mode; the persisted frames are visible in the
+    CacheManager until release_all(), after which the session is
+    clean — the documented job-boundary contract."""
+    base = sorted(
+        tuple(r) for r in D.minhash_lsh_pairs(corpus, "text", "doc_id").collect()
     )
-    checks = [
-        C.row_rule("text_nn", "text IS NOT NULL"),
-        C.unique("uniq_doc", ["doc_id"]),
-    ]
-
-    def run():
-        verdicts, violations = C.run_checks(df, checks, key_cols=["doc_id"])
-        v = sorted(
-            (*r[:5], sorted(r["sample_violations"] or []))
-            for r in verdicts.collect()
-        )
-        return v, sorted(tuple(r) for r in violations.collect())
-
-    base = run()
-    # both checks fail, so both materialized frames hold rows
-    assert [v[2] for v in base[0]] == [False, False]
     M.set_materialize_mode("persist")
     try:
-        got = run()
+        got = sorted(
+            tuple(r)
+            for r in D.minhash_lsh_pairs(corpus, "text", "doc_id").collect()
+        )
         assert got == base
         assert not _jvm_cache_empty(spark)
-        assert M.release_all() >= 2
+        assert M.release_all() >= 3
         assert _jvm_cache_empty(spark)
     finally:
         M.set_materialize_mode(None)
@@ -89,6 +71,28 @@ def test_persist_mode_keeps_lineage(spark, corpus):
         assert "LocalTableScan" in out._jdf.queryExecution().optimizedPlan().toString() or (
             "Project" in out._jdf.queryExecution().optimizedPlan().toString()
         )
+    finally:
+        M.set_materialize_mode(None)
+        M.release_all()
+
+
+def test_persist_mode_iterative_loop_converges(spark):
+    """connected_components' loop marks its per-round cut as
+    cut_lineage-required; under persist mode it falls back to a real
+    lineage cut, so a long chain still converges with a bounded plan
+    (a bare persist doubles the plan per round)."""
+    edges = [(i, i + 1) for i in range(14)]
+    df = spark.createDataFrame(edges, "a long, b long")
+    base = sorted(
+        tuple(r) for r in D.connected_components(df, "a", "b").collect()
+    )
+    M.set_materialize_mode("persist")
+    try:
+        got = sorted(
+            tuple(r) for r in D.connected_components(df, "a", "b").collect()
+        )
+        assert got == base
+        assert {c for _, c in got} == {0}
     finally:
         M.set_materialize_mode(None)
         M.release_all()

