@@ -114,7 +114,7 @@ def len2size(c: Column) -> Column:
 def best_type_name(
     *,
     kind: str,
-    given_type: str,
+    given_type: Column,
     flags: Column,
     max_len: Column,
     min_len_nonzero: Column,
@@ -123,8 +123,9 @@ def best_type_name(
     """Map folded flags + lengths to an ECL-style best type name
     (Profile.ecl:1002-1023).
 
-    ``kind`` / ``given_type`` are per-attribute constants from the
-    schema walk; the rest are aggregated Columns.
+    ``kind`` is a per-attribute constant from the schema walk;
+    ``given_type`` (the given type name, read only by the kinds kept
+    as-is) and the rest are Columns.
     """
     from ..plans.schema_walk import (
         KIND_ARRAY,
@@ -137,7 +138,7 @@ def best_type_name(
     if kind in (KIND_ARRAY, KIND_NUMERIC, KIND_BOOLEAN):
         # Sets and given-numeric/boolean types are kept as-is
         # (Profile.ecl:1005-1006).
-        return F.lit(given_type)
+        return given_type
 
     # "variable length" rule: emit a sized type only when the max
     # length is under 1000x the min non-zero length (Profile.ecl:1012).

@@ -17,8 +17,10 @@ violations (Validation.ecl:286-296) lifted to partition grain.
 
 Scale notes: row checks run in ONE narrow pass (no shuffle); all
 group-scope checks share ONE shuffle on the group key (window
-functions over the same partitioning); verdict aggregation is a
-single ``groupBy(partition, check)``.  Hot groups are protected by
+functions over the same partitioning); both passes' violation rows
+are materialized as one frame, and its verdict aggregation (a single
+``groupBy(partition, check)``) returns with the stat pass's bin counts
+in one collect.  Hot groups are protected by
 AQE skew handling; the group key is expected to be high-cardinality
 (conversations), so salting is only needed for the histogram path
 (done via two-phase aggregation on (partition, check, bin)).
@@ -27,7 +29,6 @@ AQE skew handling; the group key is expected to be high-cardinality
 from __future__ import annotations
 
 import math
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field as dc_field
 from decimal import ROUND_HALF_UP, Decimal
 
@@ -299,6 +300,50 @@ def baseline_histogram(
 # ---------------------------------------------------------------------------
 # the suite runner
 # ---------------------------------------------------------------------------
+def _probe_windows(df: DataFrame, checks: list[Check]) -> list[tuple[str, str]]:
+    """The ``(group, order)`` windows that ``segment_size="auto"``
+    probes: those of the monotonic checks with an integral order key
+    (the only ones segmentation applies to)."""
+    dtypes = dict(df.dtypes)
+    return list(
+        dict.fromkeys(
+            (c.params["group"], c.params["order"])
+            for c in checks
+            if c.kind == "group"
+            and c.params["op"] == "monotonic"
+            and dtypes.get(c.params["order"]) in INTEGRAL_TYPES
+        )
+    )
+
+
+def _probe_group(windows: list[tuple[str, str]], outer: bool = False) -> Column:
+    """The probe's per-row key: the window-tagged group of a row in the
+    deterministic ~1/PROBE_MOD hash-sample of ``(group, order)`` pairs,
+    NULL for a row sampled out (window-tagged so equal group values in
+    different windows never merge).  Several windows explode to one row
+    per sampled window — ``outer`` keeps one NULL row for a row no
+    window samples, for a caller that must still see every row."""
+    tags = [
+        F.when(
+            F.pmod(F.xxhash64(F.col(g), F.col(o)), F.lit(AUTO_SEGMENT_PROBE_MOD)) == 0,
+            F.concat_ws("\x00", F.lit(str(i)), F.col(g).cast("string")),
+        )
+        for i, (g, o) in enumerate(windows)
+    ]
+    if len(tags) == 1:
+        return tags[0]
+    sampled = F.array_compact(F.array(*tags))
+    return F.explode_outer(sampled) if outer else F.explode(sampled)
+
+
+def _segment_size_for(sampled_max: int | None) -> int | None:
+    """The auto decision from the hottest group's sampled row count:
+    AUTO_SEGMENT_SIZE when its estimate (PROBE_MOD x the count) exceeds
+    AUTO_SEGMENT_THRESHOLD, else None (the unsegmented plan)."""
+    est_max = (sampled_max or 0) * AUTO_SEGMENT_PROBE_MOD
+    return AUTO_SEGMENT_SIZE if est_max > AUTO_SEGMENT_THRESHOLD else None
+
+
 def _auto_segment_size(
     df: DataFrame, windows: list[tuple[str, str]]
 ) -> int | None:
@@ -311,30 +356,17 @@ def _auto_segment_size(
     small groups that sample to zero).  Returns AUTO_SEGMENT_SIZE when
     any estimated group exceeds AUTO_SEGMENT_THRESHOLD, else None —
     the common case pays one cheap slim probe job and keeps the
-    unsegmented single-window plan.  Multiple windows union into that
-    SAME single job (only the overall max matters), window-tagged so
-    equal group values in different windows never merge."""
-    from functools import reduce
-
-    parts = []
-    for i, (g, o) in enumerate(windows):
-        parts.append(
-            df.select(
-                F.concat_ws(
-                    "\x00", F.lit(str(i)), F.col(g).cast("string")
-                ).alias("_g"),
-                F.xxhash64(F.col(g), F.col(o)).alias("_h"),
-            ).filter(F.pmod(F.col("_h"), F.lit(AUTO_SEGMENT_PROBE_MOD)) == 0)
-        )
+    unsegmented single-window plan.  Multiple windows share that SAME
+    scan (only the overall max matters)."""
     row = (
-        reduce(DataFrame.unionByName, parts)
+        df.select(_probe_group(windows).alias("_g"))
+        .filter(F.col("_g").isNotNull())
         .groupBy("_g")
         .agg(F.count(F.lit(1)).alias("_n"))
         .agg(F.max("_n").alias("_m"))
         .collect()
     )
-    est_max = (row[0]["_m"] or 0) * AUTO_SEGMENT_PROBE_MOD
-    return AUTO_SEGMENT_SIZE if est_max > AUTO_SEGMENT_THRESHOLD else None
+    return _segment_size_for(row[0]["_m"])
 
 
 def run_checks(
@@ -368,7 +400,7 @@ def run_checks(
 
     Scale shape: ALL row checks share ONE narrow pass whose explode
     fans out only failing rows; ALL stat checks (Benford, PSI, KS)
-    share ONE job — checks on the same column share a
+    share ONE pass — checks on the same column share a
     ``groupBy(partition, bucket-ids...)`` whose group count is bounded
     by min(prod(bins), column cardinality), normalized to
     (partition, check, bucket, cnt) by a post-agg melt over the
@@ -378,7 +410,9 @@ def run_checks(
     a uniqueness check on ``(g, o)`` is rewritten as lag/lead equality
     over ``Window.partitionBy(g).orderBy(o)`` whenever a monotonic
     check already uses that exact window, so both ride the same Window
-    operator.  The two passes are materialized concurrently.
+    operator.  The row-check and group-check violation rows are
+    materialized as ONE frame, and its verdict-grain aggregation and
+    the stat bin counts come back in ONE collect.
 
     ``segment_size`` (skew hardening): a window partitioned by
     the bare group key puts EVERY row of a group in one task — a
@@ -429,16 +463,7 @@ def _resolve_segment_size(
             f"{segment_size!r}"
         )
     if segment_size == "auto":
-        dtypes = dict(df.dtypes)
-        windows = list(
-            dict.fromkeys(
-                (c.params["group"], c.params["order"])
-                for c in checks
-                if c.kind == "group"
-                and c.params["op"] == "monotonic"
-                and dtypes.get(c.params["order"]) in INTEGRAL_TYPES
-            )
-        )
+        windows = _probe_windows(df, checks)
         return _auto_segment_size(df, windows) if windows else None
     if segment_size is not None and segment_size < 1:
         raise ValueError("segment_size must be >= 1")
@@ -783,81 +808,59 @@ def _run_checks(
                     )
                 )
 
-    # Materialize the (at most three) input passes CONCURRENTLY: the
-    # row-check scan, the stat counter aggregation, and the group-key
-    # shuffle are independent jobs, so overlapping them keeps executors
-    # busy through any one job's driver-side barriers.  Each pass's
-    # materializing action IS its verdict-grain aggregation — the
-    # collect populates the persist (for the returned side-table) and
-    # returns the (partition, check) counts in ONE job, instead of a
-    # count job per pass plus a separate aggregation job over the
-    # union (each extra job is parallelism-independent submit/AQE
-    # time; NOTES_r2.md).  All results are tiny: the failing fraction
-    # + n_partitions counter rows.
-    stat_rows: list = []
-    agg_rows: list = []
-    vagg = [
-        F.slice(F.collect_list("detail"), 1, SAMPLE_VIOLATIONS).alias(
-            "sample_violations"
-        )
-    ]
-    jobs = []
-    # lazy materialize, not a bare persist: each frame is consumed
-    # twice (the verdict aggregation below + the returned violations
-    # frame), and the aggregation collect inside THIS call is the
-    # materializing action — one job, after which the caller's
-    # violations actions read the materialized partitions.  A persist
-    # here leaked one CacheManager entry per run_checks call for the
-    # session lifetime (round-3 fix, same class as the profile/minhash
-    # leaks); see materialize.py for the deployment modes.
+    # ONE materialized violation frame and ONE collect.  The row-check
+    # rows (collapsed per (key, detail), with their multiplicity
+    # ``cnt``) and the group-check rows (``cnt`` 1) are unioned and
+    # materialized once; the verdict-grain aggregation over it and the
+    # stat bin counts ride one collect, split on the driver by whether
+    # a row carries a stat bucket.  Each further action or
+    # materialization would be one more job of parallelism-independent
+    # submit/AQE time (NOTES_r2.md), and all results are tiny: the
+    # failing fraction + n_partitions x buckets counter rows.
+    viol_src = None
     if fused is not None:
-        fused = materialize(fused, eager=False)
-        jobs.append(
-            lambda: agg_rows.extend(
-                fused.groupBy("partition", "check_name")
-                .agg(F.sum("cnt").alias("violation_count"), *vagg)
-                .collect()
-            )
-        )
+        viol_src = fused.select("partition", "key", "check_name", "detail", "cnt")
     if gviol is not None:
-        gviol = materialize(gviol, eager=False)
-        jobs.append(
-            lambda: agg_rows.extend(
-                gviol.groupBy("partition", "check_name")
-                .agg(F.count(F.lit(1)).alias("violation_count"), *vagg)
-                .collect()
+        g_src = gviol.withColumn("cnt", F.lit(1).cast("long"))
+        viol_src = g_src if viol_src is None else viol_src.unionByName(g_src)
+    collect_frames: list[DataFrame] = []
+    if viol_src is not None:
+        # lazy materialize, not a bare persist: the frame is consumed
+        # twice (the verdict aggregation below + the returned
+        # violations frame), and the collect inside THIS call is its
+        # materializing action.  A persist here leaked one CacheManager
+        # entry per run_checks call for the session lifetime (round-3
+        # fix); see materialize.py for the deployment modes.
+        viol_src = materialize(viol_src, eager=False)
+        collect_frames.append(
+            viol_src.groupBy("partition", "check_name").agg(
+                F.sum("cnt").alias("violation_count"),
+                F.slice(F.collect_list("detail"), 1, SAMPLE_VIOLATIONS).alias(
+                    "sample_violations"
+                ),
             )
         )
     if stat_agg is not None:
-        jobs.append(lambda: stat_rows.extend(stat_agg.collect()))
-    if len(jobs) > 1:
-        with ThreadPoolExecutor(len(jobs)) as ex:
-            list(ex.map(lambda j: j(), jobs))
-    else:
-        for j in jobs:
-            j()
+        collect_frames.append(stat_agg)
+    collected = []
+    if collect_frames:
+        both = collect_frames[0]
+        for f_ in collect_frames[1:]:
+            both = both.unionByName(f_, allowMissingColumns=True)
+        collected = [r.asDict() for r in both.collect()]
+    stat_rows = [r for r in collected if r.get("ci") is not None]
+    agg_rows = [r for r in collected if r.get("ci") is None]
 
-    viol_frames: list[DataFrame] = []
-    if fused is not None:
+    if viol_src is not None:
         # restore per-row multiplicity: rows sharing (key, detail) were
-        # collapsed by the fused aggregation
-        row_viol = (
-            fused.select(
-                "partition",
-                "key",
-                "check_name",
-                "detail",
-                F.explode(F.sequence(F.lit(1), F.col("cnt"))).alias("_i"),
-            )
-            .drop("_i")
-        )
-        viol_frames.append(row_viol)
-    if gviol is not None:
-        viol_frames.append(gviol)
-    if viol_frames:
-        viol = viol_frames[0]
-        for v in viol_frames[1:]:
-            viol = viol.unionByName(v)
+        # collapsed by the fused row-check aggregation
+        viol = viol_src.select(
+            "partition",
+            "key",
+            "check_name",
+            "detail",
+            F.explode(F.sequence(F.lit(1), F.col("cnt"))).alias("_i"),
+        ).drop("_i")
     else:
         viol = lit_df(
             spark, [], "partition string, key string, check_name string, detail string"

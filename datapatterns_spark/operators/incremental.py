@@ -61,13 +61,13 @@ from pyspark.sql.types import StructType
 
 from ..functions import besttype
 from ..functions.sketches import LG_CONFIG_K
-from ..plans.local import lit_df
 from ..plans.schema_walk import (
     KIND_ARRAY,
     KIND_BINARY,
     KIND_BOOLEAN,
     KIND_NUMERIC,
     KIND_STRING,
+    KIND_TEMPORAL,
     AttrInfo,
     walk_schema,
 )
@@ -85,6 +85,8 @@ _QUARTILES = (
     ("numeric_median", 0.5),
     ("numeric_upper_quartile", 0.75),
 )
+# every kind walk_schema assigns, for merge_states' best-type ladder
+_KINDS = (KIND_STRING, KIND_NUMERIC, KIND_BOOLEAN, KIND_BINARY, KIND_ARRAY, KIND_TEMPORAL)
 # digest_drift reads each side's CDF off its quantiles at ranks j/G
 _KS_GRID = 200
 
@@ -310,13 +312,29 @@ def profile_state(
         F.max("v").alias("num_max"),
         *sketch_cols,
     )
-    meta = lit_df(
-        df.sparkSession,
-        [(a.name, a.kind, a.given_type, a.ordinal) for a in attrs],
-        "attribute string, kind string, given_attribute_type string, ordinal int",
-    )
+    # attribute metadata from a literal map on the aggregated rows: a
+    # driver-built frame joined in would cost a broadcast job per call
+    meta = F.create_map(
+        *[
+            x
+            for a in attrs
+            for x in (
+                F.lit(a.name),
+                F.struct(
+                    F.lit(a.kind).alias("kind"),
+                    F.lit(a.given_type).cast("string").alias("given_attribute_type"),
+                    F.lit(a.ordinal).cast("int").alias("ordinal"),
+                ),
+            )
+        ]
+    )[F.col("attribute")]
     cols = StructType.fromDDL(_state_schema(k)).names
-    return state.join(F.broadcast(meta), "attribute").select(*cols)
+    return state.select(
+        *[
+            meta[c].alias(c) if c in ("kind", "given_attribute_type", "ordinal") else c
+            for c in cols
+        ]
+    )
 
 
 def merge_states(states: DataFrame) -> DataFrame:
@@ -357,27 +375,22 @@ def merge_states(states: DataFrame) -> DataFrame:
         *sketch_cols,
     )
     # best-type lattice from the merged folds (same inputs as the main
-    # profile's _attach_best_type); the per-attribute kind/given-type
-    # dispatch builds a CASE ladder from the states' own metadata rows
-    kinds = {
-        r["attribute"]: (r["kind"], r["given_attribute_type"])
-        for r in states.select("attribute", "kind", "given_attribute_type")
-        .distinct()
-        .collect()
-    }
+    # profile's _attach_best_type): a CASE ladder over the fixed set of
+    # kinds, keyed on each row's own kind column, so no job reads the
+    # states' metadata first
     best = None
-    for name, (kind, given) in sorted(kinds.items()):
+    for kind in _KINDS:
         bt = besttype.best_type_name(
             kind=kind,
-            given_type=given,
+            given_type=F.col("given_attribute_type"),
             flags=F.coalesce(F.col("type_flags"), F.lit(0)),
             max_len=F.coalesce(F.col("max_length"), F.lit(0)),
             min_len_nonzero=F.coalesce(F.col("min_len_nonzero"), F.lit(0)),
             is_unicode=F.coalesce(F.col("has_unicode"), F.lit(0)) == 1,
         )
-        bt = F.when(F.col("fill_count") == 0, F.col("given_attribute_type")).otherwise(bt)
-        cond = F.col("attribute") == name
+        cond = F.col("kind") == kind
         best = F.when(cond, bt) if best is None else best.when(cond, bt)
+    best = F.when(F.col("fill_count") == 0, F.col("given_attribute_type")).otherwise(best)
     n = F.col("num_n")
     mean = F.col("num_sum") / n
     quartile_cols: list = []
@@ -439,7 +452,11 @@ def merge_states(states: DataFrame) -> DataFrame:
             *quartile_cols,
             "ordinal",
         )
-        .orderBy("ordinal")
+        # one partition sorted in place: the merged frame is one row
+        # per attribute, and a global orderBy would add a
+        # range-partition sampling job and a shuffle to every read
+        .coalesce(1)
+        .sortWithinPartitions("ordinal")
         .drop("ordinal")
     )
 
@@ -588,7 +605,7 @@ def profile_incremental(
         ).write.mode("append").partitionBy("partition").parquet(states)
         return {}
 
-    def start(done: set, todo: list) -> WriteBatch:
+    def start(done: set, todo: dict) -> WriteBatch:
         if done:
             _check_store(spark, state_path, k)
         return write_batch

@@ -24,12 +24,17 @@ any other sibling under the output path (``scripts/run_job.py`` writes
 Protocol:
 
 1. read the COMPLETE set from the manifest;
-2. list the distinct partition values ONCE per run
-   (:func:`list_partitions`: one distinct scan, sorted on the driver)
-   and drop the COMPLETE ones;
+2. list the distinct partition values ONCE per run, sorted on the
+   driver, and drop the COMPLETE ones.  The listing carries the
+   writer's per-partition probe when it has one: validation's
+   ``segment_size="auto"`` skew probe rides the listing's own query
+   (:func:`list_partitions_probed`, one scan).  A resume lists plainly
+   (:func:`list_partitions`) and probes only the partitions left to
+   do, so a resume with nothing left runs no probe;
 3. writer setup, once per run (validation resolves
-   ``segment_size="auto"`` with one skew probe; the incremental
-   profile checks the stored states match the run's sketch settings);
+   ``segment_size="auto"`` from the probe figures of the partitions
+   left to do; the incremental profile checks the stored states match
+   the run's sketch settings);
 4. refuse a result dir in the old flat layout and sweep orphans (below);
 5. run the remaining partitions **in bounded batches**: the writer
    appends its results hive-partitioned by ``partition``, then a
@@ -70,8 +75,11 @@ from ..plans.local import lit_df
 from .constraints import (
     VERDICT_SCHEMA,
     Check,
+    _probe_group,
+    _probe_windows,
     _resolve_segment_size,
     _run_checks,
+    _segment_size_for,
     partition_order,
 )
 
@@ -124,21 +132,12 @@ def completed_partitions(spark: SparkSession, path: str) -> set[str]:
     }
 
 
-def list_partitions(df: DataFrame, partition_col: str) -> list[str | None]:
-    """The distinct values of ``partition_col`` as strings, NULL first
-    then ascending (Spark's ascending order), sorted on the driver so
-    the listing is one distinct job with no range-partition sampling.
-
-    NULL and ``''`` would both be written to the one
+def _ordered_partitions(parts: list, partition_col: str) -> list[str | None]:
+    """Listed partition values NULL first, then ascending (Spark's
+    ascending order).  NULL and ``''`` would both be written to the one
     ``__HIVE_DEFAULT_PARTITION__`` directory, so a crash between their
     commits could keep the other's uncommitted rows; a table holding
     both is refused."""
-    parts = [
-        r["p"]
-        for r in df.select(F.col(partition_col).cast("string").alias("p"))
-        .distinct()
-        .collect()
-    ]
     if None in parts and "" in parts:
         raise ValueError(
             f"partition_col {partition_col!r} holds both NULL and '': both "
@@ -146,6 +145,47 @@ def list_partitions(df: DataFrame, partition_col: str) -> list[str | None]:
             "them to another value first"
         )
     return sorted(parts, key=partition_order)
+
+
+def list_partitions(df: DataFrame, partition_col: str) -> list[str | None]:
+    """The distinct values of ``partition_col`` as strings, NULL first
+    then ascending, sorted on the driver so the listing is one distinct
+    job with no range-partition sampling (see
+    :func:`_ordered_partitions` for the refused NULL-and-``''`` mix)."""
+    parts = [
+        r["p"]
+        for r in df.select(F.col(partition_col).cast("string").alias("p"))
+        .distinct()
+        .collect()
+    ]
+    return _ordered_partitions(parts, partition_col)
+
+
+def list_partitions_probed(
+    df: DataFrame, partition_col: str, windows: list[tuple[str, str]]
+) -> dict[str | None, int]:
+    """:func:`list_partitions` with ``run_checks``' auto skew probe in
+    the same query: ``{partition: sampled row count of its hottest
+    group}``, in listing order.  One scan feeds one aggregation keyed
+    by ``(partition, sampled group)``: rows the ~1/PROBE_MOD hash-sample
+    leaves out all key to a NULL group, which map-side combine
+    collapses to one row per partition, so every partition is listed
+    while only sampled rows are counted per group.  A group that spans
+    partitions is counted per partition; in the transcript job a
+    conversation never does, and verdicts never depend on the probe."""
+    rows = (
+        df.select(
+            F.col(partition_col).cast("string").alias("p"),
+            _probe_group(windows, outer=True).alias("_g"),
+        )
+        .groupBy("p", "_g")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .groupBy("p")
+        .agg(F.max(F.when(F.col("_g").isNotNull(), F.col("_n"))).alias("_m"))
+        .collect()
+    )
+    hottest = {r["p"]: r["_m"] or 0 for r in rows}
+    return {p: hottest[p] for p in _ordered_partitions(list(hottest), partition_col)}
 
 
 def _in_partitions(partition_col: str, values: list) -> Column:
@@ -227,19 +267,36 @@ def _run_checkpointed(
     batch_size: int,
     snapshot_id: str,
     n_checks: int,
-    start: Callable[[set, list], WriteBatch],
+    start: Callable[[set, dict], WriteBatch],
+    probe: Callable[[DataFrame], dict] | None = None,
 ) -> None:
     """The checkpoint protocol (module docstring), once for every writer.
 
+    ``probe(frame)``, when given, lists the partitions of ``frame`` like
+    :func:`list_partitions` with one figure per partition, in one
+    query.  A fresh run (nothing COMPLETE) lists with it; a resume lists
+    plainly and probes only the partitions left to do, if any.
+
     ``start(done, todo)`` runs once, after the listing and before the
-    sweep, and returns the per-batch write function.  That function
-    appends one batch's results under ``path`` hive-partitioned by
-    ``partition`` and returns its per-partition violation counts; the
-    batch's manifest rows are committed after it returns."""
+    sweep, with ``todo`` mapping each partition left to do to its probe
+    figure (None without a probe), and returns the per-batch write
+    function.  That function appends one batch's results under
+    ``path`` hive-partitioned by ``partition`` and returns its
+    per-partition violation counts; the batch's manifest rows are
+    committed after it returns."""
     spark = df.sparkSession
     done = completed_partitions(spark, path)
-    todo = [p for p in list_partitions(df, partition_col) if p not in done]
-    write_batch = start(done, todo)
+    if probe is not None and not done:
+        figures = probe(df)
+        todo = list(figures)
+    else:
+        todo = [p for p in list_partitions(df, partition_col) if p not in done]
+        figures = (
+            probe(df.filter(_in_partitions(partition_col, todo)))
+            if probe is not None and todo
+            else {}
+        )
+    write_batch = start(done, {p: figures.get(p) for p in todo})
     _sweep_orphans(spark, path, done)
     for i in range(0, len(todo), batch_size):
         batch = todo[i : i + batch_size]
@@ -274,15 +331,16 @@ def run_with_manifest(
     partition appears in the manifest only after its results landed.
     """
     spark = df.sparkSession
+    windows = _probe_windows(df, checks) if segment_size == "auto" else []
 
-    def start(done: set, todo: list) -> WriteBatch:
-        seg = segment_size
-        if todo:
-            seg = _resolve_segment_size(
-                df.filter(_in_partitions(partition_col, todo)),
-                checks,
-                segment_size,
-            )
+    def start(done: set, todo: dict) -> WriteBatch:
+        # "auto" resolves from the listing's probe figures: the hottest
+        # group of any partition left to do
+        seg = (
+            _segment_size_for(max(todo.values(), default=0))
+            if windows
+            else _resolve_segment_size(df, checks, segment_size)
+        )
 
         def write_batch(batch_df: DataFrame, batch: list) -> dict:
             rows, violations = _run_checks(
@@ -307,6 +365,17 @@ def run_with_manifest(
         return write_batch
 
     _run_checkpointed(
-        df, partition_col, output_path, batch_size, snapshot_id, len(checks), start
+        df,
+        partition_col,
+        output_path,
+        batch_size,
+        snapshot_id,
+        len(checks),
+        start,
+        probe=(
+            (lambda frame: list_partitions_probed(frame, partition_col, windows))
+            if windows
+            else None
+        ),
     )
     return _read_results(spark, f"{output_path}/verdicts", VERDICT_SCHEMA)

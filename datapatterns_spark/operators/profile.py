@@ -50,6 +50,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from ..functions import besttype
 from ..functions.sketches import LG_CONFIG_K
@@ -903,7 +904,7 @@ def _attach_best_type(
             name_c = F.col("attribute") == (name_prefix + a.name)
             bt = besttype.best_type_name(
                 kind=a.kind,
-                given_type=a.given_type,
+                given_type=F.lit(a.given_type),
                 flags=F.col("type_flags"),
                 max_len=F.col("max_length"),
                 min_len_nonzero=F.col("min_len_nonzero"),
@@ -1514,8 +1515,11 @@ def _approx_driver_tail(
         ).collect()[0]
     res: dict[str, object] = {}
     if len(jobs) > 1:
+        # each pool task carries the caller's Spark local properties
+        # (job group, description): a pool thread starts with none
+        inherit = inheritable_thread_target(spark)
         with ThreadPoolExecutor(len(jobs)) as ex:
-            futs = {name: ex.submit(fn) for name, fn in jobs.items()}
+            futs = {name: ex.submit(inherit(fn)) for name, fn in jobs.items()}
             res = {name: f.result() for name, f in futs.items()}
     else:
         res = {name: fn() for name, fn in jobs.items()}
@@ -1941,9 +1945,10 @@ def _profile_flat_approx(
     # parallelism-independent cost in the 4-vs-16-core flagship).
     base_schema = base.schema
     if num_direct is not None:
+        inherit = inheritable_thread_target(df.sparkSession)
         with ThreadPoolExecutor(2) as _ex:
-            _fb = _ex.submit(base.collect)
-            _fn = _ex.submit(lambda: num_direct.collect()[0])
+            _fb = _ex.submit(inherit(base.collect))
+            _fn = _ex.submit(inherit(lambda: num_direct.collect()[0]))
             base_rows, _num_row = _fb.result(), _fn.result()
         _stats = (
             "numeric_min",
@@ -2072,7 +2077,11 @@ def _profile_flat_approx(
     mats = {k: f for k, f in (("lp", lp), ("hv", heavy_pat), ("vh", vh)) if f is not None}
     if len(mats) > 1:
         with ThreadPoolExecutor(len(mats)) as ex:
-            futs = {k: ex.submit(_materialize, f, len(attrs), params.materialize) for k, f in mats.items()}
+            inherit = inheritable_thread_target(df.sparkSession)
+            futs = {
+                k: ex.submit(inherit(_materialize), f, len(attrs), params.materialize)
+                for k, f in mats.items()
+            }
             mats = {k: f.result() for k, f in futs.items()}
     else:
         mats = {k: _materialize(f, len(attrs), params.materialize) for k, f in mats.items()}

@@ -15,7 +15,10 @@ rows are serialized on the driver into ONE JSON string and the frame
 is ``range(1).select(inline(from_json(lit(payload), array<schema>)))``.
 Catalyst constant-folds ``from_json`` over a literal, so the optimized
 plan is ``Generate inline(<literal array>)`` over a one-row range —
-joined broadcast, and no Python worker is ever involved.
+joined broadcast, and no Python worker is ever involved.  The range has
+ONE partition: left to ``defaultParallelism`` slices, every read or
+write of the frame would run that many tasks, all but one empty (and a
+write would leave an empty schema file beside the one holding rows).
 
 Cost: a call crosses py4j a fixed number of times, whatever the row
 count — 23 commands for a 6-column verdict grid of 10 or of 1,000
@@ -66,7 +69,7 @@ def lit_df(
     """A small literal DataFrame evaluated entirely JVM-side."""
     st = _schema(schema)
     if not rows:
-        return spark.range(0).select(
+        return spark.range(0, 0, 1, 1).select(
             *[F.lit(None).cast(f.dataType).alias(f.name) for f in st.fields]
         )
     payload = json.dumps(
@@ -75,6 +78,6 @@ def lit_df(
             for row in rows
         ]
     )
-    return spark.range(1).select(
+    return spark.range(0, 1, 1, 1).select(
         F.inline(F.from_json(F.lit(payload), T.ArrayType(st), {"mode": "FAILFAST"}))
     )

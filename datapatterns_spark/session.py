@@ -1,7 +1,7 @@
 """SparkSession factory tuned for the profiling/validation workload.
 
-Defaults chosen for scale (AQE on, Arrow on, skew handling on) — see
-SURVEY.md §4.  Local test runs override parallelism via ``master``.
+Defaults chosen for scale (AQE on, skew handling on) — see SURVEY.md
+§4.  Local test runs override parallelism via ``master``.
 """
 
 from __future__ import annotations
@@ -25,20 +25,12 @@ def get_spark(
     """Build (or reuse) a SparkSession with scale-appropriate defaults.
 
     AQE is enabled for runtime re-planning (skew joins, partition
-    coalescing), Arrow for any pandas interchange, and ANSI mode is
-    disabled so malformed casts yield NULL (the engine's "unfilled"
-    semantics) rather than errors.
+    coalescing), and ANSI mode is disabled so malformed casts yield
+    NULL (the engine's "unfilled" semantics) rather than errors.  No
+    process state is touched: no operator starts a Python worker, so
+    nothing needs the package on a worker's path.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # Make the package importable by Python *workers* regardless of the
-    # driver's cwd: pickled pandas-UDF closures resolve module
-    # references by import on the worker side.  (On a real cluster the
-    # same is achieved with ``spark-submit --py-files``.)
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if pkg_root not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            pkg_root + os.pathsep + os.environ.get("PYTHONPATH", "")
-        ).rstrip(os.pathsep)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -49,7 +41,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.ansi.enabled", "false")
         # Propagate a bucketed table's SORTED BY order into the scan's
         # outputOrdering (only applies when each bucket is one file,

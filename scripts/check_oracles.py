@@ -7,9 +7,10 @@ values.  Usage: python3 scripts/check_oracles.py [sf_dir] [name...]"""
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

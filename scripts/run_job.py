@@ -1,9 +1,9 @@
 #!/usr/bin/env python3
 """spark-submit entry point for the profile+validate job.
 
-Cluster deployment (the north_rule protocol)::
+Cluster deployment (the north_rule protocol), from the repository root::
 
-    cd /root/repo && zip -r /tmp/datapatterns_spark.zip datapatterns_spark
+    zip -r /tmp/datapatterns_spark.zip datapatterns_spark
     spark-submit --master <cluster> \
         --py-files /tmp/datapatterns_spark.zip \
         scripts/run_job.py \

@@ -317,14 +317,16 @@ def test_manifest_probes_once_per_run(spark, tmp_path, monkeypatch):
     batch, and a resume with nothing left to do runs none.  Manifest
     n_violations (taken from the driver-side verdict rows) still match
     the verdicts written."""
+    from datapatterns_spark.operators import manifest as M
+
     probes = []
-    real = C._auto_segment_size
+    real = M.list_partitions_probed
 
-    def counting(df, windows):
+    def counting(df, partition_col, windows):
         probes.append(windows)
-        return real(df, windows)
+        return real(df, partition_col, windows)
 
-    monkeypatch.setattr(C, "_auto_segment_size", counting)
+    monkeypatch.setattr(M, "list_partitions_probed", counting)
     df = generate_transcripts(spark, 120, seed=7, violation_rate=0.05).withColumn(
         "part", F.pmod(F.xxhash64("conv_id"), F.lit(4)).cast("string")
     )
@@ -346,6 +348,51 @@ def test_manifest_probes_once_per_run(spark, tmp_path, monkeypatch):
     assert sum(want.values()) > 0
     run_with_manifest(df, checks, "part", out, key_cols=["conv_id", "turn_idx"], batch_size=2)
     assert len(probes) == 1
+
+
+def test_listing_carries_the_probe(spark, tmp_path, monkeypatch):
+    """The probed listing lists exactly what list_partitions lists, with
+    each partition's sampled hottest-group count, and a fresh
+    run_with_manifest resolves segment_size="auto" from it: segmented
+    when one partition holds a runaway group, unsegmented otherwise."""
+    from datapatterns_spark.operators import manifest as M
+
+    monkeypatch.setattr(C, "AUTO_SEGMENT_THRESHOLD", 1_000)
+    monkeypatch.setattr(C, "AUTO_SEGMENT_SIZE", 500)
+    balanced = spark.range(400).select(
+        F.concat(F.lit("c"), (F.col("id") % 10).cast("string")).alias("conv"),
+        (F.col("id") / 10).cast("int").alias("t"),
+        F.timestamp_seconds(F.col("id").cast("double")).alias("ts"),
+        F.when(F.col("id") % 10 == 0, F.lit(None))
+        .otherwise((F.col("id") % 3).cast("string"))
+        .alias("p"),
+    )
+    hot = spark.range(20_000).select(
+        F.lit("viral").alias("conv"),
+        F.col("id").cast("int").alias("t"),
+        F.timestamp_seconds(F.col("id").cast("double") * 2).alias("ts"),
+        F.lit("2").alias("p"),
+    ).unionByName(balanced)
+    windows = [("conv", "t")]
+    for df in (balanced, hot):
+        probed = M.list_partitions_probed(df, "p", windows)
+        assert list(probed) == M.list_partitions(df, "p")
+    assert probed["2"] * C.AUTO_SEGMENT_PROBE_MOD > 10_000
+    assert max(v for p, v in probed.items() if p != "2") * C.AUTO_SEGMENT_PROBE_MOD < 1_000
+
+    seen = []
+    real = M._run_checks
+
+    def recording(*args, **kwargs):
+        seen.append(kwargs["segment_size"])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(M, "_run_checks", recording)
+    checks = [C.monotonic("mono", "ts", "conv", "t"), C.unique("uq", ["conv", "t"])]
+    for name, df, want in (("bal", balanced, None), ("hot", hot, 500)):
+        seen.clear()
+        run_with_manifest(df, checks, "p", str(tmp_path / name), key_cols=["conv", "t"])
+        assert seen and set(seen) == {want}, (name, seen)
 
 
 def test_list_partitions_null_and_empty(spark):

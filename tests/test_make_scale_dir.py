@@ -4,12 +4,14 @@ sf1.0 numbers measure a different-shaped corpus, silently."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/scripts")
+SCRIPTS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
+sys.path.insert(0, SCRIPTS)
 from make_scale_dir import KEY_OWNER, scale_table  # noqa: E402
 
 SRC = "/root/testdata/sf0.001"

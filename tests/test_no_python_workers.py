@@ -58,3 +58,18 @@ def test_no_module_starts_python_workers():
         if offences:
             bad[str(path.relative_to(PACKAGE.parent))] = offences
     assert bad == {}, bad
+
+
+def test_get_spark_leaves_pythonpath(spark, monkeypatch):
+    """With no Python worker to serve, building the session changes no
+    process environment: ``PYTHONPATH`` stays as the caller set it."""
+    import os
+
+    from datapatterns_spark.session import get_spark
+
+    monkeypatch.delenv("PYTHONPATH", raising=False)
+    get_spark("datapatterns-tests", master="local[4]", shuffle_partitions=4)
+    assert "PYTHONPATH" not in os.environ
+    monkeypatch.setenv("PYTHONPATH", "elsewhere")
+    get_spark("datapatterns-tests", master="local[4]", shuffle_partitions=4)
+    assert os.environ["PYTHONPATH"] == "elsewhere"

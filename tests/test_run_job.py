@@ -9,10 +9,11 @@ fresh run writes profile + verdicts + violations + manifest; a
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _run(args: list[str]) -> str:
@@ -150,7 +151,7 @@ def test_run_job_segment_size(tmp_path):
         r = subprocess.run(
             [sys.executable, "scripts/run_job.py", "--generate", "150",
              "--output", out, "--master", "local[4]"] + extra,
-            capture_output=True, text=True, cwd="/root/repo", timeout=600,
+            capture_output=True, text=True, cwd=REPO, timeout=600,
         )
         assert r.returncode == 0, r.stderr[-2000:]
         import duckdb
