@@ -91,8 +91,6 @@ _NORM_SQL = (
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from datapatterns_spark.operators import constraints as C
     from datapatterns_spark.operators import dedup as D
-    from datapatterns_spark.operators import similarity as S
-    from datapatterns_spark.operators import textanalysis as TA
     from datapatterns_spark.operators.benford import benford
     from datapatterns_spark.operators.cardinality import cardinality
     from datapatterns_spark.operators.profile import profile
@@ -351,39 +349,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return f1.unionByName(f2)
 
-    def q_similarity_topk(spark, sf):
-        emb = _t(spark, sf, "embeddings")
-        qs = emb.filter(F.col("vec_id").isin([1, 2, 3]))
-        r = S.brute_force_topk(emb, qs, k=5)
-        # 4-decimal rounding: float32 sum order differs between engines
-        # at the 6th decimal
-        return r.select(
-            "query_id", "neighbor_id", F.round("cos", 4).alias("cos"), "rank"
-        )
-
     def q_exact_dedup(spark, sf):
         return D.dedup_exact(_t(spark, sf, "documents"), "text", "doc_id").select("doc_id")
 
     def q_ngram_jaccard(spark, sf):
         return D.ngram_jaccard_pairs(
             _t(spark, sf, "documents"), "text", "doc_id", n=3, threshold=0.7
-        )
-
-    def q_text_annotate(spark, sf):
-        """Per-document text analysis in ONE map-only select: token
-        counts (whitespace + BPE-ish), language id, quality score and
-        the normalized-text fingerprint (the round-3 entry
-        consolidation; formerly text_tokens + text_langid +
-        text_quality + text_fingerprint, unchanged per-column
-        semantics).  One scan, zero shuffles, zero Python."""
-        d = _t(spark, sf, "documents")
-        return d.select(
-            "doc_id",
-            TA.whitespace_token_count(F.col("text")).alias("ws_tokens"),
-            TA.bpe_token_count(F.col("text")).alias("bpe_tokens"),
-            TA.lang_id(F.col("text")).alias("lang_guess"),
-            TA.quality_score(F.col("text")).alias("quality"),
-            TA.fingerprint(F.col("text")).alias("fp"),
         )
 
     def q_profile_correlations(spark, sf):
@@ -478,17 +449,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return a.unionByName(b)
 
-    # --- (ann_ivf gained an exact literal-centroid oracle later) ---
-    def q_ann_ivf(spark, sf):
-        emb = _t(spark, sf, "embeddings")
-        qs = emb.filter(F.col("vec_id").isin([1, 2, 3]))
-        # refine_sweeps=0 pins the raw seeded centroids so the DuckDB
-        # oracle can replay them as literals; the library default is
-        # one Lloyd sweep (recall/balance measured in BASELINE.md)
-        return S.ivf_topk(
-            emb, qs, k=5, n_cells=16, n_probe=8, dim=64, refine_sweeps=0
-        )
-
     def q_best_record(spark, sf):
         from datapatterns_spark.operators.best_record import best_record_structure
 
@@ -508,82 +468,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "o_orderdate",
         )
         return apply_best_types(src)
-
-    def q_text_lm_score(spark, sf):
-        """Char-bigram LM quality scores (the CCNet-style perplexity
-        gate): model self-trained on the corpus, every doc scored by
-        mean add-alpha conditional log-prob.  Exact oracle: each ln()
-        term is quantized to integer 1e-9 units with the cross-engine
-        floor(x+0.5) rule and summed as longs."""
-        return TA.lm_quality_score(_t(spark, sf, "documents"))
-
-    def q_text_contamination(spark, sf):
-        """Benchmark decontamination: 8-gram overlap of the corpus
-        against a planted eval set (every 40th document re-labeled).
-        Broadcast eval grams; the corpus never shuffles."""
-        docs = _t(spark, sf, "documents").select("doc_id", "text")
-        ev = docs.filter("doc_id % 40 = 0").select(
-            F.col("doc_id").alias("eval_id"), "text"
-        )
-        return TA.contamination_check(docs, ev, n=8)
-
-    def q_text_repetition(spark, sf):
-        """Gopher repetition measures over documents — dup-line
-        fraction, dup-line char fraction, top-2-gram char coverage.
-        Spark computes them map-only via sorted-run folds; the oracle
-        recomputes with an independent unnest+groupBy algorithm."""
-        return TA.repetition_stats(_t(spark, sf, "documents"))
-
-    def q_text_redact(spark, sf):
-        """PII detect + redact over documents with deterministically
-        planted emails/phones (every 5th doc) — counts on the pre-
-        redaction text, sequential pattern substitution.  Map-only
-        plan: no shuffle, no Python."""
-        docs = _t(spark, sf, "documents")
-        planted = docs.select(
-            "doc_id",
-            F.when(
-                F.col("doc_id") % 5 == 0,
-                F.concat(
-                    F.coalesce(F.col("text"), F.lit("")),
-                    F.lit(" contact user"),
-                    F.col("doc_id").cast("string"),
-                    F.lit("@example.com or 555-123-4567"),
-                ),
-            ).otherwise(F.col("text")).alias("text"),
-        )
-        out = TA.redact_pii(planted)
-        return out.select(
-            "doc_id", "n_email", "n_ssn", "n_phone", "n_ipv4",
-            "pii_total", "redacted",
-        )
-
-    def q_winnow(spark, sf):
-        """Winnowing (MOSS) fingerprints AND the near-dup pairs built
-        from them in one entry (the round-3 entry consolidation;
-        formerly text_winnow + dedup_winnow, unchanged semantics).
-        kind='fp' rows are (doc_id, fingerprint) from the k-gram
-        rolling hash + w-window minima (expression-only); kind='pair'
-        rows are the shared-fingerprint near-dup pairs (df-capped
-        inverted-index self-join).  Integral columns only."""
-        docs = _t(spark, sf, "documents")
-        fps = TA.winnow_table(docs, "text", "doc_id").select(
-            F.lit("fp").alias("kind"),
-            F.col("doc_id").cast("long").alias("a"),
-            F.col("fp").cast("long").alias("b"),
-            F.lit(None).cast("long").alias("c"),
-            F.lit(None).cast("long").alias("d"),
-        )
-        pairs = TA.winnow_near_dups(
-            docs, "text", "doc_id", min_shared_frac=0.5, max_fp_df=100,
-        ).select(
-            F.lit("pair").alias("kind"),
-            F.col("id_a").cast("long").alias("a"),
-            F.col("id_b").cast("long").alias("b"),
-            F.col("shared").cast("long").alias("c"),
-            F.col("n_min").cast("long").alias("d"),
-        )
-        return fps.unionByName(pairs)
 
     def q_minhash_lsh(spark, sf):
         return D.minhash_lsh_pairs(
@@ -984,10 +868,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "drift_metrics": q_drift_metrics,
         "constraint_alternation": q_constraint_alternation,
         "validate_fixes": q_validate_fixes,
-        "similarity_topk": q_similarity_topk,
         "dedup_exact": q_exact_dedup,
         "dedup_ngram_jaccard": q_ngram_jaccard,
-        "text_annotate": q_text_annotate,
         "profile_correlations": q_profile_correlations,
         "profile_cardinality_breakdown": q_profile_breakdown,
         "dedup_embedding_cosine": q_dedup_embedding,
@@ -996,7 +878,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_simhash": q_simhash,
         "transcript_suite": q_transcript_suite,
         "profile_approx": q_profile_approx,
-        "ann_ivf_topk": q_ann_ivf,
         "best_record_structure": q_best_record,
         "apply_best_types": q_apply_best_types,
         "dedup_spans": q_dedup_spans,
@@ -1005,11 +886,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_conversations": q_dedup_conversations,
         "dedup_incremental": q_dedup_incremental,
         "dedup_incremental_minhash": q_dedup_incremental_minhash,
-        "text_redact": q_text_redact,
-        "text_repetition": q_text_repetition,
-        "text_lm_score": q_text_lm_score,
-        "text_contamination": q_text_contamination,
-        "winnow": q_winnow,
         "profile_incremental": q_profile_incremental,
         "profile_quantile_sketch": q_profile_quantile_sketch,
         "streaming_state": q_streaming_state,
@@ -1298,63 +1174,7 @@ UNION ALL SELECT partition, 'price_positive', vc = 0, vc::BIGINT FROM pr
         benford_critical=CRITICAL_1,
     )
 
-    # ---- text_winnow (winnowing fingerprints, k=5 w=4) ----
-    # identical modular fold as the Spark expression: mod applied after
-    # every (acc*257 + codepoint) step, all arithmetic in BIGINT.
-    _wn_norm = _NORM_SQL.format(v="text")
-    text_winnow_sql = f"""
-WITH d AS (SELECT doc_id, {_wn_norm} AS s FROM documents),
-p AS (SELECT doc_id, s, length(s) - 4 AS nk FROM d WHERE length(s) >= 5),
-pos AS (
-  SELECT doc_id, nk, s, unnest(generate_series(1, nk)) AS i FROM p
-),
-kh AS (
-  SELECT doc_id, nk, i,
-    ((((((((CAST(ord(substr(s, CAST(i AS INT), 1)) AS BIGINT) % 2147483647) * 257
-      + ord(substr(s, CAST(i AS INT) + 1, 1))) % 2147483647) * 257
-      + ord(substr(s, CAST(i AS INT) + 2, 1))) % 2147483647) * 257
-      + ord(substr(s, CAST(i AS INT) + 3, 1))) % 2147483647) * 257
-      + ord(substr(s, CAST(i AS INT) + 4, 1))) % 2147483647 AS h
-  FROM pos
-),
-win AS (
-  SELECT doc_id, nk, i,
-    min(h) OVER (PARTITION BY doc_id ORDER BY i
-                 ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mh
-  FROM kh
-)
-SELECT DISTINCT doc_id, mh AS fp FROM win WHERE nk >= 4 AND i <= nk - 3
-UNION
-SELECT doc_id, MIN(h) AS fp FROM kh WHERE nk < 4 GROUP BY doc_id
-"""
-
-    # ---- winnow (round-3 consolidation: fingerprints + near-dup
-    # pairs over the SAME shared fps CTE; formerly text_winnow +
-    # dedup_winnow) ----
-    winnow_sql = f"""
-WITH wfp AS MATERIALIZED ({text_winnow_sql}),
-sizes AS (SELECT doc_id, COUNT(*) AS n_fp FROM wfp GROUP BY doc_id),
-hot AS (SELECT fp FROM wfp GROUP BY fp HAVING COUNT(*) > 100),
-pruned AS (SELECT * FROM wfp WHERE fp NOT IN (SELECT fp FROM hot)),
-sh AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS shared
-       FROM pruned a JOIN pruned b USING (fp) WHERE a.doc_id < b.doc_id
-       GROUP BY 1, 2),
-wpairs AS (
-  SELECT id_a, id_b, shared, least(sa.n_fp, sb.n_fp) AS n_min
-  FROM sh
-  JOIN sizes sa ON sa.doc_id = sh.id_a
-  JOIN sizes sb ON sb.doc_id = sh.id_b
-  WHERE shared * 1000000 >= 500000 * least(sa.n_fp, sb.n_fp))
-SELECT 'fp' AS kind, CAST(doc_id AS BIGINT) AS a, CAST(fp AS BIGINT) AS b,
-       CAST(NULL AS BIGINT) AS c, CAST(NULL AS BIGINT) AS d
-FROM wfp
-UNION ALL
-SELECT 'pair', CAST(id_a AS BIGINT), CAST(id_b AS BIGINT),
-       CAST(shared AS BIGINT), CAST(n_min AS BIGINT)
-FROM wpairs
-"""
-
-    # ---- xxhash64-exact oracles (text_fingerprint / simhash / minhash) ----
+    # ---- xxhash64-exact oracles (simhash / minhash) ----
     # DuckDB has no xxhash; functions/xxh64_sql.py GENERATES a single-
     # statement SQL pipeline reproducing Spark's XxHash64 bit-for-bit
     # (HUGEINT mod-2^64 arithmetic, lane folds via list_reduce) — so the
@@ -1366,134 +1186,6 @@ FROM wpairs
     from datapatterns_spark.operators.dedup import MINHASH_P, minhash_coeffs
 
     norm_text = _NORM_SQL.format(v="text")
-    text_fp_sql = xxh64_str_sql(
-        "documents", ["doc_id"], norm_text, out="fp", cte_prefix="fp"
-    )
-
-    # ---- text_lm_score (char-bigram LM, self-trained, add-alpha) ----
-    _lm_norm = _NORM_SQL.format(v="text")
-    text_lm_score_sql = f"""
-WITH lmnt AS MATERIALIZED (SELECT doc_id, {_lm_norm} AS s FROM documents),
-lmbg AS MATERIALIZED (
-  SELECT doc_id,
-         UNNEST(list_transform(range(1, length(s)),
-                               i -> substr(s, CAST(i AS INT), 2))) AS bg
-  FROM lmnt WHERE length(s) >= 2),
-lmmodel AS MATERIALIZED (SELECT bg, COUNT(*) AS cnt FROM lmbg GROUP BY bg),
-lmuni AS MATERIALIZED (
-  SELECT substr(bg, 1, 1) AS a, SUM(cnt) AS fcnt FROM lmmodel GROUP BY 1),
-lmv AS (SELECT COUNT(DISTINCT substr(bg, 2, 1)) + 1 AS v FROM lmmodel),
-lmlp AS (
-  SELECT b.doc_id,
-         CAST(FLOOR(LN((COALESCE(m.cnt, 0) + 0.5)
-                       / (COALESCE(u.fcnt, 0) + 0.5 * (SELECT v FROM lmv)))
-                    * 1000000000 + 0.5) AS BIGINT) AS lp9
-  FROM lmbg b
-  LEFT JOIN lmmodel m USING (bg)
-  LEFT JOIN lmuni u ON substr(b.bg, 1, 1) = u.a),
-lmagg AS (SELECT doc_id, COUNT(*) AS n_bigrams, SUM(lp9) AS s
-          FROM lmlp GROUP BY doc_id)
-SELECT lmnt.doc_id AS id,
-       CAST(COALESCE(lmagg.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-       COALESCE(ROUND(lmagg.s / (lmagg.n_bigrams * 1000000000.0), 6), 0.0)
-         AS lm_score
-FROM lmnt LEFT JOIN lmagg USING (doc_id)
-"""
-
-    # ---- text_contamination (8-gram eval overlap) ----
-    _ct_norm = _NORM_SQL.format(v="text")
-    _ct_gram8 = (
-        "list_transform(range(1, len(tk) - 6),"
-        " i -> concat_ws(' ', tk[i], tk[i + 1], tk[i + 2], tk[i + 3],"
-        " tk[i + 4], tk[i + 5], tk[i + 6], tk[i + 7]))"
-    )
-    text_contamination_sql = f"""
-WITH cg AS MATERIALIZED (
-  SELECT doc_id, UNNEST(g) AS g FROM (
-    SELECT doc_id,
-           CASE WHEN len(tk) >= 8 THEN list_distinct({_ct_gram8})
-                ELSE [array_to_string(tk, ' ')] END AS g
-    FROM (SELECT doc_id, string_split({_ct_norm}, ' ') AS tk
-          FROM documents))),
-eg AS MATERIALIZED (
-  SELECT DISTINCT doc_id AS eval_id, g FROM cg WHERE doc_id % 40 = 0)
-SELECT c.doc_id, e.eval_id, CAST(COUNT(*) AS BIGINT) AS shared_grams
-FROM cg c JOIN eg e ON c.g = e.g
-GROUP BY 1, 2
-"""
-
-    # ---- text_repetition (independent unnest+groupBy algorithm) ----
-    _rp_norm = _NORM_SQL.format(v="t")
-    text_repetition_sql = f"""
-WITH d AS MATERIALIZED (SELECT doc_id, COALESCE(text, '') AS t FROM documents),
-l AS (SELECT doc_id,
-             UNNEST(list_filter(string_split(t, chr(10)), x -> trim(x) <> '')) AS line
-      FROM d),
-lc AS (SELECT doc_id, line, COUNT(*) AS c, length(line) AS len
-       FROM l GROUP BY doc_id, line),
-lstats AS (SELECT doc_id, SUM(c) AS n_lines, COUNT(*) AS n_distinct,
-                  SUM(c * len) AS total_chars,
-                  SUM(CASE WHEN c = 1 THEN len ELSE 0 END) AS single_chars
-           FROM lc GROUP BY doc_id),
-nt AS MATERIALIZED (SELECT doc_id, {_rp_norm} AS ntext FROM d),
-tk AS (SELECT doc_id, string_split(ntext, ' ') AS toks FROM nt),
-g AS (SELECT doc_id,
-             UNNEST(list_transform(range(1, len(toks)),
-                                   i -> toks[i] || ' ' || toks[i + 1])) AS gram
-      FROM tk WHERE len(toks) >= 2),
-gc AS (SELECT doc_id, gram, COUNT(*) AS c FROM g GROUP BY doc_id, gram),
-gtop AS (SELECT doc_id, c, gram FROM (
-           SELECT doc_id, c, gram,
-                  row_number() OVER (PARTITION BY doc_id
-                                     ORDER BY c DESC, gram DESC) AS rn
-           FROM gc) WHERE rn = 1)
-SELECT d.doc_id,
-  ROUND(CASE WHEN COALESCE(n_lines, 0) > 0
-        THEN (n_lines - n_distinct) * 1.0 / n_lines ELSE 0 END, 6)
-    AS dup_line_frac,
-  ROUND(CASE WHEN COALESCE(total_chars, 0) > 0
-        THEN (total_chars - single_chars) * 1.0 / total_chars ELSE 0 END, 6)
-    AS dup_line_char_frac,
-  ROUND(CASE WHEN length(nt.ntext) > 0 AND gtop.c IS NOT NULL
-        THEN gtop.c * length(gtop.gram) * 1.0 / length(nt.ntext)
-        ELSE 0 END, 6) AS top_ngram_char_frac
-FROM d
-LEFT JOIN lstats ON lstats.doc_id = d.doc_id
-LEFT JOIN gtop ON gtop.doc_id = d.doc_id
-JOIN nt ON nt.doc_id = d.doc_id
-"""
-
-    # ---- text_redact (PII patterns are Java-regex/RE2-portable:
-    # no lookaround, explicit classes; DuckDB needs the 'g' flag) ----
-    from datapatterns_spark.operators.textanalysis import PII_PATTERNS
-
-    _pii_order = ["email", "ssn", "phone", "ipv4"]
-    _red_expr = "t"
-    for _k in _pii_order:
-        _red_expr = (
-            f"regexp_replace({_red_expr}, '{PII_PATTERNS[_k]}',"
-            f" '[{_k.upper()}]', 'g')"
-        )
-    _pii_counts = ",\n  ".join(
-        f"CAST(length(regexp_extract_all(t, '{PII_PATTERNS[k]}')) AS INT)"
-        f" AS n_{k}"
-        for k in _pii_order
-    )
-    text_redact_sql = f"""
-WITH planted AS MATERIALIZED (
-  SELECT doc_id,
-         COALESCE(CASE WHEN doc_id % 5 = 0
-              THEN COALESCE(text, '') || ' contact user' || doc_id::VARCHAR
-                   || '@example.com or 555-123-4567'
-              ELSE text END, '') AS t
-  FROM documents)
-SELECT doc_id,
-  {_pii_counts},
-  CAST({' + '.join(f"length(regexp_extract_all(t, '{PII_PATTERNS[k]}'))" for k in _pii_order)} AS INT) AS pii_total,
-  {_red_expr} AS redacted
-FROM planted
-"""
-
     # ---- dedup_simhash: votes over token hashes -> hex -> banded pairs ----
     # Spark: h = xxhash64(tok, lit(0)) = hashInt(0, hashBytes(tok, 42));
     # vote per bit b = 2*((h >> b) & 1) - 1, summed over the token STREAM
@@ -2029,83 +1721,6 @@ SELECT CASE WHEN (p_size <= 25) IS DISTINCT FROM TRUE THEN p_type ELSE p_brand E
 FROM part GROUP BY 1
 """
 
-    # ---- similarity top-k ----
-    similarity_sql = """
-WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id IN (1, 2, 3)),
-scored AS (
-  SELECT q.qid AS query_id, e.vec_id AS neighbor_id,
-         list_cosine_similarity(q.qv, e.embedding) AS cos
-  FROM embeddings e, q WHERE e.vec_id <> q.qid),
-r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn FROM scored)
-SELECT query_id, neighbor_id, ROUND(cos, 4) AS cos, CAST(rn AS INT) AS rank FROM r WHERE rn <= 5
-"""
-
-    # ---- ann_ivf_topk (exact oracle: centroids are deterministic
-    # seeded literals; every double fold replicated in Spark's exact
-    # left-to-right order so cell assignment and cosine agree
-    # bit-for-bit) ----
-    from datapatterns_spark.operators.similarity import _random_centroids
-
-    ivf_cents = _random_centroids(64, 16, 42)
-
-    def _dot_lit(vec_col: str, weights: list[float]) -> str:
-        # Spark: F.aggregate(zip_with(vec, lits, x*w), 0.0, s+x) — a
-        # left fold; SQL + is left-associative, so the text below adds
-        # in the identical order.  Literals go through a VARCHAR cast
-        # (bare decimals parse as DECIMAL in DuckDB, not DOUBLE).
-        terms = " + ".join(
-            f"{vec_col}[{i + 1}]::DOUBLE * ('{w!r}'::DOUBLE)"
-            for i, w in enumerate(weights)
-        )
-        return f"(0.0::DOUBLE + {terms})"
-
-    def _cell_structs(vec_col: str) -> str:
-        return ", ".join(
-            f"{{'d': -({_dot_lit(vec_col, c)}), 'c': {i}}}"
-            for i, c in enumerate(ivf_cents)
-        )
-
-    def _fold_cos(qv: str, cv: str) -> str:
-        # ordered folds for dot and both norms (dedup.cosine parity)
-        dot = (
-            f"list_reduce(list_prepend(0.0::DOUBLE,"
-            f" list_transform(generate_series(1, 64),"
-            f" i -> {qv}[i]::DOUBLE * {cv}[i]::DOUBLE)), (s, x) -> s + x)"
-        )
-        na = (
-            f"sqrt(list_reduce(list_prepend(0.0::DOUBLE,"
-            f" list_transform(generate_series(1, 64),"
-            f" i -> {qv}[i]::DOUBLE * {qv}[i]::DOUBLE)), (s, x) -> s + x))"
-        )
-        nb = (
-            f"sqrt(list_reduce(list_prepend(0.0::DOUBLE,"
-            f" list_transform(generate_series(1, 64),"
-            f" i -> {cv}[i]::DOUBLE * {cv}[i]::DOUBLE)), (s, x) -> s + x))"
-        )
-        return f"({dot}) / (({na}) * ({nb}))"
-
-    ann_ivf_sql = f"""
-WITH cor AS MATERIALIZED (
-  SELECT vec_id AS neighbor_id,
-         list_sort([{_cell_structs("embedding")}])[1].c AS cell
-  FROM embeddings),
-qc AS MATERIALIZED (
-  SELECT vec_id AS query_id,
-         UNNEST(list_transform(list_sort([{_cell_structs("embedding")}])[1:8], s -> s.c)) AS cell
-  FROM embeddings WHERE vec_id IN (1, 2, 3)),
-pairs AS MATERIALIZED (
-  SELECT DISTINCT q.query_id, c.neighbor_id
-  FROM cor c JOIN qc q USING (cell) WHERE q.query_id <> c.neighbor_id),
-scored AS (
-  SELECT p.query_id, p.neighbor_id,
-         ROUND({_fold_cos("qe.embedding", "ce.embedding")}, 6) AS cos
-  FROM pairs p
-  JOIN embeddings qe ON qe.vec_id = p.query_id
-  JOIN embeddings ce ON ce.vec_id = p.neighbor_id),
-r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn FROM scored)
-SELECT query_id, neighbor_id, cos, CAST(rn AS INT) AS rank FROM r WHERE rn <= 5
-"""
-
     # ---- profile_approx (deterministic columns of the approx path:
     # counts, rendered-string lengths, DECIMAL32_4 numeric moments) ----
     pa_parts = []
@@ -2175,38 +1790,6 @@ SELECT c.id_a, c.id_b,
        ROUND(c.common * 1.0 / (sa.sz + sb.sz - c.common), 6) AS jaccard
 FROM common c JOIN sizes sa ON c.id_a = sa.id JOIN sizes sb ON c.id_b = sb.id
 WHERE c.common * 1.0 / (sa.sz + sb.sz - c.common) >= 0.7
-"""
-
-    # ---- token counts ----
-    text_tokens_sql = """
-SELECT doc_id,
-       CAST(CASE WHEN trim(coalesce(text, '')) = '' THEN 0
-            ELSE len(string_split_regex(trim(coalesce(text, '')), '\\s+')) END AS INT) AS ws_tokens,
-       CAST(len(regexp_extract_all(coalesce(text, ''), '[A-Za-z]+|[0-9]+|[^\\sA-Za-z0-9]')) AS INT) AS bpe_tokens
-FROM documents
-"""
-
-    # ---- language id ----
-    markers = {
-        "en": ["the", "and", "of", "to", "in", "is", "that", "it", "for", "was"],
-        "de": ["der", "die", "und", "das", "ist", "nicht", "ein", "mit", "sich", "auf"],
-        "fr": ["le", "la", "les", "et", "est", "des", "une", "dans", "que", "pour"],
-        "es": ["el", "la", "los", "de", "que", "y", "en", "un", "por", "con"],
-        "it": ["il", "la", "di", "che", "e", "un", "per", "con", "del", "una"],
-    }
-    entries = ", ".join(
-        "{neg: -len(list_filter(tk, x -> list_contains(["
-        + ", ".join(f"'{w}'" for w in ws)
-        + f"], x))), lang: '{lang}'}}"
-        for lang, ws in markers.items()
-    )
-    langid_sql = f"""
-WITH norm AS (SELECT doc_id, {norm} AS t FROM documents),
-toks AS (SELECT doc_id, string_split(t, ' ') AS tk FROM norm),
-scored AS (SELECT doc_id, list_sort([{entries}]) AS s FROM toks)
-SELECT doc_id,
-       CASE WHEN s[1].neg < 0 THEN s[1].lang ELSE 'und' END AS lang_guess
-FROM scored
 """
 
     # ---- profile_correlations (all numeric pairs, both directions) ----
@@ -2303,49 +1886,6 @@ FROM (
 SELECT *, 1 AS digit FROM ({benford_sql})
 UNION ALL
 SELECT *, 2 AS digit FROM ({benford2_sql})
-"""
-
-    # ---- text_quality (mirror quality_score arithmetic exactly) ----
-    stoplist = ", ".join(
-        f"'{w}'"
-        for w in markers["en"] + ["a", "an", "as", "at", "be", "by", "on", "or"]
-    )
-    text_quality_sql = f"""
-WITH base AS (
-  SELECT doc_id, coalesce(text, '') AS t, {norm} AS nt FROM documents),
-m AS (
-  SELECT doc_id,
-         length(t) AS n,
-         length(regexp_replace(t, '[^A-Za-z]', '', 'g')) AS alpha,
-         length(regexp_replace(t, '[^[:punct:]]', '', 'g')) AS punct,
-         CASE WHEN trim(t) = '' THEN 0
-              ELSE len(string_split_regex(trim(t), '\\s+')) END AS words,
-         len(list_filter(string_split(nt, ' '), x -> list_contains([{stoplist}], x))) AS stop
-  FROM base)
-SELECT doc_id,
-  ROUND(
-    0.3 * (CASE WHEN n >= 20 AND n <= 8000 THEN 1.0 WHEN n > 0 THEN 0.4 ELSE 0.0 END)
-    + 0.25 * (CASE WHEN n > 0 THEN alpha * 1.0 / n ELSE 0.0 END)
-    + 0.15 * (CASE WHEN n > 0 THEN 1.0 - LEAST(punct * 1.0 / n * 4, 1.0) ELSE 0.0 END)
-    + 0.15 * (CASE WHEN words > 0 THEN LEAST(stop * 1.0 / words * 5, 1.0) ELSE 0.0 END)
-    + 0.15 * (CASE WHEN words > 0 AND n * 1.0 / words >= 3 AND n * 1.0 / words <= 12
-              THEN 1.0 ELSE 0.3 END),
-  4) AS quality
-FROM m
-"""
-
-    # ---- text_annotate (round-3 consolidation: tokens + langid +
-    # quality + fingerprint, joined per doc) ----
-    text_annotate_sql = f"""
-WITH tt AS MATERIALIZED ({text_tokens_sql}),
-tl AS MATERIALIZED ({langid_sql}),
-tq AS MATERIALIZED ({text_quality_sql}),
-tf AS MATERIALIZED ({text_fp_sql})
-SELECT tt.doc_id, tt.ws_tokens, tt.bpe_tokens, tl.lang_guess, tq.quality, tf.fp
-FROM tt
-JOIN tl ON tl.doc_id = tt.doc_id
-JOIN tq ON tq.doc_id = tt.doc_id
-JOIN tf ON tf.doc_id = tt.doc_id
 """
 
     # ---- embedding cosine near-dup pairs (brute baseline) ----
@@ -2574,10 +2114,8 @@ SELECT 'dedup', 'decisions', 'n_docs',
         "drift_metrics": drift_metrics_sql,
         "constraint_alternation": constraint_alternation_sql,
         "validate_fixes": validate_fixes_sql,
-        "similarity_topk": similarity_sql,
         "dedup_exact": dedup_exact_sql,
         "dedup_ngram_jaccard": ngram_sql,
-        "text_annotate": text_annotate_sql,
         "profile_correlations": correlations_sql,
         "profile_cardinality_breakdown": breakdown_sql,
         "dedup_embedding_cosine": dedup_embedding_sql,
@@ -2593,14 +2131,8 @@ SELECT 'dedup', 'decisions', 'n_docs',
         "dedup_conversations": dedup_conversations_sql,
         "dedup_incremental": dedup_incremental_sql,
         "dedup_incremental_minhash": dedup_incremental_minhash_sql,
-        "winnow": winnow_sql,
-        "text_redact": text_redact_sql,
-        "text_repetition": text_repetition_sql,
-        "text_lm_score": text_lm_score_sql,
-        "text_contamination": text_contamination_sql,
         "dedup_simhash": simhash_sql,
         "dedup_minhash_lsh": minhash_sql,
-        "ann_ivf_topk": ann_ivf_sql,
         "profile_approx": profile_approx_sql,
         "transcript_suite": transcript_suite_oracle,
         "verdicts_per_partition": verdicts_per_partition_sql,

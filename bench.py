@@ -395,8 +395,7 @@ def run_suite(include_flagship: bool = True) -> dict:
     headline = [
         # round-3 renames from the entry consolidation (COVERAGE.md):
         # profile_fill->profile_fill_lengths (adds the documents length
-        # stats), benford_digit1->benford_digits (adds digit 2),
-        # text_tokens->text_annotate (adds langid/quality/fingerprint)
+        # stats), benford_digit1->benford_digits (adds digit 2)
         "profile_fill_lengths",
         "profile_numeric_stats",
         "profile_patterns",
@@ -405,13 +404,10 @@ def run_suite(include_flagship: bool = True) -> dict:
         "constraint_verdicts",
         "cardinality_histogram",
         "dedup_minhash_lsh",
-        "similarity_topk",
-        "text_annotate",
         # round-2 additions: the conversation/incremental dedup paths
         "dedup_conversations",
         "dedup_incremental_minhash",
-        # round-3 additions: LM quality gate + exact-substring spans
-        "text_lm_score",
+        # round-3 addition: exact-substring spans
         "dedup_spans",
     ]
     for name in headline:

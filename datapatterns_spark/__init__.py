@@ -1,7 +1,7 @@
 """datapatterns_spark — a from-scratch PySpark-native data profiling +
 validation engine with the capabilities of hpcc-systems/DataPatterns,
-extended with a large-scale constraint layer and training-data
-pipeline operators.
+extended with a large-scale constraint layer and deduplication
+operators.
 
 Public API (reference analogues cited in each module):
 
@@ -16,9 +16,6 @@ Public API (reference analogues cited in each module):
 * ``operators.manifest``         — checkpointed per-partition resume
 * ``operators.dedup``            — exact / n-gram Jaccard / MinHash-LSH
   / SimHash / embedding-cosine deduplication
-* ``operators.similarity``       — brute-force + IVF cosine top-k
-* ``operators.textanalysis``     — token counts, language id, quality,
-  fingerprint
 * ``operators.incremental``      — mergeable per-partition profile states
 * ``streaming``                  — ``foreachBatch`` validation, profile-
   state and dedup sinks

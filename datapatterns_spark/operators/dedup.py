@@ -122,8 +122,7 @@ def shingles(col: Column, n: int = 3, words: bool = True, distinct: bool = True)
     else:
         # one-pass codepoint split, then slice-joins — NOT per-index
         # substring, whose UTF8 codepoint seek is O(len) per call and
-        # O(len^2) per document (measured 16x on char bigrams,
-        # textanalysis._char_bigrams)
+        # O(len^2) per document (measured 16x on char bigrams)
         chars = F.regexp_extract_all(norm, F.lit("(?s)."), 0)
         count = F.greatest(F.size(chars) - (n - 1), F.lit(0))
         grams = F.transform(
@@ -220,10 +219,9 @@ def _winnowed_grams(
     rightmost minimum.  Returns ``(id, p)`` with ``p`` the selected
     ``struct<i,g1,g2>`` rows.
 
-    Stage shape mirrors winnow_table: the gram array, the selected-
-    position array, and the final explode are SEPARATE projections so
-    each non-cheap array is evaluated once per row (lambda bodies get
-    no subexpression elimination)."""
+    The gram array, the selected-position array, and the final explode
+    are SEPARATE projections so each non-cheap array is evaluated once
+    per row (lambda bodies get no subexpression elimination)."""
     staged = df.select(F.col(id_col).alias("id"), grams.alias("_grams"))
     g = F.col("_grams")
     m = F.size(g)
@@ -313,9 +311,8 @@ def duplicate_token_spans(
     gram frame is the engine's largest intermediate (~28 B x corpus
     token count; at 10^12 turns, the dominant shuffle input).
     ``winnow_w=w`` selects gram POSITIONS by the winnowing rule
-    (Schleimer et al. 2003, the same window-minimum machinery as
-    textanalysis.winnow_table): in every window of ``w`` consecutive
-    gram hashes, keep the rightmost minimal one.  Selection is
+    (Schleimer et al. 2003): in every window of ``w`` consecutive gram
+    hashes, keep the rightmost minimal one.  Selection is
     CONTENT-DEFINED — a duplicated token span selects the same interior
     grams in every copy (a window fully inside the span sees identical
     hashes everywhere), so every true duplicated span of

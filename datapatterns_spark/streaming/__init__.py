@@ -98,10 +98,12 @@ def profile_state_sink(
 
 def stream_profile(spark, state_path: str) -> DataFrame:
     """Fold every state row written by :func:`profile_state_sink` into
-    one profile summary row per attribute (no data rescans)."""
+    one profile summary row per attribute (no data rescans).  The
+    ``states`` directory is read as a whole: partition discovery adds
+    the ``batch`` column, which :func:`merge_states` ignores."""
     from ..operators.incremental import merge_states
 
-    return merge_states(spark.read.parquet(f"{state_path}/states/batch=*"))
+    return merge_states(spark.read.parquet(f"{state_path}/states"))
 
 
 def dedup_sink(

@@ -2,7 +2,9 @@
 """Local stand-in for the driver's correctness gate: run every
 queries() entry on Spark and its oracle_sql() on DuckDB over the same
 parquet tables, compare row count + column names + order-insensitive
-values.  Usage: python3 scripts/check_oracles.py [sf_dir] [name...]"""
+values.  Fails before starting Spark unless queries() and oracle_sql()
+name the same entries.
+Usage: python3 scripts/check_oracles.py [sf_dir] [name...]"""
 
 from __future__ import annotations
 
@@ -49,6 +51,15 @@ def main() -> int:
     from datapatterns_spark.session import get_spark
     import __spark_entry__ as entrymod
 
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    no_oracle = sorted(set(qs) - set(oracles))
+    no_query = sorted(set(oracles) - set(qs))
+    if no_oracle or no_query:
+        print(f"FAIL registry: queries without an oracle {no_oracle}; "
+              f"oracles without a query {no_query}")
+        return 1
+
     spark = get_spark(
         master="local[8]",
         shuffle_partitions=8,
@@ -60,8 +71,6 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     failures = 0
     for name, fn in qs.items():
         if only and name not in only:
@@ -73,9 +82,6 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {e}")
             failures += 1
-            continue
-        if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(srows)} rows)")
             continue
         try:
             res = con.execute(oracles[name])

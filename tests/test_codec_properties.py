@@ -90,57 +90,3 @@ def test_resize_box_bounds_property(w, h, nw, nh, data):
         src = px[ch::c]
         lo, hi = min(src), max(src)
         assert all(lo <= v <= hi for v in out[ch::c])
-
-
-@settings(max_examples=15, deadline=None)
-@given(
-    w=st.integers(1, 20),
-    h=st.integers(1, 16),
-    c=st.sampled_from([1, 3]),
-    base=st.integers(0, 255),
-    amp=st.integers(0, 60),
-    data=st.data(),
-)
-def test_jpeg_roundtrip_property(w, h, c, base, amp, data):
-    """Baseline JPEG is lossy but BOUNDED: for smooth content (a base
-    level plus a small random ripple) the decode error stays within
-    the quantization envelope; dimensions and channels always
-    survive — any width/height, including non-multiples of 8."""
-    px = bytes(
-        max(0, min(255, base + data.draw(st.integers(-amp, amp))))
-        for _ in range(w * h * c)
-    )
-    w2, h2, c2, out = cd.jpeg_decode(cd.jpeg_encode(px, w, h, c))
-    assert (w2, h2, c2) == (w, h, c)
-    assert len(out) == len(px)
-    errs = [abs(a - b) for a, b in zip(px, out)]
-    # per-pixel bound scales with ripple amplitude (high-frequency
-    # content quantizes coarser); the mean stays tight
-    assert max(errs) <= 3 * amp + 4
-    assert sum(errs) / len(errs) <= amp + 3
-
-
-@settings(max_examples=10, deadline=None)
-@given(
-    w=st.integers(1, 16),
-    h=st.integers(1, 12),
-    nframes=st.integers(1, 4),
-    frame_ms=st.integers(20, 400),
-    base=st.integers(0, 255),
-    data=st.data(),
-)
-def test_avi_roundtrip_property(w, h, nframes, frame_ms, base, data):
-    """MJPEG-AVI container round-trip: frame count, dimensions and
-    duration survive exactly; each frame decodes within the JPEG
-    envelope of its (near-solid) source."""
-    frames = []
-    for _ in range(nframes):
-        lvl = max(0, min(255, base + data.draw(st.integers(-10, 10))))
-        frames.append(bytes([lvl] * (w * h * 3)))
-    payload = cd.avi_mjpeg_encode(frames, w, h, frame_ms=frame_ms)
-    w2, h2, dur, jpegs = cd.avi_mjpeg_decode(payload)
-    assert (w2, h2, dur, len(jpegs)) == (w, h, frame_ms, nframes)
-    for src, j in zip(frames, jpegs):
-        fw, fh, fc, out = cd.jpeg_decode(j)
-        assert (fw, fh, fc) == (w, h, 3)
-        assert max(abs(a - b) for a, b in zip(src, out)) <= 4

@@ -1,6 +1,6 @@
 """Stdlib codec layer (functions/codecs.py): PNG round-trips, all
-five PNG scanline filters, WAV decode, feature extractors, GIF, JPEG
-and MJPEG AVI round-trips and their error contracts."""
+five PNG scanline filters, WAV decode, feature extractors, GIF
+round-trips and their error contracts."""
 
 from __future__ import annotations
 
@@ -266,126 +266,3 @@ def test_png_truncated_raises_valueerror():
     for cut in (16, 30, len(data) - 3):
         with pytest.raises(ValueError):
             cd.png_decode(data[:cut])
-
-
-# ---------------------------------------------------------------------------
-# round-3: baseline JPEG codec
-# ---------------------------------------------------------------------------
-def test_jpeg_roundtrip_solid_and_gradient():
-    """Baseline JPEG encode->decode: DC-dominated content reproduces
-    near-exactly; smooth gradients stay within the Annex-K-table
-    quantization error envelope."""
-    w, h = 16, 16
-    solid = bytes([120, 200, 40] * (w * h))
-    _, _, c, out = cd.jpeg_decode(cd.jpeg_encode(solid, w, h, 3))
-    assert c == 3
-    assert max(abs(a - b) for a, b in zip(solid, out)) <= 2
-
-    gw, gh = 24, 16
-    grad = bytearray(gw * gh * 3)
-    for y in range(gh):
-        for x in range(gw):
-            o = (y * gw + x) * 3
-            grad[o] = x * 255 // (gw - 1)
-            grad[o + 1] = y * 255 // (gh - 1)
-            grad[o + 2] = 128
-    w2, h2, c2, out2 = cd.jpeg_decode(cd.jpeg_encode(bytes(grad), gw, gh, 3))
-    assert (w2, h2, c2) == (gw, gh, 3)
-    errs = [abs(a - b) for a, b in zip(grad, out2)]
-    assert max(errs) <= 12 and sum(errs) / len(errs) < 4
-
-
-def test_jpeg_odd_dimensions_and_grayscale():
-    """Non-multiple-of-8 dimensions (edge-replicated MCU padding) and
-    single-component grayscale both round-trip."""
-    px = bytes([100] * (13 * 9 * 3))
-    w, h, c, out = cd.jpeg_decode(cd.jpeg_encode(px, 13, 9, 3))
-    assert (w, h, c) == (13, 9, 3)
-    assert max(abs(a - b) for a, b in zip(px, out)) <= 2
-
-    g = bytes((x * 9 + y * 5) % 256 for y in range(16) for x in range(16))
-    w, h, c, out = cd.jpeg_decode(cd.jpeg_encode(g, 16, 16, 1))
-    assert (w, h, c) == (16, 16, 1)
-    errs = [abs(a - b) for a, b in zip(g, out)]
-    assert sum(errs) / len(errs) < 8
-
-
-def test_jpeg_reference_pins():
-    """Checked-in byte/pixel pins: the encoder's output bytes AND the
-    decoder's pixel dump for fixed fixtures must not drift (both are
-    pure functions of the input)."""
-    import hashlib
-
-    px = bytes(((x * 31 + y * 17) % 256) for y in range(8) for x in range(8))
-    data = cd.jpeg_encode(px, 8, 8, 1)
-    assert hashlib.sha256(data).hexdigest() == (
-        "89d79a1682ca6624ff8d78c02bec8802c3eb621a15a11ebf427d41866d24b2ec"
-    )
-    _, _, _, out = cd.jpeg_decode(data)
-    assert hashlib.sha256(bytes(out)).hexdigest() == (
-        "9ec93bfbff4afeb30e774719171bd53f6b72879b6160296b50becf2c3498b6a0"
-    )
-
-    px3 = bytes(
-        ((x * 20 + y * 13 + ch * 40) % 256)
-        for y in range(10)
-        for x in range(12)
-        for ch in range(3)
-    )
-    d3 = cd.jpeg_encode(px3, 12, 10, 3)
-    assert hashlib.sha256(d3).hexdigest() == (
-        "61e9ea1ab1722df0d9a60ff42dcee05ddddbd191b97055b1c9e05ae0eaf189fc"
-    )
-    _, _, _, o3 = cd.jpeg_decode(d3)
-    assert hashlib.sha256(bytes(o3)).hexdigest() == (
-        "724b6336c780a243a95d2acc60f46b0d97a330a0863f9f3ee223f250c7407e8c"
-    )
-
-
-def test_jpeg_error_contracts():
-    """Garbage / truncation / unsupported-variant payloads all raise
-    the decode-error contract."""
-    with pytest.raises(ValueError):
-        cd.jpeg_decode(b"definitely not a jpeg")
-    data = cd.jpeg_encode(bytes([50, 60, 70] * 256), 16, 16, 3)
-    for cut in (6, 40, len(data) // 2):
-        with pytest.raises(ValueError):
-            cd.jpeg_decode(data[:cut])
-    # progressive SOF2 is rejected by name, not misdecoded
-    prog = bytearray(data)
-    sof = prog.find(b"\xff\xc0")
-    prog[sof + 1] = 0xC2
-    with pytest.raises(NotImplementedError):
-        cd.jpeg_decode(bytes(prog))
-    with pytest.raises(NotImplementedError):
-        cd.jpeg_encode(bytes(16), 2, 2, 2)  # 2-channel unsupported
-
-
-def test_avi_mjpeg_roundtrip():
-    """MJPEG-AVI encode -> decode: container metadata survives and
-    every frame's JPEG decodes to the source pixels within the
-    baseline-JPEG error envelope (exact for solid frames)."""
-    w, h = 16, 12
-    raw = [bytes(bytearray([40 + 60 * f] * (w * h * 3))) for f in range(4)]
-    data = cd.avi_mjpeg_encode(raw, w, h, frame_ms=100)
-    w2, h2, dur, jpegs = cd.avi_mjpeg_decode(data)
-    assert (w2, h2, dur, len(jpegs)) == (w, h, 100, 4)
-    for f, j in enumerate(jpegs):
-        fw, fh, fc, px = cd.jpeg_decode(j)
-        assert (fw, fh, fc) == (w, h, 3)
-        assert max(abs(p - (40 + 60 * f)) for p in px) <= 2
-
-
-def test_avi_error_contracts():
-    """Wrong RIFF type / truncation / non-MJPEG codec all raise."""
-    w, h = 8, 8
-    data = cd.avi_mjpeg_encode([bytes(w * h * 3)], w, h)
-    with pytest.raises(ValueError):
-        cd.avi_mjpeg_decode(b"RIFF\x04\x00\x00\x00WAVE")
-    with pytest.raises(ValueError):
-        cd.avi_mjpeg_decode(data[: len(data) // 2])
-    hacked = bytearray(data)
-    p = hacked.find(b"vidsMJPG")
-    hacked[p + 4 : p + 8] = b"H264"
-    with pytest.raises(NotImplementedError):
-        cd.avi_mjpeg_decode(bytes(hacked))

@@ -42,8 +42,6 @@ def test_checks_and_dedup_empty(spark):
 
 def test_round2_ops_empty(spark):
     """Every round-2 operator degrades to zero rows on empty input."""
-    from datapatterns_spark.operators.textanalysis import redact_pii
-
     docs = spark.createDataFrame([], "doc_id long, text string")
     assert D.conversation_dedup(
         spark.createDataFrame([], "conv_id string, turn_idx int, text string")
@@ -51,4 +49,3 @@ def test_round2_ops_empty(spark):
     assert D.incremental_exact_dedup(docs, None).collect() == []
     d, sigs = D.incremental_minhash_dedup(docs, None)
     assert d.collect() == [] and sigs.collect() == []
-    assert redact_pii(docs).collect() == []

@@ -7,6 +7,7 @@ import pytest
 
 from datapatterns_spark import materialize as M
 from datapatterns_spark.operators import dedup as D
+from datapatterns_spark.operators.profile import profile
 
 
 def _jvm_cache_empty(spark):
@@ -36,20 +37,23 @@ def test_env_mode_validated(monkeypatch):
         M.materialize_mode()
 
 
+def _text_profile(corpus):
+    return profile(
+        corpus, field_list=["text"], features=("fill_rate", "patterns")
+    ).collect()
+
+
 def test_persist_mode_equals_default_and_releases(spark, corpus):
-    """minhash_lsh_pairs (three materialize sites) yields identical
-    pairs under persist mode; the persisted frames are visible in the
-    CacheManager until release_all(), after which the session is
-    clean — the documented job-boundary contract."""
-    base = sorted(
-        tuple(r) for r in D.minhash_lsh_pairs(corpus, "text", "doc_id").collect()
-    )
+    """An exact profile with patterns (three materialize sites: the
+    value histogram, the per-attribute base row and the pattern
+    aggregation) yields identical rows under persist mode; the
+    persisted frames are visible in the CacheManager until
+    release_all(), after which the session is clean — the documented
+    job-boundary contract."""
+    base = _text_profile(corpus)
     M.set_materialize_mode("persist")
     try:
-        got = sorted(
-            tuple(r)
-            for r in D.minhash_lsh_pairs(corpus, "text", "doc_id").collect()
-        )
+        got = _text_profile(corpus)
         assert got == base
         assert not _jvm_cache_empty(spark)
         assert M.release_all() >= 3

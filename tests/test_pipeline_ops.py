@@ -1,12 +1,9 @@
-"""Tests for the training-data pipeline operators: dedup families,
-similarity search, text analysis."""
+"""Tests for the dedup operator families (operators/dedup.py)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from datapatterns_spark.operators import dedup as D
-from datapatterns_spark.operators import similarity as S
-from datapatterns_spark.operators import textanalysis as TA
 
 
 @pytest.fixture(scope="module")
@@ -130,283 +127,6 @@ def test_embedding_pairs_brute_vs_lsh(spark):
     assert {(r["id_a"], r["id_b"]) for r in brute} == {(1, 2)}
     lsh = D.embedding_cosine_pairs(df, "embedding", "vec_id", 0.99, method="lsh").collect()
     assert {(r["id_a"], r["id_b"]) for r in lsh} == {(1, 2)}
-
-
-def test_similarity_topk_real_embeddings(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.limit(3)
-    exact = S.brute_force_topk(emb, queries, k=5)
-    rows = exact.collect()
-    assert len(rows) == 15
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r["query_id"], []).append(r["cos"])
-    for q, sims in by_q.items():
-        assert sorted(sims, reverse=True) == sims  # ranked desc
-    # IVF recall vs brute force
-    approx = S.ivf_topk(emb, queries, k=5, n_cells=8, n_probe=4)
-    exact_set = {(r["query_id"], r["neighbor_id"]) for r in rows}
-    approx_set = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
-    recall = len(exact_set & approx_set) / len(exact_set)
-    assert recall >= 0.5  # n_probe=4 of 8 cells
-
-
-def test_ivf_refined_centroids_deterministic_and_balanced(spark):
-    """The Lloyd refinement sweep must (a) be a pure function of
-    (data, seed) — repeated runs plan identical literal centroids, so
-    IVF results are reproducible — and (b) not worsen cell balance vs
-    raw random centroids (hot cells are the scale hazard: a cell
-    holding half the corpus makes every probe that touches it a
-    half-corpus scan)."""
-    from datapatterns_spark.operators.similarity import (
-        _nearest_cells,
-        _random_centroids,
-        _refined_centroids,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    kw = dict(vec_col="embedding", id_col="vec_id", dim=64, n_cells=8, seed=42)
-    c1 = _refined_centroids(emb, sweeps=1, **kw)
-    c2 = _refined_centroids(emb, sweeps=1, **kw)
-    assert c1 == c2  # deterministic
-    raw = _random_centroids(64, 8, 42)
-    assert c1 != raw  # the sweep actually moved the centroids
-
-    def max_cell_share(cents):
-        sizes = (
-            emb.select(
-                _nearest_cells(F.col("embedding"), cents, 1)[0].alias("cell")
-            )
-            .groupBy("cell")
-            .count()
-            .collect()
-        )
-        total = sum(r["count"] for r in sizes)
-        return max(r["count"] for r in sizes) / total
-
-    assert max_cell_share(c1) <= max_cell_share(raw) + 0.02
-
-
-def test_ivf_refined_recall_not_worse(spark):
-    """Refined IVF (library default refine_sweeps=1) must recall at
-    least as much of the brute-force top-k as the unrefined seeded
-    centroids on real testdata embeddings."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.limit(5)
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in S.brute_force_topk(emb, queries, k=5).collect()
-    }
-
-    def recall(sweeps):
-        got = {
-            (r["query_id"], r["neighbor_id"])
-            for r in S.ivf_topk(
-                emb, queries, k=5, n_cells=8, n_probe=4, refine_sweeps=sweeps
-            ).collect()
-        }
-        return len(exact & got) / len(exact)
-
-    r0, r1 = recall(0), recall(1)
-    assert r1 >= r0 - 0.04  # refinement must not cost recall
-    assert r1 >= 0.5
-
-
-def test_repetition_stats_differential(spark):
-    """Gopher repetition measures vs a pure-Python Counter model on
-    planted boilerplate, clean prose, and edge cases."""
-    import re
-    from collections import Counter
-
-    def norm(t):
-        t = re.sub(r"[^\w\s]", " ", t.lower())
-        return re.sub(r"\s+", " ", t).strip()
-
-    def model(t):
-        lines = [l for l in (t or "").split("\n") if l.strip()]
-        if lines:
-            dlf = (len(lines) - len(set(lines))) / len(lines)
-            lc = Counter(lines)
-            total = sum(len(l) for l in lines)
-            single = sum(len(l) for l, c in lc.items() if c == 1)
-            dlcf = (total - single) / total if total else 0.0
-        else:
-            dlf = dlcf = 0.0
-        nt = norm(t or "")
-        toks = nt.split(" ") if nt else []
-        grams = [" ".join(toks[i:i + 2]) for i in range(len(toks) - 1)]
-        if grams and nt:
-            gc = Counter(grams)
-            cnt, g = max((c, g) for g, c in gc.items())
-            tnf = cnt * len(g) / len(nt)
-        else:
-            tnf = 0.0
-        return (round(dlf, 6), round(dlcf, 6), round(tnf, 6))
-
-    rows = [
-        (1, "buy now\nbuy now\nbuy now\nunique line"),
-        (2, "clean prose line one\nclean prose line two\nfinal thought"),
-        (3, "spam spam spam spam spam"),
-        (4, ""),
-        (5, None),
-        (6, "a\n\n a \nb\nb"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: (r["dup_line_frac"], r["dup_line_char_frac"],
-                         r["top_ngram_char_frac"])
-           for r in TA.repetition_stats(df).collect()}
-    for i, t in rows:
-        want = model(t)
-        assert all(abs(a - b) < 1e-6 for a, b in zip(got[i], want)), (
-            f"doc {i}: got {got[i]} want {want}"
-        )
-    # the boilerplate doc is flagged, the clean one is not
-    assert got[1][0] >= 0.5 and got[2][0] == 0.0
-    assert got[3][2] > 0.5
-    # map-only plan: no shuffle, no Python
-    plan = (
-        TA.repetition_stats(df)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_contamination_check(spark):
-    """Corpus docs sharing an n-gram with the eval set are flagged
-    with the distinct shared-gram count; clean docs are absent; the
-    corpus is never shuffled (broadcast join + match-only agg)."""
-    eval_text = ("the quick brown fox jumps over the lazy dog near the "
-                 "river bank at dawn")
-    corpus = spark.createDataFrame(
-        [
-            (1, "intro words then " + eval_text + " and a conclusion"),
-            (2, "totally unrelated content about trains and stations"),
-            (3, eval_text),  # verbatim copy
-        ],
-        "doc_id long, text string",
-    )
-    ev = spark.createDataFrame(
-        [(100, eval_text)], "eval_id long, text string"
-    )
-    out = {(r["doc_id"], r["eval_id"]): r["shared_grams"]
-           for r in TA.contamination_check(corpus, ev, n=5).collect()}
-    assert (2, 100) not in out
-    assert out[(3, 100)] == 15 - 5 + 1  # all 11 distinct 5-grams
-    assert out[(1, 100)] >= 11  # contains the eval text wholly
-    plan = (
-        TA.contamination_check(corpus, ev, n=5)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoop" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_redact_pii(spark):
-    rows = [
-        (1, "mail me at bob.smith+x@example.co.uk or call 555-123-4567"),
-        (2, "ssn 123-45-6789 from host 10.0.255.3"),
-        (3, "nothing sensitive here"),
-        (4, None),
-        (5, "two mails: a@b.io c@d.org"),
-    ]
-    df = spark.createDataFrame(rows, "id long, text string")
-    out = {r["id"]: r for r in TA.redact_pii(df).collect()}
-    assert out[1]["n_email"] == 1 and out[1]["n_phone"] == 1
-    assert out[1]["redacted"] == "mail me at [EMAIL] or call [PHONE]"
-    assert out[2]["n_ssn"] == 1 and out[2]["n_ipv4"] == 1
-    assert out[2]["redacted"] == "ssn [SSN] from host [IPV4]"
-    assert out[3]["pii_total"] == 0 and out[3]["redacted"] == rows[2][1]
-    assert out[4]["pii_total"] == 0 and out[4]["redacted"] == ""
-    assert out[5]["n_email"] == 2 and out[5]["pii_total"] == 2
-    assert out[5]["redacted"] == "two mails: [EMAIL] [EMAIL]"
-    # map-only: no shuffle, no Python in the plan
-    plan = (
-        TA.redact_pii(df)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_text_analysis(spark, docs):
-    out = {r["doc_id"]: r for r in TA.analyze_documents(docs).collect()}
-    assert out[1]["ws_tokens"] == 9
-    assert out[1]["bpe_tokens"] == 9
-    assert out[3]["bpe_tokens"] > out[3]["ws_tokens"]  # '!!' counted
-    assert out[1]["lang_guess"] == "en"
-    assert out[6]["lang_guess"] == "de"
-    assert out[1]["fingerprint"] == out[2]["fingerprint"] == out[3]["fingerprint"]
-    assert 0.0 <= out[1]["quality"] <= 1.0
-    assert out[1]["quality"] > 0.5
-
-
-def test_winnow_fingerprints(spark):
-    """Differential vs a pure-Python winnowing oracle + the winnowing
-    guarantee: docs sharing a substring of length >= k+w-1 share a
-    fingerprint."""
-    import re
-    import string
-
-    M, B, K, W = (1 << 31) - 1, 257, 5, 4
-
-    def norm(t):
-        t = (t or "").lower()
-        t = re.sub("[" + re.escape(string.punctuation) + "]", " ", t)
-        return re.sub(r"\s+", " ", t).strip()
-
-    def py_winnow(t):
-        s = norm(t)
-        if len(s) < K:
-            return []
-        hs = []
-        for i in range(len(s) - K + 1):
-            a = 0
-            for ch in s[i : i + K]:
-                a = (a * B + ord(ch)) % M
-            hs.append(a)
-        if len(hs) < W:
-            return sorted({min(hs)})
-        return sorted({min(hs[p : p + W]) for p in range(len(hs) - W + 1)})
-
-    texts = [
-        "Hello, World! Hello world again and again.",
-        "très bïen — the query result token stream",
-        "",
-        "abc",
-        "abcde",
-        "abcdef g",
-        "a shared needle substring xyz here",
-        "elsewhere a shared needle substring xyz too",
-        "ZZZZZZZZZZZZ",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    got: dict[int, set] = {i: set() for i in range(len(texts))}
-    for r in TA.winnow_table(df).collect():
-        got[r["doc_id"]].add(r["fp"])
-    for i, t in enumerate(texts):
-        assert got[i] == set(py_winnow(t)), f"doc {i}: {t!r}"
-    # guarantee: 6 and 7 share "shared needle substring xyz" (>= k+w-1)
-    assert got[6] & got[7]
-
-
-def test_winnow_near_dups(spark, docs):
-    """Exact/near dups share >= 80% of the smaller set's fingerprints;
-    unrelated docs never pair."""
-    pairs = {
-        (r["id_a"], r["id_b"]): r["score"]
-        for r in TA.winnow_near_dups(
-            docs, "text", "doc_id", min_shared_frac=0.8, max_fp_df=100
-        ).collect()
-    }
-    # 1=2 exact dup, 3 normalizes to the same text -> full containment
-    assert pairs[(1, 2)] == 1.0
-    assert pairs[(1, 3)] == 1.0
-    assert pairs[(2, 3)] == 1.0
-    # 4 is a near dup of 1/2/3 ("sleepy" vs "lazy"): shares most fps
-    assert any(4 in p for p in pairs)
-    # 5 (different content) and 6 (German) pair with nobody
-    assert all(5 not in p and 6 not in p for p in pairs)
 
 
 def _py_components(edges):
@@ -645,15 +365,6 @@ def test_connected_components_self_loops_only(spark):
     assert got == {5: 5, 7: 7}
 
 
-def test_ivf_topk_empty_query_set(spark):
-    """An empty (filtered-out) query batch is a valid no-op, not a
-    dim-probe crash."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    out = S.ivf_topk(emb, emb.limit(0), k=5)
-    assert out.collect() == []
-    assert out.columns == ["query_id", "neighbor_id", "cos", "rank"]
-
-
 def test_connected_components_signature_overflow(spark):
     """Regression for the round-1 red row: the convergence signature
     summed raw ``xxhash64(u, v)`` values, which overflows an int64
@@ -810,144 +521,6 @@ def test_ngram_jaccard_default_cap_drops_ultra_common_shingle(spark):
         small, "text", "doc_id", n=3, threshold=0.3, max_shingle_df=None
     )
     assert uncapped.count() == kept.count()
-
-
-def test_ivf_broadcast_centroids_match_literal_path(spark, monkeypatch):
-    """Above LITERAL_CENTROID_LIMIT the centroids ride a one-row
-    broadcast frame instead of the Catalyst tree; results must be
-    IDENTICAL to the literal formulation (same argmin ordering)."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id").isin([1, 2, 3]))
-    lit = S.ivf_topk(emb, qs, k=5, n_cells=16, n_probe=8, dim=64, refine_sweeps=0)
-    a = sorted(map(tuple, lit.collect()))
-    monkeypatch.setattr(S, "LITERAL_CENTROID_LIMIT", 1)
-    bc = S.ivf_topk(emb, qs, k=5, n_cells=16, n_probe=8, dim=64, refine_sweeps=0)
-    b = sorted(map(tuple, bc.collect()))
-    assert a == b and len(a) == 15
-
-
-def test_ivf_large_cell_count_plans_small(spark):
-    """n_cells=1024 x dim=256 (~262k centroid doubles) must NOT inline
-    literals into the plan — the analyzed plan string stays bounded
-    and the query executes.  (The literal formulation at this size
-    would put ~3M tokens in the tree.)"""
-    vec = F.transform(
-        F.sequence(F.lit(1), F.lit(256)),
-        lambda i: (F.pmod(F.xxhash64(F.col("id"), i), F.lit(1000)) / 1000.0).cast(
-            "double"
-        ),
-    )
-    corpus = spark.range(60).select(F.col("id").alias("vec_id"), vec.alias("embedding"))
-    qs = corpus.filter("vec_id < 2")
-    out = S.ivf_topk(
-        corpus, qs, k=3, n_cells=1024, n_probe=8, dim=256, refine_sweeps=0
-    )
-    plan = out._jdf.queryExecution().analyzed().toString()
-    assert len(plan) < 100_000, f"analyzed plan unexpectedly large: {len(plan)}"
-    rows = out.collect()
-    assert all(r["rank"] >= 1 for r in rows)
-
-
-def test_ivf_empty_query_schema_matches_nonempty(spark):
-    """The empty-query early return must have the SAME schema as the
-    non-empty path — including when corpus and query id columns have
-    different types (neighbor_id takes the CORPUS id type)."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id").isin([1, 2, 3])).withColumn(
-        "qid", F.col("vec_id").cast("string")
-    )
-    nonempty = S.ivf_topk(
-        emb, qs, query_id_col="qid", k=5, n_cells=16, n_probe=8,
-        dim=64, refine_sweeps=0,
-    )
-    empty = S.ivf_topk(emb, qs.limit(0), query_id_col="qid", k=5)
-    assert empty.schema == nonempty.schema
-    assert empty.collect() == []
-
-
-def test_lm_quality_score_differential(spark):
-    """Char-bigram LM scoring matches a pure-Python replay of the same
-    add-alpha arithmetic exactly (integer-quantized terms), including
-    the sub-2-char zero case; natural text outscores keyboard mash
-    under a model trained on natural text."""
-    import math
-    import re as _re
-    from collections import Counter
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "the quiet brown fox rests under the old tree"),
-        (3, "zxqj vwkp qqqq zzzz xjxj wqwq"),
-        (4, "a"),
-        (5, None),
-        (6, "the dog and the fox and the tree are there"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["id"]: r for r in TA.lm_quality_score(df).collect()}
-
-    def norm(t):
-        t = (t or "").lower()
-        t = _re.sub(r"[!-/:-@\[-`{-~]", " ", t)
-        return _re.sub(r"\s+", " ", t).strip()
-
-    grams = {}
-    model = Counter()
-    for did, t in rows:
-        s = norm(t)
-        g = [s[i : i + 2] for i in range(len(s) - 1)] if len(s) >= 2 else []
-        grams[did] = g
-        model.update(g)
-    uni = Counter()
-    for bg, c in model.items():
-        uni[bg[0]] += c
-    v = len({bg[1] for bg in model}) + 1
-    for did, g in grams.items():
-        if not g:
-            assert (out[did]["n_bigrams"], out[did]["lm_score"]) == (0, 0.0)
-            continue
-        s9 = sum(
-            math.floor(
-                math.log((model[bg] + 0.5) / (uni[bg[0]] + 0.5 * v)) * 1e9 + 0.5
-            )
-            for bg in g
-        )
-        assert out[did]["n_bigrams"] == len(g)
-        assert abs(out[did]["lm_score"] - round(s9 / (len(g) * 1e9), 6)) < 1e-9
-    # ranking property: mash scores below every natural-text doc
-    assert out[3]["lm_score"] < min(out[i]["lm_score"] for i in (1, 2, 6))
-
-
-def test_lm_quality_score_external_model(spark):
-    """Scoring a batch under a PRE-TRAINED model (the incremental /
-    cross-corpus shape): unseen bigrams fall back to the alpha floor
-    instead of erroring."""
-    train = spark.createDataFrame(
-        [(1, "aaab aaab aaab")], "doc_id long, text string"
-    )
-    model = TA.char_bigram_counts(train)
-    score = spark.createDataFrame(
-        [(9, "aaab"), (10, "zzzz")], "doc_id long, text string"
-    )
-    out = {r["id"]: r for r in TA.lm_quality_score(score, model=model).collect()}
-    assert out[9]["lm_score"] > out[10]["lm_score"]
-    assert out[10]["n_bigrams"] == 3
-
-
-def test_lm_quality_score_ansi_mode(spark):
-    """The literal-map path must stay null-on-miss under ANSI mode
-    (plain element_at raises MAP_KEY_DOES_NOT_EXIST there; scoring
-    under an external model legitimately misses keys)."""
-    train = spark.createDataFrame(
-        [(1, "aaab aaab aaab")], "doc_id long, text string"
-    )
-    model = TA.char_bigram_counts(train)
-    score = spark.createDataFrame([(10, "zzzz")], "doc_id long, text string")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    try:
-        rows = TA.lm_quality_score(score, model=model).collect()
-        assert rows[0]["n_bigrams"] == 3 and rows[0]["lm_score"] < 0
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", "false")
 
 
 def test_duplicate_token_spans(spark):

