@@ -352,11 +352,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_exact_dedup(spark, sf):
         return D.dedup_exact(_t(spark, sf, "documents"), "text", "doc_id").select("doc_id")
 
-    def q_ngram_jaccard(spark, sf):
-        return D.ngram_jaccard_pairs(
-            _t(spark, sf, "documents"), "text", "doc_id", n=3, threshold=0.7
-        )
-
     def q_profile_correlations(spark, sf):
         p = profile(
             _t(spark, sf, "lineitem"),
@@ -382,16 +377,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("b.value").alias("value"),
             F.col("b.rec_count").alias("rec_count"),
         )
-
-    def q_dedup_embedding(spark, sf):
-        return D.embedding_cosine_pairs(
-            _t(spark, sf, "embeddings"),
-            "embedding",
-            "vec_id",
-            threshold=0.45,
-            method="brute",
-        ).select("id_a", "id_b")  # cos dropped: a 0.45555 re-round tie
-        # flips between engines; pair membership has >5e-4 margin
 
     def q_profile_normalize_compare(spark, sf):
         """NormalizeProfileResults + profile-vs-profile diff in one
@@ -469,14 +454,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return apply_best_types(src)
 
-    def q_minhash_lsh(spark, sf):
-        return D.minhash_lsh_pairs(
-            _t(spark, sf, "documents"), "text", "doc_id", threshold=0.7
-        )
-
-    def q_simhash(spark, sf):
-        return D.simhash_pairs(_t(spark, sf, "documents"), "text", "doc_id", max_hamming=3)
-
     def q_dedup_conversations(spark, sf):
         """Whole-conversation exact dedup over pseudo-conversations
         built from the documents table (conv = doc_id div 20, turn =
@@ -514,65 +491,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
         )
         return incremental_exact_dedup(b2, store)
-
-    def q_dedup_incremental_minhash(spark, sf):
-        """Near-dup incremental dedup vs a MinHash SIGNATURE store:
-        batch 1 (doc_id < 250) signatures are the store; batch 2 (the
-        rest + every 50th batch-1 text re-labeled +10000) classifies
-        by signature-estimated Jaccard over shared LSH band buckets —
-        no rescan of prior text.  Exact oracle: the estimator is pure
-        integer minhash arithmetic."""
-        from datapatterns_spark.operators.dedup import (
-            incremental_minhash_dedup,
-            minhash_signatures,
-        )
-
-        docs = _t(spark, sf, "documents").select("doc_id", "text")
-        b1 = docs.filter("doc_id < 250")
-        store = minhash_signatures(b1, "text", "doc_id")
-        b2 = docs.filter("doc_id >= 250").unionByName(
-            b1.filter("doc_id % 50 = 0").select(
-                (F.col("doc_id") + 10000).alias("doc_id"), "text"
-            )
-        )
-        decisions, _ = incremental_minhash_dedup(b2, store, threshold=0.7)
-        return decisions
-
-    def q_dedup_spans(spark, sf):
-        """Exact-substring duplicate SPANS (Lee et al. 2022 suffix-
-        array dedup, n-gram formulation): maximal token spans covered
-        by 8-grams occurring >= 2 times corpus-wide, merged per doc.
-        Output is pure integer positions, so the oracle replays the
-        pipeline on gram STRINGS (the Spark side joins on xxhash64 of
-        the gram — a collision would only over-merge, ~1e-11 at this
-        scale)."""
-        return D.duplicate_token_spans(
-            _t(spark, sf, "documents"), "text", "doc_id", n=8, min_count=2
-        )
-
-    def q_dedup_spans_winnow(spark, sf):
-        """Round 5: the winnowing volume lever under full oracle
-        audit.  Same span semantics as dedup_spans but with
-        ``winnow_w=4`` — gram positions selected by rightmost-window-
-        minimum over the Spark ``xxhash64`` gram hashes, islands
-        merged with slack w.  The oracle replays the ENTIRE selection
-        in DuckDB: the pure-SQL xxhash64 twin (functions/xxh64_sql.py)
-        reproduces the exact hash values, a composite-key window
-        ``arg_min`` reproduces the rightmost-min rule, and the span
-        assembly runs over selected positions only — so the lever's
-        math (not just its planted-test behavior) is pinned."""
-        return D.duplicate_token_spans(
-            _t(spark, sf, "documents"), "text", "doc_id",
-            n=8, min_count=2, winnow_w=4,
-        )
-
-    def q_dedup_components(spark, sf):
-        """Near-dup pairs -> dedup clusters + canonical keep-list via
-        large-star/small-star connected components."""
-        pairs = D.minhash_lsh_pairs(
-            _t(spark, sf, "documents"), "text", "doc_id", threshold=0.7
-        )
-        return D.dedup_components(pairs.select("id_a", "id_b"))
 
     def q_transcript_suite(spark, sf):
         df = generate_transcripts(spark, n_conversations=2000, seed=42, violation_rate=0.003)
@@ -869,23 +787,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "constraint_alternation": q_constraint_alternation,
         "validate_fixes": q_validate_fixes,
         "dedup_exact": q_exact_dedup,
-        "dedup_ngram_jaccard": q_ngram_jaccard,
         "profile_correlations": q_profile_correlations,
         "profile_cardinality_breakdown": q_profile_breakdown,
-        "dedup_embedding_cosine": q_dedup_embedding,
         "profile_normalize_compare": q_profile_normalize_compare,
-        "dedup_minhash_lsh": q_minhash_lsh,
-        "dedup_simhash": q_simhash,
         "transcript_suite": q_transcript_suite,
         "profile_approx": q_profile_approx,
         "best_record_structure": q_best_record,
         "apply_best_types": q_apply_best_types,
-        "dedup_spans": q_dedup_spans,
-        "dedup_spans_winnow": q_dedup_spans_winnow,
-        "dedup_components": q_dedup_components,
         "dedup_conversations": q_dedup_conversations,
         "dedup_incremental": q_dedup_incremental,
-        "dedup_incremental_minhash": q_dedup_incremental_minhash,
         "profile_incremental": q_profile_incremental,
         "profile_quantile_sketch": q_profile_quantile_sketch,
         "streaming_state": q_streaming_state,
@@ -1174,154 +1084,14 @@ UNION ALL SELECT partition, 'price_positive', vc = 0, vc::BIGINT FROM pr
         benford_critical=CRITICAL_1,
     )
 
-    # ---- xxhash64-exact oracles (simhash / minhash) ----
+    # ---- xxhash64-exact oracles (dedup_incremental / dedup_conversations) ----
     # DuckDB has no xxhash; functions/xxh64_sql.py GENERATES a single-
     # statement SQL pipeline reproducing Spark's XxHash64 bit-for-bit
     # (HUGEINT mod-2^64 arithmetic, lane folds via list_reduce) — so the
     # hash-valued operators get exact oracles instead of rows-only.
     from datapatterns_spark.functions.xxh64_sql import (
-        hash_int_steps,
         xxh64_str_sql,
     )
-    from datapatterns_spark.operators.dedup import MINHASH_P, minhash_coeffs
-
-    norm_text = _NORM_SQL.format(v="text")
-    # ---- dedup_simhash: votes over token hashes -> hex -> banded pairs ----
-    # Spark: h = xxhash64(tok, lit(0)) = hashInt(0, hashBytes(tok, 42));
-    # vote per bit b = 2*((h >> b) & 1) - 1, summed over the token STREAM
-    # (occurrences, not distinct); hex digits uppercase (F.conv parity).
-    tok_rel = (
-        f"(SELECT id, UNNEST(string_split(t, ' ')) AS tok FROM "
-        f"(SELECT doc_id AS id, {norm_text} AS t FROM documents))"
-    )
-    sim_hash_pipe = xxh64_str_sql(
-        tok_rel, ["id"], "tok", signed=False,
-        extra_steps=hash_int_steps(0), cte_prefix="sh", out="h",
-    )
-    sim_votes = ", ".join(
-        f"SUM(CASE WHEN (h // {1 << b}) % 2 = 1 THEN 1 ELSE -1 END) AS v{b}"
-        for b in range(64)
-    )
-    sim_value = " + ".join(
-        f"CASE WHEN v{b} > 0 THEN {1 << b}::HUGEINT ELSE 0::HUGEINT END"
-        for b in range(64)
-    )
-
-    def _hex4(c: str) -> str:
-        # 4 uppercase hex chars -> int (no hex-literal cast in DuckDB 1.0)
-        return (
-            "("
-            + " + ".join(
-                f"(strpos('0123456789abcdef', substr(lower({c}), {i + 1}, 1)) - 1)"
-                f" * {16 ** (3 - i)}"
-                for i in range(4)
-            )
-            + ")"
-        )
-
-    sim_hamming = " + ".join(
-        f"bit_count(xor({_hex4(f'substr(ha, {i * 4 + 1}, 4)')},"
-        f" {_hex4(f'substr(hb, {i * 4 + 1}, 4)')}))"
-        for i in range(4)
-    )
-    simhash_sql = f"""
-WITH hv AS MATERIALIZED (SELECT id, {sim_votes} FROM ({sim_hash_pipe}) GROUP BY id),
-hx AS MATERIALIZED (SELECT id, lpad(to_hex(({sim_value})::UBIGINT), 16, '0') AS h FROM hv),
-chunks AS MATERIALIZED (
-  SELECT id, h, band, substr(h, band*4 + 1, 4) AS chunk
-  FROM hx CROSS JOIN (SELECT UNNEST([0, 1, 2, 3]) AS band)),
-cand AS MATERIALIZED (
-  SELECT DISTINCT a.id AS id_a, b.id AS id_b, a.h AS ha, b.h AS hb
-  FROM chunks a JOIN chunks b
-    ON a.band = b.band AND a.chunk = b.chunk AND a.id < b.id)
-SELECT id_a, id_b, CAST({sim_hamming} AS INT) AS hamming
-FROM cand WHERE {sim_hamming} <= 3
-"""
-
-    # ---- dedup_minhash_lsh: signatures -> band keys -> verified pairs ----
-    # Signature path uses NON-distinct shingles (duplicates don't change
-    # a min); verification recomputes DISTINCT shingle sets (Spark
-    # array_intersect/array_union semantics).
-    mh_p = MINHASH_P
-    mh_ab = minhash_coeffs(64)
-    gram_win = (
-        "list_transform(range(1, len(tk) - 1),"
-        " i -> concat_ws(' ', tk[i], tk[i + 1], tk[i + 2]))"
-    )
-    gram_rel = (
-        f"(SELECT id, UNNEST(g) AS gram FROM (SELECT id,"
-        f" CASE WHEN len(tk) >= 3 THEN {gram_win}"
-        f" ELSE [array_to_string(tk, ' ')] END AS g"
-        f" FROM (SELECT doc_id AS id, string_split({norm_text}, ' ') AS tk"
-        f" FROM documents)))"
-    )
-    mh_hash_pipe = xxh64_str_sql(gram_rel, ["id"], "gram", cte_prefix="mh", out="h")
-    mh_mins = ", ".join(
-        f"MIN((x * {a} + {b}) % {mh_p}) AS m{i}" for i, (a, b) in enumerate(mh_ab)
-    )
-    mh_band_structs = ", ".join(
-        f"{{'band': {bnd}, 'key':"
-        f" [m{bnd * 4}, m{bnd * 4 + 1}, m{bnd * 4 + 2}, m{bnd * 4 + 3}]}}"
-        for bnd in range(16)
-    )
-    minhash_sql = f"""
-WITH xs AS MATERIALIZED (SELECT id, ((h % {mh_p}) + {mh_p}) % {mh_p} AS x FROM ({mh_hash_pipe})),
-sig AS MATERIALIZED (SELECT id, {mh_mins} FROM xs GROUP BY id),
-buckets AS MATERIALIZED (
-  SELECT id, bk.band AS band, bk.key AS key
-  FROM (SELECT id, UNNEST([{mh_band_structs}]) AS bk FROM sig)),
-cand AS MATERIALIZED (
-  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-  FROM buckets a JOIN buckets b
-    ON a.band = b.band AND a.key = b.key AND a.id < b.id),
-shc AS MATERIALIZED (
-  SELECT id, CASE WHEN len(tk) >= 3 THEN list_distinct({gram_win})
-         ELSE [array_to_string(tk, ' ')] END AS sh
-  FROM (SELECT doc_id AS id, string_split({norm_text}, ' ') AS tk FROM documents)
-  WHERE id IN (SELECT id_a FROM cand UNION SELECT id_b FROM cand)),
-scored AS (
-  SELECT c.id_a, c.id_b,
-         ROUND(len(list_intersect(a.sh, b.sh)) * 1.0 /
-               (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS jaccard
-  FROM cand c JOIN shc a ON a.id = c.id_a JOIN shc b ON b.id = c.id_b)
-SELECT id_a, id_b, jaccard FROM scored WHERE jaccard >= 0.7
-"""
-
-    # ---- dedup_incremental_minhash (signature-store near-dups) ----
-    _mi_cols = ", ".join(f"m{i}" for i in range(64))
-    _mi_est = " + ".join(
-        f"CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END" for i in range(64)
-    )
-    dedup_incremental_minhash_sql = f"""
-WITH mxs AS MATERIALIZED (SELECT id, ((h % {mh_p}) + {mh_p}) % {mh_p} AS x FROM ({mh_hash_pipe})),
-msig AS MATERIALIZED (SELECT id, {mh_mins} FROM mxs GROUP BY id),
-s2 AS MATERIALIZED (
-  SELECT id, {_mi_cols} FROM msig WHERE id >= 250
-  UNION ALL
-  SELECT id + 10000, {_mi_cols} FROM msig WHERE id < 250 AND id % 50 = 0),
-s1 AS MATERIALIZED (SELECT id, {_mi_cols} FROM msig WHERE id < 250),
-nb AS MATERIALIZED (
-  SELECT id, bk.band AS band, bk.key AS key
-  FROM (SELECT id, UNNEST([{mh_band_structs}]) AS bk FROM s2)),
-sb AS MATERIALIZED (
-  SELECT id, bk.band AS band, bk.key AS key
-  FROM (SELECT id, UNNEST([{mh_band_structs}]) AS bk FROM s1)),
-cs AS (SELECT DISTINCT n.id AS id_a, s.id AS id_b
-       FROM nb n JOIN sb s ON n.band = s.band AND n.key = s.key),
-cb AS (SELECT DISTINCT l.id AS id_a, r.id AS id_b
-       FROM nb l JOIN nb r ON l.band = r.band AND l.key = r.key AND l.id < r.id),
-ds AS (SELECT DISTINCT c.id_a AS id
-       FROM cs c JOIN s2 a ON a.id = c.id_a JOIN s1 b ON b.id = c.id_b
-       WHERE ({_mi_est}) / 64.0 >= 0.7),
-db AS (SELECT DISTINCT c.id_b AS id
-       FROM cb c JOIN s2 a ON a.id = c.id_a JOIN s2 b ON b.id = c.id_b
-       WHERE ({_mi_est}) / 64.0 >= 0.7)
-SELECT i.id,
-       CASE WHEN i.id IN (SELECT id FROM ds) THEN 'dup_of_store'
-            WHEN i.id IN (SELECT id FROM db) THEN 'dup_in_batch'
-            ELSE 'unique' END AS status
-FROM (SELECT DISTINCT id FROM s2) i
-"""
 
     # ---- dedup_incremental: two-batch store classification ----
     _di_hash = xxh64_str_sql(
@@ -1373,112 +1143,6 @@ grp AS (
   FROM fps GROUP BY 1, 2, 3 HAVING COUNT(*) > 1)
 SELECT f.conv, g.canonical, (f.conv = g.canonical) AS keep
 FROM fps f JOIN grp g USING (n_turns, fp_xor, fp_sum)
-"""
-
-
-    # ---- dedup_spans (exact-substring duplicate spans, n=8) ----
-    _ds_norm = _NORM_SQL.format(v="text")
-    dedup_spans_sql = f"""
-WITH dsn AS MATERIALIZED (SELECT doc_id, {_ds_norm} AS s FROM documents),
-dst AS (SELECT doc_id, string_split(s, ' ') AS tk FROM dsn),
-dpos AS MATERIALIZED (
-  SELECT doc_id, CAST(UNNEST(range(1, len(tk) - 6)) AS INT) AS i, tk
-  FROM dst WHERE len(tk) >= 8),
-dgr AS (SELECT doc_id, i, tk[i + 0] || ' ' || tk[i + 1] || ' ' || tk[i + 2] || ' ' || tk[i + 3] || ' ' || tk[i + 4] || ' ' || tk[i + 5] || ' ' || tk[i + 6] || ' ' || tk[i + 7] AS g FROM dpos),
-dhot AS (SELECT g FROM dgr GROUP BY g HAVING COUNT(*) >= 2),
-ddup AS (SELECT doc_id, i, i + 7 AS e FROM dgr WHERE g IN (SELECT g FROM dhot)),
-dmrk AS (
-  SELECT doc_id, i, e,
-         CASE WHEN i > COALESCE(MAX(e) OVER (PARTITION BY doc_id ORDER BY i
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) + 1
-              THEN 1 ELSE 0 END AS nw
-  FROM ddup),
-disl AS (
-  SELECT doc_id, i, e,
-         SUM(nw) OVER (PARTITION BY doc_id ORDER BY i
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl
-  FROM dmrk)
-SELECT doc_id AS id, CAST(MIN(i) AS BIGINT) AS span_start,
-       CAST(MAX(e) AS BIGINT) AS span_end,
-       CAST(MAX(e) - MIN(i) + 1 AS BIGINT) AS span_tokens
-FROM disl GROUP BY doc_id, isl
-"""
-
-    # ---- dedup_spans_winnow: the winnowing lever under full replay ----
-    # Selection depends on the ACTUAL Spark xxhash64 gram hash values
-    # (rightmost minimum per 4-window), so the oracle computes them
-    # with the pure-SQL twin and reproduces the argmin with a
-    # composite-key window arg_min: (h, -i) packed as
-    # h*2^32 - i in HUGEINT — lexicographic because |i| < 2^32 — so
-    # equal hashes pick the RIGHTMOST position, Spark's tie rule.
-    _dw_g = " || ' ' || ".join(f"tk[i + {j}]" for j in range(8))
-    _dw_gram_rel = (
-        f"(SELECT doc_id, i, {_dw_g} AS g"
-        f" FROM (SELECT doc_id, CAST(UNNEST(range(1, len(tk) - 6)) AS INT)"
-        f" AS i, tk FROM (SELECT doc_id, string_split({_ds_norm}, ' ')"
-        f" AS tk FROM documents) WHERE len(tk) >= 8))"
-    )
-    _dw_pipe = xxh64_str_sql(
-        _dw_gram_rel, ["doc_id", "i", "g"], "g", cte_prefix="dw", out="h"
-    )
-    _dw_key = "(h::HUGEINT * 4294967296) - i::HUGEINT"
-    dedup_spans_winnow_sql = f"""
-WITH dwh AS MATERIALIZED (SELECT doc_id, i, g, h FROM ({_dw_pipe})),
-dwm AS (SELECT doc_id, MAX(i) AS m FROM dwh GROUP BY doc_id),
-dwwin AS (
-  SELECT doc_id, i AS p,
-         arg_min(i, {_dw_key}) OVER (PARTITION BY doc_id ORDER BY i
-           ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel
-  FROM dwh),
-dwselpos AS (
-  SELECT DISTINCT w.doc_id, w.sel AS i
-  FROM dwwin w JOIN dwm m ON w.doc_id = m.doc_id
-  WHERE w.p <= m.m - 3
-  UNION
-  SELECT doc_id, arg_min(i, {_dw_key}) AS i
-  FROM dwh WHERE doc_id IN (SELECT doc_id FROM dwm WHERE m < 4)
-  GROUP BY doc_id),
-dwsel AS (
-  SELECT h.doc_id, h.i, h.g
-  FROM dwh h JOIN dwselpos s ON h.doc_id = s.doc_id AND h.i = s.i),
-dwhot AS (SELECT g FROM dwsel GROUP BY g HAVING COUNT(*) >= 2),
-dwdup AS (SELECT doc_id, i, i + 7 AS e FROM dwsel
-          WHERE g IN (SELECT g FROM dwhot)),
-dwmrk AS (
-  SELECT doc_id, i, e,
-         CASE WHEN i > COALESCE(MAX(e) OVER (PARTITION BY doc_id ORDER BY i
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) + 4
-              THEN 1 ELSE 0 END AS nw
-  FROM dwdup),
-dwisl AS (
-  SELECT doc_id, i, e,
-         SUM(nw) OVER (PARTITION BY doc_id ORDER BY i
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl
-  FROM dwmrk)
-SELECT doc_id AS id, CAST(MIN(i) AS BIGINT) AS span_start,
-       CAST(MAX(e) AS BIGINT) AS span_end,
-       CAST(MAX(e) - MIN(i) + 1 AS BIGINT) AS span_tokens
-FROM dwisl GROUP BY doc_id, isl
-"""
-
-    # ---- dedup_components: CC over the minhash pairs ----
-    # Independent algorithm as the oracle: a recursive label-
-    # propagation closure (min reachable id per node) vs Spark's
-    # large-star/small-star — same labels iff both are correct.
-    dedup_components_sql = f"""
-WITH RECURSIVE
-edges0 AS (SELECT id_a, id_b FROM (
-{minhash_sql}
-) mh),
-edges AS (SELECT id_a AS a, id_b AS b FROM edges0
-          UNION SELECT id_b, id_a FROM edges0),
-walk(node, lab) AS (
-  SELECT a, a FROM edges
-  UNION
-  SELECT e.a, w.lab FROM edges e JOIN walk w ON w.node = e.b
-)
-SELECT node, MIN(lab) AS component, (node = MIN(lab)) AS keep
-FROM walk GROUP BY node
 """
 
     # ---- cardinality_histogram (raw values, no trim/filter) ----
@@ -1769,29 +1433,6 @@ FROM part GROUP BY 1
 SELECT CAST(MIN(doc_id) AS BIGINT) AS doc_id FROM documents GROUP BY {norm}
 """
 
-    # ---- n-gram jaccard pairs ----
-    ngram_sql = f"""
-WITH norm AS (SELECT doc_id AS id, {norm} AS t FROM documents),
-toks AS (SELECT id, string_split(t, ' ') AS tk FROM norm),
-grams AS (
-  SELECT id,
-         CASE WHEN len(tk) >= 3
-              THEN list_distinct(list_transform(range(1, len(tk) - 1),
-                   i -> concat_ws(' ', tk[i], tk[i + 1], tk[i + 2])))
-              ELSE [array_to_string(tk, ' ')] END AS g
-  FROM toks),
-sizes AS (SELECT id, len(g) AS sz FROM grams),
-inv AS (SELECT id, UNNEST(g) AS gram FROM grams),
-common AS (
-  SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS common
-  FROM inv a JOIN inv b ON a.gram = b.gram AND a.id < b.id
-  GROUP BY 1, 2)
-SELECT c.id_a, c.id_b,
-       ROUND(c.common * 1.0 / (sa.sz + sb.sz - c.common), 6) AS jaccard
-FROM common c JOIN sizes sa ON c.id_a = sa.id JOIN sizes sb ON c.id_b = sb.id
-WHERE c.common * 1.0 / (sa.sz + sb.sz - c.common) >= 0.7
-"""
-
     # ---- profile_correlations (all numeric pairs, both directions) ----
     pairs = [
         (x, y)
@@ -1886,15 +1527,6 @@ FROM (
 SELECT *, 1 AS digit FROM ({benford_sql})
 UNION ALL
 SELECT *, 2 AS digit FROM ({benford2_sql})
-"""
-
-    # ---- embedding cosine near-dup pairs (brute baseline) ----
-    dedup_embedding_sql = """
-WITH p AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         ROUND(list_cosine_similarity(a.embedding, b.embedding), 6) AS cos6
-  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
-SELECT id_a, id_b FROM p WHERE cos6 >= 0.45
 """
 
     # ---- normalize_profile (integer-stat keys only; exact strings) ----
@@ -2115,24 +1747,16 @@ SELECT 'dedup', 'decisions', 'n_docs',
         "constraint_alternation": constraint_alternation_sql,
         "validate_fixes": validate_fixes_sql,
         "dedup_exact": dedup_exact_sql,
-        "dedup_ngram_jaccard": ngram_sql,
         "profile_correlations": correlations_sql,
         "profile_cardinality_breakdown": breakdown_sql,
-        "dedup_embedding_cosine": dedup_embedding_sql,
         "profile_normalize_compare": profile_normalize_compare_sql,
         "profile_incremental": profile_incremental_sql,
         "profile_quantile_sketch": profile_quantile_sketch_sql,
         "streaming_state": streaming_state_sql,
         "best_record_structure": best_record_sql,
         "apply_best_types": apply_best_types_sql,
-        "dedup_spans": dedup_spans_sql,
-        "dedup_spans_winnow": dedup_spans_winnow_sql,
-        "dedup_components": dedup_components_sql,
         "dedup_conversations": dedup_conversations_sql,
         "dedup_incremental": dedup_incremental_sql,
-        "dedup_incremental_minhash": dedup_incremental_minhash_sql,
-        "dedup_simhash": simhash_sql,
-        "dedup_minhash_lsh": minhash_sql,
         "profile_approx": profile_approx_sql,
         "transcript_suite": transcript_suite_oracle,
         "verdicts_per_partition": verdicts_per_partition_sql,

@@ -50,6 +50,20 @@ SCALE_CONVS = int(os.environ.get("SPARK_GRAFT_SCALE_CONVS", "2000000"))
 # executors.  2/8 stays mostly below the knee; 4/16 is reported
 # alongside in BASELINE.md with the calibration.
 SCALE_PAIR = os.environ.get("SPARK_GRAFT_SCALE_PAIR", "2,8").split(",")
+# Gate entries (``__spark_entry__.queries()``) timed by the suite.
+HEADLINE = [
+    # round-3 renames from the entry consolidation (COVERAGE.md):
+    # profile_fill->profile_fill_lengths (adds the documents length
+    # stats), benford_digit1->benford_digits (adds digit 2)
+    "profile_fill_lengths",
+    "profile_numeric_stats",
+    "profile_patterns",
+    "benford_digits",
+    "validate_rules",
+    "constraint_verdicts",
+    "cardinality_histogram",
+    "dedup_conversations",
+]
 
 
 def _sf_from_dir(d: str) -> float:
@@ -392,25 +406,7 @@ def run_suite(include_flagship: bool = True) -> dict:
     timings["benford_stock_20m"] = round(stock_best, 3)
 
     qs = entrymod.queries()
-    headline = [
-        # round-3 renames from the entry consolidation (COVERAGE.md):
-        # profile_fill->profile_fill_lengths (adds the documents length
-        # stats), benford_digit1->benford_digits (adds digit 2)
-        "profile_fill_lengths",
-        "profile_numeric_stats",
-        "profile_patterns",
-        "benford_digits",
-        "validate_rules",
-        "constraint_verdicts",
-        "cardinality_histogram",
-        "dedup_minhash_lsh",
-        # round-2 additions: the conversation/incremental dedup paths
-        "dedup_conversations",
-        "dedup_incremental_minhash",
-        # round-3 addition: exact-substring spans
-        "dedup_spans",
-    ]
-    for name in headline:
+    for name in HEADLINE:
         # Warm this query's exact plan shapes (codegen/JIT/AQE are
         # process-level, steady-state at deployment scale), then DROP
         # every persisted intermediate the warm run registered: the

@@ -14,8 +14,8 @@ Public API (reference analogues cited in each module):
 * ``operators.constraints``      — uniqueness / referential / monotonic
   / drift (KS, PSI) / Benford-as-check with per-partition verdicts
 * ``operators.manifest``         — checkpointed per-partition resume
-* ``operators.dedup``            — exact / n-gram Jaccard / MinHash-LSH
-  / SimHash / embedding-cosine deduplication
+* ``operators.dedup``            — exact-hash, conversation and
+  incremental-exact deduplication
 * ``operators.incremental``      — mergeable per-partition profile states
 * ``streaming``                  — ``foreachBatch`` validation, profile-
   state and dedup sinks

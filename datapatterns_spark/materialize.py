@@ -68,27 +68,14 @@ def set_materialize_mode(mode: str | None) -> None:
     _mode = mode
 
 
-def materialize(
-    df: DataFrame, eager: bool = True, cut_lineage: bool = False
-) -> DataFrame:
+def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize a reused intermediate under the active mode.
 
     ``eager=False`` defers the materializing job to the first consumer
     — for iterative loops where the next aggregation is the natural
     materializer.  Eager ``persist`` runs a ``count()`` to populate the
-    cache before parallel consumers race past it.
-
-    ``cut_lineage=True`` marks sites where truncating the logical plan
-    is REQUIRED for correctness, not just speed — iterative loops whose
-    plan would otherwise double per round until Catalyst chokes.  Under
-    ``persist`` mode (which keeps lineage by design) such sites fall
-    back to a reliable ``checkpoint`` when a checkpoint dir is set,
-    else to ``localCheckpoint`` — trading the executor-loss guarantee
-    for a loop that terminates, which is the only usable choice."""
+    cache before parallel consumers race past it."""
     mode = materialize_mode()
-    if mode == "persist" and cut_lineage:
-        sc = df.sparkSession.sparkContext
-        mode = "checkpoint" if sc.getCheckpointDir() is not None else "localCheckpoint"
     if mode == "persist":
         out = df.persist()
         _persisted.append(out)

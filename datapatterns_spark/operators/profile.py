@@ -647,6 +647,27 @@ def profile(
     return out.orderBy("sort_value").drop("sort_value", "_local_name", "_kind")
 
 
+def _run_jobs(spark: SparkSession, jobs: dict) -> dict:
+    """Run the named zero-argument ``jobs`` concurrently, one pool
+    thread each (inline when there is at most one), and return their
+    results by name.
+
+    Each task carries the caller's Spark local properties (job group,
+    description), since a pool thread starts with none.  Every task is
+    wrapped by its own ``inheritable_thread_target`` call: one wrapper
+    hands all its tasks ONE copied property set, so the SQL execution
+    id that one task's query writes into it would make a sibling's
+    concurrent query a nested execution of the first."""
+    if len(jobs) <= 1:
+        return {name: fn() for name, fn in jobs.items()}
+    with ThreadPoolExecutor(len(jobs)) as ex:
+        futs = {
+            name: ex.submit(inheritable_thread_target(spark)(fn))
+            for name, fn in jobs.items()
+        }
+        return {name: f.result() for name, f in futs.items()}
+
+
 def _materialize(df: DataFrame, n_attrs: int, enabled: bool = True) -> DataFrame:
     """Eagerly materialize a reused profile intermediate.
 
@@ -1513,16 +1534,7 @@ def _approx_driver_tail(
                 for i, (x, y) in enumerate(corr_pairs)
             ]
         ).collect()[0]
-    res: dict[str, object] = {}
-    if len(jobs) > 1:
-        # each pool task carries the caller's Spark local properties
-        # (job group, description): a pool thread starts with none
-        inherit = inheritable_thread_target(spark)
-        with ThreadPoolExecutor(len(jobs)) as ex:
-            futs = {name: ex.submit(inherit(fn)) for name, fn in jobs.items()}
-            res = {name: f.result() for name, f in futs.items()}
-    else:
-        res = {name: fn() for name, fn in jobs.items()}
+    res = _run_jobs(spark, jobs)
 
     # ---- popular / rare patterns (A8 + anti-join J3) ----
     popular: dict[str, list] = {}
@@ -1945,11 +1957,11 @@ def _profile_flat_approx(
     # parallelism-independent cost in the 4-vs-16-core flagship).
     base_schema = base.schema
     if num_direct is not None:
-        inherit = inheritable_thread_target(df.sparkSession)
-        with ThreadPoolExecutor(2) as _ex:
-            _fb = _ex.submit(inherit(base.collect))
-            _fn = _ex.submit(inherit(lambda: num_direct.collect()[0]))
-            base_rows, _num_row = _fb.result(), _fn.result()
+        got = _run_jobs(
+            df.sparkSession,
+            {"base": base.collect, "num": lambda: num_direct.collect()[0]},
+        )
+        base_rows, _num_row = got["base"], got["num"]
         _stats = (
             "numeric_min",
             "numeric_max",
@@ -2075,16 +2087,13 @@ def _profile_flat_approx(
     # per-row struct+array+explode machinery is 5x slower than two
     # direct aggregations — same lesson as the stat-check counters.)
     mats = {k: f for k, f in (("lp", lp), ("hv", heavy_pat), ("vh", vh)) if f is not None}
-    if len(mats) > 1:
-        with ThreadPoolExecutor(len(mats)) as ex:
-            inherit = inheritable_thread_target(df.sparkSession)
-            futs = {
-                k: ex.submit(inherit(_materialize), f, len(attrs), params.materialize)
-                for k, f in mats.items()
-            }
-            mats = {k: f.result() for k, f in futs.items()}
-    else:
-        mats = {k: _materialize(f, len(attrs), params.materialize) for k, f in mats.items()}
+    mats = _run_jobs(
+        df.sparkSession,
+        {
+            k: (lambda f=f: _materialize(f, len(attrs), params.materialize))
+            for k, f in mats.items()
+        },
+    )
     lp, heavy_pat, vh = mats.get("lp"), mats.get("hv"), mats.get("vh")
     pat_frames = [f for f in (lp, heavy_pat) if f is not None]
     if vh is not None and derive_names:

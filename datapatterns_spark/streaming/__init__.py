@@ -11,8 +11,8 @@ For pipelines that want rolling validation of an append stream, the
 bridge is ``foreachBatch``: run the batch check suite
 (:func:`validation_sink`), fold each micro-batch into mergeable
 profile states (:func:`profile_state_sink`, read back with
-:func:`stream_profile`), or dedup against a persistent store
-(:func:`dedup_sink`, :func:`minhash_dedup_sink`).
+:func:`stream_profile`), or exact-dedup against a persistent
+fingerprint store (:func:`dedup_sink`).
 """
 
 from __future__ import annotations
@@ -167,66 +167,3 @@ def dedup_sink(
 
     return _sink
 
-
-def minhash_dedup_sink(
-    sig_store_path: str,
-    output_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-):
-    """NEAR-dup analogue of :func:`dedup_sink`: incremental MinHash
-    dedup of an append stream against a persistent SIGNATURE store
-    (64 longs/doc — prior batches' text is never rescanned)::
-
-        stream.writeStream.foreachBatch(
-            minhash_dedup_sink("/sigs", "/out")).start()
-
-    Per micro-batch: classify every document as ``unique`` /
-    ``dup_in_batch`` / ``dup_of_store`` by signature-estimated Jaccard
-    over shared LSH band buckets
-    (:func:`~datapatterns_spark.operators.dedup.incremental_minhash_dedup`),
-    write decisions to ``output_path/decisions/batch=N``, and append
-    the SURVIVORS' signatures to the store as
-    ``sig_store_path/batch=N``.
-
-    Replay-idempotent by the same construction as :func:`dedup_sink`:
-    per-batch overwrite writes + a store read that EXCLUDES the
-    current batch's partition."""
-    from ..operators.dedup import incremental_minhash_dedup
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-        from pyspark.sql.utils import AnalysisException
-
-        spark = batch_df.sparkSession
-        try:
-            store = (
-                spark.read.parquet(sig_store_path)
-                .filter(F.col("batch") != batch_id)
-                .drop("batch")
-            )
-            if not store.columns:
-                store = None
-        except AnalysisException:
-            store = None  # first batch: no store yet
-        decisions, new_sigs = incremental_minhash_dedup(
-            batch_df, store, text_col=text_col, id_col=id_col,
-            threshold=threshold,
-        )
-        (
-            decisions.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .parquet(f"{output_path}/decisions/batch={batch_id}")
-        )
-        (
-            new_sigs.join(
-                decisions.filter(F.col("status") == "unique").select("id"),
-                "id",
-                "left_semi",
-            )
-            .write.mode("overwrite")
-            .parquet(f"{sig_store_path}/batch={batch_id}")
-        )
-
-    return _sink

@@ -21,10 +21,10 @@ randomness):
   per-doc candidate-pair counts stay scale-invariant.  (A first cut
   salted every 8th token, leaving cross-replica Jaccard ~0.35 — still
   INSIDE MinHash band-collision range, which handed every doc ~factor
-  artificial near-twin candidates and made the LSH entries measure a
-  denser corpus than sf0.1, superlinearly: dedup_incremental_minhash
-  14.9x at factor 10.  Near-dup density, not just row count, is part
-  of "the same shape at 10x".);
+  artificial near-twin candidates and made the MinHash-LSH entries of
+  the time measure a denser corpus than sf0.1, superlinearly: 14.9x
+  at factor 10.  Near-dup density, not just row count, is part of
+  "the same shape at 10x".);
 * ``embeddings.embedding`` gets a per-replica perturbation on one
   hash-chosen dimension so ANN top-k is not dominated by exact-tie
   duplicate vectors;

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
-"""Volume bench for the incremental/state layer + the spans winnowing
-lever — the operators whose Arrow-batch memory and frame-volume claims
-the sf1.0 table (BASELINE.md "10x volume step") did not yet cover.
+"""Volume bench for the incremental/state layer — the operators whose
+Arrow-batch memory and frame-volume claims the sf1.0 table
+(BASELINE.md "10x volume step") did not yet cover.
 
 Usage: python scripts/state_bench.py <cpus> <sf_dir>
 
@@ -14,10 +14,7 @@ Measures, at <sf_dir> scale:
 * ``state_merge`` — merge_states over the stored rows read back (the
   no-rescan fold, incl. the kll_merge_agg_double quartiles);
 * ``digest_drift`` — KS between two stores built from the orderkey
-  parity halves (stored-state-only drift, no data rescan);
-* ``spans_exact`` / ``spans_winnow8`` — duplicate_token_spans over
-  documents at winnow_w=1 vs 8 with the materialized-frame row counts
-  (the volume lever's measured drop).
+  parity halves (stored-state-only drift, no data rescan).
 
 Prints ONE JSON line.  Same steady-state convention as bench.py: a
 warm pass at sf0.001 compiles the plan shapes outside the timed
@@ -41,7 +38,6 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from datapatterns_spark.operators.dedup import duplicate_token_spans
     from datapatterns_spark.operators.incremental import (
         digest_drift,
         merge_states,
@@ -70,9 +66,6 @@ def main() -> None:
         warm_orders, "o_orderpriority", field_list=attrs, quantile_delta=100.0
     ).write.mode("overwrite").parquet(f"{base}/warm")
     merge_states(spark.read.parquet(f"{base}/warm")).collect()
-    warm_docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    duplicate_token_spans(warm_docs, "text", "doc_id", n=13).count()
-    duplicate_token_spans(warm_docs, "text", "doc_id", n=13, winnow_w=8).count()
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     extras["orders_rows"] = orders.count()
@@ -103,26 +96,6 @@ def main() -> None:
             spark.read.parquet(f"{base}/odd"),
         ).collect(),
     )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    extras["doc_rows"] = docs.count()
-    m_exact: dict = {}
-    m_win: dict = {}
-    extras["spans_exact_count"] = phase(
-        "spans_exact",
-        lambda: duplicate_token_spans(
-            docs, "text", "doc_id", n=13, metrics=m_exact
-        ).count(),
-    )
-    extras["spans_winnow8_count"] = phase(
-        "spans_winnow8",
-        lambda: duplicate_token_spans(
-            docs, "text", "doc_id", n=13, winnow_w=8, metrics=m_win
-        ).count(),
-    )
-    extras["gram_positions"] = m_exact["gram_positions"]
-    extras["frame_rows_exact"] = m_exact["frame_rows"]
-    extras["frame_rows_winnow8"] = m_win["frame_rows"]
 
     shutil.rmtree(base, ignore_errors=True)
     spark.stop()

@@ -37,7 +37,6 @@ def test_checks_and_dedup_empty(spark):
     assert verdicts.collect() == []
     assert violations.collect() == []
     assert D.dedup_exact(_empty(spark), "s", "a").collect() == []
-    assert D.minhash_lsh_pairs(_empty(spark), "s", "a").collect() == []
 
 
 def test_round2_ops_empty(spark):
@@ -47,5 +46,3 @@ def test_round2_ops_empty(spark):
         spark.createDataFrame([], "conv_id string, turn_idx int, text string")
     ).collect() == []
     assert D.incremental_exact_dedup(docs, None).collect() == []
-    d, sigs = D.incremental_minhash_dedup(docs, None)
-    assert d.collect() == [] and sigs.collect() == []

@@ -10,3 +10,10 @@ def test_queries_and_oracles_name_the_same_entries():
     queries, oracles = set(entry.queries()), set(entry.oracle_sql())
     assert sorted(queries - oracles) == []
     assert sorted(oracles - queries) == []
+
+
+def test_bench_headline_names_are_gate_entries():
+    # importing bench.py starts no Spark session
+    import bench
+
+    assert sorted(set(bench.HEADLINE) - set(entry.queries())) == []

@@ -1,12 +1,11 @@
 """The DP_MATERIALIZE deployment switch: operators must produce
-identical results under every mode, persist mode must retain lineage
-(executor-loss recompute) and be releasable at job boundaries, and
-iterative loops must still converge when the mode keeps lineage."""
+identical results under every mode, and persist mode must retain
+lineage (executor-loss recompute) and be releasable at job
+boundaries."""
 
 import pytest
 
 from datapatterns_spark import materialize as M
-from datapatterns_spark.operators import dedup as D
 from datapatterns_spark.operators.profile import profile
 
 
@@ -75,28 +74,6 @@ def test_persist_mode_keeps_lineage(spark, corpus):
         assert "LocalTableScan" in out._jdf.queryExecution().optimizedPlan().toString() or (
             "Project" in out._jdf.queryExecution().optimizedPlan().toString()
         )
-    finally:
-        M.set_materialize_mode(None)
-        M.release_all()
-
-
-def test_persist_mode_iterative_loop_converges(spark):
-    """connected_components' loop marks its per-round cut as
-    cut_lineage-required; under persist mode it falls back to a real
-    lineage cut, so a long chain still converges with a bounded plan
-    (a bare persist doubles the plan per round)."""
-    edges = [(i, i + 1) for i in range(14)]
-    df = spark.createDataFrame(edges, "a long, b long")
-    base = sorted(
-        tuple(r) for r in D.connected_components(df, "a", "b").collect()
-    )
-    M.set_materialize_mode("persist")
-    try:
-        got = sorted(
-            tuple(r) for r in D.connected_components(df, "a", "b").collect()
-        )
-        assert got == base
-        assert {c for _, c in got} == {0}
     finally:
         M.set_materialize_mode(None)
         M.release_all()

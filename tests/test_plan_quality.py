@@ -26,14 +26,9 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def _executed_plans(spark, action) -> list[str]:
-    """The formatted physical plans of every SQL execution ``action``
-    runs, read from Spark's SQL status store (final AQE plans).
-
-    An AQE metric update that reaches the store after its execution
-    ended (a nested broadcast finishing late) replaces the finished
-    entry with a fresh one that has no plan; such an entry is left out,
-    since there is no plan left to read."""
+def _new_executions(spark, action) -> list:
+    """Spark's SQL status-store entries (``SQLExecutionUIData``) of
+    every SQL execution ``action`` runs."""
     sc = spark.sparkContext._jsc.sc()
     store = spark._jsparkSession.sharedState().statusStore()
     sc.listenerBus().waitUntilEmpty()
@@ -44,12 +39,24 @@ def _executed_plans(spark, action) -> list[str]:
     action()
     sc.listenerBus().waitUntilEmpty()
     after = store.executionsList()
-    plans = (
-        e.physicalPlanDescription()
+    return [
+        e
         for e in (after.apply(i) for i in range(after.size()))
         if e.executionId() > last
-    )
-    return [p for p in plans if p is not None]
+    ]
+
+
+def _executed_plans(spark, action) -> list[str]:
+    """The formatted physical plans of every SQL execution ``action``
+    runs, read from Spark's SQL status store (final AQE plans).
+
+    Every entry must hold a plan.  An AQE metric update that reaches
+    the store after its execution ended (posted under a wrong execution
+    id by a query that ran nested under it) replaces the finished entry
+    with a fresh one that has none."""
+    plans = [e.physicalPlanDescription() for e in _new_executions(spark, action)]
+    assert None not in plans, "a status-store entry lost its plan"
+    return plans
 
 
 def test_profile_prunes_scan_columns(spark):
@@ -176,6 +183,22 @@ def test_profile_assembly_never_rescans_source(spark, monkeypatch):
     assert "ExistingRDD" in plan or "InMemoryTableScan" in plan
 
 
+def test_approx_profile_executions_are_not_nested(spark):
+    """The approx profile runs its independent passes from pool
+    threads.  Each pass must be its own root SQL execution: a pass that
+    starts under a sibling's execution id is shown nested under it, and
+    the sibling's late metric updates land on the wrong execution."""
+    df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    execs = _new_executions(spark, lambda: profile(df, mode="approx").collect())
+    assert execs
+    nested = [
+        (e.executionId(), e.rootExecutionId())
+        for e in execs
+        if e.rootExecutionId() != e.executionId()
+    ]
+    assert nested == []
+
+
 def test_approx_profile_pass1_buffer_stays_narrow(spark):
     """Pass 1 of the approx profile counts distinct values with
     DataSketches HLL, whose state is one binary buffer column.  Spark's
@@ -270,35 +293,3 @@ def test_digest_pass_slim_shuffle(spark):
     for p in (plan, _plan(merge_states(st)), _plan(digest_drift(st, st))):
         for op in python_ops:
             assert op not in p, op
-
-
-def test_connected_components_round_is_agg_and_join(spark):
-    """One CC round must be groupBy-min + join — no collect_list /
-    collect_set of a neighborhood (a hot node would otherwise become
-    one task-sized list) and no Python eval."""
-    from datapatterns_spark.operators.dedup import connected_components
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "src long, dst long"
-    )
-    out = connected_components(edges, max_iter=3)
-    plan = _plan(out)
-    assert "collect_list" not in plan and "collect_set" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_duplicate_token_spans_single_corpus_scan(spark):
-    """The positioned-gram frame is materialized once and consumed by
-    BOTH the duplicated-gram count and the semi-join: the returned
-    plan must contain no source scan at all (the one corpus scan ran
-    inside the materialize job) and both join sides must read the
-    materialized frame."""
-    from datapatterns_spark.operators.dedup import duplicate_token_spans
-
-    df = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    out = duplicate_token_spans(df, "text", "doc_id", n=8)
-    plan = _plan(out)
-    assert "Scan parquet" not in plan and "FileScan" not in plan
-    assert plan.count("ExistingRDD") >= 2

@@ -163,35 +163,3 @@ def test_dedup_sink_stream(spark, tmp_path):
     assert spark.read.parquet(store_p).select("fp").distinct().count() == 25
     # survivors map 1:1 onto distinct fingerprints
     assert uniques.select("fp").distinct().count() == 25
-
-
-def test_minhash_dedup_sink_stream(spark, tmp_path):
-    """Incremental NEAR-dup dedup over a real append stream: near-
-    copies (one word changed out of 30) arriving in later micro-
-    batches classify against the signature store; one survivor per
-    near-dup group; the store holds signatures for survivors only."""
-    from datapatterns_spark.streaming import minhash_dedup_sink
-
-    rows = []
-    for u in range(20):
-        words = [f"w{u}word{k}" for k in range(30)]
-        rows.append((u * 100, " ".join(words)))
-        for c in (1, 2):
-            rows.append((u * 100 + c, " ".join(words[:-1] + [f"alt{c}"])))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    in_path = str(tmp_path / "mh_in")
-    # doc_id-hashed files scatter each group's copies across batches
-    df.repartition(4, "doc_id").write.mode("overwrite").parquet(in_path)
-    sig_p, out_p = str(tmp_path / "sig_store"), str(tmp_path / "mh_out")
-    _run_stream(
-        spark, in_path, df.schema,
-        minhash_dedup_sink(sig_p, out_p, threshold=0.8),
-        tmp_path, "mhddp",
-    )
-    decisions = spark.read.parquet(f"{out_p}/decisions")
-    assert decisions.count() == 60
-    uniques = decisions.filter("status = 'unique'")
-    assert uniques.count() == 20  # one survivor per near-dup group
-    sigs = spark.read.parquet(sig_p)
-    assert sigs.count() == 20  # survivors only
-    assert sum(c.startswith("m") for c in sigs.columns) == 64

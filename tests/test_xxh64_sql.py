@@ -2,7 +2,7 @@
 ``xxhash64`` (org.apache.spark.sql.catalyst.expressions.XxHash64).
 
 The generator (functions/xxh64_sql.py) exists so hash-valued operators
-(text_fingerprint, MinHash, SimHash) get exact DuckDB oracles; it must
+(the exact-dedup fingerprints) get exact DuckDB oracles; it must
 reproduce Spark bit-for-bit across every XXH64 code path: empty input,
 tail-only (<32 bytes), stripe boundary (32/33), multi-stripe, every
 tail remainder class (8/4/1-byte rounds), and multi-byte UTF-8.
