@@ -111,21 +111,22 @@ def len2size(c: Column) -> Column:
     )
 
 
-def best_type_name(
+def best_type_by_kind(
     *,
-    kind: str,
+    kind: Column,
     given_type: Column,
+    fill_count: Column,
     flags: Column,
     max_len: Column,
     min_len_nonzero: Column,
     is_unicode: Column,
 ) -> Column:
     """Map folded flags + lengths to an ECL-style best type name
-    (Profile.ecl:1002-1023).
-
-    ``kind`` is a per-attribute constant from the schema walk;
-    ``given_type`` (the given type name, read only by the kinds kept
-    as-is) and the rest are Columns.
+    (Profile.ecl:1002-1023) for rows of any kind: one CASE over the
+    fixed set of kinds, keyed on each row's own ``kind`` column, so the
+    expression does not grow with the attribute count.  The
+    numeric-flag ladder is built once and shared by the kinds that
+    read it.  An attribute with no filled value keeps its given type.
     """
     from ..plans.schema_walk import (
         KIND_ARRAY,
@@ -133,12 +134,8 @@ def best_type_name(
         KIND_BOOLEAN,
         KIND_NUMERIC,
         KIND_STRING,
+        KINDS,
     )
-
-    if kind in (KIND_ARRAY, KIND_NUMERIC, KIND_BOOLEAN):
-        # Sets and given-numeric/boolean types are kept as-is
-        # (Profile.ecl:1005-1006).
-        return given_type
 
     # "variable length" rule: emit a sized type only when the max
     # length is under 1000x the min non-zero length (Profile.ecl:1012).
@@ -146,25 +143,33 @@ def best_type_name(
         (max_len > 0) & (max_len < min_len_nonzero * 1000),
         max_len.cast("string"),
     ).otherwise(F.lit(""))
-
-    if kind == KIND_BINARY:
-        return F.concat(F.lit("data"), sized_suffix)
-
     int_size = len2size(max_len).cast("string")
     real_size = F.when(max_len < 8, F.lit("4")).otherwise(F.lit("8"))
-
-    base = (
+    numeric = (
         F.when(flags.bitwiseAND(F.lit(UNSIGNED)) != 0, F.concat(F.lit("unsigned"), int_size))
         .when(flags.bitwiseAND(F.lit(SIGNED)) != 0, F.concat(F.lit("integer"), int_size))
         .when(flags.bitwiseAND(F.lit(FLOAT)) != 0, F.concat(F.lit("real"), real_size))
         .when(flags.bitwiseAND(F.lit(EXP)) != 0, F.lit("real8"))
     )
-    if kind == KIND_STRING:
-        # Spark strings are UTF-8: true non-ASCII content keeps the
-        # utf8 type, pure-ASCII downgrades to string[N]
-        # (Profile.ecl:1020-1021).
-        return base.when(is_unicode, F.lit("utf8")).otherwise(
-            F.concat(F.lit("string"), sized_suffix)
-        )
-    # temporal and anything else profiled via its string form
-    return base.otherwise(F.concat(F.lit("string"), sized_suffix))
+
+    best = None
+    for k in KINDS:
+        if k in (KIND_ARRAY, KIND_NUMERIC, KIND_BOOLEAN):
+            # Sets and given-numeric/boolean types are kept as-is
+            # (Profile.ecl:1005-1006).
+            bt = given_type
+        elif k == KIND_BINARY:
+            bt = F.concat(F.lit("data"), sized_suffix)
+        elif k == KIND_STRING:
+            # Spark strings are UTF-8: true non-ASCII content keeps the
+            # utf8 type, pure-ASCII downgrades to string[N]
+            # (Profile.ecl:1020-1021).
+            bt = numeric.when(is_unicode, F.lit("utf8")).otherwise(
+                F.concat(F.lit("string"), sized_suffix)
+            )
+        else:
+            # temporal and anything else profiled via its string form
+            bt = numeric.otherwise(F.concat(F.lit("string"), sized_suffix))
+        cond = kind == k
+        best = F.when(cond, bt) if best is None else best.when(cond, bt)
+    return F.when(fill_count == 0, given_type).otherwise(best)

@@ -67,7 +67,6 @@ from ..plans.schema_walk import (
     KIND_BOOLEAN,
     KIND_NUMERIC,
     KIND_STRING,
-    KIND_TEMPORAL,
     AttrInfo,
     walk_schema,
 )
@@ -85,8 +84,6 @@ _QUARTILES = (
     ("numeric_median", 0.5),
     ("numeric_upper_quartile", 0.75),
 )
-# every kind walk_schema assigns, for merge_states' best-type ladder
-_KINDS = (KIND_STRING, KIND_NUMERIC, KIND_BOOLEAN, KIND_BINARY, KIND_ARRAY, KIND_TEMPORAL)
 # digest_drift reads each side's CDF off its quantiles at ranks j/G
 _KS_GRID = 200
 
@@ -374,23 +371,17 @@ def merge_states(states: DataFrame) -> DataFrame:
         F.max("num_max").alias("num_max"),
         *sketch_cols,
     )
-    # best-type lattice from the merged folds (same inputs as the main
-    # profile's _attach_best_type): a CASE ladder over the fixed set of
-    # kinds, keyed on each row's own kind column, so no job reads the
-    # states' metadata first
-    best = None
-    for kind in _KINDS:
-        bt = besttype.best_type_name(
-            kind=kind,
-            given_type=F.col("given_attribute_type"),
-            flags=F.coalesce(F.col("type_flags"), F.lit(0)),
-            max_len=F.coalesce(F.col("max_length"), F.lit(0)),
-            min_len_nonzero=F.coalesce(F.col("min_len_nonzero"), F.lit(0)),
-            is_unicode=F.coalesce(F.col("has_unicode"), F.lit(0)) == 1,
-        )
-        cond = F.col("kind") == kind
-        best = F.when(cond, bt) if best is None else best.when(cond, bt)
-    best = F.when(F.col("fill_count") == 0, F.col("given_attribute_type")).otherwise(best)
+    # best-type lattice from the merged folds, keyed on each row's own
+    # kind column, so no job reads the states' metadata first
+    best = besttype.best_type_by_kind(
+        kind=F.col("kind"),
+        given_type=F.col("given_attribute_type"),
+        fill_count=F.col("fill_count"),
+        flags=F.coalesce(F.col("type_flags"), F.lit(0)),
+        max_len=F.coalesce(F.col("max_length"), F.lit(0)),
+        min_len_nonzero=F.coalesce(F.col("min_len_nonzero"), F.lit(0)),
+        is_unicode=F.coalesce(F.col("has_unicode"), F.lit(0)) == 1,
+    )
     n = F.col("num_n")
     mean = F.col("num_sum") / n
     quartile_cols: list = []

@@ -61,7 +61,8 @@ from ..functions.patterns import (
     map_pattern_finished,
 )
 from ..materialize import materialize
-from ..plans.local import lit_df
+from ..trace import phase
+from ..plans.local import lit_df, local_df
 from ..plans.schema_walk import (
     KIND_ARRAY,
     KIND_BINARY,
@@ -228,6 +229,12 @@ def melt(df: DataFrame, attrs: list[AttrInfo]) -> DataFrame:
 # (sign + 38-digit decimal + point headroom) lose nothing.
 _SLIM_VALUE_CAP = 48
 
+# Pass 1 estimates each attribute's pattern cardinality over the values
+# whose hash is 0 mod this (1/16 of the distinct values).  Every pattern
+# has at least one value, so the true pattern count is at most about
+# this factor times the estimate.
+_PAT_SAMPLE_MOD = 16
+
 # Finished-pattern template for temporal renderings: every character
 # of a timestamp/date string form is a digit (-> '9' after the final
 # '0'->'9' fix-up) or a literal separator, so the FINISHED pattern is a
@@ -256,8 +263,12 @@ def _is_fast_temporal(a: AttrInfo) -> bool:
     return a.kind == KIND_TEMPORAL and a.given_type in ("timestamp", "date")
 
 
-def _temporal_bounds(a: AttrInfo) -> tuple:
-    return (_DATE_LO, _DATE_HI) if a.given_type == "date" else (_TS_LO, _TS_HI)
+def _temporal_bounds(a: AttrInfo) -> tuple[Column, Column]:
+    if a.given_type == "date":
+        # py4j renders a date literal with an unpadded year ("1-01-03"),
+        # which java.sql.Date.valueOf rejects; the ISO string casts
+        return F.lit(_DATE_LO.isoformat()).cast("date"), F.lit(_DATE_HI.isoformat()).cast("date")
+    return F.lit(_TS_LO), F.lit(_TS_HI)
 
 
 def _temporal_len_arith(a: AttrInfo) -> Column:
@@ -372,7 +383,7 @@ def melt_slim(
                 proj.append(F.xxhash64(F.coalesce(c, F.lit(False))).alias(f"_h{i}"))
         elif _is_fast_temporal(a):
             lo, hi = _temporal_bounds(a)
-            in_range = c.between(F.lit(lo), F.lit(hi))
+            in_range = c.between(lo, hi)
             if not lean:
                 proj.append(c.alias(f"_c{i}"))
                 proj.append(in_range.alias(f"_r{i}"))
@@ -438,12 +449,12 @@ def melt_slim(
             fil = F.col(f"_f{i}")
             if p.get("float_form"):
                 v = F.col(f"_v{i}")
-                value = F.when(F.pmod(h, F.lit(16)) == 0, v)
+                value = F.when(F.pmod(h, F.lit(_PAT_SAMPLE_MOD)) == 0, v)
                 ln = F.length(v).cast("int")
             else:
                 # string form only on the pattern-cardinality sample
                 # (same predicate as pass-1's `sampled` gate on vhash)
-                value = F.when(F.pmod(h, F.lit(16)) == 0, cn.cast("string"))
+                value = F.when(F.pmod(h, F.lit(_PAT_SAMPLE_MOD)) == 0, cn.cast("string"))
                 ln = F.col(f"_l{i}")
             s = (value, ln, h, null_i, fil)
         elif a.kind == KIND_BOOLEAN:
@@ -597,7 +608,9 @@ def profile(
     reference's ``FinalOutputLayout`` (Profile.ecl:445-496): child
     ArrayType(StructType) columns are exploded and profiled
     independently with dotted names, appended after the top-level
-    attributes (Profile.ecl:1672-1739).
+    attributes (Profile.ecl:1672-1739).  In approx mode the rows are
+    finished, sorted and shaped on the driver, and the returned frame is
+    a LocalRelation: collecting it runs no Spark job.
     """
     if isinstance(field_list, str):
         field_list = [f for f in field_list.replace(" ", "").split(",") if f] or None
@@ -617,9 +630,9 @@ def profile(
     attrs, children = walk_schema(df.schema, params.field_list)
     sampled = _deterministic_sample(df, params.sample_size)
 
-    results = []
+    flats = []  # (frame, attrs, name_prefix, sort_prefix)
     if attrs:
-        results.append(_profile_flat(sampled, attrs, params, "", ""))
+        flats.append((sampled, attrs, "", ""))
     for child in children:
         child_fields = None
         if params.field_list:
@@ -630,17 +643,27 @@ def profile(
         exploded = sampled.select(F.explode(F.col(child.name)).alias("_row")).select("_row.*")
         child_attrs, _ = walk_schema(exploded.schema, child_fields)
         if child_attrs:
-            results.append(
-                _profile_flat(
-                    exploded,
-                    child_attrs,
-                    params,
-                    name_prefix=f"{child.name}.",
-                    sort_prefix=f"{child.ordinal:05d}.",
-                )
+            flats.append(
+                (exploded, child_attrs, f"{child.name}.", f"{child.ordinal:05d}.")
             )
-    if not results:
+    if not flats:
         raise ValueError("no profilable attributes found")
+    if params.mode != "exact":
+        # every row is already on the driver: sort it there, so the
+        # returned frame is a LocalRelation that reads back with no job
+        rows = [
+            r
+            for frame, fattrs, name_prefix, sort_prefix in flats
+            for r in _profile_flat_approx(
+                frame, fattrs, params, name_prefix, sort_prefix
+            )
+        ]
+        rows.sort(key=lambda r: r["sort_value"])
+        return _rows_frame(df.sparkSession, rows, params)
+    results = [
+        _profile_flat(frame, fattrs, params, name_prefix, sort_prefix)
+        for frame, fattrs, name_prefix, sort_prefix in flats
+    ]
     out = results[0]
     for r in results[1:]:
         out = out.unionByName(r)
@@ -650,7 +673,8 @@ def profile(
 def _run_jobs(spark: SparkSession, jobs: dict) -> dict:
     """Run the named zero-argument ``jobs`` concurrently, one pool
     thread each (inline when there is at most one), and return their
-    results by name.
+    results by name.  Each runs in the phase ``profile.<name>``, so
+    every Spark job it submits carries that name.
 
     Each task carries the caller's Spark local properties (job group,
     description), since a pool thread starts with none.  Every task is
@@ -658,11 +682,19 @@ def _run_jobs(spark: SparkSession, jobs: dict) -> dict:
     hands all its tasks ONE copied property set, so the SQL execution
     id that one task's query writes into it would make a sibling's
     concurrent query a nested execution of the first."""
+
+    def named(name, fn):
+        def run():
+            with phase(spark, f"profile.{name}"):
+                return fn()
+
+        return run
+
     if len(jobs) <= 1:
-        return {name: fn() for name, fn in jobs.items()}
+        return {name: named(name, fn)() for name, fn in jobs.items()}
     with ThreadPoolExecutor(len(jobs)) as ex:
         futs = {
-            name: ex.submit(inheritable_thread_target(spark)(fn))
+            name: ex.submit(inheritable_thread_target(spark)(named(name, fn)))
             for name, fn in jobs.items()
         }
         return {name: f.result() for name, f in futs.items()}
@@ -671,9 +703,10 @@ def _run_jobs(spark: SparkSession, jobs: dict) -> dict:
 def _materialize(df: DataFrame, n_attrs: int, enabled: bool = True) -> DataFrame:
     """Eagerly materialize a reused profile intermediate.
 
-    Eager — lazy caching would let the final job's parallel branches
-    race past an unpopulated cache and recompute the shared melt +
-    groupBy.  localCheckpoint, NOT persist: a persisted frame sits in
+    Used by exact mode's shared histogram, summary and pattern
+    histogram.  Eager — lazy caching would let the final job's parallel
+    branches race past an unpopulated cache and recompute the shared
+    melt + groupBy.  localCheckpoint, NOT persist: a persisted frame sits in
     the session CacheManager until explicitly unpersisted, so a
     long-running driver profiling one ingest batch after another
     (scripts/run_job.py, the streaming profile sink) would leak one
@@ -711,7 +744,11 @@ def _profile_flat(
     """Profile a flat (scalar-attribute) frame — the analogue of one
     ``_Inner_Profile`` expansion (Profile.ecl:508-1665)."""
     if params.mode != "exact":
-        return _profile_flat_approx(df, attrs, params, name_prefix, sort_prefix)
+        return _rows_frame(
+            df.sparkSession,
+            _profile_flat_approx(df, attrs, params, name_prefix, sort_prefix),
+            params,
+        )
     plen = params.pattern_len
     exact = True
     meta = _attr_meta_df(df, attrs, sort_prefix, name_prefix)
@@ -839,7 +876,7 @@ def _profile_flat(
     ).na.fill({k: v for k, v in fill_defaults.items() if k in summary.columns or k in ("rec_count",)})
 
     # --- best type + is_numeric per attribute (Profile.ecl:1002-1023) ---
-    base = _attach_best_type(base, attrs, params, name_prefix)
+    base = _attach_best_type(base, params)
     # base is one tiny row per attribute but costs a full input pass;
     # numeric-attr selection, low-card gating and the final assembly
     # all reuse it (see hist note)
@@ -912,65 +949,45 @@ def _profile_flat(
     return _shape_output(out, params)
 
 
-def _attach_best_type(
-    base: DataFrame, attrs: list[AttrInfo], params: ProfileParams, name_prefix: str
-) -> DataFrame:
+def _attach_best_type(base: DataFrame, params: ProfileParams) -> DataFrame:
     """Best type + is_numeric per attribute (Profile.ecl:1002-1023) and
     fill_rate (Profile.ecl:1488-1489), from the per-attribute fold
-    columns (type_flags, lengths, _uni, fill_count)."""
+    columns (type_flags, lengths, _uni, fill_count) and each row's
+    ``_kind`` and ``given_attribute_type``."""
+    kind = F.col("_kind")
+    given = F.col("given_attribute_type")
     if params.need_flags:
-        best_cases = None
-        numeric_flag_cases = None
-        for a in attrs:
-            name_c = F.col("attribute") == (name_prefix + a.name)
-            bt = besttype.best_type_name(
-                kind=a.kind,
-                given_type=F.lit(a.given_type),
-                flags=F.col("type_flags"),
-                max_len=F.col("max_length"),
-                min_len_nonzero=F.col("min_len_nonzero"),
-                is_unicode=F.col("_uni") == 1,
-            )
-            bt = F.when(F.col("fill_count") == 0, F.col("given_attribute_type")).otherwise(bt)
-            is_num = F.lit(a.kind == KIND_NUMERIC) | (
-                F.lit(a.kind == KIND_STRING)
-                & (
-                    F.col("type_flags").bitwiseAND(
-                        F.lit(
-                            besttype.SIGNED
-                            | besttype.UNSIGNED
-                            | besttype.FLOAT
-                            | besttype.EXP
-                        )
-                    )
-                    != 0
-                )
+        best = besttype.best_type_by_kind(
+            kind=kind,
+            given_type=given,
+            fill_count=F.col("fill_count"),
+            flags=F.col("type_flags"),
+            max_len=F.col("max_length"),
+            min_len_nonzero=F.col("min_len_nonzero"),
+            is_unicode=F.col("_uni") == 1,
+        )
+        numeric_bits = besttype.SIGNED | besttype.UNSIGNED | besttype.FLOAT | besttype.EXP
+        is_num = F.coalesce(
+            (kind == KIND_NUMERIC)
+            | (
+                (kind == KIND_STRING)
+                & (F.col("type_flags").bitwiseAND(F.lit(numeric_bits)) != 0)
                 & (F.col("fill_count") > 0)
-            )
-            best_cases = (
-                F.when(name_c, bt) if best_cases is None else best_cases.when(name_c, bt)
-            )
-            numeric_flag_cases = (
-                F.when(name_c, is_num)
-                if numeric_flag_cases is None
-                else numeric_flag_cases.when(name_c, is_num)
-            )
-        base = base.withColumn("best_attribute_type", best_cases).withColumn(
-            "is_numeric", F.coalesce(numeric_flag_cases, F.lit(False))
+            ),
+            F.lit(False),
         )
     else:
-        base = base.withColumn(
-            "best_attribute_type", F.col("given_attribute_type")
-        ).withColumn(
-            "is_numeric",
-            F.col("_kind") == KIND_NUMERIC,
-        )
-    return base.withColumn(
-        "fill_rate",
-        F.when(
-            F.col("rec_count") > 0,
-            F.round(F.col("fill_count") / F.col("rec_count") * 100, 6),
-        ).otherwise(F.lit(0.0)),
+        best = given
+        is_num = kind == KIND_NUMERIC
+    return base.withColumns(
+        {
+            "best_attribute_type": best,
+            "is_numeric": is_num,
+            "fill_rate": F.when(
+                F.col("rec_count") > 0,
+                F.round(F.col("fill_count") / F.col("rec_count") * 100, 6),
+            ).otherwise(F.lit(0.0)),
+        }
     )
 
 
@@ -1101,67 +1118,91 @@ def _pattern_pieces(
     ]
 
 
+# the typed key slots of _lowcard_value_hist's melt
+_VH_SLOTS = {"l": "BIGINT", "d": "DOUBLE", "s": "STRING"}
+
+
 def _lowcard_value_hist(
     df: DataFrame, attrs: list[AttrInfo], allow_zero: bool
 ) -> DataFrame:
     """``(attribute, value, rec_count)`` histogram for low-cardinality
-    attributes — a union of per-attribute direct aggregations instead
-    of one melted scan.  Each branch is a column-pruned scan feeding a
-    ``groupBy`` on the NATIVE value; numeric/boolean/temporal render
-    their canonical string form AFTER the aggregate (over the bounded
-    distinct rows), so the per-row cast the melt paid is gone, and the
-    union's branches schedule as concurrent stages of one job.  Output
-    is identical to the melted version: value = the attribute's
-    canonical (trimmed) string form, filled rows only
-    (Profile.ecl:830-844 semantics per kind)."""
-    cnt = F.count(F.lit(1)).alias("rec_count")
-    branches = []
-    for a in attrs:
+    attributes, as ONE aggregate keyed by (attribute, value).
+
+    A melt emits one ``(i, l, d, s)`` key per attribute per row into
+    typed slots, so no per-row string rendering is paid where the
+    native value groups the same way: integral numerics, booleans and
+    timestamp/date values (as micros/days) group in the long slot ``l``,
+    float/double in ``d``, and everything else as its canonical string
+    in ``s``.  Unfilled values leave every slot NULL and are dropped
+    before the aggregate.  The canonical string form is rendered AFTER
+    it, over the bounded distinct rows.  Output is identical to a
+    per-attribute ``groupBy`` on the canonical form: filled rows only,
+    Profile.ecl:830-844 semantics per kind."""
+    proj: list[Column] = []
+    keys: list[str] = []
+    renders: list[str] = []
+    for i, a in enumerate(attrs):
         c = F.col(a.name)
-        alit = F.lit(a.name).alias("attribute")
+        k = None
         if a.kind == KIND_NUMERIC:
-            filt = (
-                c.isNotNull()
-                if allow_zero
-                else (c.isNotNull() & (c.cast("double") != 0))
+            filled = (
+                c.isNotNull() if allow_zero else (c.isNotNull() & (c.cast("double") != 0))
             )
-            b = (
-                df.filter(filt)
-                .groupBy(c.alias("_nat"))
-                .agg(cnt)
-                .select(alit, F.col("_nat").cast("string").alias("value"), "rec_count")
-            )
+            if a.given_type in _INT_MAX_DIGITS:
+                render, slot, k = "long", "l", F.when(filled, c.cast("long"))
+            elif a.given_type in ("float", "double"):
+                render, slot, k = a.given_type, "d", F.when(filled, c.cast("double"))
+            else:
+                render, slot, k = "string", "s", F.when(filled, c.cast("string"))
         elif a.kind == KIND_BOOLEAN:
             # canonical form maps NULL -> 'false'; always filled
-            b = (
-                df.groupBy(F.coalesce(c, F.lit(False)).alias("_nat"))
-                .agg(cnt)
-                .select(
-                    alit,
-                    F.when(F.col("_nat"), "true").otherwise("false").alias("value"),
-                    "rec_count",
-                )
-            )
+            render, slot, k = "boolean", "l", F.coalesce(c, F.lit(False)).cast("long")
+        elif _is_fast_temporal(a):
+            native = F.unix_micros(c) if a.given_type == "timestamp" else F.unix_date(c)
+            render, slot, k = a.given_type, "l", native.cast("long")
         elif a.kind == KIND_TEMPORAL:
-            b = (
-                df.filter(c.isNotNull())
-                .groupBy(c.alias("_nat"))
-                .agg(cnt)
-                .select(alit, F.col("_nat").cast("string").alias("value"), "rec_count")
-            )
+            render, slot, k = "string", "s", c.cast("string")
         else:
-            b = (
-                df.select(_value_expr(a).alias("value"), _len_expr(a).alias("_l"))
-                .filter(F.col("_l") > 0)
-                .groupBy("value")
-                .agg(cnt)
-                .select(alit, "value", "rec_count")
-            )
-        branches.append(b)
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out
+            # the value is projected once: the generator gets no
+            # subexpression elimination, and the filled test reads it
+            # again (see _melt_base)
+            render, slot = "string", "s"
+            proj.append(_value_expr(a).alias(f"_v{i}"))
+            ln = f"length(_v{i})"
+            if a.kind in (KIND_ARRAY, KIND_BINARY):
+                proj.append(_len_expr(a).alias(f"_l{i}"))
+                ln = f"_l{i}"
+            key = f"IF({ln} > 0, _v{i}, NULL)"
+        if k is not None:
+            proj.append(k.alias(f"_k{i}"))
+            key = f"_k{i}"
+        renders.append(render)
+        slots = {n: f"CAST(NULL AS {t})" for n, t in _VH_SLOTS.items()}
+        slots[slot] = key
+        fields = ", ".join(f"'{n}', {e}" for n, e in slots.items())
+        keys.append(f"named_struct('i', {i}, {fields})")
+    hist = (
+        df.select(*proj)
+        .select(F.expr(f"inline(array({', '.join(keys)}))"))
+        .filter("l IS NOT NULL OR d IS NOT NULL OR s IS NOT NULL")
+        .groupBy("i", "l", "d", "s")
+        .agg(F.count(F.lit(1)).alias("rec_count"))
+    )
+    render = "array(%s)[i]" % ", ".join(f"'{r}'" for r in renders)
+    value = F.expr(
+        f"""CASE {render}
+        WHEN 'long' THEN CAST(l AS STRING)
+        WHEN 'boolean' THEN IF(l = 1, 'true', 'false')
+        WHEN 'timestamp' THEN CAST(timestamp_micros(l) AS STRING)
+        WHEN 'date' THEN CAST(date_from_unix_date(CAST(l AS INT)) AS STRING)
+        WHEN 'double' THEN CAST(d AS STRING)
+        WHEN 'float' THEN CAST(CAST(d AS FLOAT) AS STRING)
+        ELSE s END"""
+    )
+    names = F.from_json(F.lit(json.dumps([a.name for a in attrs])), "array<string>")
+    return hist.select(
+        names[F.col("i")].alias("attribute"), value.alias("value"), "rec_count"
+    )
 
 
 def _light_pattern_hist(
@@ -1189,7 +1230,7 @@ def _light_pattern_hist(
         alit = F.lit(a.name).alias("attribute")
         if _is_fast_temporal(a):
             lo, hi = _temporal_bounds(a)
-            in_range = c.between(F.lit(lo), F.lit(hi))
+            in_range = c.between(lo, hi)
             branches.append(
                 df.filter(c.isNotNull() & in_range)
                 .groupBy(_temporal_len_arith(a).cast("int").alias("_l"))
@@ -1436,32 +1477,100 @@ def _resolve_pattern_candidates(
     )
 
 
-# Driver-tail guard: estimated low-card value-histogram rows above this
-# keep the cluster-side assembly (collecting the histogram to the driver
-# would dominate).  Every other driver-tail input is bounded by
-# construction (<= 2*max_patterns survivors / <= 4m candidates per attr).
-_DRIVER_TAIL_VH_LIMIT = 200_000
+# Driver-row budget of the light-pattern fetch.  When pass 1's bound
+# on the light attributes' pattern rows exceeds it, the salted window
+# top-k/bottom-k (_dual_topk_survivors) reduces the histogram on the
+# cluster before the fetch.  Every other fetch of the driver finish is
+# bounded by construction: <= approx_mode_card_limit value rows per
+# low-card attribute, <= 4m resolved candidates per heavy attribute.
+_DRIVER_ROW_BUDGET = 500_000
 
-def _embed_rows_json(
-    spark: SparkSession, recs: list[dict], full_struct: T.StructType
-) -> DataFrame:
-    """Embed driver rows (with nested array-of-struct cells) as ONE
-    JVM-side frame via ``from_json`` over a single JSON literal.  A
-    per-cell ``F.lit`` construction costs one py4j round-trip per
-    expression node — measured 2.8s for ~12k nodes at 6 attributes x
-    100 patterns; one JSON string is one round-trip and a fast Jackson
-    parse.  ``allowNonNumericNumbers`` keeps NaN/Infinity doubles
-    (json.dumps emits bare NaN tokens) parseable."""
-    js = json.dumps(recs, ensure_ascii=True)
-    return spark.range(1).select(
-        F.inline(
-            F.from_json(
-                F.lit(js),
-                T.ArrayType(full_struct),
-                {"allowNonNumericNumbers": "true"},
-            )
-        )
+_NUMERIC_STATS = (
+    "numeric_min",
+    "numeric_max",
+    "numeric_mean",
+    "numeric_std_dev",
+    "numeric_lower_quartile",
+    "numeric_median",
+    "numeric_upper_quartile",
+)
+
+
+def _meta_fields(a: AttrInfo, name_prefix: str, sort_prefix: str) -> dict:
+    return {
+        "attribute": name_prefix + a.name,
+        "given_attribute_type": a.given_type,
+        "_kind": a.kind,
+        "sort_value": f"{sort_prefix}{a.ordinal:05d}",
+    }
+
+
+def _attr_meta(attrs: list[AttrInfo], name_prefix: str, sort_prefix: str) -> Column:
+    """Each aggregated row's attribute metadata, looked up by its local
+    ``attribute`` name in a literal map (as ``profile_state`` does): a
+    driver-built frame joined in would cost a broadcast job per call.
+    The map crosses py4j as one JSON literal that Catalyst folds."""
+    meta = {a.name: _meta_fields(a, name_prefix, sort_prefix) for a in attrs}
+    return F.from_json(
+        F.lit(json.dumps(meta)),
+        "map<string,struct<attribute:string,given_attribute_type:string,"
+        "_kind:string,sort_value:string>>",
+    )[F.col("attribute")]
+
+
+def _unfilled_base_row(a: AttrInfo, name_prefix: str, sort_prefix: str) -> dict:
+    """The pass-1 row of an attribute with no input rows (pass 1 then
+    emits none): zero counts, the given type, no numeric stats."""
+    zero = (
+        "rec_count", "fill_count", "min_length", "max_length", "ave_length",
+        "min_len_nonzero", "type_flags", "_uni", "cardinality",
+        "_pat_card_short", "_n_long",
     )
+    return {
+        **_meta_fields(a, name_prefix, sort_prefix),
+        "_local_name": a.name,
+        **dict.fromkeys(zero, 0),
+        "best_attribute_type": a.given_type,
+        "is_numeric": a.kind == KIND_NUMERIC,
+        "fill_rate": 0.0,
+    }
+
+
+def _by_attribute(tbl, keys: list[tuple[str, str]]) -> dict:
+    """Arrow table ``tbl`` sorted by ``attribute`` then ``keys``, split
+    into one slice per attribute.  Arrow compares strings as UTF-8
+    bytes, which is Spark's binary string order, so the tie-breaks are
+    those of the reference's Window/array_sort orderings."""
+    import pyarrow.compute as pc
+
+    tbl = tbl.take(pc.sort_indices(tbl, [("attribute", "ascending"), *keys]))
+    runs = pc.run_end_encode(tbl["attribute"].combine_chunks())
+    out, start = {}, 0
+    for a, end in zip(runs.values.to_pylist(), runs.run_ends.to_pylist()):
+        out[a] = tbl.slice(start, end - start)
+        start = end
+    return out
+
+
+def _popular_rare(pat, k: int) -> tuple[dict, dict]:
+    """Popular/rare patterns (A8 + anti-join J3) per attribute from the
+    ``(attribute, data_pattern, rec_count, example)`` Arrow table
+    ``pat``: the top k by (count desc, pattern asc), and the bottom k by
+    (count asc, pattern asc) that are not popular."""
+    cols = ["data_pattern", "rec_count", "example"]
+    top = _by_attribute(pat, [("rec_count", "descending"), ("data_pattern", "ascending")])
+    bottom = _by_attribute(pat, [("rec_count", "ascending"), ("data_pattern", "ascending")])
+    popular: dict[str, list] = {}
+    rare: dict[str, list] = {}
+    for a, t in top.items():
+        popular[a] = t.slice(0, k).select(cols).to_pylist()
+        seen = {p["data_pattern"] for p in popular[a]}
+        rare[a] = [
+            p
+            for p in bottom[a].slice(0, k).select(cols).to_pylist()
+            if p["data_pattern"] not in seen
+        ]
+    return popular, rare
 
 
 def _approx_driver_tail(
@@ -1469,32 +1578,46 @@ def _approx_driver_tail(
     attrs: list[AttrInfo],
     params: ProfileParams,
     name_prefix: str,
-    base_schema,
-    base_tuples: list[tuple],
-    base_rows: list,
+    base_rows: list[dict],
     lp: DataFrame | None,
     heavy_pat: DataFrame | None,
     vh: DataFrame | None,
     derive_names: set[str],
     plen: int,
-) -> DataFrame:
-    """Driver-side finishing of the approx profile.
+) -> list[dict]:
+    """Driver-side finishing of the approx profile: the profile's rows.
 
-    Every follow-up input is bounded (pattern-survivor top/bottom-k,
-    resolved heavy candidates, low-card value histogram), so each
-    concurrent follow-up job ends in a ``collect`` and the remaining
-    math — popular/rare split with the anti-join (J3), mode ties (J2,
-    Profile.ecl:1163-1175), cardinality breakdown (A9), correlation
-    mirroring (A12) and the final per-attribute assembly joins — runs
-    in plain Python, re-embedded as one JVM-literal frame.  The
-    cluster-side equivalent executed ~10 sequential tiny stages
-    (salted top-k trees, anti-join, max-join, per-piece aggregations,
-    assembly joins): measured 8.0s of parallelism-INDEPENDENT wall for
-    a 6-row result at local[32] on 19M turns — pure scheduler/AQE
-    latency that also capped N-vs-4N scaling efficiency.  String
-    ordering parity: Spark compares strings as binary UTF-8, which
-    equals Python's code-point ordering, so the Python sorts reproduce
-    the Window/array_sort tie-breaks exactly."""
+    Every follow-up input is bounded (see ``_DRIVER_ROW_BUDGET``), so
+    the follow-ups run concurrently, each one a fetch:
+
+    ================  ===========================================  =====
+    phase             fetch                                        jobs
+    ================  ===========================================  =====
+    light_patterns    light-attribute pattern histogram, as Arrow  1 per
+                      (pre-reduced by ``_dual_topk_survivors``     branch
+                      only over the row budget)                    + 1
+    heavy_patterns    resolved heavy-attribute candidates, Arrow   7
+    vh                low-card value histogram, one aggregate      2
+                      keyed by (attribute, value), as Arrow
+    corr              one ``agg`` of every ``corr`` pair           2
+    ================  ===========================================  =====
+
+    (Job counts at 16 shuffle partitions; the heavy path's with one
+    heavy attribute.)
+
+    The rest runs in Python over Arrow tables: popular/rare split with
+    the anti-join (J3), mode ties (J2, Profile.ecl:1163-1175),
+    cardinality breakdown (A9), correlation mirroring (A12) and the
+    per-attribute assembly.  Cluster-side, those steps are about ten
+    sequential tiny stages of pure scheduler latency.  String ordering
+    parity: Spark compares strings as binary UTF-8, which is the order
+    of Arrow's sorts and of Python's code-point comparison, so the
+    tie-breaks match the Window/array_sort ones exactly."""
+    # imported here: incremental.py imports this module, and the
+    # checkpointed path never fetches Arrow
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     spark = df.sparkSession
     k = int(params.max_patterns)
     need_pat_feature = params.has("patterns") and k > 0
@@ -1502,26 +1625,25 @@ def _approx_driver_tail(
 
     vh_plan = vh
     if vh is not None and derive_names and need_pat_feature:
-        # pattern of each DISTINCT value, computed Spark-side over the
-        # bounded histogram rows (exact translate/regex semantics, no
-        # Python reimplementation), gated to the derive attributes
-        vh_plan = vh.withColumn(
-            "_dp",
-            F.when(
-                F.col("attribute").isin(sorted(derive_names)),
-                finish_pattern(_pattern_expr(derive_attrs, plen)),
-            ),
+        # pattern and example of each DISTINCT value, computed
+        # Spark-side over the bounded histogram rows (exact
+        # translate/regex semantics, no Python reimplementation), gated
+        # to the derive attributes
+        derive = F.col("attribute").isin(sorted(derive_names))
+        vh_plan = vh.withColumns(
+            {
+                "_dp": F.when(derive, finish_pattern(_pattern_expr(derive_attrs, plen))),
+                "_ex": F.when(derive, F.substring(F.col("value"), 1, plen)),
+            }
         )
 
-    # ---- materialize the bounded follow-ups concurrently; the
-    # materializing action IS the collect (no persist+count job) ----
     jobs: dict[str, object] = {}
     if lp is not None:
-        jobs["lp"] = lambda: _dual_topk_survivors(lp, k).collect()
+        jobs["light_patterns"] = lp.toArrow
     if heavy_pat is not None:
-        jobs["hv"] = lambda: heavy_pat.collect()
+        jobs["heavy_patterns"] = heavy_pat.toArrow
     if vh_plan is not None:
-        jobs["vh"] = lambda: vh_plan.collect()
+        jobs["vh"] = vh_plan.toArrow
     num_given = [a.name for a in attrs if a.kind == KIND_NUMERIC]
     corr_pairs = []
     if params.has("correlations") and len(num_given) >= 2:
@@ -1540,60 +1662,57 @@ def _approx_driver_tail(
     popular: dict[str, list] = {}
     rare: dict[str, list] = {}
     if need_pat_feature:
-        pat_rows: list[tuple] = [
-            (r["attribute"], r["data_pattern"], int(r["rec_count"]), r["example"])
-            for key in ("lp", "hv")
-            for r in res.get(key, [])
+        pat_schema = pa.schema(
+            [
+                ("attribute", pa.string()),
+                ("data_pattern", pa.string()),
+                ("rec_count", pa.int64()),
+                ("example", pa.string()),
+            ]
+        )
+        pats = [
+            res[key].select(pat_schema.names).cast(pat_schema)
+            for key in ("light_patterns", "heavy_patterns")
+            if key in res
         ]
-        if derive_names and res.get("vh"):
-            derived: dict[tuple, list] = {}
-            for r in res["vh"]:
-                if r["_dp"] is None:
-                    continue
-                ex = r["value"][:plen]
-                cur = derived.get((r["attribute"], r["_dp"]))
-                if cur is None:
-                    derived[(r["attribute"], r["_dp"])] = [int(r["rec_count"]), ex]
-                else:
-                    cur[0] += int(r["rec_count"])
-                    if ex < cur[1]:
-                        cur[1] = ex
-            pat_rows += [(a, p, c, e) for (a, p), (c, e) in derived.items()]
-        by_attr: dict[str, list] = {}
-        for a, p, c, e in pat_rows:
-            by_attr.setdefault(a, []).append((p, c, e))
-        for a, lst in by_attr.items():
-            top = sorted(lst, key=lambda t: (-t[1], t[0]))[:k]
-            pset = {t[0] for t in top}
-            bot = sorted(lst, key=lambda t: (t[1], t[0]))[:k]
-            popular[a] = top
-            rare[a] = [t for t in bot if t[0] not in pset]
+        if derive_names and "vh" in res:
+            # exact pattern histogram of the vh-covered attributes: sum
+            # of value counts per pattern, min example over the values
+            d = res["vh"].filter(pc.is_valid(res["vh"]["_dp"]))
+            d = d.group_by(["attribute", "_dp"]).aggregate(
+                [("rec_count", "sum"), ("_ex", "min")]
+            )
+            pats.append(
+                d.select(["attribute", "_dp", "rec_count_sum", "_ex_min"])
+                .rename_columns(pat_schema.names)
+                .cast(pat_schema)
+            )
+        if pats:
+            popular, rare = _popular_rare(pa.concat_tables(pats), k)
 
     # ---- modes (J2) + cardinality breakdown (A9) from the vh rows ----
     modes: dict[str, list] = {}
     lcb: dict[str, list] = {}
-    if res.get("vh"):
-        vh_by_attr: dict[str, list] = {}
-        for r in res["vh"]:
-            vh_by_attr.setdefault(r["attribute"], []).append(
-                (r["value"], int(r["rec_count"]))
-            )
-        if params.has("modes"):
-            for a, vals in vh_by_attr.items():
-                mx = max(c for _, c in vals)
-                if mx > 1:
-                    tied = sorted(v for v, c in vals if c == mx)[:MAX_MODES]
-                    modes[a] = [(v, mx) for v in tied]
+    if "vh" in res:
+        lcb_names = set()
         if params.has("cardinality_breakdown") and params.lcb_limit > 0:
             lcb_names = {
                 r["_local_name"]
                 for r in base_rows
                 if 0 < r["cardinality"] <= params.lcb_limit
             }
-            for a in lcb_names:
-                vals = vh_by_attr.get(a)
-                if vals:
-                    lcb[a] = sorted(vals, key=lambda t: (-t[1], t[0]))
+        by_count = _by_attribute(
+            res["vh"], [("rec_count", "descending"), ("value", "ascending")]
+        )
+        for a, t in by_count.items():
+            t = t.select(["value", "rec_count"])
+            if params.has("modes"):
+                head = t.slice(0, MAX_MODES).to_pylist()
+                mx = head[0]["rec_count"]
+                if mx > 1:
+                    modes[a] = [h for h in head if h["rec_count"] == mx]
+            if a in lcb_names:
+                lcb[a] = t.to_pylist()
 
     # ---- correlations (A12, mirrored both directions) ----
     corr: dict[str, list] = {}
@@ -1606,57 +1725,26 @@ def _approx_driver_tail(
             by_num[x].append((name_prefix + y, c))
             by_num[y].append((name_prefix + x, c))
         corr = {
-            a: sorted(lst, key=lambda t: (-t[1], t[0])) for a, lst in by_num.items()
+            a: [
+                {"attribute": o, "corr": c}
+                for o, c in sorted(lst, key=lambda t: (-t[1], t[0]))
+            ]
+            for a, lst in by_num.items()
         }
 
-    # ---- final per-attribute assembly as ONE literal frame ----
-    names = [f.name for f in base_schema.fields]
-    arr_fields: list[tuple[str, str]] = []
-    if need_pat_feature:
-        arr_fields += [
-            ("popular_patterns", _PATTERN_STRUCT),
-            ("rare_patterns", _PATTERN_STRUCT),
-        ]
-    if params.has("modes"):
-        arr_fields.append(("modes", _MODE_STRUCT))
-    if params.has("cardinality_breakdown") and params.lcb_limit > 0:
-        arr_fields.append(("cardinality_breakdown", _MODE_STRUCT))
-    if params.has("correlations"):
-        arr_fields.append(("correlations", _CORR_STRUCT))
-    recs = []
-    for t in base_tuples:
-        d = dict(zip(names, t))
-        a = d["_local_name"]
-        if need_pat_feature:
-            d["popular_patterns"] = [
-                {"data_pattern": p, "rec_count": c, "example": e}
-                for p, c, e in popular.get(a, [])
-            ]
-            d["rare_patterns"] = [
-                {"data_pattern": p, "rec_count": c, "example": e}
-                for p, c, e in rare.get(a, [])
-            ]
-        if params.has("modes"):
-            d["modes"] = [
-                {"value": v, "rec_count": c} for v, c in modes.get(a, [])
-            ]
-        if params.has("cardinality_breakdown") and params.lcb_limit > 0:
-            d["cardinality_breakdown"] = [
-                {"value": v, "rec_count": c} for v, c in lcb.get(a, [])
-            ]
-        if params.has("correlations"):
-            d["correlations"] = [
-                {"attribute": o, "corr": c} for o, c in corr.get(a, [])
-            ]
-        recs.append(d)
-    full_struct = T.StructType(
-        list(base_schema.fields)
-        + [
-            T.StructField(n, T.ArrayType(T.StructType.fromDDL(s)))
-            for n, s in arr_fields
-        ]
-    )
-    out = _shape_output(_embed_rows_json(spark, recs, full_struct), params)
+    out = []
+    for r in base_rows:
+        a = r["_local_name"]
+        out.append(
+            {
+                **r,
+                "popular_patterns": popular.get(a),
+                "rare_patterns": rare.get(a),
+                "modes": modes.get(a),
+                "cardinality_breakdown": lcb.get(a),
+                "correlations": corr.get(a),
+            }
+        )
     return out
 
 
@@ -1666,9 +1754,11 @@ def _profile_flat_approx(
     params: ProfileParams,
     name_prefix: str,
     sort_prefix: str,
-) -> DataFrame:
+) -> list[dict]:
     """Sketch-path profile for the 10^12-row tier: ONE full-width pass
-    over the input, then only bounded or column-pruned follow-ups.
+    over the input, then only bounded or column-pruned follow-ups, all
+    finished on the driver.  Returns one row dict per attribute, in the
+    :func:`_output_fields` layout plus ``sort_value``/``_local_name``.
 
     1. **pass 1 (full width, no raw-value shuffle, slim melt)**: the
        :func:`melt_slim` melt carries at most 48 value chars per row —
@@ -1687,18 +1777,38 @@ def _profile_flat_approx(
        (``[0-9+-.]`` at position 1) zeroes everything non-numeric before
        the full ladder runs.  The same pass estimates each attribute's
        *pattern* cardinality (HLL over a 1/16-sampled short-value pattern +
-       count of long values) to drive step 2's plan choice.
+       count of long values) to drive step 2's plan choice.  Attribute
+       metadata comes from a literal map (:func:`_attr_meta`) and the
+       best type from the kind-keyed ladder, so pass 1 is one aggregate
+       and its collect.  Given-numeric attributes' sketch stats come
+       from ``num_direct``, a column-pruned aggregate run concurrently.
     2. **patterns, split by pattern-space size** (driver decision from
        pass-1 estimates, mirroring the reference's own lcbLimit gating
-       idea, Profile.ecl:178-183): attributes under
+       idea, Profile.ecl:178-183): low-card attributes re-aggregate
+       their value histogram (step 3); other attributes under
        ``approx_pattern_limit`` distinct patterns take the exact
-       ``groupBy(attribute, data_pattern)`` histogram (bounded shuffle,
-       column-pruned scan — for transcripts this reads the small
-       columns only); near-unique-pattern attributes (free text) take
-       the partition-local candidate path
+       per-attribute pattern histogram (column-pruned scans — for
+       transcripts this reads the small columns only), fetched whole
+       unless it may exceed ``_DRIVER_ROW_BUDGET`` rows;
+       near-unique-pattern attributes (free text) take
+       the sampled candidate path
        (:func:`_heavy_pattern_candidates`) with NO pattern shuffle.
-    3. low-card value histogram for modes/breakdown (bounded pass) and
-       correlations (one agg of all ``corr`` pairs).
+    3. low-card value histogram for modes/breakdown/derived patterns
+       (one aggregate keyed by (attribute, value)) and correlations
+       (one agg of all ``corr`` pairs).
+
+    Job map of one call on the transcript table (6 columns, about 38k
+    turns, 16 shuffle partitions), each job named by its phase:
+
+    ==========================  ====
+    phase                       jobs
+    ==========================  ====
+    ``profile.pass1``           2
+    ``profile.num_direct``      2
+    ``profile.vh``              2
+    ``profile.light_patterns``  4 (text, and ts in and out of range)
+    caller's ``collect``        0
+    ==========================  ====
 
     Deviations from the always-exact reference (documented):
     DataSketches HLL cardinality (lgK 14, ~0.8% RSE), sketch
@@ -1707,7 +1817,6 @@ def _profile_flat_approx(
     candidate-merged (see :func:`_heavy_pattern_candidates`).
     """
     plen = params.pattern_len
-    meta = _attr_meta_df(df, attrs, sort_prefix, name_prefix)
     as_is_attrs = [
         a.name for a in attrs if a.kind in (KIND_NUMERIC, KIND_BOOLEAN, KIND_ARRAY)
     ]
@@ -1740,7 +1849,7 @@ def _profile_flat_approx(
         # length-template FINISHED pattern — what the follow-up
         # histogram actually groups on, and a tiny space by
         # construction, so they always classify light.
-        sampled = F.pmod(F.col("vhash"), F.lit(16)) == 0
+        sampled = F.pmod(F.col("vhash"), F.lit(_PAT_SAMPLE_MOD)) == 0
         pat_sample = _pattern_expr(attrs, plen)
         if tfast:
             pat_sample = F.when(
@@ -1855,47 +1964,29 @@ def _profile_flat_approx(
             }
         ).drop("_q")
 
-    # ---- assembly base (tiny, one row per attribute) ----
-    base = meta.join(
-        summary.withColumnRenamed("attribute", "_local_name"), "_local_name", "left"
+    # ---- pass-1 rows (one per attribute), metadata from a literal map ----
+    meta = _attr_meta(attrs, name_prefix, sort_prefix)
+    base = summary.select(
+        *[meta[c].alias(c) for c in ("attribute", "given_attribute_type", "_kind", "sort_value")],
+        F.col("attribute").alias("_local_name"),
+        *[c for c in summary.columns if c != "attribute"],
     )
-    fill_defaults = {
-        "rec_count": 0,
-        "fill_count": 0,
-        "min_length": 0,
-        "max_length": 0,
-        "ave_length": 0,
-        "type_flags": 0,
-        "min_len_nonzero": 0,
-        "_uni": 0,
-        "cardinality": 0,
-        "_pat_card_short": 0,
-        "_n_long": 0,
-    }
-    base = base.na.fill({k: v for k, v in fill_defaults.items() if k in base.columns})
-    base = _attach_best_type(base, attrs, params, name_prefix)
+    base = _attach_best_type(base, params)
     if params.need_numeric:
         # sketch stats were computed for every castable value; only
         # attributes judged numeric by the type fold report them
-        for c in (
-            "numeric_min",
-            "numeric_max",
-            "numeric_mean",
-            "numeric_std_dev",
-            "numeric_lower_quartile",
-            "numeric_median",
-            "numeric_upper_quartile",
-        ):
-            base = base.withColumn(c, F.when(F.col("is_numeric"), F.col(c)))
+        base = base.withColumns(
+            {c: F.when(F.col("is_numeric"), F.col(c)) for c in _NUMERIC_STATS}
+        )
     # Given-numeric attributes' sketch stats come from a DIRECT
     # column-pruned aggregation over the native values — identical
     # results to try_cast of the decimal rendering, but the melt's
     # numeric aggregate buffers never see their 38M-per-column updates
     # (measured: min/max/avg/var + percentile buffer updates were ~8s
     # of pass-1 wall at local[16] on 38.5M turns).  One row out; runs
-    # CONCURRENTLY with pass-1's gating collect.
+    # CONCURRENTLY with pass 1.
     num_names: set[str] = set()
-    num_direct = None
+    jobs = {"pass1": base.collect}
     if params.need_numeric:
         num_attrs = [a for a in attrs if a.kind == KIND_NUMERIC]
         num_names = {a.name for a in num_attrs}
@@ -1938,6 +2029,7 @@ def _profile_flat_approx(
                     ),
                 ]
             num_direct = df.agg(*naggs).select(*rounded)
+            jobs["num_direct"] = lambda: num_direct.collect()[0]
 
     # NOTE: launching the heavy path's candidate-sample job here,
     # speculatively concurrent with pass 1 (it depends on pass 1 only
@@ -1949,45 +2041,21 @@ def _profile_flat_approx(
     # contention.  The sample therefore stays in the follow-up phase.
 
     # ONE driver-side collect materializes the whole pass-1 result (one
-    # tiny row per attribute) AND gates the follow-up passes; the rows
-    # are re-embedded as a JVM-literal frame (plans.local) so every
-    # downstream consumer plans against a LocalRelation — no persist /
-    # checkpoint job, no second gating collect, no Catalyst re-walk of
-    # the melt subtree per consumer (each was a measured
-    # parallelism-independent cost in the 4-vs-16-core flagship).
-    base_schema = base.schema
-    if num_direct is not None:
-        got = _run_jobs(
-            df.sparkSession,
-            {"base": base.collect, "num": lambda: num_direct.collect()[0]},
-        )
-        base_rows, _num_row = got["base"], got["num"]
-        _stats = (
-            "numeric_min",
-            "numeric_max",
-            "numeric_mean",
-            "numeric_std_dev",
-            "numeric_lower_quartile",
-            "numeric_median",
-            "numeric_upper_quartile",
-        )
-        _idx = {n: i for i, n in enumerate(base.schema.fieldNames())}
-        patched = []
-        for r in base_rows:  # base_rows stays Rows for the
-            t = list(r)  # classification loop below
-            a = r["_local_name"]
+    # tiny row per attribute) AND gates the follow-up passes.  An
+    # attribute has no row only when the input has none.
+    got = _run_jobs(df.sparkSession, jobs)
+    by_name = {r["_local_name"]: r.asDict() for r in got["pass1"]}
+    num_row = got.get("num_direct")
+    base_rows = []
+    for a in attrs:
+        r = by_name.get(a.name) or _unfilled_base_row(a, name_prefix, sort_prefix)
+        if num_row is not None and a.name in num_names and r["is_numeric"]:
             # the is_numeric gate already nulled non-numeric attrs'
             # stats; given-numeric attrs judged numeric get the direct
             # values (identical by construction to the melt-side path)
-            if a in num_names and r["is_numeric"]:
-                for st in _stats:
-                    t[_idx[st]] = _num_row[a + "||" + st]
-            patched.append(tuple(t))
-        base_tuples = patched
-    else:
-        base_rows = base.collect()
-        base_tuples = [tuple(r) for r in base_rows]
-    base = lit_df(df.sparkSession, base_tuples, base_schema)
+            for st in _NUMERIC_STATS:
+                r[st] = num_row[a.name + "||" + st]
+        base_rows.append(r)
 
     need_vh = params.has("modes") or (
         params.has("cardinality_breakdown") and params.lcb_limit > 0
@@ -2006,10 +2074,7 @@ def _profile_flat_approx(
             ):
                 heavy.add(r["_local_name"])
 
-    pieces = [base]
-
     # ---- popular / rare patterns (split by pattern-space size) ----
-    pat = None
     lp = heavy_pat = None
     derive_names: set[str] = set()
     if need_pat_feature:
@@ -2035,6 +2100,14 @@ def _profile_flat_approx(
             # temporal attrs aggregate on arithmetic rendered-length
             # (no per-row format/pattern work at all)
             lp = _light_pattern_hist(df, light_attrs, params.allow_zero, plen)
+            light_names = {a.name for a in light_attrs}
+            light_bound = sum(
+                _PAT_SAMPLE_MOD * r["_pat_card_short"] + r["_n_long"]
+                for r in base_rows
+                if r["_local_name"] in light_names
+            )
+            if light_bound > _DRIVER_ROW_BUDGET:
+                lp = _dual_topk_survivors(lp, int(params.max_patterns))
         if heavy_attrs:
             heavy_pat = _heavy_pattern_candidates(
                 df, heavy_attrs, params, plen, total_rows
@@ -2042,103 +2115,24 @@ def _profile_flat_approx(
 
     # ---- low-card value histogram: modes + cardinality breakdown ----
     vh = None
-    est_vh_rows = 0
     if need_vh and low_card:
-        # per-attribute direct value histograms (column-pruned scans,
-        # native groupBy, post-agg rendering — no melt, no per-row
-        # casts), unioned into one frame
         lc_set = set(low_card)
-        lc_attrs = [a for a in attrs if a.name in lc_set]
-        vh = _lowcard_value_hist(df, lc_attrs, params.allow_zero)
-        est_vh_rows = sum(
-            int(r["cardinality"]) for r in base_rows if r["_local_name"] in lc_set
+        vh = _lowcard_value_hist(
+            df, [a for a in attrs if a.name in lc_set], params.allow_zero
         )
 
-    # Driver-side finishing (default): every follow-up is bounded, so
-    # collect them and run the top-k/mode/breakdown/assembly math in
-    # Python — deletes ~10 sequential tiny cluster stages of pure
-    # scheduler latency (see _approx_driver_tail).  The cluster tail
-    # below remains for oversized low-card histograms.
-    if est_vh_rows <= _DRIVER_TAIL_VH_LIMIT:
-        return _approx_driver_tail(
-            df,
-            attrs,
-            params,
-            name_prefix,
-            base_schema,
-            base_tuples,
-            base_rows,
-            lp,
-            heavy_pat,
-            vh,
-            derive_names,
-            plen,
-        )
-
-    # Materialize the (at most three) bounded follow-up passes
-    # CONCURRENTLY as separate jobs: the light-attr pattern histogram,
-    # the heavy-attr candidate path (whose sample/top-k/resolution
-    # stages have their own driver barriers), and the low-card value
-    # histogram are independent; overlapping them keeps executors busy
-    # through any one job's driver-side barriers.  All results are tiny
-    # and reused by several consumers (top-k/bottom-k/anti-join; modes
-    # max-join x2 + breakdown), hence the eager materialization either
-    # way.  (A fused tagged-explode single pass was A/B-tested: the
-    # per-row struct+array+explode machinery is 5x slower than two
-    # direct aggregations — same lesson as the stat-check counters.)
-    mats = {k: f for k, f in (("lp", lp), ("hv", heavy_pat), ("vh", vh)) if f is not None}
-    mats = _run_jobs(
-        df.sparkSession,
-        {
-            k: (lambda f=f: _materialize(f, len(attrs), params.materialize))
-            for k, f in mats.items()
-        },
+    return _approx_driver_tail(
+        df,
+        attrs,
+        params,
+        name_prefix,
+        base_rows,
+        lp,
+        heavy_pat,
+        vh,
+        derive_names,
+        plen,
     )
-    lp, heavy_pat, vh = mats.get("lp"), mats.get("hv"), mats.get("vh")
-    pat_frames = [f for f in (lp, heavy_pat) if f is not None]
-    if vh is not None and derive_names:
-        # exact pattern histogram for vh-covered attributes, derived
-        # from the materialized value histogram (tiny; no extra scan)
-        derive_attrs = [a for a in attrs if a.name in derive_names]
-        pat_frames.append(
-            vh.filter(F.col("attribute").isin(sorted(derive_names)))
-            .withColumn(
-                "data_pattern", finish_pattern(_pattern_expr(derive_attrs, plen))
-            )
-            .groupBy("attribute", "data_pattern")
-            .agg(
-                F.sum("rec_count").alias("rec_count"),
-                F.min(F.substring(F.col("value"), 1, plen)).alias("example"),
-            )
-        )
-    if pat_frames:
-        pat = pat_frames[0]
-        for p in pat_frames[1:]:
-            pat = pat.unionByName(p)
-
-    if pat is not None:
-        pieces.extend(_pattern_pieces(pat, params, name_prefix))
-    if vh is not None:
-        if params.has("modes"):
-            pieces.append(_modes_piece(vh, name_prefix))
-        if params.has("cardinality_breakdown") and params.lcb_limit > 0:
-            low_attrs = base.filter(
-                (F.col("cardinality") > 0) & (F.col("cardinality") <= params.lcb_limit)
-            ).select(F.col("_local_name").alias("attribute"))
-            pieces.append(_lcb_piece(vh, low_attrs, name_prefix))
-
-    # ---- correlations ----
-    if params.has("correlations"):
-        num_given = [a.name for a in attrs if a.kind == KIND_NUMERIC]
-        corr_df = _correlations(df, num_given, name_prefix)
-        if corr_df is not None:
-            pieces.append(corr_df)
-
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.join(p, "attribute", "left")
-    out = _shape_output(out, params)
-    return out
 
 
 def _exact_numeric_stats(hnum: DataFrame) -> DataFrame:
@@ -2260,83 +2254,90 @@ def _correlations(df: DataFrame, numeric_names: list[str], name_prefix: str):
     return spark.range(1).select(F.inline(F.array(*attr_structs)))
 
 
-def _shape_output(out: DataFrame, params: ProfileParams) -> DataFrame:
-    """Project to the reference's feature-conditional FinalOutputLayout
-    column set and order (Profile.ecl:445-496)."""
+def _output_fields(params: ProfileParams) -> list[tuple[str, str, object]]:
+    """The reference's feature-conditional FinalOutputLayout column set
+    and order (Profile.ecl:445-496): ``(name, type, fill)`` per column.
+    A column with a ``fill`` reads it where its piece has no value, and
+    is never NULL."""
     has = params.has
-    empty_mode = _empty_array(_MODE_STRUCT)
-    empty_pat = _empty_array(_PATTERN_STRUCT)
-    cols: list[Column] = [
-        F.col("attribute"),
-        F.col("given_attribute_type"),
+    mode_arr = f"array<{_MODE_STRUCT}>"
+    fields: list[tuple[str, str, object]] = [
+        ("attribute", "string", None),
+        ("given_attribute_type", "string", None),
     ]
     if has("best_ecl_types"):
-        cols.append(F.col("best_attribute_type"))
-    cols.append(F.col("rec_count").cast("long").alias("rec_count"))
+        fields.append(("best_attribute_type", "string", None))
+    fields.append(("rec_count", "bigint", None))
     if has("fill_rate"):
-        cols += [
-            F.col("fill_count").cast("long").alias("fill_count"),
-            F.col("fill_rate").cast("double").alias("fill_rate"),
-        ]
+        fields += [("fill_count", "bigint", None), ("fill_rate", "double", None)]
     if has("cardinality") or has("cardinality_breakdown"):
-        cols.append(F.col("cardinality").cast("long").alias("cardinality"))
+        fields.append(("cardinality", "bigint", None))
     if has("cardinality_breakdown") and params.lcb_limit > 0:
-        c = (
-            F.coalesce(F.col("cardinality_breakdown"), empty_mode)
-            if "cardinality_breakdown" in out.columns
-            else empty_mode
-        )
-        cols.append(c.alias("cardinality_breakdown"))
+        fields.append(("cardinality_breakdown", mode_arr, []))
     if has("modes"):
-        c = F.coalesce(F.col("modes"), empty_mode) if "modes" in out.columns else empty_mode
-        cols.append(c.alias("modes"))
+        fields.append(("modes", mode_arr, []))
     if has("lengths"):
-        cols += [
-            F.col("min_length").cast("long").alias("min_length"),
-            F.col("max_length").cast("long").alias("max_length"),
-            F.col("ave_length").cast("long").alias("ave_length"),
-        ]
+        fields += [(n, "bigint", None) for n in ("min_length", "max_length", "ave_length")]
     if has("patterns") and params.max_patterns > 0:
-        p = (
-            F.coalesce(F.col("popular_patterns"), empty_pat)
-            if "popular_patterns" in out.columns
-            else empty_pat
-        )
-        r = (
-            F.coalesce(F.col("rare_patterns"), empty_pat)
-            if "rare_patterns" in out.columns
-            else empty_pat
-        )
-        cols += [p.alias("popular_patterns"), r.alias("rare_patterns")]
+        fields += [
+            (n, f"array<{_PATTERN_STRUCT}>", [])
+            for n in ("popular_patterns", "rare_patterns")
+        ]
     numericish = ("min_max", "mean", "std_dev", "quartiles", "correlations")
     if any(has(f) for f in numericish):
-        cols.append(F.col("is_numeric"))
-
-    def numcol(name: str) -> Column:
-        if name in out.columns:
-            return F.coalesce(F.col(name), F.lit(0.0)).cast("double").alias(name)
-        return F.lit(0.0).alias(name)
-
+        fields.append(("is_numeric", "boolean", None))
+    numeric = []
     if has("min_max"):
-        cols += [numcol("numeric_min"), numcol("numeric_max")]
+        numeric += ["numeric_min", "numeric_max"]
     if has("mean"):
-        cols.append(numcol("numeric_mean"))
+        numeric.append("numeric_mean")
     if has("std_dev"):
-        cols.append(numcol("numeric_std_dev"))
+        numeric.append("numeric_std_dev")
     if has("quartiles"):
-        cols += [
-            numcol("numeric_lower_quartile"),
-            numcol("numeric_median"),
-            numcol("numeric_upper_quartile"),
-        ]
+        numeric += ["numeric_lower_quartile", "numeric_median", "numeric_upper_quartile"]
+    fields += [(n, "double", 0.0) for n in numeric]
     if has("correlations"):
-        c = (
-            F.coalesce(F.col("correlations"), _empty_array(_CORR_STRUCT))
-            if "correlations" in out.columns
-            else _empty_array(_CORR_STRUCT)
-        )
-        cols.append(c.alias("correlations"))
-    cols.append(F.col("sort_value"))
-    cols.append(F.col("_local_name"))
-    cols.append(F.col("_kind"))
-    return out.select(*cols)
+        fields.append(("correlations", f"array<{_CORR_STRUCT}>", []))
+    return fields
+
+
+def _shape_output(out: DataFrame, params: ProfileParams) -> DataFrame:
+    """Project ``out`` to :func:`_output_fields`, keeping the sort and
+    helper columns."""
+    cols: list[Column] = []
+    for name, typ, fill in _output_fields(params):
+        if fill is None:
+            c = F.col(name) if typ in ("string", "boolean") else F.col(name).cast(typ)
+        else:
+            default = F.lit(fill) if fill == 0.0 else _empty_array(typ[6:-1])
+            c = F.coalesce(F.col(name), default) if name in out.columns else default
+            if typ == "double":
+                c = c.cast("double")
+        cols.append(c.alias(name))
+    return out.select(*cols, "sort_value", "_local_name", "_kind")
+
+
+def _rows_frame(spark: SparkSession, rows: list[dict], params: ProfileParams) -> DataFrame:
+    """Driver-assembled profile rows as a frame shaped like
+    :func:`_shape_output`, planned as a LocalRelation (reads back with
+    no job)."""
+    fields = _output_fields(params)
+    ddl = T.StructType.fromDDL(", ".join(f"{name} {typ}" for name, typ, _ in fields))
+    schema = T.StructType(
+        [
+            T.StructField(f.name, f.dataType, fill is None)
+            for f, (_, _, fill) in zip(ddl.fields, fields)
+        ]
+    )
+    tuples = []
+    for r in rows:
+        t = []
+        for name, typ, fill in fields:
+            v = r.get(name)
+            if v is None:
+                v = fill
+            elif typ == "double":
+                v = float(v)
+            t.append(v)
+        tuples.append(tuple(t))
+    return local_df(spark, tuples, schema)

@@ -61,6 +61,12 @@ def _cell(v, t: T.DataType):
     return v
 
 
+def _row_json(st: T.StructType, row: tuple) -> str:
+    return json.dumps(
+        {f.name: _cell(v, f.dataType) for f, v in zip(st.fields, row, strict=True)}
+    )
+
+
 def lit_df(
     spark: SparkSession,
     rows: list[tuple],
@@ -72,12 +78,56 @@ def lit_df(
         return spark.range(0, 0, 1, 1).select(
             *[F.lit(None).cast(f.dataType).alias(f.name) for f in st.fields]
         )
-    payload = json.dumps(
-        [
-            {f.name: _cell(v, f.dataType) for f, v in zip(st.fields, row, strict=True)}
-            for row in rows
-        ]
-    )
+    payload = "[" + ",".join(_row_json(st, row) for row in rows) + "]"
     return spark.range(0, 1, 1, 1).select(
         F.inline(F.from_json(F.lit(payload), T.ArrayType(st), {"mode": "FAILFAST"}))
+    )
+
+
+def _sql_str(s: str) -> str:
+    """A SQL string expression for ``s`` that reads the same under any
+    string-literal escaping setting: its UTF-8 bytes as a hex literal."""
+    return f"CAST(X'{s.encode('utf-8').hex()}' AS STRING)"
+
+
+def _non_null_default(t: T.DataType) -> str:
+    if isinstance(t, T.ArrayType):
+        return f"CAST(array() AS {t.simpleString()})"
+    if isinstance(t, T.NumericType):
+        return f"CAST(0 AS {t.simpleString()})"
+    raise TypeError(f"no non-null fallback for {t.simpleString()}")
+
+
+def local_df(
+    spark: SparkSession,
+    rows: list[tuple],
+    schema: str | T.StructType,
+) -> DataFrame:
+    """A small literal DataFrame planned as a ``LocalRelation``.
+
+    Same rows, cell rules and FAILFAST parse as :func:`lit_df`, but the
+    rows are parsed when the frame is built, and reading it back runs
+    no Spark job.  A cell that does not match its field raises here.
+    The frame's schema is ``schema`` including nullability: a
+    non-nullable field reads through a ``coalesce`` whose fallback
+    never applies, and a None cell in one raises ``ValueError``."""
+    st = _schema(schema)
+    opts = "map('mode', 'FAILFAST')"
+    type_sql = _sql_str(st.json())
+    values = ", ".join(
+        f"(from_json({_sql_str(_row_json(st, row))}, {type_sql}, {opts}))"
+        for row in rows
+    ) or f"(from_json('{{}}', {type_sql}, {opts}))"
+    cols = []
+    for i, f in enumerate(st.fields):
+        if not f.nullable and any(row[i] is None for row in rows):
+            raise ValueError(f"None in non-nullable field {f.name!r}")
+        name = "`" + f.name.replace("`", "``") + "`"
+        ref = f"r.{name}"
+        if not f.nullable:
+            ref = f"coalesce({ref}, {_non_null_default(f.dataType)})"
+        cols.append(f"{ref} AS {name}")
+    return spark.sql(
+        f"SELECT {', '.join(cols)} FROM VALUES {values} AS t(r)"
+        + ("" if rows else " LIMIT 0")
     )

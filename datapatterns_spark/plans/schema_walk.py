@@ -30,6 +30,8 @@ KIND_BOOLEAN = "boolean"
 KIND_BINARY = "binary"
 KIND_ARRAY = "array"  # SET OF <scalar>
 KIND_TEMPORAL = "temporal"  # timestamp/date: profiled via string form
+# every kind the walk assigns
+KINDS = (KIND_STRING, KIND_NUMERIC, KIND_BOOLEAN, KIND_BINARY, KIND_ARRAY, KIND_TEMPORAL)
 
 _NUMERIC_TYPES = (
     T.ByteType,

@@ -53,6 +53,11 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Generated-class cache (static).  Spark's default of 100 entries
+        # is split into 4 LRU segments of about 25; one approx profile
+        # generates about 80 distinct classes, so a long-running driver
+        # recompiled byte-identical sources on every call.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -93,7 +93,9 @@ def main() -> None:
     n = df.count()
 
     def run_profile():
-        prof = profile(df.drop(args.partition_col), mode="approx")
+        # one row per attribute: one file per table (the approx result
+        # is a LocalRelation, which writes one file per core otherwise)
+        prof = profile(df.drop(args.partition_col), mode="approx").coalesce(1)
         write_table(prof.drop("cardinality_breakdown", "modes",
                               "popular_patterns", "rare_patterns",
                               "correlations"),

@@ -1,10 +1,11 @@
-"""Jobs and tasks the checkpointed writers submit.
+"""Jobs and tasks the library's calls submit.
 
 At the benchmark's sizes the job is bound by per-job driver cost
 (planning, code generation, scheduling), so these tests pin the job
 counts of the pieces the checkpointed run is built from: one
 ``run_checks`` batch, the state merge, the state build's plan, a
-driver-built frame, and a manifest commit.  Jobs are counted through
+driver-built frame, and a manifest commit; and of the one-shot approx
+profile, with its py4j command count and its job names.  Jobs are counted through
 ``statusTracker`` under a job group set by the test; jobs that lost
 the group (submitted from a library thread pool without it) are
 counted too, and a separate test asserts there are none.
@@ -12,9 +13,12 @@ counted too, and a separate test asserts there are none.
 
 from __future__ import annotations
 
+import glob
 import itertools
+import json
 import os
 
+from py4j import protocol as proto
 from pyspark.sql import functions as F
 
 from datapatterns_spark.operators.constraints import run_checks
@@ -143,3 +147,95 @@ def test_library_pools_keep_the_callers_job_group(spark):
 
     grouped, lost = _run_in_group(spark, calls)
     assert grouped and lost == []
+
+
+def test_approx_profile_jobs(spark):
+    """An approx profile of the transcript fixture submits at most 10
+    jobs (20 when it finished with window top-k passes, a union of
+    per-attribute value aggregates and a broadcast metadata join), and
+    its result is a LocalRelation: collecting it submits none."""
+    df = _transcripts(spark).drop("part")
+    out = []
+    jobs = _jobs(spark, lambda: out.append(profile(df, mode="approx")))
+    assert len(jobs) <= 10, jobs
+    rows = []
+    assert _jobs(spark, lambda: rows.extend(out[0].collect())) == []
+    assert [r["attribute"] for r in rows] == df.columns
+
+
+def test_approx_profile_py4j_commands(spark, monkeypatch):
+    """One warm approx profile call sends at most 7,600 py4j commands
+    (11,494 when each attribute had its own best-type CASE branch and
+    the result was shaped by Spark columns; 7,066 measured).  Counted
+    as in test_local.py."""
+    df = _transcripts(spark).drop("part")
+    client = spark.sparkContext._gateway._gateway_client
+    calls = []
+    send = client.send_command
+    release = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith(release):
+            calls.append(command)
+        return send(command, *args, **kwargs)
+
+    profile(df, mode="approx")  # warm any first-use lookups
+    monkeypatch.setattr(client, "send_command", counting)
+    profile(df, mode="approx")
+    monkeypatch.undo()
+    assert len(calls) <= 7_600, len(calls)
+
+
+def test_approx_profile_jobs_carry_a_phase(spark, tmp_path):
+    """Every job of an approx profile runs in a named phase: its
+    ``dp.phase`` local property and its description are both set.  The
+    job-start properties are read from an event log written by a
+    listener attached for this call."""
+    sc = spark.sparkContext._jsc.sc()
+    jvm = spark.sparkContext._jvm
+    conf = (
+        sc.conf()
+        .clone()
+        .set("spark.eventLog.compress", "false")
+        .set("spark.eventLog.rolling.enabled", "false")
+    )
+    listener = jvm.org.apache.spark.scheduler.EventLoggingListener(
+        "phase-test",
+        jvm.scala.Option.empty(),
+        jvm.java.net.URI(tmp_path.as_uri()),
+        conf,
+        sc.hadoopConfiguration(),
+    )
+    listener.start()
+    sc.addSparkListener(listener)
+    try:
+        profile(_transcripts(spark).drop("part"), mode="approx").collect()
+        sc.listenerBus().waitUntilEmpty()
+    finally:
+        sc.removeSparkListener(listener)
+        listener.stop()
+    starts = [
+        ev.get("Properties") or {}
+        for f in glob.glob(str(tmp_path / "*"))
+        for ev in map(json.loads, open(f))
+        if ev["Event"] == "SparkListenerJobStart"
+    ]
+    assert starts
+    phases = [p.get("dp.phase") for p in starts]
+    assert all(ph and ph.startswith("profile.") for ph in phases), phases
+    assert [p.get("spark.job.description") for p in starts] == phases
+
+
+def test_warm_approx_profile_compiles_no_class(spark):
+    """The generated-class cache holds a profile's classes across calls:
+    an approx profile repeated after an exact one (which generates its
+    own classes) compiles nothing.  With Spark's default of 100 cache
+    entries the exact profile evicts most of the first call's classes."""
+    cm = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = cm.METRIC_COMPILATION_TIME()
+    df = _transcripts(spark).drop("part")
+    profile(df, mode="approx").collect()
+    profile(df, mode="exact").collect()
+    before = compiled.getCount()
+    profile(df, mode="approx").collect()
+    assert compiled.getCount() == before

@@ -1,7 +1,7 @@
-"""plans.local.lit_df: driver-side rows become a JVM-literal frame —
-exact round trip for every field type the engine's callers use,
-FAILFAST on a cell that does not match its field, and a py4j cost that
-does not grow with the row count."""
+"""plans.local.lit_df and local_df: driver-side rows become a
+JVM-literal frame — exact round trip for every field type the engine's
+callers use, FAILFAST on a cell that does not match its field, and a
+py4j cost that does not grow with the row count."""
 
 import math
 from decimal import Decimal
@@ -11,7 +11,7 @@ from py4j import protocol as proto
 from pyspark.sql import types as T
 
 from datapatterns_spark.operators.constraints import VERDICT_SCHEMA
-from datapatterns_spark.plans.local import lit_df
+from datapatterns_spark.plans.local import lit_df, local_df
 
 SCHEMA = (
     "s string, l long, i int, d double, b boolean, "
@@ -92,3 +92,54 @@ def test_lit_df_py4j_calls_do_not_grow_with_rows(spark, monkeypatch):
     small, large = build(10), build(1000)
     assert small == large
     assert small < 40
+
+
+def test_local_df_is_a_local_relation(spark, monkeypatch):
+    """local_df reads back the same edge values with no Spark job, keeps
+    a non-nullable field's nullability, raises on a mismatched cell when
+    built, and sends the same py4j commands for 10 rows as for 1,000."""
+    df = local_df(spark, ROWS, SCHEMA)
+    assert "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString()
+    sc = spark.sparkContext
+    sc.setJobGroup("local-df", "local-df")
+    try:
+        got = [tuple(r) for r in df.collect()]
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("local-df")) == []
+    assert df.schema == lit_df(spark, ROWS, SCHEMA).schema
+    for g, want in zip(got, ROWS, strict=True):
+        for a, b in zip(g, want):
+            assert _same(a, b), (a, b)
+    st = T.StructType(
+        [
+            T.StructField("a", T.ArrayType(T.StructType.fromDDL("v string")), False),
+            T.StructField("d", T.DoubleType(), False),
+        ]
+    )
+    assert local_df(spark, [([{"v": "x"}], 1.5)], st).schema == st
+    with pytest.raises(ValueError):
+        local_df(spark, [(None, 1.5)], st)
+    with pytest.raises(Exception, match="FAILFAST|MALFORMED_RECORD|INLINE_TABLE"):
+        local_df(spark, [("ok", 3.0)], "s string, i int")
+
+    client = sc._gateway._gateway_client
+    calls = []
+    send = client.send_command
+    release = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith(release):
+            calls.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+
+    def build(n: int) -> int:
+        rows = [(f"p{i}", f"check_{i % 7}", i % 2 == 0, i, i / 3, [f"v{i}"]) for i in range(n)]
+        calls.clear()
+        local_df(spark, rows, VERDICT_SCHEMA)
+        return len(calls)
+
+    build(10)
+    assert build(10) == build(1000) < 40

@@ -163,24 +163,14 @@ def test_bucketed_table_group_checks_need_no_shuffle(spark, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
-def test_profile_assembly_never_rescans_source(spark, monkeypatch):
+def test_profile_assembly_never_rescans_source(spark):
     """In approx mode the final assembly must consume materialized
-    intermediates, never re-derive them from the source.  Default
-    (driver tail): the returned plan is a pure literal frame — no
-    FileScan at all.  Cluster tail (forced by a negative low-card
-    histogram limit): the assembly reads the persisted/checkpointed
-    intermediates (ExistingRDD / cache scan)."""
-    from datapatterns_spark.operators import profile as profile_mod
-
+    intermediates, never re-derive them from the source: the returned
+    plan is a pure literal frame — no FileScan at all."""
     df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     prof = profile(df, field_list=["l_returnflag", "l_quantity"], mode="approx")
     plan = _plan(prof)
     assert "Scan parquet" not in plan and "FileScan" not in plan
-
-    monkeypatch.setattr(profile_mod, "_DRIVER_TAIL_VH_LIMIT", -1)
-    prof = profile(df, field_list=["l_returnflag", "l_quantity"], mode="approx")
-    plan = _plan(prof)
-    assert "ExistingRDD" in plan or "InMemoryTableScan" in plan
 
 
 def test_approx_profile_executions_are_not_nested(spark):

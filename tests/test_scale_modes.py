@@ -172,21 +172,60 @@ def test_nth_digit_fractional_fast_path_matches_generic(spark):
         assert mismatch == [], (pos, mismatch[:5])
 
 
-def test_driver_tail_matches_cluster_tail(spark, lineitem, monkeypatch):
-    """The driver-side approx finishing (collect bounded follow-ups,
-    finish top-k/modes/breakdown/correlations in Python, emit one
-    literal frame) must be value-identical to the cluster-side
-    assembly it replaces — full feature set, mixed kinds, ties,
-    correlations included.  A negative histogram limit forces the
-    cluster tail."""
+def test_approx_patterns_modes_breakdown_match_exact(spark, lineitem):
+    """The approx profile's driver finish ranks patterns and values on
+    the driver; wherever approx mode is exact by design, it must agree
+    with exact mode's cluster-side Window/array_sort rankings, ties
+    included: popular and rare patterns of every attribute whose
+    pattern space is light (all of lineitem's), the cardinality
+    breakdown, and the modes of low-cardinality attributes."""
+    from datapatterns_spark.operators.profile import ProfileParams
+
+    limit = ProfileParams().approx_mode_card_limit
+    feats = ("patterns", "modes", "cardinality_breakdown", "cardinality")
+    exact = _by_attr(profile(lineitem, features=feats, mode="exact"))
+    approx = _by_attr(profile(lineitem, features=feats, mode="approx"))
+    assert set(exact) == set(approx)
+    tied = 0
+    for attr, e in exact.items():
+        a = approx[attr]
+        for k in ("popular_patterns", "rare_patterns", "cardinality_breakdown"):
+            assert a[k] == e[k], (attr, k)
+        if e["cardinality"] <= limit * 0.9:
+            assert a["modes"] == e["modes"], attr
+        for k in ("popular_patterns", "rare_patterns", "cardinality_breakdown"):
+            counts = [p["rec_count"] for p in e[k]]
+            tied += len(counts) - len(set(counts))
+    assert tied > 0  # the tie-breaks were exercised
+
+
+def test_light_pattern_prereduction_matches_full_fetch(spark, lineitem, monkeypatch):
+    """Over the driver-row budget, the light-pattern histogram is
+    reduced to its top/bottom-k survivors by salted window passes
+    before the fetch; the profile is identical either way.  A negative
+    budget forces the reduction."""
     from datapatterns_spark.operators import profile as profile_mod
 
-    rows_driver = profile(lineitem, mode="approx").collect()
-    monkeypatch.setattr(profile_mod, "_DRIVER_TAIL_VH_LIMIT", -1)
-    rows_cluster = profile(lineitem, mode="approx").collect()
-    a = [r.asDict(recursive=True) for r in rows_driver]
-    b = [r.asDict(recursive=True) for r in rows_cluster]
-    assert a == b
+    full = [r.asDict(recursive=True) for r in profile(lineitem, mode="approx").collect()]
+    monkeypatch.setattr(profile_mod, "_DRIVER_ROW_BUDGET", -1)
+    reduced = [r.asDict(recursive=True) for r in profile(lineitem, mode="approx").collect()]
+    assert full == reduced
+
+
+def test_approx_profile_of_a_date_column(spark):
+    """A DateType column takes approx mode's arithmetic temporal path;
+    its fill, lengths, patterns and modes equal exact mode's."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(300).select(
+        F.when(F.col("id") % 7 == 0, None)
+        .otherwise(F.date_add(F.lit("2020-01-01").cast("date"), (F.col("id") % 40).cast("int")))
+        .alias("d")
+    )
+    feats = ("fill_rate", "lengths", "patterns", "modes")
+    exact = _by_attr(profile(df, features=feats, mode="exact"))
+    approx = _by_attr(profile(df, features=feats, mode="approx"))
+    assert approx == exact
 
 
 def test_sketch_cardinality_zero_for_unfilled_columns(spark):
