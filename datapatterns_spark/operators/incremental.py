@@ -41,6 +41,16 @@ q_sketch (DataSketches KLL, opt-in    ``kll_merge_agg_double`` ->
 via ``quantile_delta`` = KLL ``k``)   ``kll_sketch_get_quantile_double``
 ====================================  =================================
 
+The state rows are the approx profile's pass-1 fold: the same melt
+(``profile.melt_slim``) and aggregate (``profile.fold_aggs``), grouped
+by (partition, attribute) instead of by attribute, and
+:func:`merge_states` finishes the merged fold with the same
+``profile.finish_fold``, so the two paths cannot drift.  Timestamp and
+date values are hashed as native values, never formatted per row.
+Stores written before that hashed their formatted strings, a different
+hash domain that would double-count in a union; they carry no
+``state_format`` column, and a resume refuses them.
+
 Exactness: every merged statistic except ``cardinality`` and the
 quartiles is EXACT and identical to a whole-table pass
 (grouping-independence is what the merge-operator table above buys);
@@ -59,25 +69,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..functions import besttype
-from ..functions.sketches import LG_CONFIG_K
-from ..plans.schema_walk import (
-    KIND_ARRAY,
-    KIND_BINARY,
-    KIND_BOOLEAN,
-    KIND_NUMERIC,
-    KIND_STRING,
-    AttrInfo,
-    walk_schema,
-)
+from ..plans.schema_walk import walk_schema
 from .manifest import WriteBatch, _read_results, _run_checkpointed
-from ..functions.patterns import map_pattern
-from .profile import (
-    _INT_MAX_DIGITS,
-    _int_len_expr,
-    _len_expr,
-    _value_expr,
-)
+from .profile import ProfileParams, _attr_meta, finish_fold, fold_aggs, melt_slim
 
 _QUARTILES = (
     ("numeric_lower_quartile", 0.25),
@@ -92,7 +86,8 @@ _KLL_K_MIN, _KLL_K_MAX = 8, 65535
 # serialized-sketch magic of the t-digest the KLL sketch replaced
 _TDIGEST_MAGIC = b"TD1"
 
-# one state row per (partition, attribute); profile_state appends
+# one state row per (partition, attribute): the profile fold
+# (profile.fold_aggs) and the format marker; profile_state appends
 # ``q_sketch binary`` when a quantile sketch is requested
 STATE_SCHEMA = (
     "partition string, attribute string, kind string, "
@@ -100,8 +95,12 @@ STATE_SCHEMA = (
     "fill_count long, min_length int, max_length int, len_sum long, "
     "min_len_nonzero int, has_unicode int, type_flags int, "
     "card_sketch binary, num_n long, num_sum double, num_sumsq double, "
-    "num_min double, num_max double"
+    "num_min double, num_max double, state_format int"
 )
+# state_format of every row profile_state writes: timestamp/date
+# sketches hash the native value.  Stores without the column hashed
+# their formatted strings, and are refused on resume.
+_STATE_FORMAT = 2
 
 
 def _state_schema(k: int | None) -> str:
@@ -118,112 +117,6 @@ def _kll_k(quantile_delta: float) -> int:
             f"[{_KLL_K_MIN}, {_KLL_K_MAX}], got {quantile_delta!r}"
         )
     return int(k)
-
-
-def _state_melt(
-    df: DataFrame,
-    attrs: list[AttrInfo],
-    allow_zero: bool,
-    part: Column,
-) -> DataFrame:
-    """One scan -> (partition, attribute, len, fil, vhash, v, fpat).
-
-    ``fpat`` is the type-flag pattern ('0' kept literal) gated exactly
-    as the main profile's pass 1: only filled values of flag-ladder
-    kinds, <= 40 chars, starting ``[0-9+-.]`` ever pay the pattern map
-    (nothing longer or later-charred can match a numeric rule,
-    Profile.ecl:908-935).  ``v`` is the numeric reading: the native
-    value for given-numeric attributes, ``try_cast`` of the canonical
-    string (behind the same first-char gate) for everything else — the
-    reference profiles numeric-content strings numerically.  Every
-    value expression is projected ONCE under the Generate (generators
-    get no subexpression elimination — NOTES_r2.md)."""
-    proj: list[Column] = [part.alias("_part")]
-    null_i = F.lit(None).cast("int")
-    null_d = F.lit(None).cast("double")
-    per_attr: list[dict] = []
-    for i, a in enumerate(attrs):
-        c = F.col(a.name)
-        cols: dict[str, Column] = {}
-        if a.kind == KIND_NUMERIC:
-            filled = (
-                c.isNotNull()
-                if allow_zero
-                else (c.isNotNull() & (c.cast("double") != 0))
-            )
-            # native-derived terms must be projected (the struct stage
-            # only sees the projection's output)
-            proj.append(filled.cast("int").alias(f"_f{i}"))
-            if a.given_type in _INT_MAX_DIGITS:
-                proj.append(
-                    F.when(c.isNull(), 0)
-                    .otherwise(_int_len_expr(c, _INT_MAX_DIGITS[a.given_type]))
-                    .alias(f"_l{i}")
-                )
-            else:
-                proj.append(F.length(_value_expr(a)).cast("int").alias(f"_l{i}"))
-            proj.append(F.xxhash64(c).alias(f"_h{i}"))
-            proj.append(F.when(filled, c.cast("double")).alias(f"_d{i}"))
-            cols["fil"] = F.col(f"_f{i}")
-            cols["len"] = F.col(f"_l{i}")
-            cols["vhash"] = F.col(f"_h{i}")
-            cols["v"] = F.col(f"_d{i}")
-            cols["uni"] = null_i
-            cols["fpat"] = F.lit(None).cast("string")
-        elif a.kind == KIND_BOOLEAN:
-            proj.append(F.xxhash64(F.coalesce(c, F.lit(False))).alias(f"_h{i}"))
-            cols["fil"] = F.lit(1)
-            cols["len"] = F.lit(1)
-            cols["vhash"] = F.col(f"_h{i}")
-            cols["v"] = null_d
-            cols["uni"] = null_i
-            cols["fpat"] = F.lit(None).cast("string")
-        else:
-            # strings / binary / arrays / temporal: canonical string
-            # form, projected ONCE so everything below references a
-            # plain column
-            proj.append(_value_expr(a).alias(f"_v{i}"))
-            vcol = F.col(f"_v{i}")
-            if a.kind in (KIND_ARRAY, KIND_BINARY):
-                # element count / byte length, not the string form's
-                # length (Profile.ecl:819-820; DATA semantics)
-                proj.append(_len_expr(a).cast("int").alias(f"_l{i}"))
-                lncol: Column = F.col(f"_l{i}")
-            else:
-                lncol = F.length(vcol).cast("int")
-            cols["fil"] = (lncol > 0).cast("int")
-            cols["len"] = lncol
-            cols["vhash"] = F.xxhash64(vcol)
-            cols["uni"] = (
-                (F.octet_length(vcol) != lncol).cast("int")
-                if a.kind == KIND_STRING
-                else null_i
-            )
-            if a.kind == KIND_ARRAY:
-                # SET OF is never numeric (Profile.ecl:846-847)
-                cols["v"] = null_d
-                cols["fpat"] = F.lit(None).cast("string")
-            else:
-                gate = (lncol > 0) & (lncol <= 40) & vcol.rlike("^[0-9+\\-.]")
-                cols["v"] = F.when(gate, F.expr(f"try_cast(_v{i} AS double)"))
-                cols["fpat"] = F.when(
-                    gate, map_pattern(F.substring(vcol, 1, 48))
-                )
-        per_attr.append(cols)
-    base = df.select(*proj)
-    structs = [
-        F.struct(
-            F.lit(a.name).alias("attribute"),
-            cols["len"].alias("len"),
-            cols["fil"].alias("fil"),
-            cols["vhash"].alias("vhash"),
-            cols["v"].alias("v"),
-            cols["uni"].alias("uni"),
-            cols["fpat"].alias("fpat"),
-        )
-        for a, cols in zip(attrs, per_attr)
-    ]
-    return base.select("_part", F.inline(F.array(*structs)))
 
 
 def profile_state(
@@ -263,22 +156,8 @@ def profile_state(
         )
     ).cast("string")
 
-    melted = _state_melt(df, attrs, allow_zero, part)
-    fil = F.col("fil") == 1
-    as_is = [
-        a.name
-        for a in attrs
-        if a.kind in (KIND_NUMERIC, KIND_BOOLEAN, KIND_ARRAY)
-    ]
-    flag = (
-        F.when(~fil, F.lit(None).cast("int"))
-        .when(
-            F.col("attribute").isin(as_is) if as_is else F.lit(False),
-            F.lit(besttype.AS_IS),
-        )
-        .when(F.col("fpat").isNull(), F.lit(0))
-        .otherwise(besttype.type_flag(F.col("fpat"), treat_as_is=False))
-    )
+    # the fold needs no pattern sample
+    params = ProfileParams(allow_zero=allow_zero, max_patterns=0)
     sketch_cols = []
     if k is not None:
         sk = F.kll_sketch_agg_double("v", k)
@@ -288,48 +167,24 @@ def profile_state(
         sketch_cols.append(
             F.when(F.kll_sketch_get_n_double(sk) > 0, sk).alias("q_sketch")
         )
-    state = melted.groupBy(F.col("_part").alias("partition"), "attribute").agg(
-        F.count(F.lit(1)).alias("rec_count"),
-        F.coalesce(F.sum("fil"), F.lit(0)).cast("long").alias("fill_count"),
-        F.min(F.when(fil, F.col("len"))).alias("min_length"),
-        F.max(F.when(fil, F.col("len"))).alias("max_length"),
-        F.sum(F.when(fil, F.col("len"))).cast("long").alias("len_sum"),
-        F.min(F.when(fil & (F.col("len") > 0), F.col("len"))).alias(
-            "min_len_nonzero"
-        ),
-        F.max(F.when(fil, F.col("uni"))).alias("has_unicode"),
-        F.bit_and(flag).alias("type_flags"),
-        F.hll_sketch_agg(F.when(fil, F.col("vhash")), LG_CONFIG_K).alias(
-            "card_sketch"
-        ),
-        F.count("v").alias("num_n"),
-        F.sum("v").alias("num_sum"),
-        F.sum(F.col("v") * F.col("v")).alias("num_sumsq"),
-        F.min("v").alias("num_min"),
-        F.max("v").alias("num_max"),
-        *sketch_cols,
+    state = (
+        melt_slim(df, attrs, params, part)
+        .groupBy(F.col("_part").alias("partition"), "attribute")
+        .agg(*fold_aggs(), *sketch_cols)
     )
     # attribute metadata from a literal map on the aggregated rows: a
     # driver-built frame joined in would cost a broadcast job per call
-    meta = F.create_map(
-        *[
-            x
-            for a in attrs
-            for x in (
-                F.lit(a.name),
-                F.struct(
-                    F.lit(a.kind).alias("kind"),
-                    F.lit(a.given_type).cast("string").alias("given_attribute_type"),
-                    F.lit(a.ordinal).cast("int").alias("ordinal"),
-                ),
-            )
-        ]
-    )[F.col("attribute")]
-    cols = StructType.fromDDL(_state_schema(k)).names
+    meta = _attr_meta(attrs, "", "")
+    fixed = {
+        "kind": meta["_kind"],
+        "given_attribute_type": meta["given_attribute_type"],
+        "ordinal": meta["sort_value"].cast("int"),
+        "state_format": F.lit(_STATE_FORMAT),
+    }
     return state.select(
         *[
-            meta[c].alias(c) if c in ("kind", "given_attribute_type", "ordinal") else c
-            for c in cols
+            fixed[c].alias(c) if c in fixed else c
+            for c in StructType.fromDDL(_state_schema(k)).names
         ]
     )
 
@@ -349,41 +204,22 @@ def merge_states(states: DataFrame) -> DataFrame:
     sketch_cols = (
         [F.kll_merge_agg_double("q_sketch").alias("q_sketch")] if has_q else []
     )
+    merge = {
+        F.first: ("kind", "given_attribute_type", "ordinal"),
+        F.sum: ("rec_count", "fill_count", "len_sum", "num_n", "num_sum", "num_sumsq"),
+        F.min: ("min_length", "min_len_nonzero", "num_min"),
+        F.max: ("max_length", "has_unicode", "num_max"),
+        F.bit_and: ("type_flags",),
+    }
     merged = states.groupBy("attribute").agg(
-        F.first("kind").alias("kind"),
-        F.first("given_attribute_type").alias("given_attribute_type"),
-        F.first("ordinal").alias("ordinal"),
-        F.sum("rec_count").alias("rec_count"),
-        F.sum("fill_count").alias("fill_count"),
-        F.min("min_length").alias("min_length"),
-        F.max("max_length").alias("max_length"),
-        F.sum("len_sum").alias("len_sum"),
-        F.min("min_len_nonzero").alias("min_len_nonzero"),
-        F.max("has_unicode").alias("has_unicode"),
-        F.bit_and("type_flags").alias("type_flags"),
-        F.hll_sketch_estimate(
-            F.hll_union_agg(F.col("card_sketch"), True)
-        ).alias("cardinality"),
-        F.sum("num_n").alias("num_n"),
-        F.sum("num_sum").alias("num_sum"),
-        F.sum("num_sumsq").alias("num_sumsq"),
-        F.min("num_min").alias("num_min"),
-        F.max("num_max").alias("num_max"),
+        *[op(c).alias(c) for op, cols in merge.items() for c in cols],
+        F.hll_union_agg(F.col("card_sketch"), True).alias("card_sketch"),
         *sketch_cols,
     )
-    # best-type lattice from the merged folds, keyed on each row's own
-    # kind column, so no job reads the states' metadata first
-    best = besttype.best_type_by_kind(
-        kind=F.col("kind"),
-        given_type=F.col("given_attribute_type"),
-        fill_count=F.col("fill_count"),
-        flags=F.coalesce(F.col("type_flags"), F.lit(0)),
-        max_len=F.coalesce(F.col("max_length"), F.lit(0)),
-        min_len_nonzero=F.coalesce(F.col("min_len_nonzero"), F.lit(0)),
-        is_unicode=F.coalesce(F.col("has_unicode"), F.lit(0)) == 1,
-    )
-    n = F.col("num_n")
-    mean = F.col("num_sum") / n
+    # statistics from the merged folds, keyed on each row's own kind
+    # column, so no job reads the states' metadata first
+    stats = finish_fold(F.col("kind"), F.col("given_attribute_type"))
+    del stats["is_numeric"]
     quartile_cols: list = []
     if has_q:
         merged = merged.withColumn(
@@ -400,46 +236,10 @@ def merge_states(states: DataFrame) -> DataFrame:
             for i, (name, _) in enumerate(_QUARTILES)
         ]
     return (
-        merged.withColumn("best_attribute_type", best)
-        .withColumn(
-            "fill_rate",
-            F.when(
-                F.col("rec_count") > 0,
-                F.round(F.col("fill_count") / F.col("rec_count") * 100, 6),
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "ave_length",
-            F.when(
-                F.col("fill_count") > 0,
-                F.floor(F.col("len_sum") / F.col("fill_count")),
-            ).otherwise(F.lit(0)).cast("long"),
-        )
-        .select(
+        merged.select(
             "attribute",
             "given_attribute_type",
-            "best_attribute_type",
-            "rec_count",
-            "fill_count",
-            "fill_rate",
-            F.coalesce("cardinality", F.lit(0)).alias("cardinality"),
-            F.coalesce("min_length", F.lit(0)).alias("min_length"),
-            F.coalesce("max_length", F.lit(0)).alias("max_length"),
-            "ave_length",
-            F.when(n > 0, F.round(F.col("num_min"), 4)).alias("numeric_min"),
-            F.when(n > 0, F.round(F.col("num_max"), 4)).alias("numeric_max"),
-            F.when(n > 0, F.round(mean, 4)).alias("numeric_mean"),
-            F.when(
-                n > 0,
-                F.round(
-                    F.sqrt(
-                        F.greatest(
-                            F.col("num_sumsq") / n - mean * mean, F.lit(0.0)
-                        )
-                    ),
-                    4,
-                ),
-            ).alias("numeric_std_dev"),
+            *[e.alias(c) for c, e in stats.items()],
             *quartile_cols,
             "ordinal",
         )
@@ -513,11 +313,20 @@ def digest_drift(base_states: DataFrame, cur_states: DataFrame) -> DataFrame:
 
 
 def _check_store(spark: SparkSession, state_path: str, k: int | None) -> None:
-    """Refuse to resume a state store written with other sketch settings:
-    ``q_sketch`` presence, the KLL ``k``, and the retired t-digest
-    format."""
+    """Refuse to resume a state store written in another format or with
+    other sketch settings: a store without the ``state_format`` marker
+    (its timestamp/date sketches hash formatted strings, so merging
+    them with native-value sketches would double-count), ``q_sketch``
+    presence, the KLL ``k``, and the retired t-digest format."""
     # inferred schema on purpose: the guard needs the stored columns
     stored_df = spark.read.parquet(f"{state_path}/states")
+    if "state_format" not in stored_df.columns:
+        raise ValueError(
+            f"states under {state_path!r} have no state_format column: "
+            "they were written by an older version whose timestamp/date "
+            "cardinality sketches hash formatted strings; rebuild with a "
+            "fresh state_path"
+        )
     if ("q_sketch" in stored_df.columns) != (k is not None):
         raise ValueError(
             "quantile_delta mismatch with existing states under "

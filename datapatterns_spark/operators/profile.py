@@ -141,6 +141,10 @@ class ProfileParams:
         return self.has("lengths") or self.need_flags
 
     @property
+    def need_patterns(self) -> bool:
+        return self.has("patterns") and self.max_patterns > 0
+
+    @property
     def need_cardinality(self) -> bool:
         return (
             self.has("cardinality")
@@ -292,202 +296,270 @@ def _temporal_len_arith(a: AttrInfo) -> Column:
     return F.when(frac == 0, F.lit(19)).otherwise(F.lit(26) - tz)
 
 
-def _int_len_expr(c: Column, max_digits: int) -> Column:
-    """Length of an integral value's decimal rendering (digit count +
-    sign) as a comparison ladder — no string form, and no ``abs()``
-    (which would overflow ANSI-mode on ``Long.MIN_VALUE``)."""
-    e = F.when(c.between(-9, 9), 1)
-    for d in range(2, max_digits):
-        hi = 10**d - 1
-        e = e.when(c.between(-hi, hi), d)
-    e = e.otherwise(max_digits)
-    return (e + F.when(c < 0, 1).otherwise(0)).cast("int")
+def _int_len_expr(name: str, max_digits: int) -> Column:
+    """Length of an integral column's decimal rendering (digit count +
+    sign, 0 for NULL) as one comparison CASE: no string form, and no
+    ``abs()`` (which would overflow ANSI-mode on ``Long.MIN_VALUE``).
+    Built as one SQL string, so it crosses py4j as one command; the
+    column resolves as ``F.col(name)`` does (a dotted name is a nested
+    field)."""
+    c = ".".join(f"`{p.replace('`', '``')}`" for p in name.split("."))
+    rungs = " ".join(
+        f"WHEN {c} BETWEEN -{10**d - 1} AND {10**d - 1} THEN {d}"
+        for d in range(1, max_digits)
+    )
+    return F.expr(
+        f"CAST(CASE WHEN {c} IS NULL THEN 0 {rungs} ELSE {max_digits} END"
+        f" + IF({c} < 0, 1, 0) AS INT)"
+    )
+
+
+# the fields of a melt_slim row after ``attribute``, with their types
+_MELT_FIELDS = (
+    ("len", "int"),
+    ("fil", "int"),
+    ("vhash", "bigint"),
+    ("uni", "int"),
+    ("v", "double"),
+    ("fpat", "string"),
+    ("value", "string"),
+)
 
 
 def melt_slim(
     df: DataFrame,
     attrs: list[AttrInfo],
-    allow_zero: bool = False,
-    lean: bool = False,
+    params: ProfileParams,
+    part: Column | None = None,
 ) -> DataFrame:
-    """One scan -> (attribute, value, len, vhash, uni, fil) rows.
+    """One scan -> ``(attribute, len, fil, vhash, uni, v, fpat, value)``
+    rows, led by a ``_part`` column when ``part`` is given: the input of
+    the profile fold (:func:`fold_aggs`), shared by the approx pass 1,
+    the fill/lengths-only exact path and ``incremental.profile_state``.
 
-    ``lean=True`` keeps only the ``len``/``fil`` machinery (value,
-    vhash and uni are NULL): the fill/lengths-only exact path consumes
-    nothing else, and the distinctness hash — xxhash64 over every full
-    text value — is the single largest per-row term it would otherwise
-    pay.
+    Per row and attribute: ``len`` is the length of the canonical
+    string form (element count for arrays, byte length for binary);
+    ``fil`` the filled bit (Profile.ecl:830-844); ``vhash`` a 64-bit
+    distinctness hash of a filled value; ``uni`` the non-ASCII bit of
+    strings; ``v`` the numeric reading; ``fpat`` the type-flag pattern
+    ('0' kept literal); and ``value`` the pattern-sample source (at most
+    48 chars).  A field ``params`` does not need is NULL, so a feature
+    subset pays for none of its work: ``vhash`` needs cardinality or
+    patterns, ``uni`` and ``fpat`` the type flags, ``v`` a numeric
+    feature, ``value`` patterns.
 
-    The approx pass-1 aggregate needs, per row: the length of the
-    canonical string form, a 64-bit distinctness hash, a filled bit,
-    the numeric value, and the value STRING only where a downstream
-    consumer is gated on (pattern sample / numeric-looking short
-    values).  Per-kind fast paths keep string-form work off rows that
-    never consume it:
+    Every value expression is projected once under the Generate (which
+    gets no subexpression elimination), and the generator is one SQL
+    string over the projected columns.  Per-kind fast paths keep
+    string work off rows that never consume it:
 
-    * **strings**: trim once, hash + length + 48-char value cap —
-      distinctness rides ``xxhash64`` of the full value (identical HLL
-      estimate: ``hll_sketch_agg`` hashes its input anyway) and
-      the non-ASCII probe is a precomputed bit, so free-text bytes
-      never enter the explode/aggregate path;
-    * **numeric**: native hash (the decimal rendering is injective, so
-      distinct-over-hash is identical), native filled bit ``fil``
-      (NULL/zero semantics, Profile.ecl:830-844) and the string form
-      only on the 1/16 pattern-cardinality sample; integral types also
-      take a comparison-ladder digit count instead of rendering for
-      length (given-numeric sketch stats come from a direct
-      column-pruned aggregation in the caller, not the melt);
-    * **boolean**: constant length 1, hash of ``coalesce(c, false)``
-      (the canonical form maps NULL -> 'false'), no string at all;
-    * **timestamp/date**: arithmetic rendered-length from the native
-      value (:func:`_temporal_len_arith`), native hash (injective
-      rendering), and NO string form while the year has 4 digits (any
-      session timezone — out-of-range rows, none in practice, fall
-      back to formatting).  The type-flag ladder is provably ``AS_IS``
-      for any temporal rendering (every numeric rule rejects '-'/':'),
-      so the flag/parse consumers never need the string either.
-
-    ``fil`` is the filled bit for kinds whose filled test needs the
-    native value; NULL for kinds where filled == (len > 0)."""
-    proj: list[Column] = []
-    per_attr: list[dict] = []
+    * **strings/binary**: trim once; the hash rides ``xxhash64`` of the
+      full value (identical HLL estimate), so free-text bytes never
+      enter the aggregate.  ``v`` (``try_cast``) and ``fpat`` run only
+      behind a gate: values longer than 40 chars cannot match a numeric
+      rule (19/20-digit, 15.15-float, exp — Profile.ecl:908-935), and a
+      castable value starts ``[0-9+-.]``;
+    * **numeric**: native hash, native filled bit and ``v`` the native
+      double; integral types count digits instead of rendering for
+      length, and render only the 1/16 pattern sample;
+    * **boolean**: constant length 1, always filled, hash of
+      ``coalesce(c, false)`` (the canonical form maps NULL -> 'false');
+    * **timestamp/date**: arithmetic rendered length from the native
+      value (:func:`_temporal_len_arith`) and native hash (injective
+      rendering); only rows outside the 4-digit-year range are
+      formatted.  A temporal rendering is never numeric and every type
+      rule rejects its '-'/':', so it needs no ``v`` or ``fpat``;
+    * **arrays**: SET OF is never numeric (Profile.ecl:846-847).
+    """
+    need = {
+        "len": True,
+        "fil": True,
+        "vhash": params.need_cardinality or params.need_patterns,
+        "uni": params.need_flags,
+        "v": params.need_numeric,
+        "fpat": params.need_flags,
+        "value": params.need_patterns,
+    }
+    proj: list[Column] = [] if part is None else [part.alias("_part")]
+    structs: list[str] = []
     for i, a in enumerate(attrs):
         c = F.col(a.name)
-        p: dict = {"attr": a}
+        # per field: (SQL over the projected columns, {name: projection})
+        f: dict[str, tuple[str, dict[str, Column]]] = {}
         if a.kind == KIND_NUMERIC:
-            filled_nat = (
+            filled = (
                 c.isNotNull()
-                if allow_zero
+                if params.allow_zero
                 else (c.isNotNull() & (c.cast("double") != 0))
             )
-            # carry the native column through (free — a reference, not
-            # a computation): the struct stage casts it lazily (nv when
-            # filled, string form only on the 1/16 sample)
-            if not lean:
-                proj.append(c.alias(f"_c{i}"))
-                proj.append(F.xxhash64(c).alias(f"_h{i}"))
-            proj.append(filled_nat.cast("int").alias(f"_f{i}"))
             if a.given_type in _INT_MAX_DIGITS:
-                proj.append(
+                length = _int_len_expr(a.name, _INT_MAX_DIGITS[a.given_type])
+            else:
+                length = F.length(_value_expr(a)).cast("int")
+            f["len"] = (f"_l{i}", {f"_l{i}": length})
+            f["fil"] = (f"_f{i}", {f"_f{i}": filled.cast("int")})
+            f["vhash"] = (f"_h{i}", {f"_h{i}": F.xxhash64(c)})
+            f["v"] = (f"_d{i}", {f"_d{i}": F.when(filled, c.cast("double"))})
+            # string form only on the pattern-cardinality sample (the
+            # same predicate as pass 1's `sampled` gate on vhash)
+            f["value"] = (
+                f"IF(pmod(_h{i}, {_PAT_SAMPLE_MOD}) = 0, CAST(_c{i} AS STRING), NULL)",
+                {f"_h{i}": F.xxhash64(c), f"_c{i}": c},
+            )
+        elif a.kind == KIND_BOOLEAN:
+            f["len"] = f["fil"] = ("1", {})
+            f["vhash"] = (f"_h{i}", {f"_h{i}": F.xxhash64(F.coalesce(c, F.lit(False)))})
+        else:
+            if _is_fast_temporal(a):
+                lo, hi = _temporal_bounds(a)
+                in_range = c.between(lo, hi)
+                length = (
                     F.when(c.isNull(), 0)
-                    .otherwise(_int_len_expr(c, _INT_MAX_DIGITS[a.given_type]))
-                    .alias(f"_l{i}")
+                    .when(in_range, _temporal_len_arith(a))
+                    .otherwise(F.length(c.cast("string")))
+                    .cast("int")
                 )
+                f["vhash"] = (f"_h{i}", {f"_h{i}": F.xxhash64(c)})
+                out = F.when(c.isNotNull() & ~in_range, c.cast("string"))
+                f["value"] = (f"_x{i}", {f"_x{i}": out})
             else:
-                # float/double/decimal: rendering length has no cheap
-                # arithmetic form — keep the string for length only
-                proj.append(_value_expr(a).alias(f"_v{i}"))
-                p["float_form"] = True
-        elif a.kind == KIND_BOOLEAN:
-            if not lean:
-                proj.append(F.xxhash64(F.coalesce(c, F.lit(False))).alias(f"_h{i}"))
-        elif _is_fast_temporal(a):
-            lo, hi = _temporal_bounds(a)
-            in_range = c.between(lo, hi)
-            if not lean:
-                proj.append(c.alias(f"_c{i}"))
-                proj.append(in_range.alias(f"_r{i}"))
-                proj.append(F.xxhash64(c).alias(f"_h{i}"))
-            proj.append(
-                F.when(c.isNull(), 0)
-                .when(in_range, _temporal_len_arith(a))
-                .otherwise(F.length(c.cast("string")))
-                .cast("int")
-                .alias(f"_l{i}")
-            )
-        else:
-            # strings, arrays, binary, non-fast temporal: generic
-            # string-form path (projected ONCE — the generator gets no
-            # subexpression elimination)
-            proj.append(_value_expr(a).alias(f"_v{i}"))
-            if a.kind in (KIND_ARRAY, KIND_BINARY):
-                proj.append(_len_expr(a).cast("int").alias(f"_l{i}"))
-        per_attr.append(p)
-    base = df.select(*proj)
+                # strings, arrays, binary, timestamp_ntz: the canonical
+                # string form
+                v = _value_expr(a)
+                length = _len_expr(a).cast("int")
+                f["vhash"] = (f"_h{i}", {f"_h{i}": F.xxhash64(v)})
+                f["value"] = (f"substring(_v{i}, 1, {_SLIM_VALUE_CAP})", {f"_v{i}": v})
+                if a.kind == KIND_STRING:
+                    f["uni"] = (f"_u{i}", {f"_u{i}": (F.octet_length(v) != length).cast("int")})
+                if a.kind in (KIND_STRING, KIND_BINARY):
+                    gate = (length <= 40) & v.rlike("^[0-9+\\-.]")
+                    f["v"] = (f"_d{i}", {f"_d{i}": F.when(gate, v.try_cast("double"))})
+                    pat = map_pattern(F.substring(v, 1, params.pattern_len))
+                    f["fpat"] = (f"_p{i}", {f"_p{i}": F.when(gate, pat)})
+            f["len"] = (f"_l{i}", {f"_l{i}": length})
+            f["fil"] = (f"CAST(_l{i} > 0 AS INT)", {})
+        # the hash of filled values only: an imperative aggregate's
+        # input is evaluated per row without code generation
+        f["vhash"] = (f"IF({f['fil'][0]} = 1, {f['vhash'][0]}, NULL)", f["vhash"][1])
+        fields = []
+        projected: dict[str, Column] = {}
+        for n, t in _MELT_FIELDS:
+            sql, cols = f[n] if need[n] and n in f else (f"CAST(NULL AS {t})", {})
+            fields.append(f"'{n}', {sql}")
+            projected.update(cols)
+        proj += [e.alias(n) for n, e in projected.items()]
+        name = a.name.replace("\\", "\\\\").replace("'", "\\'")
+        structs.append(f"named_struct('attribute', '{name}', {', '.join(fields)})")
+    keep = [] if part is None else ["_part"]
+    return df.select(*proj).select(
+        *keep, F.expr(f"inline(array({', '.join(structs)}))")
+    )
 
-    null_s = F.lit(None).cast("string")
-    null_i = F.lit(None).cast("int")
-    null_h = F.lit(None).cast("bigint")
-    structs = []
-    for i, p in enumerate(per_attr):
-        a = p["attr"]
-        if lean:
-            # len + fil only — value/vhash/uni stay NULL
-            if a.kind == KIND_NUMERIC:
-                ln = (
-                    F.length(F.col(f"_v{i}")).cast("int")
-                    if p.get("float_form")
-                    else F.col(f"_l{i}")
-                )
-                s = (null_s, ln, null_h, null_i, F.col(f"_f{i}"))
-            elif a.kind == KIND_BOOLEAN:
-                s = (null_s, F.lit(1).cast("int"), null_h, null_i,
-                     F.lit(1).cast("int"))
-            elif _is_fast_temporal(a):
-                s = (null_s, F.col(f"_l{i}"), null_h, null_i, null_i)
-            else:
-                ln = (
-                    F.col(f"_l{i}")
-                    if a.kind in (KIND_ARRAY, KIND_BINARY)
-                    else F.length(F.col(f"_v{i}")).cast("int")
-                )
-                s = (null_s, ln, null_h, null_i, null_i)
-            structs.append(
-                F.struct(
-                    F.lit(a.name).alias("attribute"),
-                    s[0].alias("value"),
-                    s[1].alias("len"),
-                    s[2].alias("vhash"),
-                    s[3].alias("uni"),
-                    s[4].alias("fil"),
-                )
-            )
-            continue
-        if a.kind == KIND_NUMERIC:
-            cn = F.col(f"_c{i}")
-            h = F.col(f"_h{i}")
-            fil = F.col(f"_f{i}")
-            if p.get("float_form"):
-                v = F.col(f"_v{i}")
-                value = F.when(F.pmod(h, F.lit(_PAT_SAMPLE_MOD)) == 0, v)
-                ln = F.length(v).cast("int")
-            else:
-                # string form only on the pattern-cardinality sample
-                # (same predicate as pass-1's `sampled` gate on vhash)
-                value = F.when(F.pmod(h, F.lit(_PAT_SAMPLE_MOD)) == 0, cn.cast("string"))
-                ln = F.col(f"_l{i}")
-            s = (value, ln, h, null_i, fil)
-        elif a.kind == KIND_BOOLEAN:
-            s = (null_s, F.lit(1).cast("int"), F.col(f"_h{i}"), null_i,
-                 F.lit(1).cast("int"))
-        elif _is_fast_temporal(a):
-            cn = F.col(f"_c{i}")
-            value = F.when(cn.isNotNull() & ~F.col(f"_r{i}"), cn.cast("string"))
-            s = (value, F.col(f"_l{i}"), F.col(f"_h{i}"), null_i, null_i)
-        else:
-            v = F.col(f"_v{i}")
-            if a.kind in (KIND_ARRAY, KIND_BINARY):
-                ln = F.col(f"_l{i}")
-            else:
-                ln = F.length(v).cast("int")
-            uni = (
-                (F.octet_length(v) != ln).cast("int")
-                if a.kind == KIND_STRING
-                else null_i
-            )
-            s = (F.substring(v, 1, _SLIM_VALUE_CAP), ln, F.xxhash64(v), uni,
-                 null_i)
-        structs.append(
-            F.struct(
-                F.lit(a.name).alias("attribute"),
-                s[0].alias("value"),
-                s[1].alias("len"),
-                s[2].alias("vhash"),
-                s[3].alias("uni"),
-                s[4].alias("fil"),
-            )
+
+def fold_aggs() -> list[Column]:
+    """The profile fold of :func:`melt_slim` rows: the ``STATE_SCHEMA``
+    fold columns of ``incremental.py``, each a built-in aggregate that
+    merges associatively (see its module docstring), so one fold serves
+    the approx pass 1 (grouped by attribute) and the mergeable states
+    (grouped by partition and attribute).  :func:`finish_fold` turns
+    the columns into profile statistics, merged or not."""
+    filled = F.col("fil") == 1
+    ln = F.when(filled, F.col("len"))
+    v = F.col("v")
+    fpat = F.col("fpat")
+    # per-row AND-fold of type flags (Profile.ecl:967-992); a filled
+    # value with no flag pattern is AS_IS (0)
+    flag = F.when(filled, F.when(fpat.isNull(), F.lit(besttype.AS_IS)).otherwise(
+        besttype.type_flag(fpat, treat_as_is=False)
+    ))
+    return [
+        F.count(F.lit(1)).alias("rec_count"),
+        F.coalesce(F.sum("fil"), F.lit(0)).cast("long").alias("fill_count"),
+        F.min(ln).alias("min_length"),
+        F.max(ln).alias("max_length"),
+        F.sum(ln).cast("long").alias("len_sum"),
+        F.min(F.when(ln > 0, ln)).alias("min_len_nonzero"),
+        F.max(F.when(filled, F.col("uni"))).alias("has_unicode"),
+        F.bit_and(flag).alias("type_flags"),
+        # DataSketches HLL, lgK 14, ~0.8% RSE (documented deviation:
+        # the reference is exact), fed the 64-bit value hash
+        F.hll_sketch_agg("vhash", LG_CONFIG_K).alias("card_sketch"),
+        F.count(v).alias("num_n"),
+        F.sum(v).alias("num_sum"),
+        F.sum(v * v).alias("num_sumsq"),
+        F.min(v).alias("num_min"),
+        F.max(v).alias("num_max"),
+    ]
+
+
+def _type_stats(kind: Column, given: Column, flags: bool = True) -> dict[str, Column]:
+    """Best type + is_numeric (Profile.ecl:1002-1023) and fill_rate
+    (Profile.ecl:1488-1489) from the fold columns (``type_flags``,
+    ``max_length``, ``min_len_nonzero``, ``has_unicode``,
+    ``fill_count``, ``rec_count``).  Without ``flags`` the best type is
+    the given type."""
+    if flags:
+        type_flags = F.coalesce(F.col("type_flags"), F.lit(0))
+        best = besttype.best_type_by_kind(
+            kind=kind,
+            given_type=given,
+            fill_count=F.col("fill_count"),
+            flags=type_flags,
+            max_len=F.coalesce(F.col("max_length"), F.lit(0)),
+            min_len_nonzero=F.coalesce(F.col("min_len_nonzero"), F.lit(0)),
+            is_unicode=F.coalesce(F.col("has_unicode"), F.lit(0)) == 1,
         )
-    return base.select(F.inline(F.array(*structs)))
+        numeric_bits = besttype.SIGNED | besttype.UNSIGNED | besttype.FLOAT | besttype.EXP
+        is_num = F.coalesce(
+            (kind == KIND_NUMERIC)
+            | (
+                (kind == KIND_STRING)
+                & (type_flags.bitwiseAND(F.lit(numeric_bits)) != 0)
+                & (F.col("fill_count") > 0)
+            ),
+            F.lit(False),
+        )
+    else:
+        best = given
+        is_num = kind == KIND_NUMERIC
+    return {
+        "best_attribute_type": best,
+        "is_numeric": is_num,
+        "fill_rate": F.when(
+            F.col("rec_count") > 0,
+            F.round(F.col("fill_count") / F.col("rec_count") * 100, 6),
+        ).otherwise(F.lit(0.0)),
+    }
+
+
+def finish_fold(kind: Column, given: Column) -> dict[str, Column]:
+    """Profile statistics from the :func:`fold_aggs` columns, by output
+    name, in ``merge_states``' column order: best type, fill rate,
+    average length, cardinality (the sketch's estimate), and exact
+    min/max/mean/population std-dev (Profile.ecl:1083-1086) of ``v``.
+    ``kind`` and ``given`` are each row's attribute kind and given
+    type."""
+    t = _type_stats(kind, given)
+    n = F.col("num_n")
+    mean = F.col("num_sum") / n
+    var = F.greatest(F.col("num_sumsq") / n - mean * mean, F.lit(0.0))
+    return {
+        "best_attribute_type": t["best_attribute_type"],
+        "rec_count": F.col("rec_count"),
+        "fill_count": F.col("fill_count"),
+        "fill_rate": t["fill_rate"],
+        "cardinality": F.coalesce(F.hll_sketch_estimate("card_sketch"), F.lit(0)),
+        "min_length": F.coalesce(F.col("min_length"), F.lit(0)),
+        "max_length": F.coalesce(F.col("max_length"), F.lit(0)),
+        "ave_length": F.when(
+            F.col("fill_count") > 0, F.floor(F.col("len_sum") / F.col("fill_count"))
+        ).otherwise(F.lit(0)).cast("long"),
+        "numeric_min": F.when(n > 0, F.round(F.col("num_min"), 4)),
+        "numeric_max": F.when(n > 0, F.round(F.col("num_max"), 4)),
+        "numeric_mean": F.when(n > 0, F.round(mean, 4)),
+        "numeric_std_dev": F.when(n > 0, F.round(F.sqrt(var), 4)),
+        "is_numeric": t["is_numeric"],
+    }
 
 
 def _filled_expr(attrs: list[AttrInfo], allow_zero: bool) -> Column:
@@ -780,14 +852,14 @@ def _profile_flat(
             )
         return out
 
-    need_pattern = params.need_flags or (params.has("patterns") and params.max_patterns > 0)
+    need_pattern = params.need_flags or params.need_patterns
     # fill/lengths/type-folds are exact either way; the distinct-value
     # histogram only pays off when some stat genuinely groups by value
     needs_value_grouping = (
         params.has("cardinality")
         or (params.has("cardinality_breakdown") and params.lcb_limit > 0)
         or params.has("modes")
-        or (params.has("patterns") and params.max_patterns > 0)
+        or params.need_patterns
         or params.need_numeric
     )
 
@@ -817,8 +889,8 @@ def _profile_flat(
         # the approx pass-1 rides; len/fil are exact there too) — the
         # full melt would format every value per row just to measure it
         stats_src = (
-            melt_slim(df, attrs, params.allow_zero, lean=True)
-            .withColumn("filled", F.coalesce(F.col("fil") == 1, F.col("len") > 0))
+            melt_slim(df, attrs, params)
+            .withColumn("filled", F.col("fil") == 1)
             .withColumn("cnt", F.lit(1))
         )
 
@@ -849,7 +921,7 @@ def _profile_flat(
                 "type_flags"
             ),
             F.coalesce(F.max(F.when(filled, F.col("is_uni").cast("int"))), F.lit(0)).alias(
-                "_uni"
+                "has_unicode"
             ),
         ]
     if params.need_cardinality:
@@ -866,7 +938,7 @@ def _profile_flat(
         "ave_length": 0,
         "type_flags": 0,
         "min_len_nonzero": 0,
-        "_uni": 0,
+        "has_unicode": 0,
         "cardinality": 0,
     }
     # meta.attribute carries the (possibly child-dataset-prefixed) full
@@ -876,7 +948,9 @@ def _profile_flat(
     ).na.fill({k: v for k, v in fill_defaults.items() if k in summary.columns or k in ("rec_count",)})
 
     # --- best type + is_numeric per attribute (Profile.ecl:1002-1023) ---
-    base = _attach_best_type(base, params)
+    base = base.withColumns(
+        _type_stats(F.col("_kind"), F.col("given_attribute_type"), params.need_flags)
+    )
     # base is one tiny row per attribute but costs a full input pass;
     # numeric-attr selection, low-card gating and the final assembly
     # all reuse it (see hist note)
@@ -917,7 +991,7 @@ def _profile_flat(
             pieces.append(_lcb_piece(vh, low_attrs, name_prefix))
 
     # --- popular / rare text patterns (A8 + J3) ---
-    if params.has("patterns") and params.max_patterns > 0:
+    if params.need_patterns:
         # checkpointed: the top-k, bottom-k and anti-join branches
         # would otherwise each recompute the melt + pattern
         # aggregation.  localCheckpoint, not persist — see
@@ -947,48 +1021,6 @@ def _profile_flat(
         out = out.join(p, "attribute", "left")
 
     return _shape_output(out, params)
-
-
-def _attach_best_type(base: DataFrame, params: ProfileParams) -> DataFrame:
-    """Best type + is_numeric per attribute (Profile.ecl:1002-1023) and
-    fill_rate (Profile.ecl:1488-1489), from the per-attribute fold
-    columns (type_flags, lengths, _uni, fill_count) and each row's
-    ``_kind`` and ``given_attribute_type``."""
-    kind = F.col("_kind")
-    given = F.col("given_attribute_type")
-    if params.need_flags:
-        best = besttype.best_type_by_kind(
-            kind=kind,
-            given_type=given,
-            fill_count=F.col("fill_count"),
-            flags=F.col("type_flags"),
-            max_len=F.col("max_length"),
-            min_len_nonzero=F.col("min_len_nonzero"),
-            is_unicode=F.col("_uni") == 1,
-        )
-        numeric_bits = besttype.SIGNED | besttype.UNSIGNED | besttype.FLOAT | besttype.EXP
-        is_num = F.coalesce(
-            (kind == KIND_NUMERIC)
-            | (
-                (kind == KIND_STRING)
-                & (F.col("type_flags").bitwiseAND(F.lit(numeric_bits)) != 0)
-                & (F.col("fill_count") > 0)
-            ),
-            F.lit(False),
-        )
-    else:
-        best = given
-        is_num = kind == KIND_NUMERIC
-    return base.withColumns(
-        {
-            "best_attribute_type": best,
-            "is_numeric": is_num,
-            "fill_rate": F.when(
-                F.col("rec_count") > 0,
-                F.round(F.col("fill_count") / F.col("rec_count") * 100, 6),
-            ).otherwise(F.lit(0.0)),
-        }
-    )
 
 
 def _modes_piece(vh: DataFrame, name_prefix: str) -> DataFrame:
@@ -1209,20 +1241,25 @@ def _light_pattern_hist(
     df: DataFrame, attrs: list[AttrInfo], allow_zero: bool, plen: int
 ) -> DataFrame:
     """``(attribute, data_pattern, rec_count, example)`` exact pattern
-    histogram for bounded-pattern-space attributes — per-attribute
-    direct branches instead of one melted scan (same shuffle volume,
-    no Generate copy of every row, column-pruned scans per branch).
+    histogram for bounded-pattern-space attributes — one aggregate
+    branch per attribute instead of one melted scan (same shuffle
+    volume, no Generate copy of every row, column-pruned scans per
+    branch).
 
     Timestamp/date attributes take an arithmetic fast path: the
-    finished pattern of a temporal rendering is a pure function of its
-    LENGTH (every char is a digit -> '9' or a literal separator), so
-    the branch aggregates on :func:`_temporal_len_arith` — no per-row
-    formatting or pattern mapping — derives the pattern from the
-    template, and renders the example from ``min(native)`` per group
-    (within one rendered length, ISO strings order chronologically, so
-    ``min(render) == render(min)``).  Rows outside the 4-digit-year
-    range take a formatted fallback branch whose native-column filter
-    is parquet-stats prunable (zero scan cost in practice)."""
+    finished pattern of a temporal rendering with a 4-digit year is a
+    pure function of its LENGTH (every char is a digit -> '9' or a
+    literal separator), so in-range rows group on that length
+    (:func:`_temporal_len_arith`; an int key hashes cheaper than the
+    pattern) with no per-row formatting or pattern mapping.  Only rows
+    outside the range are formatted and mapped, in the same aggregate:
+    one whose pattern is a template prefix joins that length's group,
+    any other groups on its pattern.  The example is the rendered
+    ``min(native)`` of the group: renderings of one pattern have one
+    length and layout, so for every year from 0000 up they order
+    chronologically and ``min(render) == render(min)``.  A string
+    ``min`` would also hold for negative years, but its buffer makes
+    Spark sort every row instead of hashing it."""
     cnt = F.count(F.lit(1)).alias("rec_count")
     branches = []
     for a in attrs:
@@ -1231,23 +1268,27 @@ def _light_pattern_hist(
         if _is_fast_temporal(a):
             lo, hi = _temporal_bounds(a)
             in_range = c.between(lo, hi)
+            pat = map_pattern_finished(
+                F.substring(F.when(~in_range, _value_expr(a)), 1, plen)
+            )
+            tlen = F.when(in_range, _temporal_len_arith(a)).when(
+                pat == F.substring(F.lit(_TS_TEMPLATE), F.lit(1), F.length(pat)),
+                F.length(pat),
+            )
+            template = F.substring(F.lit(_TS_TEMPLATE), F.lit(1), F.col("_l"))
             branches.append(
-                df.filter(c.isNotNull() & in_range)
-                .groupBy(_temporal_len_arith(a).cast("int").alias("_l"))
+                df.filter(c.isNotNull())
+                .groupBy(tlen.alias("_l"), F.when(tlen.isNull(), pat).alias("_p"))
                 .agg(cnt, F.min(c).alias("_m"))
                 .select(
                     alit,
-                    F.substring(
-                        F.lit(_TS_TEMPLATE), F.lit(1), F.col("_l")
-                    ).alias("data_pattern"),
+                    F.coalesce(template, F.col("_p")).alias("data_pattern"),
                     "rec_count",
                     F.substring(F.col("_m").cast("string"), 1, plen).alias("example"),
                 )
             )
-            src = df.filter(c.isNotNull() & ~in_range).select(
-                _value_expr(a).alias("value")
-            )
-        elif a.kind == KIND_NUMERIC:
+            continue
+        if a.kind == KIND_NUMERIC:
             filt = (
                 c.isNotNull()
                 if allow_zero
@@ -1523,8 +1564,7 @@ def _unfilled_base_row(a: AttrInfo, name_prefix: str, sort_prefix: str) -> dict:
     emits none): zero counts, the given type, no numeric stats."""
     zero = (
         "rec_count", "fill_count", "min_length", "max_length", "ave_length",
-        "min_len_nonzero", "type_flags", "_uni", "cardinality",
-        "_pat_card_short", "_n_long",
+        "cardinality", "_pat_card_short", "_n_long",
     )
     return {
         **_meta_fields(a, name_prefix, sort_prefix),
@@ -1620,7 +1660,7 @@ def _approx_driver_tail(
 
     spark = df.sparkSession
     k = int(params.max_patterns)
-    need_pat_feature = params.has("patterns") and k > 0
+    need_pat_feature = params.need_patterns
     derive_attrs = [a for a in attrs if a.name in derive_names]
 
     vh_plan = vh
@@ -1764,24 +1804,18 @@ def _profile_flat_approx(
        :func:`melt_slim` melt carries at most 48 value chars per row —
        distinctness rides a precomputed 64-bit value hash and the
        non-ASCII probe a precomputed bit, so free-text bytes never
-       enter the explode/aggregate path.  The melt
-       aggregates straight to attribute grain — fill/lengths,
-       DataSketches HLL cardinality (lgK 14), numeric sketch stats
-       (min/max/mean/pop-stddev + ``percentile_approx``), AND the
-       per-attribute type/unicode folds, so no second full pass is
-       needed for them.  The per-row type-flag ladder is gated so it
-       is near-free on real data:
-       values longer than 40 chars cannot match any numeric rule
-       (19/20-digit, 15.15-float, exp — Profile.ecl:908-935) and get
-       flag 0 from a length test alone; a one-regex first-char probe
-       (``[0-9+-.]`` at position 1) zeroes everything non-numeric before
-       the full ladder runs.  The same pass estimates each attribute's
-       *pattern* cardinality (HLL over a 1/16-sampled short-value pattern +
-       count of long values) to drive step 2's plan choice.  Attribute
-       metadata comes from a literal map (:func:`_attr_meta`) and the
-       best type from the kind-keyed ladder, so pass 1 is one aggregate
-       and its collect.  Given-numeric attributes' sketch stats come
-       from ``num_direct``, a column-pruned aggregate run concurrently.
+       enter the explode/aggregate path.  It aggregates straight to
+       attribute grain with the profile fold the mergeable states use
+       (:func:`fold_aggs`: fill/lengths, DataSketches HLL cardinality,
+       the type/unicode folds and the moments of the numeric reading,
+       native for given-numeric attributes), plus two one-shot columns:
+       GK ``percentile_approx`` quartiles, and each attribute's
+       *pattern* cardinality (HLL over a 1/16-sampled short-value
+       pattern + count of long values) to drive step 2's plan choice.
+       :func:`finish_fold` turns the fold into statistics, as
+       ``merge_states`` does.  Attribute metadata comes from a literal
+       map (:func:`_attr_meta`), so pass 1 is one aggregate and its
+       collect.
     2. **patterns, split by pattern-space size** (driver decision from
        pass-1 estimates, mirroring the reference's own lcbLimit gating
        idea, Profile.ecl:178-183): low-card attributes re-aggregate
@@ -1804,9 +1838,8 @@ def _profile_flat_approx(
     phase                       jobs
     ==========================  ====
     ``profile.pass1``           2
-    ``profile.num_direct``      2
     ``profile.vh``              2
-    ``profile.light_patterns``  4 (text, and ts in and out of range)
+    ``profile.light_patterns``  3 (one branch each for text and ts)
     caller's ``collect``        0
     ==========================  ====
 
@@ -1817,24 +1850,14 @@ def _profile_flat_approx(
     candidate-merged (see :func:`_heavy_pattern_candidates`).
     """
     plen = params.pattern_len
-    as_is_attrs = [
-        a.name for a in attrs if a.kind in (KIND_NUMERIC, KIND_BOOLEAN, KIND_ARRAY)
-    ]
-    att = F.col("attribute")
-    filled = F.col("filled")
-    short = F.col("len") <= 40
-    need_pat_feature = params.has("patterns") and params.max_patterns > 0
+    need_pat_feature = params.need_patterns
 
-    # ---- pass 1: one full-width melt -> attribute-grain aggregate ----
+    # ---- pass 1: one full-width melt -> attribute-grain fold ----
     # NOTE: a "one wide aggregate over the unmelted frame" variant was
     # A/B-tested in round 1 and is 11-14x SLOWER (drops out of
     # whole-stage codegen); the melt keeps row-shaping in codegen.
-    # Per-kind filled/value/hash work happens inside melt_slim's fast
-    # paths (the `fil` bit carries numeric/boolean filled semantics).
-    tfast = [a.name for a in attrs if _is_fast_temporal(a)]
-    m1 = melt_slim(df, attrs, params.allow_zero).withColumn(
-        "filled", F.coalesce(F.col("fil") == 1, F.col("len") > 0)
-    )
+    m1 = melt_slim(df, attrs, params)
+    extra = []
     if need_pat_feature:
         # pattern-cardinality estimate from a 1/16 deterministic hash
         # sample: a distinct-in-sample count estimates min(true pattern
@@ -1844,192 +1867,52 @@ def _profile_flat_approx(
         # histogram is the right plan anyway and misclassification only
         # picks the other (still correct) path.  Sampling keeps the
         # pattern mapping off 15/16 of the pass-1 rows (measured ~11s
-        # of pass-1 wall at local[16] on 19M turns).  Fast-temporal
-        # attributes (value is NULL in the slim melt) estimate from the
-        # length-template FINISHED pattern — what the follow-up
-        # histogram actually groups on, and a tiny space by
+        # of pass-1 wall at local[16] on 19M turns).  In-range
+        # timestamp/date rows (value is NULL in the slim melt) estimate
+        # from the length-template FINISHED pattern — what the
+        # follow-up histogram groups on, and a tiny space by
         # construction, so they always classify light.
+        filled = F.col("fil") == 1
+        short = F.col("len") <= 40
         sampled = F.pmod(F.col("vhash"), F.lit(_PAT_SAMPLE_MOD)) == 0
         pat_sample = _pattern_expr(attrs, plen)
+        tfast = [a.name for a in attrs if _is_fast_temporal(a)]
         if tfast:
             pat_sample = F.when(
-                att.isin(tfast) & F.col("value").isNull(),
+                F.col("attribute").isin(tfast) & F.col("value").isNull(),
                 F.substring(F.lit(_TS_TEMPLATE), F.lit(1), F.col("len")),
             ).otherwise(pat_sample)
-        m1 = m1.withColumn(
-            "_pat_s", F.when(filled & short & sampled, pat_sample)
-        )
-    if params.need_flags:
-        # flag-ladder pattern, gated to numeric-looking short values
-        # (length test + one first-char regex) and projected ONCE per
-        # row — inlining it into type_flag's CaseWhen would re-derive
-        # it in every rlike branch (no CSE across conditional branches)
-        gate = (
-            filled
-            & short
-            & ~(att.isin(as_is_attrs) if as_is_attrs else F.lit(False))
-            & F.col("value").rlike("^[0-9+\\-.]")
-        )
-        m1 = m1.withColumn("_pat_f", F.when(gate, _pattern_expr(attrs, plen)))
-    if params.need_numeric:
-        # These buffers serve STRING values that parse as numbers (the
-        # reference profiles numeric-content strings numerically);
-        # given-numeric attributes take the direct column-pruned
-        # aggregation below instead (their melted value is NULL except
-        # the 1/16 pattern sample, so their buffer updates here are the
-        # cheap null path).  Len guard: no numeric-flaggable value
-        # exceeds ~33 chars, so long text never pays a parse attempt.
-        # First-char gate: a castable value must start [0-9+-.] (ECL's
-        # numeric lattice admits nothing else — "NaN"/"Infinity" are
-        # not best-type numeric, Profile.ecl:908-935), keeping the JVM
-        # double-parse off every non-numeric token (measured ~15s of
-        # pass-1 wall at local[16] on 19M turns).
-        m1 = m1.withColumn(
-            "v",
-            F.when(
-                filled & short & F.col("value").rlike("^[0-9+\\-.]"),
-                F.expr("try_cast(value AS double)"),
+        # projected before the aggregate: an imperative aggregate's
+        # input is evaluated per row without code generation
+        m1 = m1.withColumn("_pat_s", F.when(filled & short & sampled, pat_sample))
+        extra += [
+            F.hll_sketch_estimate(F.hll_sketch_agg("_pat_s", LG_CONFIG_K)).alias(
+                "_pat_card_short"
             ),
-        )
-    agg_exprs = [
-        F.count(F.lit(1)).alias("rec_count"),
-        F.coalesce(F.sum(F.when(filled, 1)), F.lit(0)).alias("fill_count"),
-    ]
-    if params.need_lengths:
-        agg_exprs += [
-            F.coalesce(F.min(F.when(filled, F.col("len"))), F.lit(0)).alias("min_length"),
-            F.coalesce(F.max(F.when(filled, F.col("len"))), F.lit(0)).alias("max_length"),
-            F.coalesce(
-                F.floor(
-                    F.sum(F.when(filled, F.col("len"))) / F.sum(F.when(filled, 1))
-                ),
-                F.lit(0),
-            ).alias("ave_length"),
-            F.coalesce(
-                F.min(F.when(filled & (F.col("len") > 0), F.col("len"))), F.lit(0)
-            ).alias("min_len_nonzero"),
-        ]
-    if params.need_cardinality:
-        # DataSketches HLL, lgK 14, ~0.8% RSE (documented deviation:
-        # reference is exact) — the sketch profile_state stores; fed
-        # the 64-bit value hash, not the value — identical estimate
-        # (see melt_slim)
-        agg_exprs.append(
-            F.hll_sketch_estimate(
-                F.hll_sketch_agg(F.when(filled, F.col("vhash")), LG_CONFIG_K)
-            ).alias("cardinality")
-        )
-    if params.need_flags:
-        # per-row AND/OR folds (Profile.ecl:967-992), gated as per the
-        # docstring so the regex ladder runs only on numeric-looking
-        # short values
-        flag = (
-            F.when(~filled, F.lit(None).cast("int"))
-            .when(
-                att.isin(as_is_attrs) if as_is_attrs else F.lit(False),
-                F.lit(besttype.AS_IS),
-            )
-            .when(F.col("_pat_f").isNull(), F.lit(0))
-            .otherwise(besttype.type_flag(F.col("_pat_f"), treat_as_is=False))
-        )
-        is_uni = F.when(filled, F.col("uni"))  # precomputed in melt_slim
-        agg_exprs += [
-            F.coalesce(F.bit_and(flag), F.lit(0)).alias("type_flags"),
-            F.coalesce(F.max(is_uni), F.lit(0)).alias("_uni"),
-        ]
-    if need_pat_feature:
-        agg_exprs += [
-            F.hll_sketch_estimate(
-                F.hll_sketch_agg(F.col("_pat_s"), LG_CONFIG_K)
-            ).alias("_pat_card_short"),
             F.coalesce(F.sum(F.when(filled & ~short, 1)), F.lit(0)).alias("_n_long"),
         ]
     if params.need_numeric:
-        agg_exprs += [
-            F.round(F.min("v"), 4).alias("numeric_min"),
-            F.round(F.max("v"), 4).alias("numeric_max"),
-            F.round(F.avg("v"), 4).alias("numeric_mean"),
-            F.round(
-                F.sqrt(F.avg(F.col("v") * F.col("v")) - F.avg("v") * F.avg("v")), 4
-            ).alias("numeric_std_dev"),
-            F.percentile_approx("v", [0.25, 0.5, 0.75], 10_000).alias("_q"),
-        ]
-    summary = m1.groupBy("attribute").agg(*agg_exprs)
-    if params.need_numeric:
-        summary = summary.withColumns(
-            {
-                "numeric_lower_quartile": F.round(F.col("_q")[0], 4),
-                "numeric_median": F.round(F.col("_q")[1], 4),
-                "numeric_upper_quartile": F.round(F.col("_q")[2], 4),
-            }
-        ).drop("_q")
+        # GK quartiles: the one-shot's accuracy contract (the stored
+        # states use a mergeable KLL sketch instead)
+        extra.append(F.percentile_approx("v", [0.25, 0.5, 0.75], 10_000).alias("_q"))
+    summary = m1.groupBy("attribute").agg(*fold_aggs(), *extra)
 
     # ---- pass-1 rows (one per attribute), metadata from a literal map ----
     meta = _attr_meta(attrs, name_prefix, sort_prefix)
+    stats = finish_fold(meta["_kind"], meta["given_attribute_type"])
+    if params.need_numeric:
+        stats.update(
+            {name: F.round(F.col("_q")[i], 4) for i, name in enumerate(_NUMERIC_STATS[4:])}
+        )
+    # numeric stats are folded for every numeric reading; only
+    # attributes judged numeric by the type fold report them
+    is_num = stats["is_numeric"]
     base = summary.select(
         *[meta[c].alias(c) for c in ("attribute", "given_attribute_type", "_kind", "sort_value")],
         F.col("attribute").alias("_local_name"),
-        *[c for c in summary.columns if c != "attribute"],
+        *[(F.when(is_num, e) if c in _NUMERIC_STATS else e).alias(c) for c, e in stats.items()],
+        *[F.col(c) for c in ("_pat_card_short", "_n_long") if need_pat_feature],
     )
-    base = _attach_best_type(base, params)
-    if params.need_numeric:
-        # sketch stats were computed for every castable value; only
-        # attributes judged numeric by the type fold report them
-        base = base.withColumns(
-            {c: F.when(F.col("is_numeric"), F.col(c)) for c in _NUMERIC_STATS}
-        )
-    # Given-numeric attributes' sketch stats come from a DIRECT
-    # column-pruned aggregation over the native values — identical
-    # results to try_cast of the decimal rendering, but the melt's
-    # numeric aggregate buffers never see their 38M-per-column updates
-    # (measured: min/max/avg/var + percentile buffer updates were ~8s
-    # of pass-1 wall at local[16] on 38.5M turns).  One row out; runs
-    # CONCURRENTLY with pass 1.
-    num_names: set[str] = set()
-    jobs = {"pass1": base.collect}
-    if params.need_numeric:
-        num_attrs = [a for a in attrs if a.kind == KIND_NUMERIC]
-        num_names = {a.name for a in num_attrs}
-        if num_attrs:
-            naggs = []
-            for a in num_attrs:
-                c = F.col(a.name).cast("double")
-                fil_a = (
-                    F.col(a.name).isNotNull()
-                    if params.allow_zero
-                    else (F.col(a.name).isNotNull() & (c != 0))
-                )
-                nv = F.when(fil_a, c)
-                pre = a.name + "||"
-                naggs += [
-                    F.min(nv).alias(pre + "mn"),
-                    F.max(nv).alias(pre + "mx"),
-                    F.avg(nv).alias(pre + "av"),
-                    F.sqrt(F.avg(nv * nv) - F.avg(nv) * F.avg(nv)).alias(pre + "sd"),
-                    F.percentile_approx(nv, [0.25, 0.5, 0.75], 10_000).alias(
-                        pre + "q"
-                    ),
-                ]
-            # rounding in a wrapper select so Spark's ROUND semantics
-            # match the melt-side F.round exactly
-            rounded = []
-            for a in num_attrs:
-                pre = a.name + "||"
-                rounded += [
-                    F.round(F.col(f"`{pre}mn`"), 4).alias(pre + "numeric_min"),
-                    F.round(F.col(f"`{pre}mx`"), 4).alias(pre + "numeric_max"),
-                    F.round(F.col(f"`{pre}av`"), 4).alias(pre + "numeric_mean"),
-                    F.round(F.col(f"`{pre}sd`"), 4).alias(pre + "numeric_std_dev"),
-                    F.round(F.col(f"`{pre}q`")[0], 4).alias(
-                        pre + "numeric_lower_quartile"
-                    ),
-                    F.round(F.col(f"`{pre}q`")[1], 4).alias(pre + "numeric_median"),
-                    F.round(F.col(f"`{pre}q`")[2], 4).alias(
-                        pre + "numeric_upper_quartile"
-                    ),
-                ]
-            num_direct = df.agg(*naggs).select(*rounded)
-            jobs["num_direct"] = lambda: num_direct.collect()[0]
 
     # NOTE: launching the heavy path's candidate-sample job here,
     # speculatively concurrent with pass 1 (it depends on pass 1 only
@@ -2043,19 +1926,12 @@ def _profile_flat_approx(
     # ONE driver-side collect materializes the whole pass-1 result (one
     # tiny row per attribute) AND gates the follow-up passes.  An
     # attribute has no row only when the input has none.
-    got = _run_jobs(df.sparkSession, jobs)
+    got = _run_jobs(df.sparkSession, {"pass1": base.collect})
     by_name = {r["_local_name"]: r.asDict() for r in got["pass1"]}
-    num_row = got.get("num_direct")
-    base_rows = []
-    for a in attrs:
-        r = by_name.get(a.name) or _unfilled_base_row(a, name_prefix, sort_prefix)
-        if num_row is not None and a.name in num_names and r["is_numeric"]:
-            # the is_numeric gate already nulled non-numeric attrs'
-            # stats; given-numeric attrs judged numeric get the direct
-            # values (identical by construction to the melt-side path)
-            for st in _NUMERIC_STATS:
-                r[st] = num_row[a.name + "||" + st]
-        base_rows.append(r)
+    base_rows = [
+        by_name.get(a.name) or _unfilled_base_row(a, name_prefix, sort_prefix)
+        for a in attrs
+    ]
 
     need_vh = params.has("modes") or (
         params.has("cardinality_breakdown") and params.lcb_limit > 0
@@ -2154,8 +2030,10 @@ def _exact_numeric_stats(hnum: DataFrame) -> DataFrame:
     needs a deterministic-boundary job that made it ~20% slower than
     the window at bench scale.  Exact mode is the documented
     golden-parity/test-scale path; the 10^12-row path is approx mode's
-    mergeable ``percentile_approx`` sketch, which has no per-attribute
-    serialization."""
+    one-pass GK ``percentile_approx`` sketch, which has no
+    per-attribute serialization.  That sketch is neither stored nor
+    merged: only the incremental states' KLL sketch
+    (``profile_state(quantile_delta=)``) is."""
     w_cum = (
         Window.partitionBy("attribute")
         .orderBy("v")

@@ -202,6 +202,33 @@ def test_flat_layout_refused(spark, tmp_path, writer):
     assert sorted(os.listdir(f"{out}/{sub}")) == files
 
 
+def test_store_without_format_marker_refused(spark, tmp_path):
+    """A state store written before timestamp/date sketches hashed the
+    native value has no state_format column; resuming over a grown
+    table refuses it with a message naming a fresh state_path, before
+    anything is swept or appended."""
+    import datetime as dt
+
+    rows = [
+        (p, i, dt.datetime(2024, 1, 1) + dt.timedelta(minutes=i))
+        for p in ("0", "1", "2")
+        for i in range(3)
+    ]
+    df = spark.createDataFrame(rows, "part string, n int, ts timestamp")
+    out = str(tmp_path / "old")
+    profile_incremental(df.filter("part != '2'"), "part", out)
+    old = str(tmp_path / "old_states")
+    spark.read.parquet(f"{out}/states").drop("state_format").write.partitionBy(
+        "partition"
+    ).parquet(old)
+    shutil.rmtree(f"{out}/states")
+    shutil.move(old, f"{out}/states")
+    files = sorted(os.listdir(f"{out}/states"))
+    with pytest.raises(ValueError, match="state_format.*fresh state_path"):
+        profile_incremental(df, "part", out)
+    assert sorted(os.listdir(f"{out}/states")) == files
+
+
 def test_run_with_manifest_leaves_inference_conf(spark, tmp_path):
     """The verdict read-back keeps "01" and "1" distinct string
     partitions without setting the session-global type-inference conf

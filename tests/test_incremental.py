@@ -87,9 +87,16 @@ def test_cardinality_estimate(fixture_df):
     assert out["f"]["cardinality"] == 4
 
 
-def test_best_type_matches_profile(fixture_df):
+def test_best_type_matches_profile(spark, fixture_df):
     """Merged best_attribute_type == the main profile's on the same
-    data (flags fold is grouping-independent)."""
+    data (flags fold is grouping-independent).  Across every kind, the
+    merged states and the approx profile share one fold and one finish:
+    counts, lengths, best type, cardinality and the numeric moments of
+    attributes judged numeric are equal, timestamps and dates outside
+    the 4-digit-year range included."""
+    import datetime as dt
+    from decimal import Decimal
+
     merged = _by_attr(merge_states(profile_state(fixture_df, "part")))
     prof = {
         r["attribute"]: r["best_attribute_type"]
@@ -97,6 +104,40 @@ def test_best_type_matches_profile(fixture_df):
     }
     for attr in ("s", "n", "f"):
         assert merged[attr]["best_attribute_type"] == prof[attr], attr
+
+    rows = [
+        ("p0", "Dan", 100, 5_000_000_000, 1.5, Decimal("1.50"), True,
+         dt.datetime(2024, 1, 1, 12, 0, 0, 120000), dt.date(2024, 1, 1),
+         ["a", "b"], bytearray(b"10"), "42"),
+        ("p0", " 42 ", -250, -3, None, Decimal("0.00"), None,
+         dt.datetime(9999, 12, 30, 1, 2, 3), dt.date(9999, 12, 30),
+         [], bytearray(b"zz"), " 7.5 "),
+        ("p1", "", 0, 0, 2.25, None, False,
+         dt.datetime(1, 1, 1, 1, 2, 3), dt.date(1, 1, 1), None, None, None),
+        ("p1", "7.5", 7, 12, 0.0, Decimal("-3.25"), True, None, None,
+         ["x"], bytearray(b"3.5"), "-3"),
+        ("p2", "0012", 7, 12, -4.0, Decimal("2.00"), False,
+         dt.datetime(2024, 1, 1, 12, 0, 0), dt.date(2024, 1, 1),
+         ["y", "z", "w"], bytearray(b""), "1.25e-3"),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "part string, s string, i int, b bigint, d double, m decimal(10,2), "
+        "bo boolean, ts timestamp, dd date, arr array<string>, bin binary, "
+        "sn string",
+    )
+    states = _by_attr(merge_states(profile_state(df, "part")))
+    approx = _by_attr(profile(df.drop("part"), mode="approx"))
+    assert set(states) == set(approx) == set(df.columns) - {"part"}
+    shared = (
+        "rec_count", "fill_count", "min_length", "max_length", "ave_length",
+        "best_attribute_type", "cardinality",
+    )
+    moments = ("numeric_min", "numeric_max", "numeric_mean", "numeric_std_dev")
+    for attr, a in approx.items():
+        keys = shared + (moments if a["is_numeric"] else ())
+        assert {k: states[attr][k] for k in keys} == {k: a[k] for k in keys}, attr
+    assert [a for a in approx if approx[a]["is_numeric"]] == ["i", "b", "d", "m", "sn"]
 
 
 def test_unicode_fold(fixture_df):

@@ -262,3 +262,35 @@ def test_sketch_cardinality_matches_exact_and_incremental(spark):
                 assert a == 0, attr
             else:
                 assert abs(a - ref) / ref < 0.02, (attr, ref, a)
+
+
+def test_out_of_range_temporal_patterns_join_their_group(spark):
+    """Timestamp and date rows outside the 4-digit-year fast range have
+    the same finished pattern as the in-range rows of their rendered
+    length: approx mode lists that pattern once, with the count and
+    least example exact mode gives, not once per range."""
+    from pyspark.sql import functions as F
+
+    base = spark.range(20_000).select(
+        F.timestamp_seconds(F.lit(1_600_000_000) + F.col("id") * 61).alias("ts"),
+        F.date_add(F.lit("1990-01-01").cast("date"), F.col("id").cast("int")).alias("d"),
+    )
+    edges = spark.createDataFrame(
+        [("9999-12-30 01:02:03", "9999-12-30"), ("0001-01-01 01:02:03", "0001-01-01")],
+        "ts string, d string",
+    ).select(F.col("ts").cast("timestamp"), F.col("d").cast("date"))
+    df = base.unionByName(edges)
+    feats = ("patterns",)
+    exact = _by_attr(profile(df, features=feats, mode="exact"))
+    approx = _by_attr(profile(df, features=feats, mode="approx"))
+    assert approx["ts"]["popular_patterns"] == [
+        {
+            "data_pattern": "9999-99-99 99:99:99",
+            "rec_count": 20_002,
+            "example": "0001-01-01 01:02:03",
+        }
+    ]
+    assert approx["d"]["popular_patterns"] == [
+        {"data_pattern": "9999-99-99", "rec_count": 20_002, "example": "0001-01-01"}
+    ]
+    assert approx == exact
