@@ -77,20 +77,12 @@ _PATTERN0_SQL = (
     " '123456789', '999999999')"
 )
 
-# NOTE: DuckDB's RE2 does not understand Java's \p{Punct}; POSIX
-# [[:punct:]] is the same ASCII set Spark's \p{Punct} matches.
-_NORM_SQL = (
-    "trim(regexp_replace(regexp_replace(lower(coalesce({v}, '')),"
-    " '[[:punct:]]', ' ', 'g'), '\\s+', ' ', 'g'))"
-)
-
 
 # ---------------------------------------------------------------------------
 # queries
 # ---------------------------------------------------------------------------
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from datapatterns_spark.operators import constraints as C
-    from datapatterns_spark.operators import dedup as D
     from datapatterns_spark.operators.benford import benford
     from datapatterns_spark.operators.cardinality import cardinality
     from datapatterns_spark.operators.profile import profile
@@ -349,9 +341,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return f1.unionByName(f2)
 
-    def q_exact_dedup(spark, sf):
-        return D.dedup_exact(_t(spark, sf, "documents"), "text", "doc_id").select("doc_id")
-
     def q_profile_correlations(spark, sf):
         p = profile(
             _t(spark, sf, "lineitem"),
@@ -453,44 +442,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "o_orderdate",
         )
         return apply_best_types(src)
-
-    def q_dedup_conversations(spark, sf):
-        """Whole-conversation exact dedup over pseudo-conversations
-        built from the documents table (conv = doc_id div 20, turn =
-        doc_id mod 20) with planted clones (every 7th conversation
-        re-labeled +100000).  Fingerprint folds are commutative
-        groupBy aggregates — map-side combinable, hot-conversation
-        safe."""
-        docs = _t(spark, sf, "documents")
-        base = docs.select(
-            F.expr("doc_id div 20").alias("conv_id"),
-            F.expr("doc_id % 20").alias("turn_idx"),
-            "text",
-        )
-        clones = base.filter("conv_id % 7 = 0").withColumn(
-            "conv_id", F.col("conv_id") + 100000
-        )
-        return D.conversation_dedup(base.unionByName(clones))
-
-    def q_dedup_incremental(spark, sf):
-        """Two-batch incremental exact dedup: batch 1 (doc_id < 250)
-        seeds the fingerprint store; batch 2 (the rest, plus every
-        50th batch-1 text re-labeled +10000) classifies against it."""
-        from datapatterns_spark.operators.dedup import incremental_exact_dedup
-
-        docs = _t(spark, sf, "documents").select("doc_id", "text")
-        b1 = docs.filter("doc_id < 250")
-        store = (
-            incremental_exact_dedup(b1, None)
-            .filter("status = 'unique'")
-            .select("fp")
-        )
-        b2 = docs.filter("doc_id >= 250").unionByName(
-            b1.filter("doc_id % 50 = 0").select(
-                (F.col("doc_id") + 10000).alias("doc_id"), "text"
-            )
-        )
-        return incremental_exact_dedup(b2, store)
 
     def q_transcript_suite(spark, sf):
         df = generate_transcripts(spark, n_conversations=2000, seed=42, violation_rate=0.003)
@@ -662,109 +613,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             spark, rows, "part string, attribute string, q double, val double"
         )
 
-    def q_streaming_state(spark, sf):
-        """Round 5: the streaming surface made gate-auditable.  One
-        bounded multi-micro-batch Structured Streaming run (the
-        documents table re-laid as a 4-file directory, read with
-        maxFilesPerTrigger=1 under trigger(availableNow) -> 4 real
-        micro-batches through a checkpointed foreachBatch) drives BOTH
-        streaming sinks; the emitted rows are the batch twins:
-
-        * ``profile``: the rolling merged profile from
-          profile_state_sink + stream_profile — every decomposable
-          statistic must equal a whole-table batch pass exactly
-          (micro-batch boundaries must not show);
-        * ``dedup``: dedup_sink's persistent fingerprint store — its
-          row count and distinct-fp count equal the corpus's distinct
-          normalized-text count (each fp appended exactly once across
-          batches), and total decisions equal the corpus size.
-
-        Every emitted number is ORDER-INDEPENDENT of micro-batch
-        boundaries by construction, so the SQL oracle needs no
-        knowledge of the file split.  Results are collected to
-        literals so the stream's temp dirs don't outlive the call."""
-        import shutil
-        import tempfile
-
-        from datapatterns_spark.plans.local import lit_df
-        from datapatterns_spark.streaming import (
-            dedup_sink,
-            profile_state_sink,
-            stream_profile,
-        )
-
-        base = tempfile.mkdtemp(prefix="dp_gate_stream_")
-        try:
-            docs = spark.read.parquet(f"{sf}/documents.parquet")
-            inp = f"{base}/in"
-            docs.repartition(4, "doc_id").write.parquet(inp)
-            schema = docs.schema
-
-            def run(sink, name):
-                q = (
-                    spark.readStream.schema(schema)
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(inp)
-                    .writeStream.foreachBatch(sink)
-                    .option("checkpointLocation", f"{base}/ckpt_{name}")
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination(300)
-                assert not q.isActive
-
-            run(
-                profile_state_sink(
-                    f"{base}/prof", field_list=["doc_id", "lang", "n_chars"]
-                ),
-                "prof",
-            )
-            run(dedup_sink(f"{base}/store", f"{base}/ded"), "ded")
-
-            stats = [
-                "rec_count", "fill_count", "fill_rate", "min_length",
-                "max_length", "ave_length", "nmin", "nmax", "nmean",
-                "nstd",
-            ]
-            prof = stream_profile(spark, f"{base}/prof").select(
-                "attribute",
-                "rec_count",
-                "fill_count",
-                "fill_rate",
-                "min_length",
-                "max_length",
-                "ave_length",
-                F.col("numeric_min").alias("nmin"),
-                F.col("numeric_max").alias("nmax"),
-                F.col("numeric_mean").alias("nmean"),
-                F.col("numeric_std_dev").alias("nstd"),
-            )
-            rows = []
-            for r in prof.collect():  # 3 attribute rows
-                d = r.asDict()
-                for s in stats:
-                    v = d[s]
-                    rows.append(
-                        ("profile", d["attribute"], s,
-                         None if v is None else float(v))
-                    )
-            store = spark.read.parquet(f"{base}/store")
-            rows.append(("dedup", "store", "store_rows", float(store.count())))
-            rows.append(
-                ("dedup", "store", "n_unique_fp",
-                 float(store.select("fp").distinct().count()))
-            )
-            rows.append(
-                ("dedup", "decisions", "n_docs",
-                 float(spark.read.parquet(f"{base}/ded/decisions").count()))
-            )
-            return lit_df(
-                spark, rows,
-                "part string, attribute string, stat string, val double",
-            )
-        finally:
-            shutil.rmtree(base, ignore_errors=True)
-
     # Round-3 note: the driver's correctness gate records at most 50
     # entries (CORRECTNESS_r02 covered exactly the first 50 of 60), so
     # same-grain entries are consolidated — every operator keeps
@@ -786,7 +634,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "drift_metrics": q_drift_metrics,
         "constraint_alternation": q_constraint_alternation,
         "validate_fixes": q_validate_fixes,
-        "dedup_exact": q_exact_dedup,
         "profile_correlations": q_profile_correlations,
         "profile_cardinality_breakdown": q_profile_breakdown,
         "profile_normalize_compare": q_profile_normalize_compare,
@@ -794,11 +641,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "profile_approx": q_profile_approx,
         "best_record_structure": q_best_record,
         "apply_best_types": q_apply_best_types,
-        "dedup_conversations": q_dedup_conversations,
-        "dedup_incremental": q_dedup_incremental,
         "profile_incremental": q_profile_incremental,
         "profile_quantile_sketch": q_profile_quantile_sketch,
-        "streaming_state": q_streaming_state,
     }
 
 
@@ -1084,67 +928,6 @@ UNION ALL SELECT partition, 'price_positive', vc = 0, vc::BIGINT FROM pr
         benford_critical=CRITICAL_1,
     )
 
-    # ---- xxhash64-exact oracles (dedup_incremental / dedup_conversations) ----
-    # DuckDB has no xxhash; functions/xxh64_sql.py GENERATES a single-
-    # statement SQL pipeline reproducing Spark's XxHash64 bit-for-bit
-    # (HUGEINT mod-2^64 arithmetic, lane folds via list_reduce) — so the
-    # hash-valued operators get exact oracles instead of rows-only.
-    from datapatterns_spark.functions.xxh64_sql import (
-        xxh64_str_sql,
-    )
-
-    # ---- dedup_incremental: two-batch store classification ----
-    _di_hash = xxh64_str_sql(
-        "documents", ["doc_id"], _NORM_SQL.format(v="text"),
-        out="fp", cte_prefix="di",
-    )
-    dedup_incremental_sql = f"""
-WITH allfp AS MATERIALIZED ({_di_hash}),
-dstore AS (SELECT DISTINCT fp FROM allfp WHERE doc_id < 250),
-b2 AS (
-  SELECT doc_id AS id, fp FROM allfp WHERE doc_id >= 250
-  UNION ALL
-  SELECT doc_id + 10000, fp FROM allfp
-  WHERE doc_id < 250 AND doc_id % 50 = 0),
-dc AS (SELECT fp, MIN(id) AS canon FROM b2 GROUP BY fp)
-SELECT b2.id, b2.fp,
-       CASE WHEN b2.fp IN (SELECT fp FROM dstore) THEN 'dup_of_store'
-            WHEN b2.id <> dc.canon THEN 'dup_in_batch'
-            ELSE 'unique' END AS status
-FROM b2 JOIN dc ON b2.fp = dc.fp
-"""
-
-    # ---- dedup_conversations: whole-conversation fingerprint dedup ----
-    # Pseudo-conversations from documents (conv = doc_id div 20, turn =
-    # doc_id % 20) + planted clones; per-turn hash replayed via the
-    # pure-SQL XXH64 string pipeline, folds as bit_xor / HUGEINT sum.
-    conv_src = (
-        "(SELECT doc_id // 20 AS conv_id, doc_id % 20 AS turn_idx, text"
-        " FROM documents"
-        " UNION ALL"
-        " SELECT doc_id // 20 + 100000, doc_id % 20, text FROM documents"
-        " WHERE (doc_id // 20) % 7 = 0)"
-    )
-    conv_hash = xxh64_str_sql(
-        conv_src,
-        ["conv_id"],
-        "turn_idx::VARCHAR || ':' || COALESCE(text, '')",
-        cte_prefix="cvd",
-        out="h",
-    )
-    dedup_conversations_sql = f"""
-WITH hashed AS MATERIALIZED ({conv_hash}),
-fps AS MATERIALIZED (
-  SELECT conv_id AS conv, COUNT(*) AS n_turns,
-         bit_xor(h) AS fp_xor, SUM(h::HUGEINT) AS fp_sum
-  FROM hashed GROUP BY conv_id),
-grp AS (
-  SELECT n_turns, fp_xor, fp_sum, MIN(conv) AS canonical
-  FROM fps GROUP BY 1, 2, 3 HAVING COUNT(*) > 1)
-SELECT f.conv, g.canonical, (f.conv = g.canonical) AS keep
-FROM fps f JOIN grp g USING (n_turns, fp_xor, fp_sum)
-"""
-
     # ---- cardinality_histogram (raw values, no trim/filter) ----
     cardinality_histogram = (
         "SELECT 'event_type' AS attribute, coalesce(CAST(event_type AS VARCHAR), '') AS value,"
@@ -1427,12 +1210,6 @@ FROM part GROUP BY 1
         " FROM (" + " UNION ALL ".join(pa_parts) + ") GROUP BY attribute"
     )
 
-    # ---- exact dedup ----
-    norm = _NORM_SQL.format(v="text")
-    dedup_exact_sql = f"""
-SELECT CAST(MIN(doc_id) AS BIGINT) AS doc_id FROM documents GROUP BY {norm}
-"""
-
     # ---- profile_correlations (all numeric pairs, both directions) ----
     pairs = [
         (x, y)
@@ -1661,76 +1438,6 @@ FROM src GROUP BY attribute
     ]
     profile_quantile_sketch_sql = " UNION ALL ".join(pqs_rows)
 
-    # ---- streaming_state ----
-    # Batch twins of the two streaming sinks: the rolling merged
-    # profile equals a whole-table pass (same melt as
-    # profile_incremental, over documents), and the dedup store's
-    # fingerprint counts equal the corpus's distinct normalized-text
-    # count.  Every pinned number is micro-batch-order independent, so
-    # the oracle needs no knowledge of the stream's file split.
-    _ss_norm = _NORM_SQL.format(v="text")
-    ss_src = " UNION ALL ".join(
-        [
-            f"SELECT '{c}' AS attribute,"
-            f" ({c} IS NOT NULL AND {c} <> 0) AS fil,"
-            f" length(CAST({c} AS VARCHAR)) AS len,"
-            f" CASE WHEN {c} IS NOT NULL AND {c} <> 0"
-            f" THEN CAST({c} AS DOUBLE) END AS v"
-            f" FROM documents"
-            for c in ["doc_id", "n_chars"]
-        ]
-        + [
-            "SELECT 'lang' AS attribute,"
-            " length(trim(coalesce(lang, ''))) > 0 AS fil,"
-            " length(trim(coalesce(lang, ''))) AS len,"
-            " TRY_CAST(trim(lang) AS DOUBLE) AS v"
-            " FROM documents"
-        ]
-    )
-    ss_stats = {
-        "rec_count": "CAST(COUNT(*) AS DOUBLE)",
-        "fill_count": "CAST(SUM(CASE WHEN fil THEN 1 ELSE 0 END) AS DOUBLE)",
-        "fill_rate": "CAST(ROUND(SUM(CASE WHEN fil THEN 1 ELSE 0 END)"
-                     " * 100.0 / COUNT(*), 6) AS DOUBLE)",
-        "min_length": "CAST(COALESCE(MIN(CASE WHEN fil THEN len END), 0)"
-                      " AS DOUBLE)",
-        "max_length": "CAST(COALESCE(MAX(CASE WHEN fil THEN len END), 0)"
-                      " AS DOUBLE)",
-        "ave_length": "CAST(COALESCE(CAST(FLOOR(SUM(CASE WHEN fil THEN len"
-                      " END) * 1.0 / SUM(CASE WHEN fil THEN 1 ELSE 0 END))"
-                      " AS BIGINT), 0) AS DOUBLE)",
-        "nmin": "CAST(ROUND(MIN(CASE WHEN fil THEN v END), 4) AS DOUBLE)",
-        "nmax": "CAST(ROUND(MAX(CASE WHEN fil THEN v END), 4) AS DOUBLE)",
-        "nmean": "CAST(ROUND(SUM(CASE WHEN fil THEN v END)"
-                 " / COUNT(CASE WHEN fil THEN v END), 4) AS DOUBLE)",
-        "nstd": "CAST(ROUND(SQRT(SUM(CASE WHEN fil THEN v * v END)"
-                " / COUNT(CASE WHEN fil THEN v END)"
-                " - (SUM(CASE WHEN fil THEN v END)"
-                " / COUNT(CASE WHEN fil THEN v END))"
-                " * (SUM(CASE WHEN fil THEN v END)"
-                " / COUNT(CASE WHEN fil THEN v END))), 4) AS DOUBLE)",
-    }
-    ss_melt = " UNION ALL ".join(
-        f"SELECT 'profile' AS part, attribute, '{s}' AS stat,"
-        f" {expr} AS val FROM ss_rows GROUP BY attribute"
-        for s, expr in ss_stats.items()
-    )
-    streaming_state_sql = f"""
-WITH ss_rows AS ({ss_src})
-SELECT * FROM ({ss_melt})
-UNION ALL
-SELECT 'dedup', 'store', 'store_rows',
-       CAST((SELECT COUNT(*) FROM (SELECT DISTINCT {_ss_norm}
-             FROM documents)) AS DOUBLE)
-UNION ALL
-SELECT 'dedup', 'store', 'n_unique_fp',
-       CAST((SELECT COUNT(*) FROM (SELECT DISTINCT {_ss_norm}
-             FROM documents)) AS DOUBLE)
-UNION ALL
-SELECT 'dedup', 'decisions', 'n_docs',
-       CAST((SELECT COUNT(*) FROM documents) AS DOUBLE)
-"""
-
     return {
         "profile_fill_lengths": profile_fill_lengths_sql,
         "profile_numeric_stats": profile_numeric,
@@ -1746,17 +1453,13 @@ SELECT 'dedup', 'decisions', 'n_docs',
         "drift_metrics": drift_metrics_sql,
         "constraint_alternation": constraint_alternation_sql,
         "validate_fixes": validate_fixes_sql,
-        "dedup_exact": dedup_exact_sql,
         "profile_correlations": correlations_sql,
         "profile_cardinality_breakdown": breakdown_sql,
         "profile_normalize_compare": profile_normalize_compare_sql,
         "profile_incremental": profile_incremental_sql,
         "profile_quantile_sketch": profile_quantile_sketch_sql,
-        "streaming_state": streaming_state_sql,
         "best_record_structure": best_record_sql,
         "apply_best_types": apply_best_types_sql,
-        "dedup_conversations": dedup_conversations_sql,
-        "dedup_incremental": dedup_incremental_sql,
         "profile_approx": profile_approx_sql,
         "transcript_suite": transcript_suite_oracle,
         "verdicts_per_partition": verdicts_per_partition_sql,

@@ -62,7 +62,6 @@ HEADLINE = [
     "validate_rules",
     "constraint_verdicts",
     "cardinality_histogram",
-    "dedup_conversations",
 ]
 
 

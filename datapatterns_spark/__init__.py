@@ -1,7 +1,7 @@
 """datapatterns_spark — a from-scratch PySpark-native data profiling +
 validation engine with the capabilities of hpcc-systems/DataPatterns,
-extended with a large-scale constraint layer and deduplication
-operators.
+extended with a large-scale constraint layer and checkpointed,
+incremental runs.
 
 Public API (reference analogues cited in each module):
 
@@ -14,11 +14,7 @@ Public API (reference analogues cited in each module):
 * ``operators.constraints``      — uniqueness / referential / monotonic
   / drift (KS, PSI) / Benford-as-check with per-partition verdicts
 * ``operators.manifest``         — checkpointed per-partition resume
-* ``operators.dedup``            — exact-hash, conversation and
-  incremental-exact deduplication
 * ``operators.incremental``      — mergeable per-partition profile states
-* ``streaming``                  — ``foreachBatch`` validation, profile-
-  state and dedup sinks
 * ``sources.transcripts``        — deterministic transcript generator
 * ``sources.tables``             — Iceberg/parquet source adapter
 """

@@ -1,26 +1,25 @@
-"""XXH64 as pure DuckDB SQL — oracle support for Spark's ``xxhash64``.
+"""XXH64 folds as pure DuckDB SQL — oracle support for Spark's ``xxhash64``.
 
-Spark's ``F.xxhash64`` (XxHash64 expression, seed 42) drives the
-engine's fingerprint/MinHash/SimHash operators; DuckDB has no xxhash,
-so those entry queries could only get rows-only correctness checks.
-This module *generates* DuckDB SQL (a single SELECT pipeline, no
-macros — the driver executes one statement) that reproduces XXH64
-bit-for-bit:
+The synthetic generators (``sources/transcripts.py``,
+``sources/stock.py``) derive every field from Spark's ``F.xxhash64``
+(XxHash64 expression, seed 42) over integer and long children.  DuckDB
+has no xxhash, so the twins in :mod:`.transcripts_sql` and
+:mod:`.stock_sql` regenerate those tables with the SQL this module
+generates (a single SELECT pipeline, no macros — the driver executes
+one statement), bit-for-bit:
 
 * 64-bit wrapping arithmetic on ``HUGEINT`` (128-bit): products are
   split ``x*y mod 2^64 = (x_lo*y + ((x_hi*y) mod 2^32)*2^32) mod 2^64``
   so no intermediate exceeds 2^97;
-* the 32-byte stripe loop runs as four independent ``list_reduce``
-  folds (one per lane — lanes never interact until the merge);
-* the <=31-byte tail (three 8-byte rounds, one 4-byte, three 1-byte)
-  is unrolled behind CASE guards;
-* each algorithm step is one chained CTE, keeping generated text
-  linear in the step count instead of exponential in nesting depth.
+* each child folds in through Spark's specialized single-block
+  ``hashInt``/``hashLong`` forms, each algorithm step one chained CTE,
+  keeping generated text linear in the step count instead of
+  exponential in nesting depth;
+* seed folds of constant children are precomputed in Python
+  (:func:`xxh64_int_py`).
 
-Matches org.apache.spark.sql.catalyst.expressions.XxHash64 exactly
-(differential-tested in tests/test_xxh64_sql.py): strings hash their
-UTF-8 bytes via ``hashUnsafeBytes``; integer/long children fold in via
-the specialized single-block ``hashInt``/``hashLong`` forms.
+``tests/test_transcripts_sql.py`` checks the regenerated tables
+against Spark's.
 """
 
 from __future__ import annotations
@@ -32,8 +31,6 @@ P4 = 0x85EBCA77C2B2AE63
 P5 = 0x27D4EB2F165667C5
 M64 = 1 << 64
 M32 = 1 << 32
-
-SPARK_SEED = 42  # Spark's XxHash64 default seed
 
 
 # --------------------------------------------------------------------------
@@ -61,12 +58,6 @@ def _xor(a: str, b: str) -> str:
     return f"xor(({a})::HUGEINT, ({b})::HUGEINT)::HUGEINT"
 
 
-def _round(acc: str, w: str) -> str:
-    """XXH64 lane round: rotl(acc + w*P2, 31) * P1 (all mod 2^64)."""
-    inner = f"((({acc}) + {_mmc(w, P2)}) % {M64})"
-    return _mmc(_rotl(inner, 31), P1)
-
-
 def _avalanche_steps() -> list[str]:
     """The fmix finalizer as chained step templates over ``{h}``."""
     return [
@@ -78,34 +69,13 @@ def _avalanche_steps() -> list[str]:
     ]
 
 
-def _word64(pos: str) -> str:
-    """Little-endian 8-byte word from the 1-indexed byte list ``bl``
-    starting at 0-based position ``pos``."""
-    return (
-        "("
-        + " + ".join(
-            f"bl[(({pos}) + {i + 1})::BIGINT] * {1 << (8 * i)}" for i in range(8)
-        )
-        + ")"
-    )
-
-
-def _word32(pos: str) -> str:
-    return (
-        "("
-        + " + ".join(
-            f"bl[(({pos}) + {i + 1})::BIGINT] * {1 << (8 * i)}" for i in range(4)
-        )
-        + ")"
-    )
-
-
-def chain_steps(base: str, keys: list[str], carry: list[str],
-                steps: list[str], prefix: str) -> tuple[str, str]:
+def chain_steps(base: str, keys: list[str], steps: list[str],
+                prefix: str) -> tuple[str, str]:
     """Render step templates (each referencing the running hash as
     ``{h}``) as a chain of CTEs ``<prefix>1..N`` reading from relation
-    ``base``.  Returns ``(", name AS (...)..." fragment, last_name)``."""
-    kcols = ", ".join(keys + carry) if (keys or carry) else ""
+    ``base`` and carrying ``keys``.  Returns
+    ``(", name AS (...)..." fragment, last_name)``."""
+    kcols = ", ".join(keys)
     sep = ", " if kcols else ""
     frag, prev = "", base
     for i, step in enumerate(steps):
@@ -174,18 +144,6 @@ def xxh64_int_py(value: int, seed: int) -> int:
     return _avalanche_py(h)
 
 
-def xxh64_long_py(value: int, seed: int) -> int:
-    """Spark ``XXH64.hashLong`` (8-byte child fold) in pure Python."""
-    h = (seed + P5 + 8) % M64
-    h ^= (_rotl_py((value % M64) * P2 % M64, 31) * P1) % M64
-    h = (_rotl_py(h, 27) * P1 + P4) % M64
-    return _avalanche_py(h)
-
-
-def to_signed_py(h: int) -> int:
-    return h - M64 if h >= (1 << 63) else h
-
-
 def multi_hash_sql(
     input_sql: str,
     keys: list[str],
@@ -209,7 +167,7 @@ def multi_hash_sql(
             f", {prefix}i{idx} AS (SELECT {', '.join(kc)}, ({init})::HUGEINT AS h"
             f" FROM {prev})\n"
         )
-        frag, prev = chain_steps(f"{prefix}i{idx}", kc, [], steps, f"{prefix}s{idx}_")
+        frag, prev = chain_steps(f"{prefix}i{idx}", kc, steps, f"{prefix}s{idx}_")
         sql += frag
         sql += (
             f", {prefix}o{idx} AS (SELECT {', '.join(kc)}, h AS {out} FROM {prev})\n"
@@ -217,177 +175,4 @@ def multi_hash_sql(
         prev = f"{prefix}o{idx}"
         carry.append(out)
     sql += f"SELECT {', '.join(keys + carry)} FROM {prev}"
-    return sql
-
-
-def to_signed(h_expr: str) -> str:
-    """Unsigned HUGEINT < 2^64 -> Spark's signed BIGINT rendering."""
-    return (
-        f"(CASE WHEN ({h_expr}) >= {1 << 63} THEN ({h_expr}) - {M64}"
-        f" ELSE ({h_expr}) END)"
-    )
-
-
-def to_unsigned(h_expr: str) -> str:
-    """Signed 64-bit SQL value -> unsigned HUGEINT in [0, 2^64)."""
-    return (
-        f"(CASE WHEN ({h_expr}) < 0 THEN ({h_expr})::HUGEINT + {M64}"
-        f" ELSE ({h_expr})::HUGEINT END)"
-    )
-
-
-# --------------------------------------------------------------------------
-# the string-hash pipeline
-# --------------------------------------------------------------------------
-def xxh64_str_steps(seed: int = SPARK_SEED) -> tuple[str, list[str], list[str]]:
-    """(init_expr, step_templates, carried_cols) for hashing the byte
-    list ``bl`` (1-indexed HUGEINTs) of length ``n`` with lane columns
-    ``v1..v4``/``nst`` — see :func:`xxh64_str_sql` for the relation
-    that provides them."""
-    carry = (
-        ["n", "nst", "v1", "v2", "v3", "v4"]
-        + [f"tw{t}" for t in range(3)]
-        + ["fw", "sb0", "sb1", "sb2"]
-    )
-    h0_long = (
-        f"({_rotl('v1', 1)} + {_rotl('v2', 7)} + {_rotl('v3', 12)}"
-        f" + {_rotl('v4', 18)}) % {M64}"
-    )
-    init = f"CASE WHEN nst = 0 THEN {(seed + P5) % M64} ELSE ({h0_long}) END"
-
-    steps: list[str] = []
-    # merge rounds (only when a stripe ran)
-    for j in range(4):
-        merged = (
-            f"(({_mmc(_xor('{h}', _round('0::HUGEINT', f'v{j + 1}')), P1)}"
-            f" + {P4}) % {M64})"
-        )
-        steps.append(f"CASE WHEN nst = 0 THEN {{h}} ELSE {merged} END")
-    steps.append(f"(({{h}}) + n) % {M64}")
-    # 8-byte tail rounds (tail words tw0..tw2 precomputed in the prep
-    # relation — the byte list itself is NOT carried through the chain)
-    for t in range(3):
-        k1 = _round("0::HUGEINT", f"tw{t}")
-        stepped = f"(({_mmc(_rotl(_xor('{h}', k1), 27), P1)} + {P4}) % {M64})"
-        steps.append(
-            f"CASE WHEN n - 32*nst >= {8 * (t + 1)} THEN {stepped}"
-            f" ELSE {{h}} END"
-        )
-    # one 4-byte round after the 8-byte words
-    step4 = (
-        f"(({_mmc(_rotl(_xor('{h}', _mmc('fw', P1)), 23), P2)}"
-        f" + {P3}) % {M64})"
-    )
-    steps.append(f"CASE WHEN (n - 32*nst) % 8 >= 4 THEN {step4} ELSE {{h}} END")
-    # the last (n-32*nst) % 4 single bytes
-    for t in range(3):
-        step1 = _mmc(_rotl(_xor("{h}", _mmc(f"sb{t}", P5)), 11), P1)
-        steps.append(
-            f"CASE WHEN (n - 32*nst) % 4 >= {t + 1} THEN ({step1})"
-            f" ELSE {{h}} END"
-        )
-    steps.extend(_avalanche_steps())
-    return init, steps, carry
-
-
-def xxh64_prep_sql(input_sql: str, keys: list[str], str_expr: str,
-                   prefix: str, seed: int = SPARK_SEED,
-                   extra_carry: list[str] | None = None) -> tuple[str, str, list[str]]:
-    """CTE fragment decoding ``str_expr``'s UTF-8 bytes and running the
-    four lane folds.  Returns ``(fragment, last_name, carry_cols)``;
-    the fragment starts with ``<prefix>_b AS (...)`` (caller supplies
-    the ``WITH``/comma)."""
-    extra = list(extra_carry or [])
-    kcols = ", ".join(keys + extra)
-    v_init = [
-        (seed + P1 + P2) % M64,
-        (seed + P2) % M64,
-        seed % M64,
-        (seed - P1) % M64,
-    ]
-    lanes = []
-    for j, init in enumerate(v_init):
-        fold = (
-            f"list_reduce(list_prepend({init}::HUGEINT, "
-            f"list_transform(generate_series(0, nst - 1), "
-            f"s -> ({_word64(f'32*s + {8 * j}')})::HUGEINT)), "
-            f"(acc, w) -> ({_round('acc', 'w')})::HUGEINT) AS v{j + 1}"
-        )
-        lanes.append(fold)
-    # tail reads, precomputed here so the step chain never carries the
-    # byte list: three guarded 8-byte words, one 4-byte word, and the
-    # final (n - 32*nst) % 4 single bytes
-    tails = []
-    for t in range(3):
-        w = _word64(f"32*nst + {8 * t}")
-        tails.append(
-            f"CASE WHEN n - 32*nst >= {8 * (t + 1)} THEN ({w})::HUGEINT"
-            f" ELSE 0::HUGEINT END AS tw{t}"
-        )
-    w4 = _word32("32*nst + 8*((n - 32*nst) // 8)")
-    tails.append(
-        f"CASE WHEN (n - 32*nst) % 8 >= 4 THEN ({w4})::HUGEINT"
-        f" ELSE 0::HUGEINT END AS fw"
-    )
-    for t in range(3):
-        b = f"bl[((n - (n - 32*nst) % 4 + {t}) + 1)::BIGINT]"
-        tails.append(
-            f"CASE WHEN (n - 32*nst) % 4 >= {t + 1} THEN ({b})::HUGEINT"
-            f" ELSE 0::HUGEINT END AS sb{t}"
-        )
-    frag = f"""{prefix}_b AS (
-  SELECT {kcols},
-         list_transform(
-           generate_series(1, octet_length(encode(s))::INT),
-           i -> ((strpos('0123456789abcdef', substr(lower(hex(encode(s))), 2*i-1, 1)) - 1) * 16
-                + (strpos('0123456789abcdef', substr(lower(hex(encode(s))), 2*i, 1)) - 1))::HUGEINT
-         ) AS bl,
-         octet_length(encode(s))::HUGEINT AS n,
-         (octet_length(encode(s)) // 32)::INT AS nst
-  FROM (SELECT {kcols}, ({str_expr}) AS s FROM {input_sql})
-), {prefix}_l AS (
-  SELECT {kcols}, n, nst,
-         {', '.join(lanes)},
-         {', '.join(tails)}
-  FROM {prefix}_b
-)"""
-    return frag, f"{prefix}_l", keys + extra
-
-
-def xxh64_str_sql(
-    input_sql: str,
-    keys: list[str],
-    str_expr: str,
-    seed: int = SPARK_SEED,
-    out: str = "h",
-    signed: bool = True,
-    cte_prefix: str = "xh",
-    extra_steps: list[str] | None = None,
-) -> str:
-    """A full ``WITH``-pipeline SELECT computing
-    ``(keys..., out = XXH64(utf8(str_expr), seed))`` per input row.
-
-    ``input_sql`` is a table name or parenthesized subquery;
-    ``str_expr`` a VARCHAR expression over it.  ``extra_steps`` are
-    appended after the string hash (e.g. ``hash_int_steps(0)`` for a
-    trailing int literal child of Spark's xxhash64).  ``signed=True``
-    renders Spark's signed BIGINT."""
-    p = cte_prefix
-    prep, base, kept = xxh64_prep_sql(input_sql, keys, str_expr, p, seed)
-    init, steps, carry = xxh64_str_steps(seed)
-    if extra_steps:
-        steps = steps + list(extra_steps)
-    sql = f"WITH {prep}\n"
-    sql += (
-        f", {p}0 AS (SELECT {', '.join(kept + carry)}, ({init})::HUGEINT AS h"
-        f" FROM {base})\n"
-    )
-    frag, last = chain_steps(f"{p}0", kept, carry, steps, f"{p}x")
-    sql += frag
-    kcols = ", ".join(kept)
-    sep = ", " if kcols else ""
-    if signed:
-        sql += f"SELECT {kcols}{sep}({to_signed('h')})::BIGINT AS {out} FROM {last}"
-    else:
-        sql += f"SELECT {kcols}{sep}h AS {out} FROM {last}"
     return sql

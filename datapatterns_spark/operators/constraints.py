@@ -38,7 +38,6 @@ from pyspark.sql import functions as F
 from .benford import CRITICAL_1, CRITICAL_N, EXPECTED, FRACTIONAL_TYPES, INTEGRAL_TYPES
 from ..functions.benford_digit import nth_digit
 from ..plans.local import lit_df
-from ..materialize import materialize
 from .validation import expand_helpers
 
 SAMPLE_VIOLATIONS = 5
@@ -825,13 +824,13 @@ def _run_checks(
         viol_src = g_src if viol_src is None else viol_src.unionByName(g_src)
     collect_frames: list[DataFrame] = []
     if viol_src is not None:
-        # lazy materialize, not a bare persist: the frame is consumed
-        # twice (the verdict aggregation below + the returned
+        # lazy localCheckpoint, not a bare persist: the frame is
+        # consumed twice (the verdict aggregation below + the returned
         # violations frame), and the collect inside THIS call is its
         # materializing action.  A persist here leaked one CacheManager
         # entry per run_checks call for the session lifetime (round-3
-        # fix); see materialize.py for the deployment modes.
-        viol_src = materialize(viol_src, eager=False)
+        # fix).
+        viol_src = viol_src.localCheckpoint(eager=False)
         collect_frames.append(
             viol_src.groupBy("partition", "check_name").agg(
                 F.sum("cnt").alias("violation_count"),

@@ -199,7 +199,14 @@ def merge_states(states: DataFrame) -> DataFrame:
     carry a ``q_sketch`` column — the KLL quartiles
     (``numeric_lower_quartile`` / ``numeric_median`` /
     ``numeric_upper_quartile``, same naming as the one-shot approx
-    profile), within KLL's rank error at ``k = quantile_delta``."""
+    profile), within KLL's rank error at ``k = quantile_delta``.
+
+    The quartiles are not reproducible across sessions: DataSketches
+    6.2.0 draws KLL compaction coin flips from ``KllSketch.random``, one
+    unseeded JVM-wide ``java.util.Random`` that Spark's SQL surface
+    cannot seed, so the same states may merge to quartiles that differ
+    between sessions (or after other sketch work in one session) within
+    that rank error.  Every other statistic is deterministic."""
     has_q = "q_sketch" in states.columns
     sketch_cols = (
         [F.kll_merge_agg_double("q_sketch").alias("q_sketch")] if has_q else []
@@ -390,7 +397,10 @@ def profile_incremental(
     and without ``q_sketch`` would silently drop quantile coverage for
     the sketchless partitions, so a mismatch against existing states
     fails fast.  A store written by the retired t-digest sketch
-    (``q_sketch`` starting ``TD1``) is refused, never merged."""
+    (``q_sketch`` starting ``TD1``) is refused, never merged.  The KLL
+    quartiles of a rerun over the same store may differ within KLL's
+    rank error (see :func:`merge_states`); every other statistic is
+    deterministic."""
     k = None if quantile_delta is None else _kll_k(quantile_delta)
     spark = df.sparkSession
     states = f"{state_path}/states"

@@ -45,7 +45,7 @@ from __future__ import annotations
 import datetime as _dt
 import json
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -60,7 +60,6 @@ from ..functions.patterns import (
     map_pattern,
     map_pattern_finished,
 )
-from ..materialize import materialize
 from ..trace import phase
 from ..plans.local import lit_df, local_df
 from ..plans.schema_walk import (
@@ -117,7 +116,6 @@ class ProfileParams:
     # passes then re-run per consumer) -- for plan inspection or for
     # embedding the profile inside a larger plan optimized whole
     materialize: bool = True
-    extras: dict = field(default_factory=dict)
 
     @property
     def pattern_len(self) -> int:
@@ -314,6 +312,21 @@ def _int_len_expr(name: str, max_digits: int) -> Column:
     )
 
 
+def _melt_need(params: ProfileParams) -> dict[str, bool]:
+    """Which :func:`melt_slim` fields ``params`` needs: ``vhash`` for
+    cardinality or patterns, ``uni`` and ``fpat`` for the type flags,
+    ``v`` for a numeric feature, ``value`` for patterns."""
+    return {
+        "len": True,
+        "fil": True,
+        "vhash": params.need_cardinality or params.need_patterns,
+        "uni": params.need_flags,
+        "v": params.need_numeric,
+        "fpat": params.need_flags,
+        "value": params.need_patterns,
+    }
+
+
 # the fields of a melt_slim row after ``attribute``, with their types
 _MELT_FIELDS = (
     ("len", "int"),
@@ -343,10 +356,8 @@ def melt_slim(
     distinctness hash of a filled value; ``uni`` the non-ASCII bit of
     strings; ``v`` the numeric reading; ``fpat`` the type-flag pattern
     ('0' kept literal); and ``value`` the pattern-sample source (at most
-    48 chars).  A field ``params`` does not need is NULL, so a feature
-    subset pays for none of its work: ``vhash`` needs cardinality or
-    patterns, ``uni`` and ``fpat`` the type flags, ``v`` a numeric
-    feature, ``value`` patterns.
+    48 chars).  A field ``params`` does not need (:func:`_melt_need`)
+    is NULL, so a feature subset pays for none of its work.
 
     Every value expression is projected once under the Generate (which
     gets no subexpression elimination), and the generator is one SQL
@@ -371,15 +382,7 @@ def melt_slim(
       rule rejects its '-'/':', so it needs no ``v`` or ``fpat``;
     * **arrays**: SET OF is never numeric (Profile.ecl:846-847).
     """
-    need = {
-        "len": True,
-        "fil": True,
-        "vhash": params.need_cardinality or params.need_patterns,
-        "uni": params.need_flags,
-        "v": params.need_numeric,
-        "fpat": params.need_flags,
-        "value": params.need_patterns,
-    }
+    need = _melt_need(params)
     proj: list[Column] = [] if part is None else [part.alias("_part")]
     structs: list[str] = []
     for i, a in enumerate(attrs):
@@ -456,13 +459,22 @@ def melt_slim(
     )
 
 
-def fold_aggs() -> list[Column]:
+def fold_aggs(params: ProfileParams | None = None) -> list[Column]:
     """The profile fold of :func:`melt_slim` rows: the ``STATE_SCHEMA``
     fold columns of ``incremental.py``, each a built-in aggregate that
     merges associatively (see its module docstring), so one fold serves
     the approx pass 1 (grouped by attribute) and the mergeable states
     (grouped by partition and attribute).  :func:`finish_fold` turns
-    the columns into profile statistics, merged or not."""
+    the columns into profile statistics, merged or not.
+
+    With ``params``, a column the features do not report is a typed
+    NULL literal: one folding a melt field ``params`` does not need
+    (:func:`_melt_need`), and the length folds unless lengths or type
+    flags are needed.  A feature subset then updates none of them per
+    row (the HLL sketch puts the fold in an object-hash aggregate,
+    which evaluates every input without code generation), and
+    ``finish_fold`` still computes every statistic it reports.  The
+    states pass none and keep the full fold."""
     filled = F.col("fil") == 1
     ln = F.when(filled, F.col("len"))
     v = F.col("v")
@@ -472,23 +484,31 @@ def fold_aggs() -> list[Column]:
     flag = F.when(filled, F.when(fpat.isNull(), F.lit(besttype.AS_IS)).otherwise(
         besttype.type_flag(fpat, treat_as_is=False)
     ))
-    return [
-        F.count(F.lit(1)).alias("rec_count"),
-        F.coalesce(F.sum("fil"), F.lit(0)).cast("long").alias("fill_count"),
-        F.min(ln).alias("min_length"),
-        F.max(ln).alias("max_length"),
-        F.sum(ln).cast("long").alias("len_sum"),
-        F.min(F.when(ln > 0, ln)).alias("min_len_nonzero"),
-        F.max(F.when(filled, F.col("uni"))).alias("has_unicode"),
-        F.bit_and(flag).alias("type_flags"),
+    # (name, melt field folded or "lengths", type, aggregate)
+    fold = [
+        ("rec_count", "fil", "long", F.count(F.lit(1))),
+        ("fill_count", "fil", "long", F.coalesce(F.sum("fil"), F.lit(0)).cast("long")),
+        ("min_length", "lengths", "int", F.min(ln)),
+        ("max_length", "lengths", "int", F.max(ln)),
+        ("len_sum", "lengths", "long", F.sum(ln).cast("long")),
+        ("min_len_nonzero", "lengths", "int", F.min(F.when(ln > 0, ln))),
+        ("has_unicode", "uni", "int", F.max(F.when(filled, F.col("uni")))),
+        ("type_flags", "fpat", "int", F.bit_and(flag)),
         # DataSketches HLL, lgK 14, ~0.8% RSE (documented deviation:
         # the reference is exact), fed the 64-bit value hash
-        F.hll_sketch_agg("vhash", LG_CONFIG_K).alias("card_sketch"),
-        F.count(v).alias("num_n"),
-        F.sum(v).alias("num_sum"),
-        F.sum(v * v).alias("num_sumsq"),
-        F.min(v).alias("num_min"),
-        F.max(v).alias("num_max"),
+        ("card_sketch", "vhash", "binary", F.hll_sketch_agg("vhash", LG_CONFIG_K)),
+        ("num_n", "v", "long", F.count(v)),
+        ("num_sum", "v", "double", F.sum(v)),
+        ("num_sumsq", "v", "double", F.sum(v * v)),
+        ("num_min", "v", "double", F.min(v)),
+        ("num_max", "v", "double", F.max(v)),
+    ]
+    need = None
+    if params is not None:
+        need = {**_melt_need(params), "lengths": params.need_lengths}
+    return [
+        (agg if need is None or need[field] else F.lit(None).cast(typ)).alias(name)
+        for name, field, typ, agg in fold
     ]
 
 
@@ -772,7 +792,7 @@ def _run_jobs(spark: SparkSession, jobs: dict) -> dict:
         return {name: f.result() for name, f in futs.items()}
 
 
-def _materialize(df: DataFrame, n_attrs: int, enabled: bool = True) -> DataFrame:
+def _materialize(df: DataFrame, enabled: bool = True) -> DataFrame:
     """Eagerly materialize a reused profile intermediate.
 
     Used by exact mode's shared histogram, summary and pattern
@@ -781,10 +801,10 @@ def _materialize(df: DataFrame, n_attrs: int, enabled: bool = True) -> DataFrame
     melt + groupBy.  localCheckpoint, NOT persist: a persisted frame sits in
     the session CacheManager until explicitly unpersisted, so a
     long-running driver profiling one ingest batch after another
-    (scripts/run_job.py, the streaming profile sink) would leak one
-    cached melt per call for the session's lifetime (round-3 fix —
-    the same defect class as the round-2 minhash persist leak; probe:
-    tests/test_operators.py::test_profile_leaves_no_cached_frames).
+    (scripts/run_job.py) would leak one cached melt per call for the
+    session's lifetime (round-3 fix — the same defect class as the
+    round-2 minhash persist leak; probe:
+    tests/test_operators.py::test_profile_and_checks_leave_no_cached_frames).
     The checkpointed partitions are freed by the ContextCleaner once
     the returned frame is unreferenced, and cutting lineage also
     removes the per-consumer Catalyst re-optimization of the melt
@@ -796,14 +816,10 @@ def _materialize(df: DataFrame, n_attrs: int, enabled: bool = True) -> DataFrame
     ``enabled=False`` (ProfileParams.materialize) returns the frame
     untouched — full lineage kept, shared passes re-run per consumer;
     for plan inspection (pushdown/pruning tests) or embedding the
-    profile inside a larger plan a caller optimizes whole.
-
-    The localCheckpoint-vs-persist executor-loss trade is deployment
-    policy, not per-operator choice — see materialize.py
-    (DP_MATERIALIZE) for the persist/checkpoint modes."""
+    profile inside a larger plan a caller optimizes whole."""
     if not enabled:
         return df
-    return materialize(df)
+    return df.localCheckpoint(eager=True)
 
 
 def _profile_flat(
@@ -815,14 +831,7 @@ def _profile_flat(
 ) -> DataFrame:
     """Profile a flat (scalar-attribute) frame — the analogue of one
     ``_Inner_Profile`` expansion (Profile.ecl:508-1665)."""
-    if params.mode != "exact":
-        return _rows_frame(
-            df.sparkSession,
-            _profile_flat_approx(df, attrs, params, name_prefix, sort_prefix),
-            params,
-        )
     plen = params.pattern_len
-    exact = True
     meta = _attr_meta_df(df, attrs, sort_prefix, name_prefix)
 
     string_attrs = [a.name for a in attrs if a.kind == KIND_STRING]
@@ -876,7 +885,7 @@ def _profile_flat(
         # lineage-truncated — each consumer then plans against a leaf
         # scan instead of re-running Catalyst over the melt expression
         # tree, a measured driver-side serial cost (see _materialize)
-        hist = _materialize(derive(hist, params.need_flags, need_pattern), len(attrs), params.materialize)
+        hist = _materialize(derive(hist, params.need_flags, need_pattern), params.materialize)
         stats_src = hist
     elif params.need_flags:
         # fill/lengths/type-folds only: aggregate the melt directly
@@ -954,10 +963,9 @@ def _profile_flat(
     # base is one tiny row per attribute but costs a full input pass;
     # numeric-attr selection, low-card gating and the final assembly
     # all reuse it (see hist note)
-    base = _materialize(base, len(attrs), params.materialize)
+    base = _materialize(base, params.materialize)
 
     pieces = [base]
-    prefixed = F.concat(F.lit(name_prefix), F.col("attribute"))
 
     # --- numeric stats (A5/A6) ---
     if params.need_numeric:
@@ -1005,8 +1013,7 @@ def _profile_flat(
                 F.min(F.substring(F.col("value"), 1, plen)).alias("example"),
             )
         )
-        if params.materialize:
-            pat = materialize(pat)
+        pat = _materialize(pat, params.materialize)
         pieces.extend(_pattern_pieces(pat, params, name_prefix))
 
     # --- correlations (A12, Profile.ecl:1213-1260) ---
@@ -1895,7 +1902,7 @@ def _profile_flat_approx(
         # GK quartiles: the one-shot's accuracy contract (the stored
         # states use a mergeable KLL sketch instead)
         extra.append(F.percentile_approx("v", [0.25, 0.5, 0.75], 10_000).alias("_q"))
-    summary = m1.groupBy("attribute").agg(*fold_aggs(), *extra)
+    summary = m1.groupBy("attribute").agg(*fold_aggs(params), *extra)
 
     # ---- pass-1 rows (one per attribute), metadata from a literal map ----
     meta = _attr_meta(attrs, name_prefix, sort_prefix)

@@ -6,7 +6,6 @@ empty ingest)."""
 from __future__ import annotations
 
 from datapatterns_spark.operators import constraints as C
-from datapatterns_spark.operators import dedup as D
 from datapatterns_spark.operators.benford import benford
 from datapatterns_spark.operators.cardinality import cardinality
 from datapatterns_spark.operators.profile import profile
@@ -31,18 +30,9 @@ def test_cardinality_benford_empty(spark):
     assert len(out) == 2
 
 
-def test_checks_and_dedup_empty(spark):
+def test_checks_empty(spark):
     df = _empty(spark).withColumnRenamed("a", "turn_idx")
     verdicts, violations = C.run_checks(df, [C.row_rule("nn", "s IS NOT NULL")])
     assert verdicts.collect() == []
     assert violations.collect() == []
-    assert D.dedup_exact(_empty(spark), "s", "a").collect() == []
 
-
-def test_round2_ops_empty(spark):
-    """Every round-2 operator degrades to zero rows on empty input."""
-    docs = spark.createDataFrame([], "doc_id long, text string")
-    assert D.conversation_dedup(
-        spark.createDataFrame([], "conv_id string, turn_idx int, text string")
-    ).collect() == []
-    assert D.incremental_exact_dedup(docs, None).collect() == []

@@ -1,10 +1,14 @@
-"""No operator in the package may start Python workers.
+"""No operator in the package may start Python workers, and no module
+but the session factory may read the environment.
 
 Every operator runs as JVM expressions.  A pandas import or a call to
 one of PySpark's Python-worker APIs (``mapInPandas``,
 ``applyInPandas``, ``applyInPandasWithState``, ``pandas_udf``,
-``udf``) would ship rows across the JVM/Python boundary, so this test
-reads the source of every module with ``ast`` and fails on either.
+``udf``) would ship rows across the JVM/Python boundary, so these tests
+read the source of every module with ``ast`` and fail on either.  An
+environment switch would pick a plan outside the function arguments
+the tests and the benchmark drive, so only ``session.py`` (whose
+``SPARK_GRAFT_*`` values are deployment settings) may read one.
 """
 
 from __future__ import annotations
@@ -20,6 +24,7 @@ WORKER_APIS = {
     "pandas_udf",
     "udf",
 }
+ENV_APIS = {"environ", "getenv", "environb", "getenvb"}
 
 
 def _offences(tree: ast.AST) -> list[str]:
@@ -48,15 +53,42 @@ def _offences(tree: ast.AST) -> list[str]:
     return found
 
 
-def test_no_module_starts_python_workers():
+def _env_reads(tree: ast.AST) -> list[str]:
+    found = []
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Attribute)
+            and node.attr in ENV_APIS
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+        ):
+            found.append(f"os.{node.attr}")
+        elif isinstance(node, ast.ImportFrom) and node.module == "os":
+            found += [f"from os import {a.name}" for a in node.names if a.name in ENV_APIS]
+    return found
+
+
+def _scan(check, skip=()) -> dict[str, list[str]]:
     modules = sorted(PACKAGE.rglob("*.py"))
     assert modules
     bad = {}
     for path in modules:
-        tree = ast.parse(path.read_text(), filename=str(path))
-        offences = _offences(tree)
+        rel = str(path.relative_to(PACKAGE.parent))
+        if rel in skip:
+            continue
+        offences = check(ast.parse(path.read_text(), filename=str(path)))
         if offences:
-            bad[str(path.relative_to(PACKAGE.parent))] = offences
+            bad[rel] = offences
+    return bad
+
+
+def test_no_module_starts_python_workers():
+    bad = _scan(_offences)
+    assert bad == {}, bad
+
+
+def test_only_session_reads_the_environment():
+    bad = _scan(_env_reads, skip={"datapatterns_spark/session.py"})
     assert bad == {}, bad
 
 

@@ -11,7 +11,6 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from datapatterns_spark.operators.dedup import exact_duplicates
 from datapatterns_spark.operators.profile import profile
 from datapatterns_spark.operators.validation import validate
 
@@ -100,23 +99,6 @@ def test_profile_has_no_python_udfs(spark, mode):
     assert "FlatMapGroupsInPandas" not in plan
 
 
-def test_dedup_exact_skew_safe_shape(spark):
-    """Exact dedup must never gather a hot duplicate key into one task:
-    the plan aggregates with groupBy (map-side partial aggregation —
-    skew-immune) and joins back; no per-key Window operator, nothing
-    Python-side."""
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    out = exact_duplicates(docs, "text", "doc_id")
-    plan = _plan(out)
-    assert "BatchEvalPython" not in plan
-    assert "Window" not in plan, plan
-    # partial (map-side) aggregation before the exchange is the
-    # skew-immunity mechanism
-    assert "partial_count" in plan or "HashAggregate" in plan, plan
-    n_exchange = plan.count("Exchange hashpartitioning")
-    assert n_exchange <= 3, f"expected <=3 shuffles, saw {n_exchange}:\n{plan}"
-
-
 def test_bucketed_table_group_checks_need_no_shuffle(spark, tmp_path):
     """The 10^12-row storage layout (CLUSTERED BY group-key, SORTED BY
     (group, order) — Iceberg bucket partitioning with a sort order):
@@ -189,29 +171,44 @@ def test_approx_profile_executions_are_not_nested(spark):
     assert nested == []
 
 
+def _pass1_partial_aggs(spark, df, **kw) -> list[str]:
+    """The formatted-explain nodes of the approx profile's pass-1
+    partial aggregate (one blank-line-separated section per node)."""
+    plans = _executed_plans(spark, lambda: profile(df, mode="approx", **kw).collect())
+    assert plans
+    nodes = []
+    for plan in plans:
+        assert "HyperLogLogPlusPlus" not in plan
+        assert "approx_count_distinct" not in plan
+        nodes += [
+            node
+            for node in plan.split("\n\n")
+            if re.search(r"^Input \[\d+\]: \[.*\bvhash#", node, re.M)
+            and re.search(r"^Functions \[\d+\]: \[partial_", node, re.M)
+        ]
+    assert nodes, "pass-1 partial aggregate not found in the executed plans"
+    return nodes
+
+
 def test_approx_profile_pass1_buffer_stays_narrow(spark):
     """Pass 1 of the approx profile counts distinct values with
     DataSketches HLL, whose state is one binary buffer column.  Spark's
     HLL++ keeps each register as its own long column (889 partial
     aggregate outputs on this table), which bloats the projections
     Spark generates for the aggregate; neither it nor any other wide
-    register buffer may come back."""
+    register buffer may come back.  A feature subset folds only what it
+    reports: with patterns alone, no type-flag AND-fold and no
+    aggregate of the numeric reading ``v``."""
     df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    plans = _executed_plans(spark, lambda: profile(df, mode="approx").collect())
-    assert plans
-    widths = []
-    for plan in plans:
-        assert "HyperLogLogPlusPlus" not in plan
-        assert "approx_count_distinct" not in plan
-        # formatted explain: one blank-line-separated section per node
-        for node in plan.split("\n\n"):
-            if (
-                re.search(r"^Input \[\d+\]: \[.*\bvhash#", node, re.M)
-                and re.search(r"^Functions \[\d+\]: \[partial_", node, re.M)
-            ):
-                widths.append(int(re.search(r"^Results \[(\d+)\]", node, re.M)[1]))
-    assert widths, "pass-1 partial aggregate not found in the executed plans"
+    widths = [
+        int(re.search(r"^Results \[(\d+)\]", node, re.M)[1])
+        for node in _pass1_partial_aggs(spark, df)
+    ]
     assert max(widths) < 64, widths
+    for node in _pass1_partial_aggs(spark, df, features=("patterns",)):
+        functions = re.search(r"^Functions \[\d+\]: (.*)$", node, re.M)[1]
+        assert "bit_and" not in functions, functions
+        assert not re.search(r"\bv#\d+", functions), functions
 
 
 def test_incremental_state_prunes_and_stays_jvm(spark):

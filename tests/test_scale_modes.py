@@ -76,7 +76,7 @@ def test_heavy_pattern_candidate_path(spark):
 
     from datapatterns_spark.operators.profile import (
         ProfileParams,
-        _profile_flat,
+        _profile_flat_approx,
     )
     from datapatterns_spark.plans.schema_walk import walk_schema
 
@@ -107,7 +107,7 @@ def test_heavy_pattern_candidate_path(spark):
         approx_pattern_limit=10,
         max_patterns=10,
     )
-    out = _profile_flat(df, attrs, params, "", "").collect()[0].asDict(recursive=True)
+    out = _profile_flat_approx(df, attrs, params, "", "")[0]
     pats = {p["data_pattern"]: p["rec_count"] for p in out["popular_patterns"]}
     # exact resolved counts for the dominant patterns (800 "AB12" rows
     # plus the 3 generated "XX77" values share pattern AA99)
