@@ -5,7 +5,7 @@ The synthetic generators (``sources/transcripts.py``,
 (XxHash64 expression, seed 42) over integer and long children.  DuckDB
 has no xxhash, so the twins in :mod:`.transcripts_sql` and
 :mod:`.stock_sql` regenerate those tables with the SQL this module
-generates (a single SELECT pipeline, no macros — the driver executes
+generates (a single SELECT pipeline, no macros, so each oracle is
 one statement), bit-for-bit:
 
 * 64-bit wrapping arithmetic on ``HUGEINT`` (128-bit): products are
