@@ -49,7 +49,8 @@ by (partition, attribute) instead of by attribute, and
 date values are hashed as native values, never formatted per row.
 Stores written before that hashed their formatted strings, a different
 hash domain that would double-count in a union; they carry no
-``state_format`` column, and a resume refuses them.
+``state_format`` column, and a resume refuses them, as it refuses rows
+of any other ``state_format`` value.
 
 Exactness: every merged statistic except ``cardinality`` and the
 quartiles is EXACT and identical to a whole-table pass
@@ -323,7 +324,8 @@ def _check_store(spark: SparkSession, state_path: str, k: int | None) -> None:
     """Refuse to resume a state store written in another format or with
     other sketch settings: a store without the ``state_format`` marker
     (its timestamp/date sketches hash formatted strings, so merging
-    them with native-value sketches would double-count), ``q_sketch``
+    them with native-value sketches would double-count) or with rows of
+    another ``state_format`` than ``_STATE_FORMAT``, ``q_sketch``
     presence, the KLL ``k``, and the retired t-digest format."""
     # inferred schema on purpose: the guard needs the stored columns
     stored_df = spark.read.parquet(f"{state_path}/states")
@@ -333,6 +335,18 @@ def _check_store(spark: SparkSession, state_path: str, k: int | None) -> None:
             "they were written by an older version whose timestamp/date "
             "cardinality sketches hash formatted strings; rebuild with a "
             "fresh state_path"
+        )
+    other = (
+        stored_df.where(~F.col("state_format").eqNullSafe(_STATE_FORMAT))
+        .select("state_format")
+        .limit(1)
+        .collect()
+    )
+    if other:
+        raise ValueError(
+            f"states under {state_path!r} have state_format "
+            f"{other[0][0]}, not {_STATE_FORMAT}: rebuild with a fresh "
+            "state_path"
         )
     if ("q_sketch" in stored_df.columns) != (k is not None):
         raise ValueError(

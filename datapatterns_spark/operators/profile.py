@@ -12,21 +12,26 @@ column in one scan:
    reduces the data to distinct-value counts *before* any further
    statistics — the reference's own skew/temp-storage trick
    (Profile.ecl:719-728) — with Spark's partial (map-side)
-   aggregation bounding the shuffle;
-3. every downstream statistic (fill, lengths, cardinality, modes,
-   cardinality breakdown, text patterns, best-type inference, numeric
-   stats incl. the reference's exact quartile position arithmetic) is
-   computed from the tiny weighted histogram;
-4. correlations run as one ``agg`` of ``corr(x, y)`` over all numeric
-   pairs on the source frame (Profile.ecl:1213-1245).
+   aggregation bounding the shuffle.  The summary (fill, lengths,
+   cardinality, best-type inference), the numeric stats (incl. the
+   reference's exact quartile position arithmetic), the value
+   histogram and the pattern histogram are computed from it on the
+   cluster, and correlations run as one ``agg`` of ``corr(x, y)``
+   over all numeric pairs on the source frame (Profile.ecl:1213-1245);
+3. **driver finish** (both modes): each piece is cut to a bounded size
+   on the cluster and fetched as Arrow, and one finish
+   (:func:`_driver_finish`) ranks modes (ties, Profile.ecl:1163-1175),
+   the cardinality breakdown, popular and rare patterns, and mirrors
+   the correlations.  The rows are sorted on the driver, and the
+   returned frame is a LocalRelation.
 
 Scale design notes:
 
 * per-group top-k (modes, patterns) never runs a window over whole
-  attributes (an attribute is ONE window partition = one task):
-  modes join against a broadcast per-attribute max; pattern top-k is
-  a salted two-phase ``row_number`` (bucket-local top-k, then final
-  top-k over <= buckets*k rows);
+  attributes (an attribute is ONE window partition = one task): the
+  histograms are cut to their top-k (and bottom-k) rows by a salted
+  two-phase ``row_number`` (:func:`_dual_topk_survivors`: bucket-local
+  top-k, then final top-k over <= buckets*k rows) before the fetch;
 * ``mode="approx"`` is the 10^12-row path: NO raw-value shuffle at
   all — fill/lengths/type-folds/cardinality (DataSketches HLL,
   lgK 14, ~0.8% RSE) aggregate the melt directly,
@@ -61,7 +66,7 @@ from ..functions.patterns import (
     map_pattern_finished,
 )
 from ..trace import phase
-from ..plans.local import lit_df, local_df
+from ..plans.local import local_df
 from ..plans.schema_walk import (
     KIND_ARRAY,
     KIND_BINARY,
@@ -111,11 +116,6 @@ class ProfileParams:
     # this take the partition-local candidate path instead of the
     # exact pattern histogram (near-unique pattern spaces = free text)
     approx_pattern_limit: int = 200_000
-    # False: skip the eager localCheckpoint materialization of reused
-    # intermediates, keeping full lineage in the returned plan (shared
-    # passes then re-run per consumer) -- for plan inspection or for
-    # embedding the profile inside a larger plan optimized whole
-    materialize: bool = True
 
     @property
     def pattern_len(self) -> int:
@@ -144,9 +144,10 @@ class ProfileParams:
 
     @property
     def need_cardinality(self) -> bool:
+        # the breakdown feature reports cardinality whatever lcb_limit
         return (
             self.has("cardinality")
-            or (self.has("cardinality_breakdown") and self.lcb_limit > 0)
+            or self.has("cardinality_breakdown")
             or self.mode == "approx"  # gates the low-card modes pass
         )
 
@@ -640,48 +641,6 @@ def _deterministic_sample(df: DataFrame, pct: int) -> DataFrame:
     return df.filter(h < pct)
 
 
-def grouped_topk(
-    df: DataFrame,
-    keys: list[str],
-    order: list[Column],
-    k: int,
-    salt_col: Column,
-    buckets: int = 64,
-    rank_name: str = "_rn",
-) -> DataFrame:
-    """Skew-free per-group top-k: a whole group is never one window
-    partition.  Phase 1 takes a local top-k inside ``buckets`` salt
-    partitions per group; phase 2 ranks the <= buckets*k survivors."""
-    salt = F.pmod(salt_col, F.lit(buckets))
-    local = df.withColumn("_rn1", F.row_number().over(
-        Window.partitionBy(*[F.col(c) for c in keys], salt).orderBy(*order)
-    )).filter(F.col("_rn1") <= k).drop("_rn1")
-    w2 = Window.partitionBy(*[F.col(c) for c in keys]).orderBy(*order)
-    return local.withColumn(rank_name, F.row_number().over(w2)).filter(
-        F.col(rank_name) <= k
-    )
-
-
-def _attr_meta_df(df: DataFrame, attrs: list[AttrInfo], sort_prefix: str, name_prefix: str):
-    spark = df.sparkSession
-    rows = [
-        (
-            name_prefix + a.name,
-            a.name,
-            a.given_type,
-            a.kind,
-            f"{sort_prefix}{a.ordinal:05d}",
-        )
-        for a in attrs
-    ]
-    schema = "attribute string, _local_name string, given_attribute_type string, _kind string, sort_value string"
-    return lit_df(spark, rows, schema)
-
-
-def _empty_array(struct_type: str) -> Column:
-    return F.expr(f"cast(array() as array<{struct_type}>)")
-
-
 def profile(
     df: DataFrame,
     field_list: list[str] | str | None = None,
@@ -692,7 +651,6 @@ def profile(
     lcb_limit: int = 64,
     allow_zero: bool = False,
     mode: str = "exact",
-    materialize: bool = True,
 ) -> DataFrame:
     """Profile every (selected) column of ``df``.
 
@@ -700,10 +658,13 @@ def profile(
     reference's ``FinalOutputLayout`` (Profile.ecl:445-496): child
     ArrayType(StructType) columns are exploded and profiled
     independently with dotted names, appended after the top-level
-    attributes (Profile.ecl:1672-1739).  In approx mode the rows are
-    finished, sorted and shaped on the driver, and the returned frame is
-    a LocalRelation: collecting it runs no Spark job.
+    attributes (Profile.ecl:1672-1739).  ``mode`` is ``"exact"`` or
+    ``"approx"``.  In both modes the rows are finished, sorted and
+    shaped on the driver, and the returned frame is a LocalRelation:
+    collecting it runs no Spark job.
     """
+    if mode not in ("exact", "approx"):
+        raise ValueError(f"mode must be 'exact' or 'approx', not {mode!r}")
     if isinstance(field_list, str):
         field_list = [f for f in field_list.replace(" ", "").split(",") if f] or None
     if isinstance(features, str):
@@ -717,7 +678,6 @@ def profile(
         lcb_limit=min(max(lcb_limit, 0), 1000),
         allow_zero=allow_zero,
         mode=mode,
-        materialize=materialize,
     )
     attrs, children = walk_schema(df.schema, params.field_list)
     sampled = _deterministic_sample(df, params.sample_size)
@@ -740,26 +700,14 @@ def profile(
             )
     if not flats:
         raise ValueError("no profilable attributes found")
-    if params.mode != "exact":
-        # every row is already on the driver: sort it there, so the
-        # returned frame is a LocalRelation that reads back with no job
-        rows = [
-            r
-            for frame, fattrs, name_prefix, sort_prefix in flats
-            for r in _profile_flat_approx(
-                frame, fattrs, params, name_prefix, sort_prefix
-            )
-        ]
-        rows.sort(key=lambda r: r["sort_value"])
-        return _rows_frame(df.sparkSession, rows, params)
-    results = [
-        _profile_flat(frame, fattrs, params, name_prefix, sort_prefix)
+    flat = _profile_flat if params.mode == "exact" else _profile_flat_approx
+    rows = [
+        r
         for frame, fattrs, name_prefix, sort_prefix in flats
+        for r in flat(frame, fattrs, params, name_prefix, sort_prefix)
     ]
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    return out.orderBy("sort_value").drop("sort_value", "_local_name", "_kind")
+    rows.sort(key=lambda r: r["sort_value"])
+    return _rows_frame(df.sparkSession, rows, params)
 
 
 def _run_jobs(spark: SparkSession, jobs: dict) -> dict:
@@ -792,48 +740,40 @@ def _run_jobs(spark: SparkSession, jobs: dict) -> dict:
         return {name: f.result() for name, f in futs.items()}
 
 
-def _materialize(df: DataFrame, enabled: bool = True) -> DataFrame:
-    """Eagerly materialize a reused profile intermediate.
-
-    Used by exact mode's shared histogram, summary and pattern
-    histogram.  Eager — lazy caching would let the final job's parallel
-    branches race past an unpopulated cache and recompute the shared
-    melt + groupBy.  localCheckpoint, NOT persist: a persisted frame sits in
-    the session CacheManager until explicitly unpersisted, so a
-    long-running driver profiling one ingest batch after another
-    (scripts/run_job.py) would leak one cached melt per call for the
-    session's lifetime (round-3 fix — the same defect class as the
-    round-2 minhash persist leak; probe:
-    tests/test_operators.py::test_profile_and_checks_leave_no_cached_frames).
-    The checkpointed partitions are freed by the ContextCleaner once
-    the returned frame is unreferenced, and cutting lineage also
-    removes the per-consumer Catalyst re-optimization of the melt
-    expression tree (a serial driver cost, measured dominant at the
-    39-type fixture).  Interleaved flagship A/B at 4.8M turns:
-    persist 17.9/18.7 s vs localCheckpoint 19.7/16.8 s — identical
-    within this host's documented variance window.
-
-    ``enabled=False`` (ProfileParams.materialize) returns the frame
-    untouched — full lineage kept, shared passes re-run per consumer;
-    for plan inspection (pushdown/pruning tests) or embedding the
-    profile inside a larger plan a caller optimizes whole."""
-    if not enabled:
-        return df
-    return df.localCheckpoint(eager=True)
-
-
 def _profile_flat(
     df: DataFrame,
     attrs: list[AttrInfo],
     params: ProfileParams,
     name_prefix: str,
     sort_prefix: str,
-) -> DataFrame:
-    """Profile a flat (scalar-attribute) frame — the analogue of one
-    ``_Inner_Profile`` expansion (Profile.ecl:508-1665)."""
-    plen = params.pattern_len
-    meta = _attr_meta_df(df, attrs, sort_prefix, name_prefix)
+) -> list[dict]:
+    """Exact profile of a flat (scalar-attribute) frame — the analogue
+    of one ``_Inner_Profile`` expansion (Profile.ecl:508-1665).  Returns
+    one row dict per attribute, as :func:`_profile_flat_approx` does.
 
+    The exact histograms stay on the cluster; what the driver fetches
+    is bounded:
+
+    ========  =============================================  ===========
+    phase     fetch                                          rows per
+                                                             attribute
+    ========  =============================================  ===========
+    hist      none: the ``(attribute, value, len)``          --
+              histogram, checkpointed for the passes below
+    summary   fill, lengths, cardinality, best type          1
+    numeric   :func:`_exact_numeric_stats`                   1
+    vh        value histogram: the top ``MAX_MODES`` (and    <= 10, or
+              bottom), or every value when 0 < cardinality   lcb_limit
+              <= ``lcb_limit``
+    patterns  pattern histogram: the top and bottom k        <= 2k
+    corr      one ``agg`` of every ``corr`` pair             1 in all
+    ========  =============================================  ===========
+
+    The summary decides which attributes are numeric and which get a
+    breakdown, so the other fetches follow it, concurrently.
+    :func:`_driver_finish` turns the fetches into rows."""
+    plen = params.pattern_len
+    spark = df.sparkSession
     string_attrs = [a.name for a in attrs if a.kind == KIND_STRING]
     as_is_attrs = [
         a.name for a in attrs if a.kind in (KIND_NUMERIC, KIND_BOOLEAN, KIND_ARRAY)
@@ -865,8 +805,7 @@ def _profile_flat(
     # fill/lengths/type-folds are exact either way; the distinct-value
     # histogram only pays off when some stat genuinely groups by value
     needs_value_grouping = (
-        params.has("cardinality")
-        or (params.has("cardinality_breakdown") and params.lcb_limit > 0)
+        params.need_cardinality
         or params.has("modes")
         or params.need_patterns
         or params.need_numeric
@@ -874,19 +813,25 @@ def _profile_flat(
 
     if needs_value_grouping:
         # distinct-value histogram first: pattern/flag work then runs
-        # once per distinct value (cheaper than per row).  Persisted:
-        # modes/patterns/numeric-stats all branch from it, and without
-        # a persist each branch would re-run the melt + groupBy.
-        hist = (
-            melted.groupBy("attribute", "value", "len")
-            .agg(F.count(F.lit(1)).alias("cnt"))
+        # once per distinct value (cheaper than per row).  The summary,
+        # numeric, value and pattern passes all branch from it, so it
+        # is materialized eagerly (lazy caching would let the concurrent
+        # passes race past an unpopulated cache and each re-run the melt
+        # + groupBy).  localCheckpoint, NOT persist: a persisted frame
+        # sits in the session CacheManager until unpersisted, so a
+        # long-running driver profiling one batch after another
+        # (scripts/run_job.py) would leak one cached melt per call
+        # (probe: tests/test_operators.py::
+        # test_profile_and_checks_leave_no_cached_frames).  The
+        # checkpointed partitions are freed by the ContextCleaner once
+        # the frame is unreferenced, and each pass then plans against a
+        # leaf scan instead of re-optimizing the melt's expression tree.
+        hist = derive(
+            melted.groupBy("attribute", "value", "len").agg(F.count(F.lit(1)).alias("cnt")),
+            params.need_flags,
+            need_pattern,
         )
-        # materialized eagerly; at high column counts additionally
-        # lineage-truncated — each consumer then plans against a leaf
-        # scan instead of re-running Catalyst over the melt expression
-        # tree, a measured driver-side serial cost (see _materialize)
-        hist = _materialize(derive(hist, params.need_flags, need_pattern), params.materialize)
-        stats_src = hist
+        stats_src = _run_jobs(spark, {"hist": lambda: hist.localCheckpoint(eager=True)})["hist"]
     elif params.need_flags:
         # fill/lengths/type-folds only: aggregate the melt directly
         stats_src = derive(melted.withColumn("cnt", F.lit(1)), params.need_flags, need_pattern)
@@ -937,73 +882,48 @@ def _profile_flat(
         agg_exprs.append(
             F.count_distinct(F.when(filled, F.col("value"))).alias("cardinality")
         )
+    # best type + is_numeric per attribute (Profile.ecl:1002-1023), with
+    # the metadata from a literal map, as in approx mode's pass 1
+    meta = _attr_meta(attrs, name_prefix, sort_prefix)
     summary = stats_src.groupBy("attribute").agg(*agg_exprs)
-
-    fill_defaults = {
-        "rec_count": 0,
-        "fill_count": 0,
-        "min_length": 0,
-        "max_length": 0,
-        "ave_length": 0,
-        "type_flags": 0,
-        "min_len_nonzero": 0,
-        "has_unicode": 0,
-        "cardinality": 0,
-    }
-    # meta.attribute carries the (possibly child-dataset-prefixed) full
-    # name; the histogram uses local column names -> join on local name.
-    base = meta.join(
-        summary.withColumnRenamed("attribute", "_local_name"), "_local_name", "left"
-    ).na.fill({k: v for k, v in fill_defaults.items() if k in summary.columns or k in ("rec_count",)})
-
-    # --- best type + is_numeric per attribute (Profile.ecl:1002-1023) ---
-    base = base.withColumns(
-        _type_stats(F.col("_kind"), F.col("given_attribute_type"), params.need_flags)
+    summary = summary.select(
+        *[meta[c].alias(c) for c in ("attribute", "given_attribute_type", "_kind", "sort_value")],
+        F.col("attribute").alias("_local_name"),
+        *[c for c in summary.columns if c != "attribute"],
+        *[
+            e.alias(c)
+            for c, e in _type_stats(
+                meta["_kind"], meta["given_attribute_type"], params.need_flags
+            ).items()
+        ],
     )
-    # base is one tiny row per attribute but costs a full input pass;
-    # numeric-attr selection, low-card gating and the final assembly
-    # all reuse it (see hist note)
-    base = _materialize(base, params.materialize)
+    got = _run_jobs(spark, {"summary": summary.collect})
+    by_name = {r["_local_name"]: r.asDict() for r in got["summary"]}
+    base_rows = [
+        by_name.get(a.name) or _unfilled_base_row(a, name_prefix, sort_prefix)
+        for a in attrs
+    ]
 
-    pieces = [base]
-
-    # --- numeric stats (A5/A6) ---
-    if params.need_numeric:
-        num_attr_names = base.filter(F.col("is_numeric")).select(
-            F.col("_local_name").alias("attribute")
-        )
-        src = stats_src.filter(filled).join(F.broadcast(num_attr_names), "attribute")
-        hnum = src.select(
+    jobs: dict[str, object] = {}
+    # --- numeric stats (A5/A6) of the attributes judged numeric ---
+    num_names = [r["_local_name"] for r in base_rows if r["is_numeric"]]
+    if params.need_numeric and num_names:
+        hnum = stats_src.filter(filled & F.col("attribute").isin(num_names)).select(
             "attribute", F.col("value").cast("double").alias("v"), "cnt"
         )
-        numstats = _exact_numeric_stats(hnum)
-        numstats = numstats.select(
-            F.concat(F.lit(name_prefix), F.col("attribute")).alias("attribute"),
-            *[c for c in numstats.columns if c != "attribute"],
-        )
-        pieces.append(numstats)
+        jobs["numeric"] = _exact_numeric_stats(hnum).collect
 
-    # --- modes (J2: top-5 tied for max, count>1) + low-card breakdown ---
-    if params.has("modes") or params.has("cardinality_breakdown"):
-        vh = (
-            stats_src.filter(filled)
-            .groupBy("attribute", "value")
-            .agg(F.sum("cnt").alias("rec_count"))
-        )
-        if params.has("modes"):
-            pieces.append(_modes_piece(vh, name_prefix))
-        if params.has("cardinality_breakdown") and params.lcb_limit > 0:
-            low_attrs = base.filter(
-                (F.col("cardinality") > 0) & (F.col("cardinality") <= params.lcb_limit)
-            ).select(F.col("_local_name").alias("attribute"))
-            pieces.append(_lcb_piece(vh, low_attrs, name_prefix))
+    # --- value histogram: modes (J2) + low-card breakdown (A9) ---
+    lcb_names = sorted(_lcb_names(base_rows, params))
+    if params.has("modes") or lcb_names:
+        lcb = F.col("attribute").isin(lcb_names)
+        vh = stats_src.filter(filled if params.has("modes") else filled & lcb)
+        vh = vh.groupBy("attribute", "value").agg(F.sum("cnt").alias("rec_count"))
+        k = F.when(lcb, params.lcb_limit).otherwise(MAX_MODES)
+        jobs["vh"] = _dual_topk_survivors(vh, k, "value").toArrow
 
     # --- popular / rare text patterns (A8 + J3) ---
     if params.need_patterns:
-        # checkpointed: the top-k, bottom-k and anti-join branches
-        # would otherwise each recompute the melt + pattern
-        # aggregation.  localCheckpoint, not persist — see
-        # _materialize (persist leaks a CacheManager entry per call)
         pat = (
             stats_src.filter(filled)
             .withColumn("data_pattern", finish_pattern(F.col("pattern")))
@@ -1013,148 +933,27 @@ def _profile_flat(
                 F.min(F.substring(F.col("value"), 1, plen)).alias("example"),
             )
         )
-        pat = _materialize(pat, params.materialize)
-        pieces.extend(_pattern_pieces(pat, params, name_prefix))
+        jobs["patterns"] = _dual_topk_survivors(
+            pat, int(params.max_patterns), "data_pattern"
+        ).toArrow
 
     # --- correlations (A12, Profile.ecl:1213-1260) ---
-    if params.has("correlations"):
-        num_given = [a.name for a in attrs if a.kind == KIND_NUMERIC]
-        corr_df = _correlations(df, num_given, name_prefix)
-        if corr_df is not None:
-            pieces.append(corr_df)
+    corr_pairs = _corr_pairs(attrs, params)
+    if corr_pairs:
+        jobs["corr"] = _corr_agg(df, corr_pairs)
 
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.join(p, "attribute", "left")
-
-    return _shape_output(out, params)
-
-
-def _modes_piece(vh: DataFrame, name_prefix: str) -> DataFrame:
-    """Mode tie semantics (J2, Profile.ecl:1163-1175): up to MAX_MODES
-    values tied for the max count, only when count>1 — broadcast
-    max-join, never a whole-attribute window partition (skew note)."""
-    max_cnt = vh.groupBy("attribute").agg(F.max("rec_count").alias("_mx"))
-    tied = vh.join(F.broadcast(max_cnt), "attribute").filter(
-        (F.col("rec_count") == F.col("_mx")) & (F.col("rec_count") > 1)
+    res = _run_jobs(spark, jobs)
+    for r in res.get("numeric", []):
+        by_name[r["attribute"]].update({c: r[c] for c in _NUMERIC_STATS})
+    return _driver_finish(
+        base_rows,
+        params,
+        name_prefix,
+        res.get("patterns"),
+        res.get("vh"),
+        corr_pairs,
+        res.get("corr"),
     )
-    w_tied = Window.partitionBy("attribute").orderBy(F.asc("value"))
-    mode_rows = tied.withColumn("_rn", F.row_number().over(w_tied)).filter(
-        F.col("_rn") <= MAX_MODES
-    )
-    modes = mode_rows.groupBy("attribute").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("value").alias("value"),
-                    F.col("rec_count").alias("rec_count"),
-                )
-            )
-        ).alias("modes")
-    )
-    return modes.select(
-        F.concat(F.lit(name_prefix), F.col("attribute")).alias("attribute"), "modes"
-    )
-
-
-def _lcb_piece(vh: DataFrame, low_attrs: DataFrame, name_prefix: str) -> DataFrame:
-    """Low-cardinality breakdown (A9, Profile.ecl:1178-1192): the full
-    value list, count-desc, only for attributes in ``low_attrs``."""
-    lcb_rows = vh.join(F.broadcast(low_attrs), "attribute")
-    lcb = lcb_rows.groupBy("attribute").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        (-F.col("rec_count")).alias("_k"),
-                        F.col("value").alias("value"),
-                        F.col("rec_count").alias("rec_count"),
-                    )
-                )
-            ),
-            lambda s: F.struct(
-                s["value"].alias("value"), s["rec_count"].alias("rec_count")
-            ),
-        ).alias("cardinality_breakdown")
-    )
-    return lcb.select(
-        F.concat(F.lit(name_prefix), F.col("attribute")).alias("attribute"),
-        "cardinality_breakdown",
-    )
-
-
-def _pattern_pieces(
-    pat: DataFrame, params: ProfileParams, name_prefix: str
-) -> list[DataFrame]:
-    """Popular/rare pattern pieces (A8 + anti-join J3) from the
-    per-attribute pattern histogram ``pat`` (persisted by the caller:
-    top-k, bottom-k and the anti-join all branch from it)."""
-    prefixed = F.concat(F.lit(name_prefix), F.col("attribute"))
-    k = int(params.max_patterns)
-    salt = F.xxhash64("data_pattern")
-    top = grouped_topk(
-        pat,
-        ["attribute"],
-        [F.desc("rec_count"), F.asc("data_pattern")],
-        k,
-        salt,
-        rank_name="_rn_top",
-    ).drop("_rn_top")
-    rare0 = grouped_topk(
-        pat,
-        ["attribute"],
-        [F.asc("rec_count"), F.asc("data_pattern")],
-        k,
-        salt,
-        rank_name="_rn_rare",
-    ).drop("_rn_rare")
-    rare = rare0.join(
-        top.select("attribute", "data_pattern"),
-        ["attribute", "data_pattern"],
-        "left_anti",
-    )
-    popular = top.groupBy("attribute").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        (-F.col("rec_count")).alias("_k"),
-                        F.col("data_pattern").alias("data_pattern"),
-                        F.col("rec_count").alias("rec_count"),
-                        F.col("example").alias("example"),
-                    )
-                )
-            ),
-            lambda s: F.struct(
-                s["data_pattern"].alias("data_pattern"),
-                s["rec_count"].alias("rec_count"),
-                s["example"].alias("example"),
-            ),
-        ).alias("popular_patterns")
-    )
-    rare_agg = rare.groupBy("attribute").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("rec_count").alias("_k"),
-                        F.col("data_pattern").alias("data_pattern"),
-                        F.col("rec_count").alias("rec_count"),
-                        F.col("example").alias("example"),
-                    )
-                )
-            ),
-            lambda s: F.struct(
-                s["data_pattern"].alias("data_pattern"),
-                s["rec_count"].alias("rec_count"),
-                s["example"].alias("example"),
-            ),
-        ).alias("rare_patterns")
-    )
-    return [
-        popular.select(prefixed.alias("attribute"), "popular_patterns"),
-        rare_agg.select(prefixed.alias("attribute"), "rare_patterns"),
-    ]
 
 
 # the typed key slots of _lowcard_value_hist's melt
@@ -1331,40 +1130,33 @@ def _light_pattern_hist(
     return out
 
 
-def _dual_topk_survivors(frame: DataFrame, k: int) -> DataFrame:
-    """Per-attribute top-k AND bottom-k pattern survivors in ONE pass:
-    both rankings ride a single Exchange on (attribute, salt) — phase 1
-    keeps k per salt bucket per direction, phase 2 ranks the bounded
-    survivors per attribute.  A whole attribute is never one window
-    partition (skew note, same shape as the heavy-candidate winners).
-    Output: the <= 2k rows per attribute that can appear in the
-    popular/rare top-k, with exact counts."""
+def _dual_topk_survivors(
+    frame: DataFrame, k: int | Column, tie: str, count: str = "rec_count"
+) -> DataFrame:
+    """Per-attribute top-k AND bottom-k rows of a histogram in ONE pass,
+    ranked by ``count`` (descending, then ascending) with ``tie``
+    ascending as the tie-break: both rankings ride a single Exchange on
+    (attribute, salt) — phase 1 keeps k per salt bucket per direction,
+    phase 2 ranks the bounded survivors per attribute.  A whole
+    attribute is never one window partition (skew note).  ``k`` may be
+    a per-row Column (a per-attribute k).  Output: the <= 2k rows per
+    attribute that can appear in a top-k or bottom-k, with ``frame``'s
+    columns."""
     buckets = 64
-    salt = F.pmod(F.xxhash64("data_pattern"), F.lit(buckets))
-    w1d = Window.partitionBy("attribute", salt).orderBy(
-        F.desc("rec_count"), F.asc("data_pattern")
-    )
-    w1a = Window.partitionBy("attribute", salt).orderBy(
-        F.asc("rec_count"), F.asc("data_pattern")
-    )
-    local = (
-        frame.withColumn("_rd", F.row_number().over(w1d))
-        .withColumn("_ra", F.row_number().over(w1a))
-        .filter((F.col("_rd") <= k) | (F.col("_ra") <= k))
-        .drop("_rd", "_ra")
-    )
-    w2d = Window.partitionBy("attribute").orderBy(
-        F.desc("rec_count"), F.asc("data_pattern")
-    )
-    w2a = Window.partitionBy("attribute").orderBy(
-        F.asc("rec_count"), F.asc("data_pattern")
-    )
-    return (
-        local.withColumn("_fd", F.row_number().over(w2d))
-        .withColumn("_fa", F.row_number().over(w2a))
-        .filter((F.col("_fd") <= k) | (F.col("_fa") <= k))
-        .drop("_fd", "_fa")
-    )
+    salt = F.pmod(F.xxhash64(tie), F.lit(buckets))
+    top, bottom = [F.desc(count), F.asc(tie)], [F.asc(count), F.asc(tie)]
+    keep = (F.col("_rd") <= k) | (F.col("_ra") <= k)
+
+    def survivors(f: DataFrame, *part: Column) -> DataFrame:
+        w = Window.partitionBy("attribute", *part)
+        return (
+            f.withColumn("_rd", F.row_number().over(w.orderBy(*top)))
+            .withColumn("_ra", F.row_number().over(w.orderBy(*bottom)))
+            .filter(keep)
+            .drop("_rd", "_ra")
+        )
+
+    return survivors(survivors(frame, salt))
 
 
 def _heavy_pattern_candidates(
@@ -1390,8 +1182,9 @@ def _heavy_pattern_candidates(
        pays the pattern mapping): the sample is counted exactly per
        64-bit pattern hash, and the global top-2m / bottom-2m hashes
        per attribute survive as candidates (m = 4*maxPatterns, min
-       400; per-group top-k via the salted two-phase ``grouped_topk``,
-       never a whole-attribute window partition).
+       400; per-group top-k via the salted two-phase
+       :func:`_dual_topk_survivors`, never a whole-attribute window
+       partition).
     2. **resolution**: one column-pruned re-scan recomputes each row's
        pattern hash and keeps only rows matching the <= 4m winning
        hashes per attribute (broadcast semi-join on 8-byte keys), then
@@ -1463,32 +1256,10 @@ def _pattern_sample_winners(
         .groupBy("attribute", "ph")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    # Top-2m AND bottom-2m in ONE pass over cand: both rankings ride a
-    # single Exchange on (attribute, salt) — the two Sort+Window pairs
-    # share the partitioning — then a final ranking over the
-    # <= 2*buckets*2m survivors per attribute.  Phase-1 keeps 2m per
-    # salt bucket, so the global top/bottom-2m always survive to
-    # phase 2 (a whole attribute is never one window partition).  The
-    # previous formulation (localCheckpoint + two grouped_topk trees)
-    # paid an extra checkpoint job + barrier — parallelism-independent
-    # time on the flagship.
-    buckets = 64
-    salt = F.pmod(F.col("ph"), F.lit(buckets))
-    w1d = Window.partitionBy("attribute", salt).orderBy(F.desc("cnt"), F.asc("ph"))
-    w1a = Window.partitionBy("attribute", salt).orderBy(F.asc("cnt"), F.asc("ph"))
-    survivors = (
-        cand.withColumn("_rd", F.row_number().over(w1d))
-        .withColumn("_ra", F.row_number().over(w1a))
-        .filter((F.col("_rd") <= 2 * m) | (F.col("_ra") <= 2 * m))
-    )
-    w2d = Window.partitionBy("attribute").orderBy(F.desc("cnt"), F.asc("ph"))
-    w2a = Window.partitionBy("attribute").orderBy(F.asc("cnt"), F.asc("ph"))
-    return (
-        survivors.withColumn("_fd", F.row_number().over(w2d))
-        .withColumn("_fa", F.row_number().over(w2a))
-        .filter((F.col("_fd") <= 2 * m) | (F.col("_fa") <= 2 * m))
-        .select("attribute", "ph")
-    )
+    # top-2m AND bottom-2m per attribute in ONE pass over cand (the
+    # previous formulation, a localCheckpoint + two top-k window trees,
+    # paid an extra checkpoint job + barrier)
+    return _dual_topk_survivors(cand, 2 * m, "ph", count="cnt").select("attribute", "ph")
 
 
 def _resolve_pattern_candidates(
@@ -1528,7 +1299,7 @@ def _resolve_pattern_candidates(
 # Driver-row budget of the light-pattern fetch.  When pass 1's bound
 # on the light attributes' pattern rows exceeds it, the salted window
 # top-k/bottom-k (_dual_topk_survivors) reduces the histogram on the
-# cluster before the fetch.  Every other fetch of the driver finish is
+# cluster before the fetch.  Every other fetch of approx mode is
 # bounded by construction: <= approx_mode_card_limit value rows per
 # low-card attribute, <= 4m resolved candidates per heavy attribute.
 _DRIVER_ROW_BUDGET = 500_000
@@ -1567,8 +1338,9 @@ def _attr_meta(attrs: list[AttrInfo], name_prefix: str, sort_prefix: str) -> Col
 
 
 def _unfilled_base_row(a: AttrInfo, name_prefix: str, sort_prefix: str) -> dict:
-    """The pass-1 row of an attribute with no input rows (pass 1 then
-    emits none): zero counts, the given type, no numeric stats."""
+    """The pass-1 (or exact summary) row of an attribute with no input
+    rows (the aggregate then emits none): zero counts, the given type,
+    no numeric stats."""
     zero = (
         "rec_count", "fill_count", "min_length", "max_length", "ave_length",
         "cardinality", "_pat_card_short", "_n_long",
@@ -1587,7 +1359,7 @@ def _by_attribute(tbl, keys: list[tuple[str, str]]) -> dict:
     """Arrow table ``tbl`` sorted by ``attribute`` then ``keys``, split
     into one slice per attribute.  Arrow compares strings as UTF-8
     bytes, which is Spark's binary string order, so the tie-breaks are
-    those of the reference's Window/array_sort orderings."""
+    those of a Spark ``ORDER BY`` on the same keys."""
     import pyarrow.compute as pc
 
     tbl = tbl.take(pc.sort_indices(tbl, [("attribute", "ascending"), *keys]))
@@ -1620,137 +1392,78 @@ def _popular_rare(pat, k: int) -> tuple[dict, dict]:
     return popular, rare
 
 
-def _approx_driver_tail(
-    df: DataFrame,
-    attrs: list[AttrInfo],
-    params: ProfileParams,
-    name_prefix: str,
-    base_rows: list[dict],
-    lp: DataFrame | None,
-    heavy_pat: DataFrame | None,
-    vh: DataFrame | None,
-    derive_names: set[str],
-    plen: int,
-) -> list[dict]:
-    """Driver-side finishing of the approx profile: the profile's rows.
+def _lcb_names(base_rows: list[dict], params: ProfileParams) -> set[str]:
+    """The attributes that get a cardinality breakdown (A9,
+    Profile.ecl:1178-1192): those with 0 < cardinality <= lcb_limit."""
+    if not (params.has("cardinality_breakdown") and params.lcb_limit > 0):
+        return set()
+    return {
+        r["_local_name"] for r in base_rows if 0 < r["cardinality"] <= params.lcb_limit
+    }
 
-    Every follow-up input is bounded (see ``_DRIVER_ROW_BUDGET``), so
-    the follow-ups run concurrently, each one a fetch:
 
-    ================  ===========================================  =====
-    phase             fetch                                        jobs
-    ================  ===========================================  =====
-    light_patterns    light-attribute pattern histogram, as Arrow  1 per
-                      (pre-reduced by ``_dual_topk_survivors``     branch
-                      only over the row budget)                    + 1
-    heavy_patterns    resolved heavy-attribute candidates, Arrow   7
-    vh                low-card value histogram, one aggregate      2
-                      keyed by (attribute, value), as Arrow
-    corr              one ``agg`` of every ``corr`` pair           2
-    ================  ===========================================  =====
+def _corr_pairs(attrs: list[AttrInfo], params: ProfileParams) -> list[tuple[str, str]]:
+    """Every pair of numeric attributes, when correlations are profiled
+    (A12, Profile.ecl:1213-1245)."""
+    if not params.has("correlations"):
+        return []
+    num = [a.name for a in attrs if a.kind == KIND_NUMERIC]
+    return [(x, y) for i, x in enumerate(num) for y in num[i + 1 :]]
 
-    (Job counts at 16 shuffle partitions; the heavy path's with one
-    heavy attribute.)
 
-    The rest runs in Python over Arrow tables: popular/rare split with
-    the anti-join (J3), mode ties (J2, Profile.ecl:1163-1175),
-    cardinality breakdown (A9), correlation mirroring (A12) and the
-    per-attribute assembly.  Cluster-side, those steps are about ten
-    sequential tiny stages of pure scheduler latency.  String ordering
-    parity: Spark compares strings as binary UTF-8, which is the order
-    of Arrow's sorts and of Python's code-point comparison, so the
-    tie-breaks match the Window/array_sort ones exactly."""
-    # imported here: incremental.py imports this module, and the
-    # checkpointed path never fetches Arrow
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    spark = df.sparkSession
-    k = int(params.max_patterns)
-    need_pat_feature = params.need_patterns
-    derive_attrs = [a for a in attrs if a.name in derive_names]
-
-    vh_plan = vh
-    if vh is not None and derive_names and need_pat_feature:
-        # pattern and example of each DISTINCT value, computed
-        # Spark-side over the bounded histogram rows (exact
-        # translate/regex semantics, no Python reimplementation), gated
-        # to the derive attributes
-        derive = F.col("attribute").isin(sorted(derive_names))
-        vh_plan = vh.withColumns(
-            {
-                "_dp": F.when(derive, finish_pattern(_pattern_expr(derive_attrs, plen))),
-                "_ex": F.when(derive, F.substring(F.col("value"), 1, plen)),
-            }
-        )
-
-    jobs: dict[str, object] = {}
-    if lp is not None:
-        jobs["light_patterns"] = lp.toArrow
-    if heavy_pat is not None:
-        jobs["heavy_patterns"] = heavy_pat.toArrow
-    if vh_plan is not None:
-        jobs["vh"] = vh_plan.toArrow
-    num_given = [a.name for a in attrs if a.kind == KIND_NUMERIC]
-    corr_pairs = []
-    if params.has("correlations") and len(num_given) >= 2:
-        corr_pairs = [
-            (x, y) for i, x in enumerate(num_given) for y in num_given[i + 1 :]
-        ]
-        jobs["corr"] = lambda: df.agg(
+def _corr_agg(df: DataFrame, pairs: list[tuple[str, str]]):
+    """The job computing every pair's Pearson correlation in ONE
+    aggregate (the reference scans once per pair): a zero-argument
+    callable returning the one result row."""
+    return (
+        lambda: df.agg(
             *[
                 F.corr(F.col(x).cast("double"), F.col(y).cast("double")).alias(f"c{i}")
-                for i, (x, y) in enumerate(corr_pairs)
+                for i, (x, y) in enumerate(pairs)
             ]
         ).collect()[0]
-    res = _run_jobs(spark, jobs)
+    )
 
+
+def _driver_finish(
+    base_rows: list[dict],
+    params: ProfileParams,
+    name_prefix: str,
+    pat,
+    vh,
+    corr_pairs: list[tuple[str, str]],
+    corr_row,
+) -> list[dict]:
+    """The profile's rows, in both modes, from the bounded fetches:
+    ``base_rows`` (one dict per attribute), the pattern histogram
+    ``pat`` (an ``(attribute, data_pattern, rec_count, example)`` Arrow
+    table holding at least each attribute's top-k and bottom-k
+    patterns), the value histogram ``vh`` (an ``(attribute, value,
+    rec_count)`` Arrow table holding at least each attribute's top
+    ``MAX_MODES`` values and every value of each breakdown attribute),
+    and the correlations of ``corr_pairs`` in ``corr_row``.
+
+    In Python: popular/rare split with the anti-join (J3), mode ties
+    (J2, Profile.ecl:1163-1175), cardinality breakdown (A9),
+    correlation mirroring (A12) and the per-attribute assembly.
+    Cluster-side, those steps were about ten sequential tiny stages of
+    pure scheduler latency (24 jobs of an exact profile).  String
+    ordering parity: Spark compares strings as binary UTF-8, which is
+    the order of Arrow's sorts and of Python's code-point comparison,
+    so the tie-breaks are those of :func:`_dual_topk_survivors`' cuts
+    and of a Spark ``ORDER BY``."""
     # ---- popular / rare patterns (A8 + anti-join J3) ----
     popular: dict[str, list] = {}
     rare: dict[str, list] = {}
-    if need_pat_feature:
-        pat_schema = pa.schema(
-            [
-                ("attribute", pa.string()),
-                ("data_pattern", pa.string()),
-                ("rec_count", pa.int64()),
-                ("example", pa.string()),
-            ]
-        )
-        pats = [
-            res[key].select(pat_schema.names).cast(pat_schema)
-            for key in ("light_patterns", "heavy_patterns")
-            if key in res
-        ]
-        if derive_names and "vh" in res:
-            # exact pattern histogram of the vh-covered attributes: sum
-            # of value counts per pattern, min example over the values
-            d = res["vh"].filter(pc.is_valid(res["vh"]["_dp"]))
-            d = d.group_by(["attribute", "_dp"]).aggregate(
-                [("rec_count", "sum"), ("_ex", "min")]
-            )
-            pats.append(
-                d.select(["attribute", "_dp", "rec_count_sum", "_ex_min"])
-                .rename_columns(pat_schema.names)
-                .cast(pat_schema)
-            )
-        if pats:
-            popular, rare = _popular_rare(pa.concat_tables(pats), k)
+    if pat is not None:
+        popular, rare = _popular_rare(pat, int(params.max_patterns))
 
-    # ---- modes (J2) + cardinality breakdown (A9) from the vh rows ----
+    # ---- modes (J2) + cardinality breakdown (A9) ----
     modes: dict[str, list] = {}
     lcb: dict[str, list] = {}
-    if "vh" in res:
-        lcb_names = set()
-        if params.has("cardinality_breakdown") and params.lcb_limit > 0:
-            lcb_names = {
-                r["_local_name"]
-                for r in base_rows
-                if 0 < r["cardinality"] <= params.lcb_limit
-            }
-        by_count = _by_attribute(
-            res["vh"], [("rec_count", "descending"), ("value", "ascending")]
-        )
+    if vh is not None:
+        lcb_names = _lcb_names(base_rows, params)
+        by_count = _by_attribute(vh, [("rec_count", "descending"), ("value", "ascending")])
         for a, t in by_count.items():
             t = t.select(["value", "rec_count"])
             if params.has("modes"):
@@ -1763,36 +1476,25 @@ def _approx_driver_tail(
 
     # ---- correlations (A12, mirrored both directions) ----
     corr: dict[str, list] = {}
-    if corr_pairs:
-        row = res["corr"]
-        by_num: dict[str, list] = {n: [] for n in num_given}
-        for i, (x, y) in enumerate(corr_pairs):
-            c = row[i]
-            c = round(float(c), 6) if c is not None else 0.0
-            by_num[x].append((name_prefix + y, c))
-            by_num[y].append((name_prefix + x, c))
-        corr = {
-            a: [
-                {"attribute": o, "corr": c}
-                for o, c in sorted(lst, key=lambda t: (-t[1], t[0]))
-            ]
-            for a, lst in by_num.items()
-        }
+    for i, (x, y) in enumerate(corr_pairs):
+        c = corr_row[i]
+        c = round(float(c), 6) if c is not None else 0.0
+        corr.setdefault(x, []).append({"attribute": name_prefix + y, "corr": c})
+        corr.setdefault(y, []).append({"attribute": name_prefix + x, "corr": c})
+    for lst in corr.values():
+        lst.sort(key=lambda d: (-d["corr"], d["attribute"]))
 
-    out = []
-    for r in base_rows:
-        a = r["_local_name"]
-        out.append(
-            {
-                **r,
-                "popular_patterns": popular.get(a),
-                "rare_patterns": rare.get(a),
-                "modes": modes.get(a),
-                "cardinality_breakdown": lcb.get(a),
-                "correlations": corr.get(a),
-            }
-        )
-    return out
+    return [
+        {
+            **r,
+            "popular_patterns": popular.get(r["_local_name"]),
+            "rare_patterns": rare.get(r["_local_name"]),
+            "modes": modes.get(r["_local_name"]),
+            "cardinality_breakdown": lcb.get(r["_local_name"]),
+            "correlations": corr.get(r["_local_name"]),
+        }
+        for r in base_rows
+    ]
 
 
 def _profile_flat_approx(
@@ -1837,6 +1539,9 @@ def _profile_flat_approx(
     3. low-card value histogram for modes/breakdown/derived patterns
        (one aggregate keyed by (attribute, value)) and correlations
        (one agg of all ``corr`` pairs).
+    4. the fetches of steps 2-3 run concurrently, as Arrow, and
+       :func:`_driver_finish` (shared with exact mode) turns them into
+       rows.
 
     Job map of one call on the transcript table (6 columns, about 38k
     turns, 16 shuffle partitions), each job named by its phase:
@@ -1990,31 +1695,80 @@ def _profile_flat_approx(
                 if r["_local_name"] in light_names
             )
             if light_bound > _DRIVER_ROW_BUDGET:
-                lp = _dual_topk_survivors(lp, int(params.max_patterns))
+                lp = _dual_topk_survivors(lp, int(params.max_patterns), "data_pattern")
         if heavy_attrs:
             heavy_pat = _heavy_pattern_candidates(
                 df, heavy_attrs, params, plen, total_rows
             )
 
-    # ---- low-card value histogram: modes + cardinality breakdown ----
-    vh = None
+    # ---- the fetches, concurrently: the finish's bounded inputs ----
+    jobs: dict[str, object] = {}
+    if lp is not None:
+        jobs["light_patterns"] = lp.toArrow
+    if heavy_pat is not None:
+        jobs["heavy_patterns"] = heavy_pat.toArrow
     if need_vh and low_card:
+        # low-card value histogram: modes + cardinality breakdown
         lc_set = set(low_card)
         vh = _lowcard_value_hist(
             df, [a for a in attrs if a.name in lc_set], params.allow_zero
         )
+        if derive_names:
+            # pattern and example of each DISTINCT value, computed
+            # Spark-side over the bounded histogram rows (exact
+            # translate/regex semantics, no Python reimplementation),
+            # gated to the derive attributes
+            derive = F.col("attribute").isin(sorted(derive_names))
+            derive_attrs = [a for a in attrs if a.name in derive_names]
+            vh = vh.withColumns(
+                {
+                    "_dp": F.when(derive, finish_pattern(_pattern_expr(derive_attrs, plen))),
+                    "_ex": F.when(derive, F.substring(F.col("value"), 1, plen)),
+                }
+            )
+        jobs["vh"] = vh.toArrow
+    corr_pairs = _corr_pairs(attrs, params)
+    if corr_pairs:
+        jobs["corr"] = _corr_agg(df, corr_pairs)
+    res = _run_jobs(df.sparkSession, jobs)
 
-    return _approx_driver_tail(
-        df,
-        attrs,
+    # imported here: incremental.py imports this module, and the
+    # checkpointed path never fetches Arrow
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    # one pattern table: the light and heavy fetches, and the exact
+    # pattern histogram of the vh-covered attributes (sum of value
+    # counts per pattern, min example over the values)
+    pat_schema = pa.schema(
+        [
+            ("attribute", pa.string()),
+            ("data_pattern", pa.string()),
+            ("rec_count", pa.int64()),
+            ("example", pa.string()),
+        ]
+    )
+    pats = [
+        res[key].select(pat_schema.names).cast(pat_schema)
+        for key in ("light_patterns", "heavy_patterns")
+        if key in res
+    ]
+    if derive_names:
+        d = res["vh"].filter(pc.is_valid(res["vh"]["_dp"]))
+        d = d.group_by(["attribute", "_dp"]).aggregate([("rec_count", "sum"), ("_ex", "min")])
+        pats.append(
+            d.select(["attribute", "_dp", "rec_count_sum", "_ex_min"])
+            .rename_columns(pat_schema.names)
+            .cast(pat_schema)
+        )
+    return _driver_finish(
+        base_rows,
         params,
         name_prefix,
-        base_rows,
-        lp,
-        heavy_pat,
-        vh,
-        derive_names,
-        plen,
+        pa.concat_tables(pats) if pats else None,
+        res.get("vh"),
+        corr_pairs,
+        res.get("corr"),
     )
 
 
@@ -2095,50 +1849,6 @@ def _exact_numeric_stats(hnum: DataFrame) -> DataFrame:
     )
 
 
-def _correlations(df: DataFrame, numeric_names: list[str], name_prefix: str):
-    """All-pairs Pearson correlation in ONE aggregate pass
-    (Profile.ecl:1213-1245 runs one full scan per pair; Catalyst
-    computes every ``corr`` in a single job here)."""
-    if len(numeric_names) < 2:
-        return None
-    pairs = [
-        (x, y)
-        for i, x in enumerate(numeric_names)
-        for y in numeric_names[i + 1 :]
-    ]
-    row = df.agg(
-        *[
-            F.corr(F.col(x).cast("double"), F.col(y).cast("double")).alias(f"c{i}")
-            for i, (x, y) in enumerate(pairs)
-        ]
-    ).collect()[0]
-    by_attr: dict[str, list[tuple[str, float]]] = {n: [] for n in numeric_names}
-    for i, (x, y) in enumerate(pairs):
-        c = row[i]
-        c = round(float(c), 6) if c is not None else 0.0
-        by_attr[x].append((y, c))
-        by_attr[y].append((x, c))
-    spark = df.sparkSession
-    # literal JVM-side frame (see plans.local): one struct per attr
-    # with its sorted correlation array embedded as array(struct(...))
-    attr_structs = [
-        F.struct(
-            F.lit(name_prefix + attr).alias("attribute"),
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(name_prefix + other).alias("attribute"),
-                        F.lit(c).cast("double").alias("corr"),
-                    )
-                    for other, c in sorted(lst, key=lambda t: (-t[1], t[0]))
-                ]
-            ).alias("correlations"),
-        )
-        for attr, lst in by_attr.items()
-    ]
-    return spark.range(1).select(F.inline(F.array(*attr_structs)))
-
-
 def _output_fields(params: ProfileParams) -> list[tuple[str, str, object]]:
     """The reference's feature-conditional FinalOutputLayout column set
     and order (Profile.ecl:445-496): ``(name, type, fill)`` per column.
@@ -2186,26 +1896,11 @@ def _output_fields(params: ProfileParams) -> list[tuple[str, str, object]]:
     return fields
 
 
-def _shape_output(out: DataFrame, params: ProfileParams) -> DataFrame:
-    """Project ``out`` to :func:`_output_fields`, keeping the sort and
-    helper columns."""
-    cols: list[Column] = []
-    for name, typ, fill in _output_fields(params):
-        if fill is None:
-            c = F.col(name) if typ in ("string", "boolean") else F.col(name).cast(typ)
-        else:
-            default = F.lit(fill) if fill == 0.0 else _empty_array(typ[6:-1])
-            c = F.coalesce(F.col(name), default) if name in out.columns else default
-            if typ == "double":
-                c = c.cast("double")
-        cols.append(c.alias(name))
-    return out.select(*cols, "sort_value", "_local_name", "_kind")
-
-
 def _rows_frame(spark: SparkSession, rows: list[dict], params: ProfileParams) -> DataFrame:
-    """Driver-assembled profile rows as a frame shaped like
-    :func:`_shape_output`, planned as a LocalRelation (reads back with
-    no job)."""
+    """Driver-assembled profile rows as a frame of the
+    :func:`_output_fields` columns, planned as a LocalRelation (reads
+    back with no job).  A row without a value for a column with a
+    ``fill`` reads the fill."""
     fields = _output_fields(params)
     ddl = T.StructType.fromDDL(", ".join(f"{name} {typ}" for name, typ, _ in fields))
     schema = T.StructType(

@@ -19,6 +19,7 @@ from pathlib import Path
 
 import pytest
 from py4j.protocol import Py4JJavaError
+from pyspark.sql import functions as F
 
 from datapatterns_spark.operators import constraints as C
 from datapatterns_spark.operators.incremental import (
@@ -225,6 +226,27 @@ def test_store_without_format_marker_refused(spark, tmp_path):
     shutil.move(old, f"{out}/states")
     files = sorted(os.listdir(f"{out}/states"))
     with pytest.raises(ValueError, match="state_format.*fresh state_path"):
+        profile_incremental(df, "part", out)
+    assert sorted(os.listdir(f"{out}/states")) == files
+
+
+def test_store_of_another_format_refused(spark, tmp_path):
+    """A state store whose rows carry another state_format value than
+    the one profile_state writes is refused on resume with a message
+    naming a fresh state_path, before anything is swept or appended."""
+    df = spark.createDataFrame(
+        [(p, i) for p in ("0", "1", "2") for i in range(3)], "part string, n int"
+    )
+    out = str(tmp_path / "other")
+    profile_incremental(df.filter("part != '2'"), "part", out)
+    other = str(tmp_path / "other_states")
+    spark.read.parquet(f"{out}/states").withColumn(
+        "state_format", F.lit(1)
+    ).write.partitionBy("partition").parquet(other)
+    shutil.rmtree(f"{out}/states")
+    shutil.move(other, f"{out}/states")
+    files = sorted(os.listdir(f"{out}/states"))
+    with pytest.raises(ValueError, match="state_format 1, not 2.*fresh state_path"):
         profile_incremental(df, "part", out)
     assert sorted(os.listdir(f"{out}/states")) == files
 

@@ -4,8 +4,9 @@ At the benchmark's sizes the job is bound by per-job driver cost
 (planning, code generation, scheduling), so these tests pin the job
 counts of the pieces the checkpointed run is built from: one
 ``run_checks`` batch, the state merge, the state build's plan, a
-driver-built frame, and a manifest commit; and of the one-shot approx
-profile, with its py4j command count and its job names.  Jobs are counted through
+driver-built frame, and a manifest commit; and of the one-shot
+profile in both modes, with the approx py4j command count and the job
+names.  Jobs are counted through
 ``statusTracker`` under a job group set by the test; jobs that lost
 the group (submitted from a library thread pool without it) are
 counted too, and a separate test asserts there are none.
@@ -18,6 +19,7 @@ import itertools
 import json
 import os
 
+import pytest
 from py4j import protocol as proto
 from pyspark.sql import functions as F
 
@@ -165,6 +167,22 @@ def test_approx_profile_jobs(spark):
     assert [r["attribute"] for r in rows] == df.columns
 
 
+def test_exact_profile_jobs(spark):
+    """An exact profile of the transcript fixture submits at most 17
+    jobs (17 measured: the checkpointed histogram and the summary, then
+    the numeric stats, value and pattern top-k cuts and correlations,
+    each fetched; 32 when it finished with cluster-side joins, windows
+    and array sorts, 24 of them when its result was collected), and its
+    result is a LocalRelation: collecting it submits none."""
+    df = _transcripts(spark).drop("part")
+    out = []
+    jobs = _jobs(spark, lambda: out.append(profile(df, mode="exact")))
+    assert len(jobs) <= 17, jobs
+    rows = []
+    assert _jobs(spark, lambda: rows.extend(out[0].collect())) == []
+    assert [r["attribute"] for r in rows] == df.columns
+
+
 def test_approx_profile_py4j_commands(spark, monkeypatch):
     """One warm approx profile call sends at most 5,900 py4j commands
     (5,628 measured; 7,066 while the melt's generator and the integral
@@ -189,11 +207,12 @@ def test_approx_profile_py4j_commands(spark, monkeypatch):
     assert len(calls) <= 5_900, len(calls)
 
 
-def test_approx_profile_jobs_carry_a_phase(spark, tmp_path):
-    """Every job of an approx profile runs in a named phase: its
-    ``dp.phase`` local property and its description are both set.  The
-    job-start properties are read from an event log written by a
-    listener attached for this call."""
+@pytest.mark.parametrize("mode", ["exact", "approx"])
+def test_profile_jobs_carry_a_phase(spark, tmp_path, mode):
+    """Every job of a profile runs in a named phase: its ``dp.phase``
+    local property and its description are both set.  The job-start
+    properties are read from an event log written by a listener
+    attached for this call."""
     sc = spark.sparkContext._jsc.sc()
     jvm = spark.sparkContext._jvm
     conf = (
@@ -212,7 +231,7 @@ def test_approx_profile_jobs_carry_a_phase(spark, tmp_path):
     listener.start()
     sc.addSparkListener(listener)
     try:
-        profile(_transcripts(spark).drop("part"), mode="approx").collect()
+        profile(_transcripts(spark).drop("part"), mode=mode).collect()
         sc.listenerBus().waitUntilEmpty()
     finally:
         sc.removeSparkListener(listener)

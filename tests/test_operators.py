@@ -345,6 +345,24 @@ def test_validation_readme_walkthrough(spark):
     assert "validation_results" not in fix(checked, repairs).columns
 
 
+@pytest.mark.parametrize("mode", ["APPROX", "exakt", ""])
+def test_profile_rejects_an_unknown_mode(spark, mode):
+    """A mode other than "exact" or "approx" is refused, not run as
+    approx mode without its cardinality sketch."""
+    df = spark.createDataFrame([(1, "a")], "n int, s string")
+    with pytest.raises(ValueError, match="mode must be 'exact' or 'approx'"):
+        profile(df, mode=mode)
+
+
+def test_profile_breakdown_without_limit_reports_cardinality(spark):
+    """The breakdown feature with lcb_limit=0 lists no breakdown but
+    still reports cardinality, in exact mode as in approx mode."""
+    df = spark.createDataFrame([(1, "a"), (2, "a"), (2, "b")], "n int, s string")
+    rows = profile(df, features=("cardinality_breakdown",), lcb_limit=0).collect()
+    assert {r["attribute"]: r["cardinality"] for r in rows} == {"n": 2, "s": 2}
+    assert "cardinality_breakdown" not in rows[0].asDict()
+
+
 def test_profile_and_checks_leave_no_cached_frames(spark):
     """profile() and run_checks() must not leave frames in the SQL
     CacheManager after their results are materialized — a long-running

@@ -58,24 +58,34 @@ def _executed_plans(spark, action) -> list[str]:
     return plans
 
 
+_PYTHON_OPS = ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas", "MapInPandas")
+
+
+def _profile_plans(spark, df, profiled: set[str], **kw) -> list[str]:
+    """The plans of every SQL execution of one ``profile`` call and the
+    read-back of its result.  Each must stay JVM-side (no per-row
+    Python), and each parquet scan must read only ``profiled`` columns
+    (ReadSchema pruning at the scan)."""
+    plans = _executed_plans(spark, lambda: profile(df, **kw).collect())
+    assert plans
+    for plan in plans:
+        for op in _PYTHON_OPS:
+            assert op not in plan, op
+        for schema in re.findall(r"ReadSchema: struct<(.*)>", plan):
+            read = set(re.findall(r"(?:^|,)([^,:<>]+):", schema))
+            assert read and read <= profiled, read
+    return plans
+
+
 def test_profile_prunes_scan_columns(spark):
-    """A 2-column profile of an 11-column parquet table must read only
-    those 2 columns (ReadSchema pruning at the scan)."""
+    """A 2-column profile of an 11-column parquet table reads only those
+    2 columns, in every SQL execution the call runs."""
     df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    # materialize=False keeps full lineage (the default eagerly
-    # localCheckpoints the shared melt, which cuts the scan out of the
-    # returned plan) — the lazy plan here is exactly what executes at
-    # checkpoint time, so the pruning it shows is the pruning that runs
-    prof = profile(df, field_list=["l_returnflag", "l_quantity"],
-                   features=("fill_rate", "cardinality"),
-                   materialize=False)
-    plan = _plan(prof)
-    scans = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert scans, "no parquet scan with ReadSchema found"
-    for ln in scans:
-        schema = ln.split("ReadSchema:")[1]
-        assert "l_returnflag" in schema and "l_quantity" in schema
-        assert "l_extendedprice" not in schema and "l_orderkey" not in schema
+    cols = {"l_returnflag", "l_quantity"}
+    plans = _profile_plans(
+        spark, df, cols, field_list=sorted(cols), features=("fill_rate", "cardinality")
+    )
+    assert any("ReadSchema" in p for p in plans), "no parquet scan with ReadSchema found"
 
 
 def test_validate_is_shuffle_free(spark):
@@ -90,13 +100,11 @@ def test_validate_is_shuffle_free(spark):
 
 @pytest.mark.parametrize("mode", ["exact", "approx"])
 def test_profile_has_no_python_udfs(spark, mode):
-    """The whole profile plan stays JVM-side (input_hint mandate:
-    no per-row Python)."""
+    """Every SQL execution of a profile stays JVM-side (input_hint
+    mandate: no per-row Python) and reads only the profiled columns."""
     df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    prof = profile(df, field_list=["l_returnflag", "l_quantity"], mode=mode)
-    plan = _plan(prof)
-    assert "BatchEvalPython" not in plan
-    assert "FlatMapGroupsInPandas" not in plan
+    cols = {"l_returnflag", "l_quantity"}
+    _profile_plans(spark, df, cols, field_list=sorted(cols), mode=mode)
 
 
 def test_bucketed_table_group_checks_need_no_shuffle(spark, tmp_path):
