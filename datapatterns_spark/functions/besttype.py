@@ -38,8 +38,9 @@ _EXP = r"^(\-|\+)?[09]\.[09]{1,6}[aA]\-[09]{1,3}$"
 
 import re as _re
 
-# Python mirror of :func:`type_flag` for partition-local (Arrow/pandas)
-# workers — same ordered rule chain, same anchored regexes.
+# Python transcription of :func:`type_flag` — same ordered rule chain,
+# same anchored regexes — the reference the kernel differential test
+# checks the Spark expression against.
 _FLAG_RULES = [
     (_re.compile(_LEADING_ZERO), AS_IS),
     (_re.compile(_SIGNED_INT), SIGNED | FLOAT | EXP),
@@ -60,21 +61,6 @@ def type_flag_py(pattern: str) -> int:
         if rx.match(p):
             return f
     return AS_IS
-
-
-def fold_flags_py(patterns) -> int:
-    """AND-fold of per-pattern type flags with early exit — the
-    reference's ``AGGREGATE`` fold (Profile.ecl:967-992) is
-    order-independent, and ``AS_IS`` (0) annihilates, so a text-like
-    attribute resolves after the first non-numeric pattern instead of
-    paying a regex scan over millions of distinct patterns."""
-    out = None
-    for p in patterns:
-        f = type_flag_py(p)
-        out = f if out is None else (out & f)
-        if out == 0:
-            return 0
-    return out if out is not None else 0
 
 
 def type_flag(pattern: Column, treat_as_is: bool) -> Column:

@@ -11,7 +11,8 @@ expressions (JVM-side, whole-stage-codegen) instead of per-row UDFs:
   UTF-8, so we use the Unicode property classes of the UTF8/UNICODE
   kernels for every string column.
 * ``IsUTF8`` (Profile.ecl:540-599): "does this value really contain
-  non-ASCII" — expressed as a regex test.
+  non-ASCII" — :func:`is_non_ascii`, a byte-length against
+  char-length test.
 """
 
 from __future__ import annotations
@@ -27,9 +28,6 @@ _DIGITS_TO = "999999999"
 # first pass) and lowercase-ish letter classes (Profile.ecl:626-643).
 _UPPER_RE = r"\p{Lu}"
 _LOWER_RE = r"[\p{Ll}\p{Lt}\p{Lm}\p{Lo}]"
-
-NON_ASCII_RE = "[^\\x00-\\x7F]"
-
 
 _ASCII_FROM = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz" + _DIGITS_FROM
 _ASCII_TO = "A" * 26 + "a" * 26 + _DIGITS_TO

@@ -5,17 +5,23 @@ Spark-first reimplementation of the reference's ``Profile`` macro
 dataflow per column; here a single DataFrame plan profiles every
 column in one scan:
 
-1. **melt**: one ``inline(array(struct(...)))`` projection emits
-   ``(attribute, value, len)`` per column per row — all JVM-side
-   expressions, no Python in the hot path;
-2. **histogram** (exact mode): ``groupBy(attribute, value, len)``
-   reduces the data to distinct-value counts *before* any further
-   statistics — the reference's own skew/temp-storage trick
-   (Profile.ecl:719-728) — with Spark's partial (map-side)
-   aggregation bounding the shuffle.  The summary (fill, lengths,
-   cardinality, best-type inference), the numeric stats (incl. the
-   reference's exact quartile position arithmetic), the value
-   histogram and the pattern histogram are computed from it on the
+1. **melt** (both modes): one ``inline(array(struct(...)))``
+   projection (:func:`melt_slim`) emits one row per column per input
+   row with the reference's per-value rules written once per kind:
+   length, the filled bit (Profile.ecl:830-844), the non-ASCII bit and
+   the type-flag pattern, plus what the features read (a value hash,
+   the numeric reading, the uncut value) — all JVM-side expressions,
+   no Python in the hot path;
+2. **histogram** (exact mode): the melt rows are grouped on
+   (attribute, value) and the fields the value determines, reducing
+   the data to distinct-value counts *before* any further statistics —
+   the reference's own skew/temp-storage trick (Profile.ecl:719-728) —
+   with Spark's partial (map-side) aggregation bounding the shuffle.
+   The summary is the profile fold (:func:`fold_aggs`) of those rows
+   weighted by their counts, which approx mode and the incremental
+   states fold unweighted; exact mode adds the exact cardinality, the
+   numeric stats (incl. the reference's exact quartile position
+   arithmetic), the value histogram and the pattern histogram, on the
    cluster, and correlations run as one ``agg`` of ``corr(x, y)``
    over all numeric pairs on the source frame (Profile.ecl:1213-1245);
 3. **driver finish** (both modes): each piece is cut to a bounded size
@@ -59,12 +65,7 @@ from pyspark.util import inheritable_thread_target
 
 from ..functions import besttype
 from ..functions.sketches import LG_CONFIG_K
-from ..functions.patterns import (
-    finish_pattern,
-    is_non_ascii,
-    map_pattern,
-    map_pattern_finished,
-)
+from ..functions.patterns import is_non_ascii, map_pattern, map_pattern_finished
 from ..trace import phase
 from ..plans.local import local_df
 from ..plans.schema_walk import (
@@ -181,51 +182,6 @@ def _len_expr(a: AttrInfo) -> Column:
     return F.length(_value_expr(a))
 
 
-def _melt_base(df: DataFrame, attrs: list[AttrInfo]) -> tuple[DataFrame, list[Column], list[Column]]:
-    """Project each attribute's canonical string form ONCE, then hand
-    (projected frame, per-attr value col, per-attr len col) to a melt.
-
-    The melt's ``inline(array(struct(...)))`` generator gets no
-    subexpression elimination, so any value expression mentioned k
-    times inside the structs (value, its length, its hash, ...) would
-    be evaluated k times per row — for a timestamp that is k full
-    datetime->string formats, for free text k trims.  A Project under
-    the Generate evaluates each value exactly once per row; the structs
-    then reference plain columns."""
-    vals: list[Column] = []
-    lens: list[Column] = []
-    proj: list[Column] = []
-    for i, a in enumerate(attrs):
-        proj.append(_value_expr(a).alias(f"_v{i}"))
-        if a.kind in (KIND_ARRAY, KIND_BINARY, KIND_BOOLEAN):
-            # length is NOT the string form's length for these kinds
-            # (element count / byte count / constant 1)
-            proj.append(_len_expr(a).cast("int").alias(f"_l{i}"))
-    base = df.select(*proj)
-    for i, a in enumerate(attrs):
-        v = F.col(f"_v{i}")
-        vals.append(v)
-        if a.kind in (KIND_ARRAY, KIND_BINARY, KIND_BOOLEAN):
-            lens.append(F.col(f"_l{i}"))
-        else:
-            lens.append(F.length(v).cast("int"))
-    return base, vals, lens
-
-
-def melt(df: DataFrame, attrs: list[AttrInfo]) -> DataFrame:
-    """One scan -> (attribute, value, len) rows for every column."""
-    base, vals, lens = _melt_base(df, attrs)
-    structs = [
-        F.struct(
-            F.lit(a.name).alias("attribute"),
-            v.alias("value"),
-            ln.alias("len"),
-        )
-        for a, v, ln in zip(attrs, vals, lens)
-    ]
-    return base.select(F.inline(F.array(*structs)))
-
-
 # Pass-1 value cap for the slim melt: every pass-1 consumer of the
 # value string (pattern mapping, type-flag ladder, numeric parse,
 # numeric filled test) is gated to trimmed length <= 40, so 48 chars
@@ -313,19 +269,32 @@ def _int_len_expr(name: str, max_digits: int) -> Column:
     )
 
 
-def _melt_need(params: ProfileParams) -> dict[str, bool]:
-    """Which :func:`melt_slim` fields ``params`` needs: ``vhash`` for
-    cardinality or patterns, ``uni`` and ``fpat`` for the type flags,
-    ``v`` for a numeric feature, ``value`` for patterns."""
-    return {
-        "len": True,
-        "fil": True,
-        "vhash": params.need_cardinality or params.need_patterns,
-        "uni": params.need_flags,
-        "v": params.need_numeric,
-        "fpat": params.need_flags,
-        "value": params.need_patterns,
-    }
+def _melt_need(params: ProfileParams, exact: bool = False) -> set[str]:
+    """The :func:`melt_slim` fields ``params`` needs: ``uni`` and
+    ``fpat`` for the type flags, and then, for approx pass 1 and the
+    states, ``vhash`` for cardinality or patterns, ``v`` for a numeric
+    feature and ``value`` for patterns.  ``exact`` mode needs no hash or
+    numeric reading: its cardinality, numeric stats, modes and patterns
+    come from the value histogram, which groups on ``full``."""
+    need = {"len", "fil"}
+    if params.need_flags:
+        need |= {"uni", "fpat"}
+    if exact:
+        if (
+            params.need_cardinality
+            or params.has("modes")
+            or params.need_patterns
+            or params.need_numeric
+        ):
+            need.add("full")
+        return need
+    if params.need_cardinality or params.need_patterns:
+        need.add("vhash")
+    if params.need_numeric:
+        need.add("v")
+    if params.need_patterns:
+        need.add("value")
+    return need
 
 
 # the fields of a melt_slim row after ``attribute``, with their types
@@ -345,20 +314,25 @@ def melt_slim(
     attrs: list[AttrInfo],
     params: ProfileParams,
     part: Column | None = None,
+    need: set[str] | None = None,
 ) -> DataFrame:
     """One scan -> ``(attribute, len, fil, vhash, uni, v, fpat, value)``
-    rows, led by a ``_part`` column when ``part`` is given: the input of
-    the profile fold (:func:`fold_aggs`), shared by the approx pass 1,
-    the fill/lengths-only exact path and ``incremental.profile_state``.
+    rows (and ``full``, see below), led by a ``_part`` column when
+    ``part`` is given: the one melt of the profile, read by the fold
+    (:func:`fold_aggs`) of both modes and of
+    ``incremental.profile_state``, by exact mode's value histogram and
+    by the heavy-pattern path.
 
     Per row and attribute: ``len`` is the length of the canonical
     string form (element count for arrays, byte length for binary);
     ``fil`` the filled bit (Profile.ecl:830-844); ``vhash`` a 64-bit
     distinctness hash of a filled value; ``uni`` the non-ASCII bit of
     strings; ``v`` the numeric reading; ``fpat`` the type-flag pattern
-    ('0' kept literal); and ``value`` the pattern-sample source (at most
-    48 chars).  A field ``params`` does not need (:func:`_melt_need`)
-    is NULL, so a feature subset pays for none of its work.
+    ('0' kept literal); ``value`` the pattern-sample source (at most
+    48 chars).  A field not in ``need`` (by default :func:`_melt_need`
+    of ``params``) is NULL, so a feature subset pays for none of its
+    work.  When ``need`` holds ``full``, a ``full`` column follows: the
+    canonical string form (:func:`_value_expr`), uncut.
 
     Every value expression is projected once under the Generate (which
     gets no subexpression elimination), and the generator is one SQL
@@ -382,8 +356,12 @@ def melt_slim(
       formatted.  A temporal rendering is never numeric and every type
       rule rejects its '-'/':', so it needs no ``v`` or ``fpat``;
     * **arrays**: SET OF is never numeric (Profile.ecl:846-847).
+
+    With ``full``, every value is rendered anyway, so integral and
+    temporal lengths are those of the rendering: the digit count and the
+    arithmetic length would only add work.
     """
-    need = _melt_need(params)
+    need = _melt_need(params) if need is None else need
     proj: list[Column] = [] if part is None else [part.alias("_part")]
     structs: list[str] = []
     for i, a in enumerate(attrs):
@@ -396,7 +374,7 @@ def melt_slim(
                 if params.allow_zero
                 else (c.isNotNull() & (c.cast("double") != 0))
             )
-            if a.given_type in _INT_MAX_DIGITS:
+            if a.given_type in _INT_MAX_DIGITS and "full" not in need:
                 length = _int_len_expr(a.name, _INT_MAX_DIGITS[a.given_type])
             else:
                 length = F.length(_value_expr(a)).cast("int")
@@ -414,7 +392,7 @@ def melt_slim(
             f["len"] = f["fil"] = ("1", {})
             f["vhash"] = (f"_h{i}", {f"_h{i}": F.xxhash64(F.coalesce(c, F.lit(False)))})
         else:
-            if _is_fast_temporal(a):
+            if _is_fast_temporal(a) and "full" not in need:
                 lo, hi = _temporal_bounds(a)
                 in_range = c.between(lo, hi)
                 length = (
@@ -427,14 +405,14 @@ def melt_slim(
                 out = F.when(c.isNotNull() & ~in_range, c.cast("string"))
                 f["value"] = (f"_x{i}", {f"_x{i}": out})
             else:
-                # strings, arrays, binary, timestamp_ntz: the canonical
-                # string form
+                # strings, arrays, binary, other temporals, and
+                # timestamp/date with `full`: the canonical string form
                 v = _value_expr(a)
                 length = _len_expr(a).cast("int")
                 f["vhash"] = (f"_h{i}", {f"_h{i}": F.xxhash64(v)})
                 f["value"] = (f"substring(_v{i}, 1, {_SLIM_VALUE_CAP})", {f"_v{i}": v})
                 if a.kind == KIND_STRING:
-                    f["uni"] = (f"_u{i}", {f"_u{i}": (F.octet_length(v) != length).cast("int")})
+                    f["uni"] = (f"_u{i}", {f"_u{i}": is_non_ascii(v).cast("int")})
                 if a.kind in (KIND_STRING, KIND_BINARY):
                     gate = (length <= 40) & v.rlike("^[0-9+\\-.]")
                     f["v"] = (f"_d{i}", {f"_d{i}": F.when(gate, v.try_cast("double"))})
@@ -448,9 +426,13 @@ def melt_slim(
         fields = []
         projected: dict[str, Column] = {}
         for n, t in _MELT_FIELDS:
-            sql, cols = f[n] if need[n] and n in f else (f"CAST(NULL AS {t})", {})
+            sql, cols = f[n] if n in need and n in f else (f"CAST(NULL AS {t})", {})
             fields.append(f"'{n}', {sql}")
             projected.update(cols)
+        if "full" in need:
+            # no fold reads it, so it is a column only when needed
+            fields.append(f"'full', _v{i}")
+            projected[f"_v{i}"] = _value_expr(a)
         proj += [e.alias(n) for n, e in projected.items()]
         name = a.name.replace("\\", "\\\\").replace("'", "\\'")
         structs.append(f"named_struct('attribute', '{name}', {', '.join(fields)})")
@@ -460,26 +442,39 @@ def melt_slim(
     )
 
 
-def fold_aggs(params: ProfileParams | None = None) -> list[Column]:
+def fold_aggs(
+    params: ProfileParams | None = None,
+    need: set[str] | None = None,
+    weight: str | None = None,
+) -> list[Column]:
     """The profile fold of :func:`melt_slim` rows: the ``STATE_SCHEMA``
     fold columns of ``incremental.py``, each a built-in aggregate that
     merges associatively (see its module docstring), so one fold serves
-    the approx pass 1 (grouped by attribute) and the mergeable states
+    both profile modes (grouped by attribute) and the mergeable states
     (grouped by partition and attribute).  :func:`finish_fold` turns
     the columns into profile statistics, merged or not.
 
     With ``params``, a column the features do not report is a typed
-    NULL literal: one folding a melt field ``params`` does not need
-    (:func:`_melt_need`), and the length folds unless lengths or type
-    flags are needed.  A feature subset then updates none of them per
-    row (the HLL sketch puts the fold in an object-hash aggregate,
-    which evaluates every input without code generation), and
-    ``finish_fold`` still computes every statistic it reports.  The
-    states pass none and keep the full fold."""
+    NULL literal: one folding a melt field not in ``need`` (by default
+    :func:`_melt_need` of ``params``), and the length folds unless
+    lengths or type flags are needed.  A feature subset then updates
+    none of them per row (the HLL sketch puts the fold in an
+    object-hash aggregate, which evaluates every input without code
+    generation), and ``finish_fold`` still computes every statistic it
+    reports.  The states pass none and keep the full fold.
+
+    ``weight`` names a count column: the rows are then exact mode's
+    value histogram, one row per distinct melt row, and the counts and
+    sums are weighted by it.  The histogram carries no ``vhash`` or
+    ``v``, so ``need`` must hold neither."""
     filled = F.col("fil") == 1
     ln = F.when(filled, F.col("len"))
     v = F.col("v")
     fpat = F.col("fpat")
+
+    def wsum(c: Column) -> Column:
+        return F.sum(c if weight is None else c * F.col(weight))
+
     # per-row AND-fold of type flags (Profile.ecl:967-992); a filled
     # value with no flag pattern is AS_IS (0)
     flag = F.when(filled, F.when(fpat.isNull(), F.lit(besttype.AS_IS)).otherwise(
@@ -487,11 +482,11 @@ def fold_aggs(params: ProfileParams | None = None) -> list[Column]:
     ))
     # (name, melt field folded or "lengths", type, aggregate)
     fold = [
-        ("rec_count", "fil", "long", F.count(F.lit(1))),
-        ("fill_count", "fil", "long", F.coalesce(F.sum("fil"), F.lit(0)).cast("long")),
+        ("rec_count", "fil", "long", F.count(F.lit(1)) if weight is None else F.sum(weight)),
+        ("fill_count", "fil", "long", F.coalesce(wsum(F.col("fil")), F.lit(0)).cast("long")),
         ("min_length", "lengths", "int", F.min(ln)),
         ("max_length", "lengths", "int", F.max(ln)),
-        ("len_sum", "lengths", "long", F.sum(ln).cast("long")),
+        ("len_sum", "lengths", "long", wsum(ln).cast("long")),
         ("min_len_nonzero", "lengths", "int", F.min(F.when(ln > 0, ln))),
         ("has_unicode", "uni", "int", F.max(F.when(filled, F.col("uni")))),
         ("type_flags", "fpat", "int", F.bit_and(flag)),
@@ -504,71 +499,54 @@ def fold_aggs(params: ProfileParams | None = None) -> list[Column]:
         ("num_min", "v", "double", F.min(v)),
         ("num_max", "v", "double", F.max(v)),
     ]
-    need = None
     if params is not None:
-        need = {**_melt_need(params), "lengths": params.need_lengths}
+        need = _melt_need(params) if need is None else need
+        need = need | {"lengths"} if params.need_lengths else need
     return [
-        (agg if need is None or need[field] else F.lit(None).cast(typ)).alias(name)
+        (agg if need is None or field in need else F.lit(None).cast(typ)).alias(name)
         for name, field, typ, agg in fold
     ]
 
 
-def _type_stats(kind: Column, given: Column, flags: bool = True) -> dict[str, Column]:
-    """Best type + is_numeric (Profile.ecl:1002-1023) and fill_rate
-    (Profile.ecl:1488-1489) from the fold columns (``type_flags``,
-    ``max_length``, ``min_len_nonzero``, ``has_unicode``,
-    ``fill_count``, ``rec_count``).  Without ``flags`` the best type is
-    the given type."""
-    if flags:
-        type_flags = F.coalesce(F.col("type_flags"), F.lit(0))
-        best = besttype.best_type_by_kind(
-            kind=kind,
-            given_type=given,
-            fill_count=F.col("fill_count"),
-            flags=type_flags,
-            max_len=F.coalesce(F.col("max_length"), F.lit(0)),
-            min_len_nonzero=F.coalesce(F.col("min_len_nonzero"), F.lit(0)),
-            is_unicode=F.coalesce(F.col("has_unicode"), F.lit(0)) == 1,
-        )
-        numeric_bits = besttype.SIGNED | besttype.UNSIGNED | besttype.FLOAT | besttype.EXP
-        is_num = F.coalesce(
-            (kind == KIND_NUMERIC)
-            | (
-                (kind == KIND_STRING)
-                & (type_flags.bitwiseAND(F.lit(numeric_bits)) != 0)
-                & (F.col("fill_count") > 0)
-            ),
-            F.lit(False),
-        )
-    else:
-        best = given
-        is_num = kind == KIND_NUMERIC
-    return {
-        "best_attribute_type": best,
-        "is_numeric": is_num,
-        "fill_rate": F.when(
-            F.col("rec_count") > 0,
-            F.round(F.col("fill_count") / F.col("rec_count") * 100, 6),
-        ).otherwise(F.lit(0.0)),
-    }
-
-
 def finish_fold(kind: Column, given: Column) -> dict[str, Column]:
     """Profile statistics from the :func:`fold_aggs` columns, by output
-    name, in ``merge_states``' column order: best type, fill rate,
-    average length, cardinality (the sketch's estimate), and exact
+    name, in ``merge_states``' column order: best type and is_numeric
+    (Profile.ecl:1002-1023), fill rate (Profile.ecl:1488-1489), average
+    length, cardinality (the sketch's estimate), and exact
     min/max/mean/population std-dev (Profile.ecl:1083-1086) of ``v``.
     ``kind`` and ``given`` are each row's attribute kind and given
     type."""
-    t = _type_stats(kind, given)
+    type_flags = F.coalesce(F.col("type_flags"), F.lit(0))
+    best = besttype.best_type_by_kind(
+        kind=kind,
+        given_type=given,
+        fill_count=F.col("fill_count"),
+        flags=type_flags,
+        max_len=F.coalesce(F.col("max_length"), F.lit(0)),
+        min_len_nonzero=F.coalesce(F.col("min_len_nonzero"), F.lit(0)),
+        is_unicode=F.coalesce(F.col("has_unicode"), F.lit(0)) == 1,
+    )
+    numeric_bits = besttype.SIGNED | besttype.UNSIGNED | besttype.FLOAT | besttype.EXP
+    is_num = F.coalesce(
+        (kind == KIND_NUMERIC)
+        | (
+            (kind == KIND_STRING)
+            & (type_flags.bitwiseAND(F.lit(numeric_bits)) != 0)
+            & (F.col("fill_count") > 0)
+        ),
+        F.lit(False),
+    )
     n = F.col("num_n")
     mean = F.col("num_sum") / n
     var = F.greatest(F.col("num_sumsq") / n - mean * mean, F.lit(0.0))
     return {
-        "best_attribute_type": t["best_attribute_type"],
+        "best_attribute_type": best,
         "rec_count": F.col("rec_count"),
         "fill_count": F.col("fill_count"),
-        "fill_rate": t["fill_rate"],
+        "fill_rate": F.when(
+            F.col("rec_count") > 0,
+            F.round(F.col("fill_count") / F.col("rec_count") * 100, 6),
+        ).otherwise(F.lit(0.0)),
         "cardinality": F.coalesce(F.hll_sketch_estimate("card_sketch"), F.lit(0)),
         "min_length": F.coalesce(F.col("min_length"), F.lit(0)),
         "max_length": F.coalesce(F.col("max_length"), F.lit(0)),
@@ -579,32 +557,18 @@ def finish_fold(kind: Column, given: Column) -> dict[str, Column]:
         "numeric_max": F.when(n > 0, F.round(F.col("num_max"), 4)),
         "numeric_mean": F.when(n > 0, F.round(mean, 4)),
         "numeric_std_dev": F.when(n > 0, F.round(F.sqrt(var), 4)),
-        "is_numeric": t["is_numeric"],
+        "is_numeric": is_num,
     }
 
 
-def _filled_expr(attrs: list[AttrInfo], allow_zero: bool) -> Column:
-    """Per-attribute filled semantics (Profile.ecl:830-844)."""
-    numeric = [a.name for a in attrs if a.kind == KIND_NUMERIC]
-    booleans = [a.name for a in attrs if a.kind == KIND_BOOLEAN]
-    att, val, ln = F.col("attribute"), F.col("value"), F.col("len")
-    expr = F.when(F.lit(False), F.lit(False))
-    if booleans:
-        expr = expr.when(att.isin(booleans), F.lit(True))
-    if numeric:
-        numeric_filled = (
-            (val != "")
-            if allow_zero
-            else ((val != "") & (val.cast("double") != 0))
-        )
-        expr = expr.when(att.isin(numeric), numeric_filled)
-    return expr.otherwise(ln > 0)
-
-
-def _pattern_expr(attrs: list[AttrInfo], plen: int) -> Column:
-    """Per-attribute pattern mapping (Profile.ecl:771-816): numerics
-    map their full string form, booleans are 'B', everything else maps
-    the trimmed value truncated to the pattern length."""
+def _pattern_expr(attrs: list[AttrInfo], plen: int, finished: bool = False) -> Column:
+    """Per-attribute pattern mapping (Profile.ecl:771-816) of the
+    ``value`` column: numerics map their full string form, booleans are
+    'B', everything else maps the trimmed value truncated to the pattern
+    length.  ``finished`` fuses the '0'->'9' fix-up into the translate
+    table, for the pattern histograms, which only ever consume the
+    finished pattern (one string copy per row saved)."""
+    mapper = map_pattern_finished if finished else map_pattern
     numeric = [a.name for a in attrs if a.kind == KIND_NUMERIC]
     booleans = [a.name for a in attrs if a.kind == KIND_BOOLEAN]
     att, val = F.col("attribute"), F.col("value")
@@ -612,23 +576,8 @@ def _pattern_expr(attrs: list[AttrInfo], plen: int) -> Column:
     if booleans:
         expr = expr.when(att.isin(booleans), F.lit("B"))
     if numeric:
-        expr = expr.when(att.isin(numeric), map_pattern(val))
-    return expr.otherwise(map_pattern(F.substring(val, 1, plen)))
-
-
-def _pattern_expr_finished(attrs: list[AttrInfo], plen: int) -> Column:
-    """:func:`_pattern_expr` with the '0'->'9' fix-up fused into the
-    translate table — for the pattern-HISTOGRAM paths, which only ever
-    consume the finished pattern (one string copy per row saved)."""
-    numeric = [a.name for a in attrs if a.kind == KIND_NUMERIC]
-    booleans = [a.name for a in attrs if a.kind == KIND_BOOLEAN]
-    att, val = F.col("attribute"), F.col("value")
-    expr = F.when(F.lit(False), F.lit(""))
-    if booleans:
-        expr = expr.when(att.isin(booleans), F.lit("B"))
-    if numeric:
-        expr = expr.when(att.isin(numeric), map_pattern_finished(val))
-    return expr.otherwise(map_pattern_finished(F.substring(val, 1, plen)))
+        expr = expr.when(att.isin(numeric), mapper(val))
+    return expr.otherwise(mapper(F.substring(val, 1, plen)))
 
 
 def _deterministic_sample(df: DataFrame, pct: int) -> DataFrame:
@@ -751,16 +700,24 @@ def _profile_flat(
     of one ``_Inner_Profile`` expansion (Profile.ecl:508-1665).  Returns
     one row dict per attribute, as :func:`_profile_flat_approx` does.
 
-    The exact histograms stay on the cluster; what the driver fetches
-    is bounded:
+    It reads the one melt (:func:`melt_slim`) and folds it with the
+    profile fold (:func:`fold_aggs`, :func:`finish_fold`), as approx
+    mode does, but with no value hash or numeric reading.  When a
+    feature groups by value, the melt rows are first reduced to the
+    distinct-value histogram, grouped on ``attribute``, the uncut value
+    and the fields it determines, and the fold reads that weighted by
+    its counts; otherwise the fold reads the melt rows.  The exact
+    histograms stay on the cluster; what the driver fetches is bounded:
 
     ========  =============================================  ===========
     phase     fetch                                          rows per
                                                              attribute
     ========  =============================================  ===========
-    hist      none: the ``(attribute, value, len)``          --
-              histogram, checkpointed for the passes below
-    summary   fill, lengths, cardinality, best type          1
+    hist      none: the ``(attribute, value, len, fil, uni,  --
+              fpat)`` histogram, checkpointed for the
+              passes below
+    summary   the fold, with the exact ``count_distinct``    1
+              cardinality
     numeric   :func:`_exact_numeric_stats`                   1
     vh        value histogram: the top ``MAX_MODES`` (and    <= 10, or
               bottom), or every value when 0 < cardinality   lcb_limit
@@ -774,128 +731,48 @@ def _profile_flat(
     :func:`_driver_finish` turns the fetches into rows."""
     plen = params.pattern_len
     spark = df.sparkSession
-    string_attrs = [a.name for a in attrs if a.kind == KIND_STRING]
-    as_is_attrs = [
-        a.name for a in attrs if a.kind in (KIND_NUMERIC, KIND_BOOLEAN, KIND_ARRAY)
-    ]
-
-    melted = melt(df, attrs)
-
-    def derive(frame: DataFrame, with_flags: bool, with_pattern: bool) -> DataFrame:
-        out = frame.withColumn("filled", _filled_expr(attrs, params.allow_zero))
-        if with_pattern:
-            out = out.withColumn("pattern", _pattern_expr(attrs, plen))
-        att = F.col("attribute")
-        if with_flags:
-            out = out.withColumn(
-                "type_flag",
-                F.when(
-                    att.isin(as_is_attrs) if as_is_attrs else F.lit(False),
-                    F.lit(besttype.AS_IS),
-                ).otherwise(besttype.type_flag(F.col("pattern"), treat_as_is=False)),
-            ).withColumn(
-                "is_uni",
-                (
-                    att.isin(string_attrs) if string_attrs else F.lit(False)
-                ) & is_non_ascii(F.col("value")),
-            )
-        return out
-
-    need_pattern = params.need_flags or params.need_patterns
-    # fill/lengths/type-folds are exact either way; the distinct-value
-    # histogram only pays off when some stat genuinely groups by value
-    needs_value_grouping = (
-        params.need_cardinality
-        or params.has("modes")
-        or params.need_patterns
-        or params.need_numeric
-    )
-
-    if needs_value_grouping:
-        # distinct-value histogram first: pattern/flag work then runs
-        # once per distinct value (cheaper than per row).  The summary,
-        # numeric, value and pattern passes all branch from it, so it
-        # is materialized eagerly (lazy caching would let the concurrent
-        # passes race past an unpopulated cache and each re-run the melt
-        # + groupBy).  localCheckpoint, NOT persist: a persisted frame
-        # sits in the session CacheManager until unpersisted, so a
-        # long-running driver profiling one batch after another
-        # (scripts/run_job.py) would leak one cached melt per call
-        # (probe: tests/test_operators.py::
+    need = _melt_need(params, exact=True)
+    rows = melt_slim(df, attrs, params, need=need)
+    weight = None
+    if "full" in need:
+        # distinct-value histogram first (Profile.ecl:719-728): the
+        # summary, numeric, value and pattern passes all branch from it,
+        # so it is materialized eagerly (lazy caching would let the
+        # concurrent passes race past an unpopulated cache and each
+        # re-run the melt + groupBy).  localCheckpoint, NOT persist: a
+        # persisted frame sits in the session CacheManager until
+        # unpersisted, so a long-running driver profiling one batch
+        # after another (scripts/run_job.py) would leak one cached melt
+        # per call (probe: tests/test_operators.py::
         # test_profile_and_checks_leave_no_cached_frames).  The
         # checkpointed partitions are freed by the ContextCleaner once
         # the frame is unreferenced, and each pass then plans against a
         # leaf scan instead of re-optimizing the melt's expression tree.
-        hist = derive(
-            melted.groupBy("attribute", "value", "len").agg(F.count(F.lit(1)).alias("cnt")),
-            params.need_flags,
-            need_pattern,
+        keys = [k for k in ("len", "fil", "uni", "fpat") if k in need]
+        hist = rows.groupBy("attribute", F.col("full").alias("value"), *keys).agg(
+            F.count(F.lit(1)).alias("cnt")
         )
-        stats_src = _run_jobs(spark, {"hist": lambda: hist.localCheckpoint(eager=True)})["hist"]
-    elif params.need_flags:
-        # fill/lengths/type-folds only: aggregate the melt directly
-        stats_src = derive(melted.withColumn("cnt", F.lit(1)), params.need_flags, need_pattern)
-    else:
-        # fill/lengths ONLY (no flags, no patterns, no value grouping):
-        # the slim melt's per-kind fast paths produce the exact `len`
-        # and filled bit without rendering any string form for
-        # numeric/boolean/timestamp/date attributes (same fast paths
-        # the approx pass-1 rides; len/fil are exact there too) — the
-        # full melt would format every value per row just to measure it
-        stats_src = (
-            melt_slim(df, attrs, params)
-            .withColumn("filled", F.col("fil") == 1)
-            .withColumn("cnt", F.lit(1))
-        )
+        rows = _run_jobs(spark, {"hist": lambda: hist.localCheckpoint(eager=True)})["hist"]
+        weight = "cnt"
+    filled = F.col("fil") == 1
 
-    filled = F.col("filled")
-    w_cnt = F.when(filled, F.col("cnt"))
-
-    # --- per-attribute summary: fill, lengths, cardinality, type fold ---
-    agg_exprs = [
-        F.sum("cnt").alias("rec_count"),
-        F.coalesce(F.sum(w_cnt), F.lit(0)).alias("fill_count"),
-    ]
-    if params.need_lengths:
-        agg_exprs += [
-            F.coalesce(F.min(F.when(filled, F.col("len"))), F.lit(0)).alias("min_length"),
-            F.coalesce(F.max(F.when(filled, F.col("len"))), F.lit(0)).alias("max_length"),
-            F.coalesce(
-                F.floor(F.sum(F.when(filled, F.col("len") * F.col("cnt"))) / F.sum(w_cnt)),
-                F.lit(0),
-            ).alias("ave_length"),
-            F.coalesce(
-                F.min(F.when(filled & (F.col("len") > 0), F.col("len"))), F.lit(0)
-            ).alias("min_len_nonzero"),
-        ]
-    if params.need_flags:
-        # AND-fold of per-value type flags (Profile.ecl:967-992)
-        agg_exprs += [
-            F.coalesce(F.bit_and(F.when(filled, F.col("type_flag"))), F.lit(0)).alias(
-                "type_flags"
-            ),
-            F.coalesce(F.max(F.when(filled, F.col("is_uni").cast("int"))), F.lit(0)).alias(
-                "has_unicode"
-            ),
-        ]
+    # --- per-attribute summary: the profile fold, with the exact
+    # cardinality in place of the sketch and no moments (the numeric
+    # stats are _exact_numeric_stats'); metadata from a literal map ---
+    aggs = fold_aggs(params, need, weight)
     if params.need_cardinality:
-        agg_exprs.append(
-            F.count_distinct(F.when(filled, F.col("value"))).alias("cardinality")
-        )
-    # best type + is_numeric per attribute (Profile.ecl:1002-1023), with
-    # the metadata from a literal map, as in approx mode's pass 1
+        aggs.append(F.count_distinct(F.when(filled, F.col("value"))).alias("cardinality"))
     meta = _attr_meta(attrs, name_prefix, sort_prefix)
-    summary = stats_src.groupBy("attribute").agg(*agg_exprs)
-    summary = summary.select(
+    stats = finish_fold(meta["_kind"], meta["given_attribute_type"])
+    summary = rows.groupBy("attribute").agg(*aggs).select(
         *[meta[c].alias(c) for c in ("attribute", "given_attribute_type", "_kind", "sort_value")],
         F.col("attribute").alias("_local_name"),
-        *[c for c in summary.columns if c != "attribute"],
         *[
             e.alias(c)
-            for c, e in _type_stats(
-                meta["_kind"], meta["given_attribute_type"], params.need_flags
-            ).items()
+            for c, e in stats.items()
+            if c != "cardinality" and c not in _NUMERIC_STATS
         ],
+        *(["cardinality"] if params.need_cardinality else []),
     )
     got = _run_jobs(spark, {"summary": summary.collect})
     by_name = {r["_local_name"]: r.asDict() for r in got["summary"]}
@@ -908,7 +785,7 @@ def _profile_flat(
     # --- numeric stats (A5/A6) of the attributes judged numeric ---
     num_names = [r["_local_name"] for r in base_rows if r["is_numeric"]]
     if params.need_numeric and num_names:
-        hnum = stats_src.filter(filled & F.col("attribute").isin(num_names)).select(
+        hnum = rows.filter(filled & F.col("attribute").isin(num_names)).select(
             "attribute", F.col("value").cast("double").alias("v"), "cnt"
         )
         jobs["numeric"] = _exact_numeric_stats(hnum).collect
@@ -917,25 +794,25 @@ def _profile_flat(
     lcb_names = sorted(_lcb_names(base_rows, params))
     if params.has("modes") or lcb_names:
         lcb = F.col("attribute").isin(lcb_names)
-        vh = stats_src.filter(filled if params.has("modes") else filled & lcb)
+        vh = rows.filter(filled if params.has("modes") else filled & lcb)
         vh = vh.groupBy("attribute", "value").agg(F.sum("cnt").alias("rec_count"))
         k = F.when(lcb, params.lcb_limit).otherwise(MAX_MODES)
-        jobs["vh"] = _dual_topk_survivors(vh, k, "value").toArrow
+        jobs["vh"] = _arrow(_dual_topk_survivors(vh, k, "value"))
 
     # --- popular / rare text patterns (A8 + J3) ---
     if params.need_patterns:
         pat = (
-            stats_src.filter(filled)
-            .withColumn("data_pattern", finish_pattern(F.col("pattern")))
+            rows.filter(filled)
+            .withColumn("data_pattern", _pattern_expr(attrs, plen, finished=True))
             .groupBy("attribute", "data_pattern")
             .agg(
                 F.sum("cnt").alias("rec_count"),
                 F.min(F.substring(F.col("value"), 1, plen)).alias("example"),
             )
         )
-        jobs["patterns"] = _dual_topk_survivors(
-            pat, int(params.max_patterns), "data_pattern"
-        ).toArrow
+        jobs["patterns"] = _arrow(
+            _dual_topk_survivors(pat, int(params.max_patterns), "data_pattern")
+        )
 
     # --- correlations (A12, Profile.ecl:1213-1260) ---
     corr_pairs = _corr_pairs(attrs, params)
@@ -1003,7 +880,7 @@ def _lowcard_value_hist(
         else:
             # the value is projected once: the generator gets no
             # subexpression elimination, and the filled test reads it
-            # again (see _melt_base)
+            # again (see melt_slim)
             render, slot = "string", "s"
             proj.append(_value_expr(a).alias(f"_v{i}"))
             ln = f"length(_v{i})"
@@ -1204,17 +1081,7 @@ def _heavy_pattern_candidates(
     key count (~1e-5 at 20M patterns).
     """
     winners = _pattern_sample_winners(df, heavy_attrs, params, plen, total_rows)
-    return _resolve_pattern_candidates(
-        df, heavy_attrs, winners, plen, params.allow_zero
-    )
-
-
-def _melt_filled(df: DataFrame, attrs: list[AttrInfo], allow_zero: bool) -> DataFrame:
-    return (
-        melt(df, attrs)
-        .withColumn("filled", _filled_expr(attrs, allow_zero))
-        .filter(F.col("filled"))
-    )
+    return _resolve_pattern_candidates(df, heavy_attrs, winners, params, plen)
 
 
 def _pattern_sample_winners(
@@ -1245,13 +1112,14 @@ def _pattern_sample_winners(
     # trim/len/pattern machinery runs on 1/s_mod of the rows instead of
     # all of them (interleaved A/B at local[32], 19M turns: winners
     # 7.9s -> 5.4s best-of-3).
+    sample = df.filter(F.rand(42) < 1.0 / s_mod)
     cand = (
-        _melt_filled(
-            df.filter(F.rand(42) < 1.0 / s_mod), cand_attrs, params.allow_zero
-        )
+        melt_slim(sample, cand_attrs, params, need={"len", "fil", "full"})
+        .filter("fil = 1")
+        .select("attribute", F.col("full").alias("value"))
         .select(
             "attribute",
-            F.xxhash64(_pattern_expr_finished(cand_attrs, plen)).alias("ph"),
+            F.xxhash64(_pattern_expr(cand_attrs, plen, finished=True)).alias("ph"),
         )
         .groupBy("attribute", "ph")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -1266,8 +1134,8 @@ def _resolve_pattern_candidates(
     df: DataFrame,
     heavy_attrs: list[AttrInfo],
     winners: DataFrame,
+    params: ProfileParams,
     plen: int,
-    allow_zero: bool,
 ) -> DataFrame:
     """Resolution stage of the heavy-pattern path (step 2 of
     :func:`_heavy_pattern_candidates`).
@@ -1280,10 +1148,12 @@ def _resolve_pattern_candidates(
     per input row on a full-corpus scan.
     """
     return (
-        _melt_filled(df, heavy_attrs, allow_zero)
+        melt_slim(df, heavy_attrs, params, need={"len", "fil", "full"})
+        .filter("fil = 1")
+        .select("attribute", F.col("full").alias("value"))
         .select(
             "attribute",
-            _pattern_expr_finished(heavy_attrs, plen).alias("data_pattern"),
+            _pattern_expr(heavy_attrs, plen, finished=True).alias("data_pattern"),
             "value",
         )
         .withColumn("ph", F.xxhash64("data_pattern"))
@@ -1409,6 +1279,22 @@ def _corr_pairs(attrs: list[AttrInfo], params: ProfileParams) -> list[tuple[str,
         return []
     num = [a.name for a in attrs if a.kind == KIND_NUMERIC]
     return [(x, y) for i, x in enumerate(num) for y in num[i + 1 :]]
+
+
+def _arrow(frame: DataFrame):
+    """The job fetching ``frame`` as an Arrow table: a zero-argument
+    callable.  Its strings are read as Spark's ``collect`` reads them,
+    each invalid UTF-8 sequence replaced by U+FFFD: a binary attribute's
+    canonical form is the string cast of its bytes, which Arrow cannot
+    hand to Python when they are not UTF-8."""
+    return frame.select(
+        *[
+            F.make_valid_utf8(f.name).alias(f.name)
+            if isinstance(f.dataType, T.StringType)
+            else F.col(f.name)
+            for f in frame.schema.fields
+        ]
+    ).toArrow
 
 
 def _corr_agg(df: DataFrame, pairs: list[tuple[str, str]]):
@@ -1704,9 +1590,9 @@ def _profile_flat_approx(
     # ---- the fetches, concurrently: the finish's bounded inputs ----
     jobs: dict[str, object] = {}
     if lp is not None:
-        jobs["light_patterns"] = lp.toArrow
+        jobs["light_patterns"] = _arrow(lp)
     if heavy_pat is not None:
-        jobs["heavy_patterns"] = heavy_pat.toArrow
+        jobs["heavy_patterns"] = _arrow(heavy_pat)
     if need_vh and low_card:
         # low-card value histogram: modes + cardinality breakdown
         lc_set = set(low_card)
@@ -1722,11 +1608,11 @@ def _profile_flat_approx(
             derive_attrs = [a for a in attrs if a.name in derive_names]
             vh = vh.withColumns(
                 {
-                    "_dp": F.when(derive, finish_pattern(_pattern_expr(derive_attrs, plen))),
+                    "_dp": F.when(derive, _pattern_expr(derive_attrs, plen, finished=True)),
                     "_ex": F.when(derive, F.substring(F.col("value"), 1, plen)),
                 }
             )
-        jobs["vh"] = vh.toArrow
+        jobs["vh"] = _arrow(vh)
     corr_pairs = _corr_pairs(attrs, params)
     if corr_pairs:
         jobs["corr"] = _corr_agg(df, corr_pairs)

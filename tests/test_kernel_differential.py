@@ -161,10 +161,10 @@ def test_nth_digit_decimal_fast_path_differential(spark):
 
 
 def test_type_flag_py_differential(spark):
-    """The Python mirror of the best-type flag classifier
-    (besttype.type_flag_py) must agree with the Spark expression on a
-    random pattern corpus — it exists for partition-local (pandas)
-    workers and for driver-side checks."""
+    """The best-type flag classifier (besttype.type_flag) must agree
+    with its Python transcription (besttype.type_flag_py), the
+    reference this test reads the rule chain from, on a random pattern
+    corpus."""
     from datapatterns_spark.functions import besttype
 
     rng = random.Random(11)

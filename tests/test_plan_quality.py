@@ -179,6 +179,19 @@ def test_approx_profile_executions_are_not_nested(spark):
     assert nested == []
 
 
+def test_exact_profile_folds_no_sketch(spark):
+    """Exact mode reports its own exact cardinality and numeric stats,
+    so its fold builds no HLL sketch and no quantile sketch that it
+    would then discard: no executed plan of an all-features exact
+    profile holds ``hll_sketch_agg`` or ``percentile_approx``."""
+    df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    plans = _executed_plans(spark, lambda: profile(df, mode="exact").collect())
+    assert plans
+    for plan in plans:
+        assert "hll_sketch_agg" not in plan
+        assert "percentile_approx" not in plan
+
+
 def _pass1_partial_aggs(spark, df, **kw) -> list[str]:
     """The formatted-explain nodes of the approx profile's pass-1
     partial aggregate (one blank-line-separated section per node)."""
